@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only scale-rehearsal main (not part of the driver contract):
@@ -17,9 +16,7 @@ import org.apache.spark.sql.functions._
 object Rehearsal {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = GraftSession.configure(
-      SparkSession.builder().master("local[32]"), "32", "graft-rehearsal")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-rehearsal")
     spark.sparkContext.setLogLevel("WARN")
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Dev-only streaming-maintenance throughput floor (r11 verdict #7): the
@@ -23,9 +22,7 @@ import org.apache.spark.sql.functions.col
 object StreamDrainBench {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = GraftSession.configure(
-      SparkSession.builder().master("local[32]"), "32", "graft-streamdrain")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-streamdrain")
     spark.sparkContext.setLogLevel("WARN")
     val nDocs = Tables.documents(spark, dir).count()
     val nVecs = Tables.embeddings(spark, dir).count()

@@ -90,8 +90,9 @@ object Graft {
   }
 
   /** Persisted index builders/maintainers (K5, X-families): every family
-    * is bucketed-partition parquet with config pins, staged-overwrite
-    * crash ordering, and a concurrent-writer version guard. */
+    * is bucketed-partition parquet written through one protocol
+    * ([[BucketedIndex]]: config pins, staged-overwrite crash ordering, a
+    * concurrent-writer version guard). */
   object index {
     /** Sign-bit LSH vector index — [[LshIndex.writeLshIndex]] /
       * [[LshIndex.upsertLshIndex]]. */
@@ -121,19 +122,15 @@ object Graft {
       IvfPq.writeIvfPqIndex(vecs, embCol, idCol, cents, books, path)
 
     /** Full-text postings index — [[Fts.writePostingsIndex]] over
-      * [[Fts.positionalPostings]]. The uniqueness guard mirrors
-      * upsertPostingsIndex's: the postings kernel emits per-ROW postings,
-      * so a corpus carrying the same doc id twice would put duplicate
-      * (word, doc) entries in the index and silently drop matching docs
-      * from conjunctive/phrase results (their per-doc term counts
-      * overshoot) — fail loudly at build instead. One cheap aggregation
-      * job on a bulk-build (action) path, matching the upsert side. */
+      * [[Fts.positionalPostings]], with the id check every other build
+      * runs: the postings kernel emits per-ROW postings, so a corpus
+      * carrying the same doc id twice would put duplicate (word, doc)
+      * entries in the index and silently drop matching docs from
+      * conjunctive/phrase results (their per-doc term counts overshoot) —
+      * it fails loudly before any write instead. */
     def buildFts(docs: DataFrame, docIdCol: String, textCol: String,
-        path: String): Unit = {
-      PartitionedIndexOps.requireUniqueIds(docs, docIdCol)
-      Fts.writePostingsIndex(
-        Fts.positionalPostings(docs, docIdCol, textCol), path)
-    }
+        path: String): Unit =
+      Fts.writeDocsIndex(docs, docIdCol, textCol, path)
 
     /** Random hyperplanes for the LSH families —
       * [[Similarity.hyperplanes]]. */

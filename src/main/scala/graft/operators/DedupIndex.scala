@@ -37,33 +37,18 @@ object DedupIndex {
   /** Every parameter that changes band hashes or bucket ids is pinned on
     * disk and re-validated at probe time — a probe under a different config
     * would SILENTLY miss duplicates (wrong buckets pruned, wrong band
-    * hashes joined), the same footgun the Fts index pins against. */
-  // filename kept from the JSON-era pin: an index written by older code
-  // still has ITS pin read (and fails loudly on the format mismatch via
-  // requireConfigPin's missing-key check) instead of being silently
-  // treated as unpinned
-  private def configPath(path: String) =
-    new org.apache.hadoop.fs.Path(path + "/_meta/config.json")
-
-  // writer-version pin (concurrent-writer guard); the root _meta dir is
-  // never bulk-overwritten (only bands/ and shingles/ are), so it survives
-  private def versionPath(path: String) =
-    new org.apache.hadoop.fs.Path(path + "/_meta/version")
-
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def writeConfig(spark: SparkSession, path: String,
-      cfg: Map[String, Int]): Unit =
-    PartitionedIndexOps.writeConfigPin(fsOf(spark, path), configPath(path),
-      cfg.map { case (k, v) => k -> v.toString })
-
-  private def requireConfig(spark: SparkSession, path: String,
-      cfg: Map[String, Int]): Unit =
-    PartitionedIndexOps.requireConfigPin(fsOf(spark, path), configPath(path),
-      cfg.map { case (k, v) => k -> v.toString },
-      s"dedup index at $path")
+    * hashes joined), the same footgun the Fts index pins against. The
+    * pin filename is kept from the JSON-era format: an index written by
+    * older code still has ITS pin read and fails loudly on the format
+    * mismatch instead of being silently treated as unpinned. Config is
+    * written FIRST and shingles before bands: the empty-index check keys
+    * on the bands table, so a crash mid-build leaves the index "empty" and
+    * the same-batch retry bulk-rebuilds cleanly — bands-first would wedge
+    * every retry on a missing shingle read. */
+  private def index(path: String) = BucketedIndex("dedup", path,
+    path + "/bands", Seq("wb"), path + "/shingles", "dbk", path + "/_meta",
+    "config.json", "writeSignatureIndex", "shingle, hash, or bucket geometry",
+    configFirst = true, sideFirst = true)
 
   // bandsFp: bands-table schema generation — 1 = rows carry the doc's
   // full-signature fingerprint (enables the hot-bucket-capped probe's
@@ -71,153 +56,60 @@ object DedupIndex {
   // index whose bands lack the column it collapses on: an index built by
   // pre-fingerprint code fails the pin loudly and is rebuilt.
   private def configOf(n: Int, numHashes: Int, rowsPerBand: Int,
-      nBuckets: Int, nDocBuckets: Int): Map[String, Int] =
+      nBuckets: Int, nDocBuckets: Int): Map[String, String] =
     Map("n" -> n, "numHashes" -> numHashes, "rowsPerBand" -> rowsPerBand,
-      "nBuckets" -> nBuckets, "nDocBuckets" -> nDocBuckets,
-      "bandsFp" -> 1)
+      "nBuckets" -> nBuckets, "nDocBuckets" -> nDocBuckets, "bandsFp" -> 1)
+      .map { case (k, v) => k -> v.toString }
+
+  private def requireConfig(spark: SparkSession, path: String, n: Int,
+      numHashes: Int, rowsPerBand: Int, nBuckets: Int,
+      nDocBuckets: Int): Unit =
+    index(path).requireConfig(spark,
+      configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets))
+
+  private def bands(sg: DataFrame, numHashes: Int,
+      rowsPerBand: Int): DataFrame =
+    Dedup.signatureBandsWithFp(Dedup.minhashSignatures(sg, numHashes),
+      numHashes, rowsPerBand)
+
+  /** A batch's rows over its shingle sets `bsg` (one row per doc): bands
+    * carrying the signature fingerprint (8 B/row, so the capped probe can
+    * pre-collapse boilerplate clusters without re-reading signatures) by
+    * band bucket, shingles by doc bucket. No side table beyond the
+    * shingles is needed: a re-crawled doc's OLD bands recompute from its
+    * stored shingles. `batchBands` must be `bands(bsg, …)`. */
+  private def dedupWrite(bsg: DataFrame, batchBands: DataFrame, n: Int,
+      numHashes: Int, rowsPerBand: Int, nBuckets: Int, nDocBuckets: Int,
+      owned: Seq[DataFrame]): BucketedIndex.Write =
+    BucketedIndex.Write(
+      configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets), "doc_id",
+      Some(bsg), bucketOf(col("doc_id"), nDocBuckets),
+      main = batchBands.withColumn("wb", bucketOf(col("bh"), nBuckets)),
+      side = bsg.withColumn("dbk", bucketOf(col("doc_id"), nDocBuckets)),
+      oldKeys = old => bands(old.select(col("doc_id"), col("sg")), numHashes,
+        rowsPerBand).select(bucketOf(col("bh"), nBuckets).as("wb")),
+      owned = owned)
 
   def writeSignatureIndex(docs: DataFrame, path: String, n: Int = 3,
       numHashes: Int = 32, rowsPerBand: Int = 2,
       nBuckets: Int = 16, nDocBuckets: Int = 16): Unit = {
     val sg = Dedup.shingleSets(docs, n).cache()
-    val fs = fsOf(docs.sparkSession, path)
-    val claimed = PartitionedIndexOps.claimVersion(fs, versionPath(path))
-    try {
-      requireUniqueIds(sg)
-      // CONFIG FIRST: a crash at any later point leaves the true build
-      // parameters on disk, so a retry (or a differently-configured
-      // caller) validates against reality instead of a vacuous pass that
-      // would let mixed bucket geometries corrupt the index silently.
-      // Then SHINGLES before BANDS: the upsert's "index exists" probe keys
-      // on the bands table, so a crash mid-build leaves hasIndex=false and
-      // the same-batch retry bulk-rebuilds cleanly — bands-first would
-      // wedge every retry on a missing shingle read.
-      writeConfig(docs.sparkSession, path,
-        configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets))
-      sg.withColumn("dbk", bucketOf(col("doc_id"), nDocBuckets))
-        .write.partitionBy("dbk").mode("overwrite")
-        .parquet(path + "/shingles")
-      // bands are the build's commit (hasIndex keys on them): a losing
-      // concurrent builder aborts here and the retry bulk-rebuilds
-      PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-        s"dedup index bulk build at $path")
-      // bands carry the signature fingerprint (8 B/row) so the capped
-      // probe can pre-collapse boilerplate clusters without re-reading
-      // signatures; the uncapped probe column-prunes it away
-      Dedup.signatureBandsWithFp(Dedup.minhashSignatures(sg, numHashes),
-          numHashes, rowsPerBand)
-        .withColumn("wb", bucketOf(col("bh"), nBuckets))
-        .write.partitionBy("wb").mode("overwrite").parquet(path + "/bands")
-    } finally sg.unpersist()
+    index(path).build(dedupWrite(sg, bands(sg, numHashes, rowsPerBand), n,
+      numHashes, rowsPerBand, nBuckets, nDocBuckets, owned = Seq(sg)))
   }
 
-  /** An unordered frame with the same doc twice has no deterministic
-    * winner — both the bulk build and the upsert fail loudly; callers
-    * collapse re-crawls to one row per doc first. One aggregation job
-    * (shared guard across the persisted indexes). */
-  private def requireUniqueIds(sg: DataFrame): Unit =
-    PartitionedIndexOps.requireUniqueIds(sg, "doc_id")
-
   /** Incremental maintenance — fold a (re-)crawled batch into the index
-    * ([[Fts.upsertPostingsIndex]]'s ordering applied here; drive from
-    * foreachBatch for a streaming feed). A re-crawled doc's OLD bands live
-    * in buckets its new text doesn't reveal, but unlike the postings index
-    * no extra side table is needed: the doc-bucketed SHINGLE table already
-    * stores enough to recompute them. Per batch: old shingles come from a
-    * doc-bucket-pruned read, affected = old ∪ new band buckets, stale rows
-    * anti-join away inside only those buckets, and both tables rewrite only
-    * touched partitions (dynamic overwrite, staged write FIRST, then an
-    * explicit delete of buckets a re-crawl vacated — dynamic overwrite
-    * never rewrites a partition with zero rows; a crash before the delete
-    * is healed by the foreachBatch retry of the same batch). Shingle doc
-    * buckets never empty (every removed id is re-inserted), so the side
-    * write needs no delete pass. Per-batch cost scales with the batch's
-    * band/doc spread, never the index size. */
+    * ([[BucketedIndex.upsert]] with band buckets as the main partitions;
+    * drive from foreachBatch for a streaming feed). Per-batch cost scales
+    * with the batch's band/doc spread, never the index size. An unordered
+    * batch with the same doc twice has no deterministic winner and fails
+    * loudly; callers collapse re-crawls to one row per doc first. */
   def upsertSignatureIndex(batch: DataFrame, path: String, n: Int = 3,
       numHashes: Int = 32, rowsPerBand: Int = 2,
       nBuckets: Int = 16, nDocBuckets: Int = 16): Unit = {
-    val spark = batch.sparkSession
-    requireConfig(spark, path,
-      configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets))
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bandsPath = path + "/bands"
-    val shPath = path + "/shingles"
-    if (!PartitionedIndexOps.hasPartitions(fs, bandsPath, "wb")) {
-      // bulk branch — also heals a build that crashed mid-write, because
-      // writeSignatureIndex lands bands LAST (see its ordering comment)
-      writeSignatureIndex(batch, path, n, numHashes, rowsPerBand,
-        nBuckets, nDocBuckets)
-      return
-    }
     val bsg = Dedup.shingleSets(batch, n).cache()
-    try upsertCore(spark, path, bsg, n, numHashes, rowsPerBand,
-      nBuckets, nDocBuckets, fs)
-    finally bsg.unpersist()
-  }
-
-  /** The merge over a precomputed (cached) shingle frame — shared by
-    * [[upsertSignatureIndex]] and [[ingestBatch]]. Caller owns bsg's
-    * lifecycle; assumes the index exists (bulk routing happens above).
-    * `precomputedBands` (r13): [[ingestBatch]] already built (and cached)
-    * the batch's fingerprinted band rows for its probe — passing them in
-    * skips a second full minhash/banding pass over the batch per
-    * micro-batch. Must be exactly
-    * `Dedup.signatureBandsWithFp(Dedup.minhashSignatures(bsg, numHashes),
-    * numHashes, rowsPerBand)`. */
-  private def upsertCore(spark: SparkSession, path: String, bsg: DataFrame,
-      n: Int, numHashes: Int, rowsPerBand: Int,
-      nBuckets: Int, nDocBuckets: Int,
-      fs: org.apache.hadoop.fs.FileSystem,
-      precomputedBands: Option[DataFrame] = None,
-      precomputedDbkHit: Option[Seq[Long]] = None): Unit = {
-    val bandsPath = path + "/bands"
-    val shPath = path + "/shingles"
-    var prunedSh: Option[DataFrame] = None
-    val claimed = PartitionedIndexOps.claimVersion(fs, versionPath(path))
-    try {
-      // ONE job (r13): duplicate-id validation (before any index read —
-      // reject cheaply) fused with the ≤ nDocBuckets hit-bucket collect.
-      // ingestBatch precomputes BOTH inside its per-batch fused stats job
-      // (which also validated uniqueness — the precondition for passing
-      // this in) and supplies the set here.
-      val dbkHit = precomputedDbkHit.getOrElse(
-        PartitionedIndexOps.requireUniqueIdsCollectingBuckets(
-          bsg, "doc_id", bucketOf(col("doc_id"), nDocBuckets)))
-      val pruned = spark.read.parquet(shPath)
-        .filter(col("dbk").isInCollection(dbkHit)).cache()
-      prunedSh = Some(pruned)
-      val newBands = precomputedBands.getOrElse(Dedup.signatureBandsWithFp(
-          Dedup.minhashSignatures(bsg, numHashes), numHashes, rowsPerBand))
-        .withColumn("wb", bucketOf(col("bh"), nBuckets))
-      val batchIds = bsg.select(col("doc_id")).distinct()
-      // re-crawled docs' OLD bands recompute from the stored shingles; the
-      // pruned buckets (the heavy side of the index) are read ONCE and
-      // cached for both the old-band recompute and the rewrite below
-      val oldSg = pruned
-        .join(batchIds, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("sg"))
-      val oldBands = Dedup.signatureBandsWithFp(
-          Dedup.minhashSignatures(oldSg, numHashes), numHashes, rowsPerBand)
-        .withColumn("wb", bucketOf(col("bh"), nBuckets))
-      // ≤ nBuckets values by construction
-      val affected = newBands.select(col("wb"))
-        .union(oldBands.select(col("wb")))
-        .distinct().collect().map(_.get(0): Any).toSet
-      val merged = spark.read.parquet(bandsPath)
-        .filter(col("wb").isInCollection(affected))
-        .join(batchIds, Seq("doc_id"), "left_anti") // drop re-crawled docs
-        .unionByName(newBands)
-      PartitionedIndexOps.overwriteAffected(merged, bandsPath, "wb",
-        affected, fs)
-      val shMerged = pruned
-        .join(batchIds, Seq("doc_id"), "left_anti")
-        .unionByName(
-          bsg.withColumn("dbk", bucketOf(col("doc_id"), nDocBuckets)))
-      PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-        s"dedup index upsert at $path")
-      PartitionedIndexOps.pinWrite(shMerged, shPath, "dbk")
-    } finally prunedSh.foreach(_.unpersist())
+    index(path).upsert(dedupWrite(bsg, bands(bsg, numHashes, rowsPerBand), n,
+      numHashes, rowsPerBand, nBuckets, nDocBuckets, owned = Seq(bsg)))
   }
 
   /** Near-dup pairs (jr, da=indexed doc, db=batch doc) for a fresh batch
@@ -246,8 +138,8 @@ object DedupIndex {
       n: Int = 3, numHashes: Int = 32, rowsPerBand: Int = 2,
       threshold: Double = 0.5, nBuckets: Int = 16,
       nDocBuckets: Int = 16): ProbeHandle = {
-    requireConfig(spark, path,
-      configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets))
+    requireConfig(spark, path, n, numHashes, rowsPerBand, nBuckets,
+      nDocBuckets)
     val bsg = Dedup.shingleSets(batch, n).cache()
     val (plan, cand) = probeCore(spark, path, bsg,
       numHashes, rowsPerBand, threshold, nBuckets, nDocBuckets)
@@ -277,8 +169,8 @@ object DedupIndex {
       batch: DataFrame, n: Int = 3, numHashes: Int = 32,
       rowsPerBand: Int = 2, threshold: Double = 0.5, nBuckets: Int = 16,
       nDocBuckets: Int = 16, maxBucket: Int = 64): ProbeHandle = {
-    requireConfig(spark, path,
-      configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets))
+    requireConfig(spark, path, n, numHashes, rowsPerBand, nBuckets,
+      nDocBuckets)
     val bsg = Dedup.shingleSets(batch, n).cache()
     val (plan, cand) = probeCore(spark, path, bsg,
       numHashes, rowsPerBand, threshold, nBuckets, nDocBuckets,
@@ -449,10 +341,9 @@ object DedupIndex {
       n: Int = 3, numHashes: Int = 32, rowsPerBand: Int = 2,
       threshold: Double = 0.5, nBuckets: Int = 16,
       nDocBuckets: Int = 16, maxBucket: Int = 64): DataFrame = {
-    requireConfig(spark, path,
-      configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets))
-    val fs = fsOf(spark, path)
-    if (!PartitionedIndexOps.hasPartitions(fs, path + "/bands", "wb")) {
+    requireConfig(spark, path, n, numHashes, rowsPerBand, nBuckets,
+      nDocBuckets)
+    if (!index(path).hasData(spark)) {
       writeSignatureIndex(batch, path, n, numHashes, rowsPerBand,
         nBuckets, nDocBuckets)
       return spark.createDataFrame(
@@ -470,9 +361,7 @@ object DedupIndex {
     // band rows serve both the probe (projected to (db, band, bh)) and
     // the upsert's newBands — the r12 shape recomputed the signatures for
     // the upsert after the probe had already banded the same batch
-    val bandsFp = Dedup.signatureBandsWithFp(
-        Dedup.minhashSignatures(bsg, numHashes), numHashes, rowsPerBand)
-      .cache()
+    val bandsFp = bands(bsg, numHashes, rowsPerBand).cache()
     try {
       // ONE batch-stats job per micro-batch (r13, guide §1.2/§2.6): the
       // duplicate-id validation + doc-bucket collect the upsert paid and
@@ -506,8 +395,8 @@ object DedupIndex {
       // long-running foreachBatch ingest loop doesn't accumulate one
       // CacheManager entry per micro-batch
       cand.unpersist()
-      upsertCore(spark, path, bsg, n, numHashes, rowsPerBand,
-        nBuckets, nDocBuckets, fs, Some(bandsFp), Some(dbkHit))
+      index(path).upsert(dedupWrite(bsg, bandsFp, n, numHashes, rowsPerBand,
+        nBuckets, nDocBuckets, owned = Nil), Some(dbkHit))
       pairs
     } finally { bandsFp.unpersist(); bsg.unpersist() }
   }

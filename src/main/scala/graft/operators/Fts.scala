@@ -184,44 +184,18 @@ object Fts {
       .select(col("doc_id"), total.as("bm25"))
   }
 
-  /** Deployed-index form (the IVF-index pattern, [[Similarity.writeIvfIndex]]):
-    * persist the postings partitioned by a hash bucket of the term, so a
-    * query's `word IN (...)` reads only its terms' bucket directories —
-    * partition pruning at the file index, before any data is read. With B
-    * buckets a Q-term query scans ≤ Q/B of the index regardless of corpus
-    * size; bucket count trades directory fan-out against pruning ratio. */
   /** Bucket id of a column under the index's hash scheme (one definition —
     * the write and upsert paths must NEVER disagree on bucket assignment). */
   private def bucketCol(c: org.apache.spark.sql.Column, n: Int) =
     pmod(xxhash64(c), lit(n))
 
-  /** The index pins its bucket config on disk: a caller passing a
-    * different nBuckets than the index was BUILT with would otherwise
-    * compute wrong bucket ids and silently prune to the wrong partitions
-    * (missing postings, no error). Written at bulk build; checked by
-    * every load/upsert. */
-  // filename kept from the JSON-era pin — see DedupIndex.configPath
-  private def cfgPath(path: String) =
-    new org.apache.hadoop.fs.Path(path + "_meta/config.json")
-
-  // writer-version pin (concurrent-writer guard) — sibling _meta dir
-  private def versionPath(path: String) =
-    new org.apache.hadoop.fs.Path(path + "_meta/version")
-
-  private def writeBucketConfig(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, nBuckets: Int, nDocBuckets: Int): Unit =
-    PartitionedIndexOps.writeConfigPin(fs, cfgPath(path),
-      Map("nBuckets" -> nBuckets.toString,
-        "nDocBuckets" -> nDocBuckets.toString))
-
-  // a mismatched nDocBuckets has the side-table version of the footgun:
-  // it mis-prunes the doc-meta read and misses a re-crawl's old buckets
-  private def requireBucketConfig(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, nBuckets: Int, nDocBuckets: Option[Int] = None): Unit =
-    PartitionedIndexOps.requireConfigPin(fs, cfgPath(path),
-      Map("nBuckets" -> nBuckets.toString) ++
-        nDocBuckets.map(n => "nDocBuckets" -> n.toString),
-      s"index at $path")
+  // the pin filename is kept from the JSON-era format; a caller passing a
+  // different nBuckets than the index was BUILT with would otherwise
+  // compute wrong bucket ids and silently prune to the wrong partitions,
+  // and a different nDocBuckets mis-prunes the side-table read
+  private def index(path: String) = BucketedIndex("fts", path, path,
+    Seq("wb"), path + "_docs", "db", path + "_meta", "config.json",
+    "writePostingsIndex", "bucket geometry", configFirst = true)
 
   /** The doc-bucketed side-table rows for a bucketed postings frame:
     * doc_id → sorted occupied term buckets, partitioned by doc bucket. */
@@ -230,128 +204,65 @@ object Fts {
       .agg(sort_array(collect_set(col("wb"))).as("wbs"))
       .withColumn("db", bucketCol(col("doc_id"), nDocBuckets))
 
+  /** A batch's rows: postings bucketed by term (main) and doc_id → the
+    * term buckets its postings occupy (side). `docs` (doc_id, text) is the
+    * id-keyed batch the write validates, None for pre-built postings. */
+  private def ftsWrite(docs: Option[DataFrame], postings: DataFrame,
+      nBuckets: Int, nDocBuckets: Int): BucketedIndex.Write = {
+    val bucketed = postings.withColumn("wb", bucketCol(col("word"), nBuckets))
+      .persist() // written AND aggregated into the side table
+    BucketedIndex.Write(
+      Map("nBuckets" -> nBuckets.toString,
+        "nDocBuckets" -> nDocBuckets.toString),
+      "doc_id", docs, bucketCol(col("doc_id"), nDocBuckets),
+      main = bucketed, side = docMeta(bucketed, nDocBuckets),
+      oldKeys = _.select(explode(col("wbs")).as("wb")),
+      sideFromMain = Some(docMeta(_, nDocBuckets)), owned = Seq(bucketed))
+  }
+
+  /** Deployed-index form: persist the postings partitioned by a hash
+    * bucket of the term, so a query's `word IN (...)` reads only its
+    * terms' bucket directories — partition pruning at the file index,
+    * before any data is read. With B buckets a Q-term query scans ≤ Q/B
+    * of the index regardless of corpus size; bucket count trades
+    * directory fan-out against pruning ratio. The doc-bucketed side table
+    * (doc_id → occupied term buckets) is what lets an incremental upsert
+    * find a re-crawled doc's OLD buckets without scanning the index.
+    * Postings are not keyed by doc, so this build cannot reject duplicate
+    * docs — [[graft.api.Graft.index.buildFts]] builds from a doc frame and
+    * does. */
   def writePostingsIndex(postings: DataFrame, path: String,
-      nBuckets: Int = 64, nDocBuckets: Int = 64): Unit = {
-    val bucketed = postings
-      .withColumn("wb", bucketCol(col("word"), nBuckets))
-      .persist() // written below AND aggregated into the side table
-    try {
-      // config FIRST: a crash at any later point leaves the true bucket
-      // geometry on disk, so every retry or later caller validates against
-      // reality (the merge branch never rewrites config — config-last left
-      // a window where the pin was lost forever)
-      val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-        postings.sparkSession.sparkContext.hadoopConfiguration)
-      val claimed = PartitionedIndexOps.claimVersion(fs, versionPath(path))
-      writeBucketConfig(fs, path, nBuckets, nDocBuckets)
-      bucketed.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("wb").parquet(path)
-      // doc-bucketed side table (doc_id → occupied term buckets): what lets
-      // an incremental upsert find a re-crawled doc's OLD buckets without
-      // scanning the index (see upsertPostingsIndex)
-      PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-        s"postings index bulk build at $path")
-      docMeta(bucketed, nDocBuckets)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("db").parquet(path + "_docs")
-    } finally bucketed.unpersist()
+      nBuckets: Int = 64, nDocBuckets: Int = 64): Unit =
+    index(path).build(ftsWrite(None, postings, nBuckets, nDocBuckets))
+
+  /** [[writePostingsIndex]] over `docs`' postings, rejecting a duplicate
+    * doc id before any write. */
+  private[graft] def writeDocsIndex(docs: DataFrame, docIdCol: String,
+      textCol: String, path: String, nBuckets: Int = 64,
+      nDocBuckets: Int = 64): Unit =
+    index(path).build(docsWrite(docs, docIdCol, textCol, nBuckets,
+      nDocBuckets))
+
+  private def docsWrite(docs: DataFrame, docIdCol: String, textCol: String,
+      nBuckets: Int, nDocBuckets: Int): BucketedIndex.Write = {
+    val keyed = docs.select(col(docIdCol).as("doc_id"), col(textCol))
+    ftsWrite(Some(keyed), positionalPostings(keyed, "doc_id", textCol),
+      nBuckets, nDocBuckets)
   }
 
   /** Incremental index maintenance — fold a (re-)crawled document batch
-    * into a persisted postings index (the [[Lakehouse.scd2MergeIntoBuckets]]
-    * pattern applied to postings). The subtlety term-partitioning creates:
-    * a re-crawled doc's OLD postings live in the buckets of its OLD terms,
-    * which the new text doesn't reveal — so the index keeps a doc-bucketed
-    * side table (`<path>_docs`: doc_id → the wb buckets its postings
-    * occupy). Per batch: old buckets come from a doc-bucket-pruned side
-    * read, affected = old ∪ new term buckets, stale rows anti-join away
-    * inside only those buckets, and both tables rewrite only touched
-    * partitions (dynamic overwrite). Per-batch cost scales with the
-    * batch's term/doc spread, never the index size. Drive it from
+    * into a persisted postings index ([[BucketedIndex.upsert]] with term
+    * buckets as the main partitions). A re-crawled doc's OLD postings
+    * live in the buckets of its OLD terms, which the new text doesn't
+    * reveal; the side table names them. Per-batch cost scales with the
+    * batch's term/doc spread, never the index size. A missing side table
+    * (a bulk build interrupted between its two writes) is rebuilt from the
+    * index itself — one full scan, only ever paid once. Drive it from
     * `foreachBatch` for a streaming crawl feed. */
   def upsertPostingsIndex(newDocs: DataFrame, path: String, docIdCol: String,
-      textCol: String, nBuckets: Int = 64, nDocBuckets: Int = 64): Unit = {
-    val spark = newDocs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireBucketConfig(fs, path, nBuckets, Some(nDocBuckets))
-    // a batch carrying the same doc twice would silently merge the copies'
-    // positions and double tf — same guard as the sibling indexes. ONE
-    // job (r13): the validation is fused with the ≤ nDocBuckets doc-bucket
-    // collect the merge branch needs (previously a second aggregation over
-    // the batch's postings). Derived from the RAW batch ids, not
-    // batchMeta: same bucket hash over the same ids, except a doc whose
-    // new text has no tokens (no postings → no meta row) now still
-    // contributes its bucket — so a re-crawl-to-empty doc's OLD buckets
-    // are covered by the pruned side read below instead of silently
-    // surviving.
-    val dbs = PartitionedIndexOps.requireUniqueIdsCollectingBuckets(
-      newDocs, docIdCol, bucketCol(col(docIdCol), nDocBuckets))
-    val claimed = PartitionedIndexOps.claimVersion(fs, versionPath(path))
-    val batch = positionalPostings(newDocs, docIdCol, textCol)
-      .withColumn("wb", bucketCol(col("word"), nBuckets))
-    val batchIds = batch.select(col("doc_id")).distinct()
-    val batchMeta = docMeta(batch, nDocBuckets)
-    val docsPath = path + "_docs"
-    batch.persist() // reused by ids/meta/affected/merged below — built once
-    try {
-      if (PartitionedIndexOps.hasPartitions(fs, path, "wb")) {
-        // recovery path: a bulk build that died between its two writes
-        // leaves the index without its side table — rebuild the needed
-        // meta from the index itself (one full scan, only ever paid once)
-        val docsExists = fs.exists(new org.apache.hadoop.fs.Path(docsPath))
-        val oldMeta =
-          (if (docsExists)
-            spark.read.parquet(docsPath).filter(col("db").isInCollection(dbs))
-          else docMeta(spark.read.parquet(path), nDocBuckets))
-            .join(batchIds, Seq("doc_id"), "left_semi")
-        val affected = oldMeta.select(explode(col("wbs")).as("wb"))
-          .union(batch.select(col("wb"))).distinct()
-          .collect().map(_.get(0)).toSeq
-        val merged = spark.read.parquet(path)
-          .filter(col("wb").isInCollection(affected))
-          .join(batchIds, Seq("doc_id"), "left_anti") // drop re-crawled docs
-          .unionByName(batch)
-        // staged-overwrite-then-delete-vacated ordering — shared with the
-        // dedup signature index; rationale on PartitionedIndexOps
-        PartitionedIndexOps.overwriteAffected(merged, path, "wb",
-          affected.toSet, fs)
-        // crash seam (production no-op): the window between the index
-        // write above and the side-table write below is the one the
-        // retry-heals contract covers — FtsCrashRecoverySpec SIGKILLs a
-        // real driver JVM parked here and asserts heal-to-scratch
-        graft.streaming.CrashPoints.reached("fts.upsert.between-writes")
-        // the side table second: if a failure lands between the two writes,
-        // re-running the SAME batch (foreachBatch retry semantics) still
-        // heals — old meta lists the doc's previous buckets, the retry's
-        // affected set covers previous ∪ current, and the doc-keyed
-        // anti-join + union is idempotent. Doc buckets can never empty
-        // (every removed id is re-inserted), so no delete pass is needed.
-        // In the recovery case the main index was just rewritten, so the
-        // whole side table re-derives from it directly.
-        val docsMerged =
-          if (docsExists)
-            spark.read.parquet(docsPath)
-              .filter(col("db").isInCollection(dbs))
-              .join(batchIds, Seq("doc_id"), "left_anti")
-              .unionByName(batchMeta)
-          else docMeta(spark.read.parquet(path), nDocBuckets)
-        PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-          s"postings index upsert at $path")
-        PartitionedIndexOps.pinWrite(docsMerged, docsPath, "db")
-      } else {
-        // config first — same crash-consistency rationale as
-        // writePostingsIndex
-        writeBucketConfig(fs, path, nBuckets, nDocBuckets)
-        batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("wb").parquet(path)
-        PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-          s"postings index bulk branch at $path")
-        batchMeta.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("db").parquet(docsPath)
-      }
-    } finally batch.unpersist()
-  }
+      textCol: String, nBuckets: Int = 64, nDocBuckets: Int = 64): Unit =
+    index(path).upsert(docsWrite(newDocs, docIdCol, textCol, nBuckets,
+      nDocBuckets))
 
   /** Read back only the buckets the query terms hash into. The returned
     * frame still carries every posting in those buckets; the word filter
@@ -359,8 +270,7 @@ object Fts {
     * prune, so every Fts query operator composes unchanged. */
   def loadPostings(spark: org.apache.spark.sql.SparkSession, path: String,
       terms: Seq[String], nBuckets: Int = 64): DataFrame = {
-    requireBucketConfig(new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration), path, nBuckets)
+    index(path).requireConfig(spark, Map("nBuckets" -> nBuckets.toString))
     // bucket ids computed driver-side with the SAME hash the write used
     // (functions.xxhash64 == XxHash64 expression, seed 42) — no job, no
     // collect, just Q literal evaluations

@@ -32,10 +32,9 @@ import org.apache.spark.sql.functions._
   * from (scripts/scrape_store_embed.py) keeps a compressed in-memory
   * index; IVF-PQ is that index durable and partition-pruned.
   *
-  * Crash ordering mirrors [[Similarity.writeIvfIndex]]: stale pin deleted
-  * first, data, refine table, pin LAST — a crash leaves data-without-pin,
-  * which upserts refuse fast. The pin covers everything that changes
-  * routing or stored bytes: centroid bits, codebook bits, nDocBuckets.
+  * Writes go through [[BucketedIndex]] (pin-last). The pin covers
+  * everything that changes routing or stored bytes: centroid bits,
+  * codebook bits, nDocBuckets.
   */
 object IvfPq {
 
@@ -43,98 +42,39 @@ object IvfPq {
     * id-bucketed for re-rank point lookups, config pinned last. */
   def writeIvfPqIndex(vecs: DataFrame, embCol: String, idCol: String,
       cents: Array[Array[Double]], books: Array[Array[Array[Double]]],
-      path: String, nDocBuckets: Int = 16): Unit = {
-    val fs = fsOf(vecs.sparkSession, path)
-    PartitionedIndexOps.requireUniqueIds(vecs, idCol)
-    val claimed = PartitionedIndexOps.claimVersion(fs, versionPath(path))
-    fs.delete(pinPath(path), false)
-    val assigned = assign(vecs, embCol, idCol, cents, books, nDocBuckets)
-      .cache()
-    try {
-      assigned.select(col(idCol), col("codes"), col("list_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("list_id").parquet(path)
-      assigned.select(col(idCol), col("list_id"), col(embCol), col("dbk"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("dbk").parquet(refinePath(path))
-    } finally assigned.unpersist()
-    // the config pin is the build's commit: a losing concurrent builder
-    // aborts here, leaving no valid pin (probes fail loudly)
-    PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-      s"IVF-PQ index bulk build at $path")
-    PartitionedIndexOps.writeConfigPin(fs, pinPath(path),
-      config(cents, books, nDocBuckets))
-  }
+      path: String, nDocBuckets: Int = 16): Unit =
+    index(path).build(pqWrite(vecs, embCol, idCol, cents, books, nDocBuckets))
 
-  /** Fold a (re-)crawled batch in ([[Similarity.upsertIvfIndex]]'s merge
-    * with a codes column): a re-crawled doc's changed embedding may have
+  /** Fold a (re-)crawled batch in ([[BucketedIndex.upsert]] with lists as
+    * the main partitions): a re-crawled doc's changed embedding may have
     * moved lists AND always changes its stored code, so stale rows
     * anti-join away inside only the affected lists, and the refine
-    * table's row is replaced in its (id-stable) bucket. Codes table first
-    * (staged overwrite, then delete of vacated lists), refine second — a
-    * crash between the two is healed by the foreachBatch retry of the
-    * same batch, whose stale refine rows still name the true old lists.
-    * Per-batch cost scales with the batch's list/bucket spread, never the
-    * index size. */
+    * table's row is replaced in its (id-stable) bucket. Per-batch cost
+    * scales with the batch's list/bucket spread, never the index size. */
   def upsertIvfPqIndex(newVecs: DataFrame, embCol: String, idCol: String,
       cents: Array[Array[Double]], books: Array[Array[Array[Double]]],
-      path: String, nDocBuckets: Int = 16): Unit = {
-    val spark = newVecs.sparkSession
-    val fs = fsOf(spark, path)
-    if (!PartitionedIndexOps.hasPartitions(fs, path, "list_id")) {
-      writeIvfPqIndex(newVecs, embCol, idCol, cents, books, path,
-        nDocBuckets)
-      return
-    }
-    val stored = PartitionedIndexOps.readConfigPin(fs, pinPath(path))
-    require(stored.isDefined,
-      s"IVF-PQ index at $path has data but no config pin (crashed build?)" +
-        " — rebuild it with writeIvfPqIndex before upserting")
-    require(stored.get == config(cents, books, nDocBuckets),
-      s"IVF-PQ index at $path was built under different centroids, " +
-        "codebooks, or doc-bucket geometry — an upsert would mis-assign " +
-        "lists or store incomparable codes")
-    val assigned = assign(newVecs, embCol, idCol, cents, books, nDocBuckets)
+      path: String, nDocBuckets: Int = 16): Unit =
+    index(path).upsert(pqWrite(newVecs, embCol, idCol, cents, books,
+      nDocBuckets))
+
+  private def index(path: String) = BucketedIndex("IVF-PQ", path, path,
+    Seq("list_id"), path + "_refine", "dbk", path + "_meta", "config",
+    "writeIvfPqIndex", "centroids, codebooks, or doc-bucket geometry")
+
+  /** The batch's rows: codes by list (main), full vectors by doc bucket
+    * (refine). The fused id validation runs over the cached `assigned`,
+    * so the same job also fills the encode pass's cache. */
+  private def pqWrite(vecs: DataFrame, embCol: String, idCol: String,
+      cents: Array[Array[Double]], books: Array[Array[Array[Double]]],
+      nDocBuckets: Int): BucketedIndex.Write = {
+    val assigned = assign(vecs, embCol, idCol, cents, books, nDocBuckets)
       .cache()
-    var prunedRef: Option[DataFrame] = None
-    try {
-      // ONE job (r13): duplicate-id validation fused with the
-      // ≤ nDocBuckets hit-bucket collect, run over `assigned` so the same
-      // job also materializes the encode pass into its cache (assign is a
-      // 1:1 select over newVecs — counts are the batch's). Still BEFORE
-      // the version claim and any index read/write, so a duplicate batch
-      // aborts without publishing a claim, as before.
-      val dbkHit = PartitionedIndexOps.requireUniqueIdsCollectingBuckets(
-        assigned, idCol, col("dbk"))
-      val claimed = PartitionedIndexOps.claimVersion(fs, versionPath(path))
-      val batchIds = assigned.select(col(idCol)).distinct()
-      val pruned = spark.read.parquet(refinePath(path))
-        .filter(col("dbk").isInCollection(dbkHit)).cache()
-      prunedRef = Some(pruned)
-      val oldLists = pruned.join(batchIds, Seq(idCol), "left_semi")
-        .select(col("list_id"))
-      // ≤ nLists values by construction (cents.length ≤ 65536)
-      val affected = assigned.select(col("list_id")).union(oldLists)
-        .distinct().collect().map(_.get(0): Any).toSet
-      val merged = spark.read.parquet(path)
-        .filter(col("list_id").isInCollection(affected))
-        .join(batchIds, Seq(idCol), "left_anti") // drop re-crawled docs
-        .unionByName(assigned.select(col(idCol), col("codes"),
-          col("list_id")))
-      PartitionedIndexOps.overwriteAffected(merged, path, "list_id",
-        affected, fs)
-      // refine second (retry-healable); doc buckets never vacate (every
-      // removed id is re-inserted into its id-stable bucket)
-      val refMerged = pruned.join(batchIds, Seq(idCol), "left_anti")
-        .unionByName(assigned.select(col(idCol), col("list_id"),
-          col(embCol), col("dbk")))
-      PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-        s"IVF-PQ index upsert at $path")
-      PartitionedIndexOps.pinWrite(refMerged, refinePath(path), "dbk")
-    } finally {
-      prunedRef.foreach(_.unpersist())
-      assigned.unpersist()
-    }
+    BucketedIndex.Write(config(cents, books, nDocBuckets), idCol,
+      Some(assigned), col("dbk"),
+      main = assigned.select(col(idCol), col("codes"), col("list_id")),
+      side = assigned.select(col(idCol), col("list_id"), col(embCol),
+        col("dbk")),
+      oldKeys = _.select(col("list_id")), owned = Seq(assigned))
   }
 
   /** ADC candidate gen over the probed lists + exact re-rank via refine
@@ -146,12 +86,8 @@ object IvfPq {
     // the point lookup into a data-sized collect
     require(rerank > 0 && rerank <= 1024,
       s"rerank=$rerank out of range (candidate ids are collected)")
-    val fs = fsOf(spark, path)
-    val stored = PartitionedIndexOps.readConfigPin(fs, pinPath(path))
-    require(stored.isDefined,
-      s"IVF-PQ index at $path has no config pin (never built, or a " +
-        "crashed build) — build it with writeIvfPqIndex before probing")
-    require(stored.get.get("codebooks").contains(booksFingerprint(books)),
+    val stored = index(path).requireBuilt(spark)
+    require(stored.get("codebooks").contains(booksFingerprint(books)),
       s"IVF-PQ index at $path was built under different codebooks — ADC " +
         "scores against these lookup tables would be meaningless")
     val qn = {
@@ -162,11 +98,11 @@ object IvfPq {
     val lut = Pq.adcLut(qn, books)
     // ≤ rerank (id, dbk) rows — the point-lookup key set
     val cand = adcCandidates(spark, path, idCol, probes, lut, rerank,
-      storedDocBuckets(stored.get)).collect()
+      storedDocBuckets(stored)).collect()
     val ids = cand.map(_.get(0): Any).toSeq
     val dbks = cand.map(_.getLong(1)).distinct.toSeq
     val qv = array(query.map(lit): _*)
-    spark.read.parquet(refinePath(path))
+    spark.read.parquet(path + "_refine")
       .filter(col("dbk").isInCollection(dbks) &&
         col(idCol).isInCollection(ids))
       .select(col(idCol),
@@ -219,17 +155,4 @@ object IvfPq {
   private def storedDocBuckets(cfg: Map[String, String]): Long =
     cfg.getOrElse("nDocBuckets",
       sys.error("IVF-PQ pin is missing nDocBuckets")).toLong
-
-  private def refinePath(path: String) = path + "_refine"
-
-  // writer-version pin (concurrent-writer guard) — sibling _meta dir
-  private def versionPath(path: String) =
-    new org.apache.hadoop.fs.Path(path + "_meta/version")
-
-  private def pinPath(path: String) =
-    new org.apache.hadoop.fs.Path(path + "_meta/config")
-
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 }

@@ -11,18 +11,14 @@ import org.apache.spark.sql.functions._
   * file index — (numPlanes+1)/2^numPlanes of the data at radius 1 —
   * instead of re-bucketing the corpus per query. The third persisted
   * ANN family beside [[Similarity]]'s IVF and [[IvfPq]]; all three
-  * share [[PartitionedIndexOps]]' pin format, staged partition
-  * replacement, and compaction.
+  * write through [[BucketedIndex]] and compact through
+  * [[PartitionedIndexOps]].
   *
   * Re-crawls: a changed embedding usually flips sign bits and MOVES
   * buckets, so the stale vector must leave its old bucket — the old
   * bucket is not recomputable from the new vector, hence the same
   * id-bucketed `_docs` side table as the siblings (Chroma's
   * delete-then-add upsert, scripts/scrape_store_embed.py:79-86).
-  * Crash ordering identical to [[Similarity.writeIvfIndex]]: stale pin
-  * deleted first, data, side table, pin LAST; upsert = staged dynamic
-  * overwrite of affected buckets, then delete of vacated ones; a crash
-  * between writes heals under the foreachBatch retry of the same batch.
   */
 object LshIndex {
 
@@ -34,94 +30,37 @@ object LshIndex {
     * schema. */
   def writeLshIndex(vecs: DataFrame, embCol: String, idCol: String,
       planes: Array[Array[Double]], path: String,
-      nDocBuckets: Int = 16, keepCols: Seq[String] = Nil): Unit = {
-    val fs = fsOf(vecs.sparkSession, path)
-    PartitionedIndexOps.requireUniqueIds(vecs, idCol)
-    val claimed = PartitionedIndexOps.claimVersion(fs, versionPath(path))
-    fs.delete(pinPath(path), false)
-    val assigned = assign(vecs, embCol, idCol, planes, nDocBuckets,
-      keepCols).cache()
-    try {
-      assigned.select((Seq(idCol, embCol) ++ keepCols).map(col) :+
-          col("bucket"): _*)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket").parquet(path)
-      assigned.select(col(idCol), col("bucket"), col("dbk"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("dbk").parquet(path + "_docs")
-    } finally assigned.unpersist()
-    // the config pin is the bulk build's commit: a losing concurrent
-    // builder aborts here, leaving no valid pin (probes fail loudly)
-    PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-      s"LSH index bulk build at $path")
-    PartitionedIndexOps.writeConfigPin(fs, pinPath(path),
-      config(planes, nDocBuckets, keepCols))
-  }
+      nDocBuckets: Int = 16, keepCols: Seq[String] = Nil): Unit =
+    index(path).build(lshWrite(vecs, embCol, idCol, planes, nDocBuckets,
+      keepCols))
 
-  /** Fold a (re-)crawled batch in — the [[Similarity.upsertIvfIndex]]
-    * merge with buckets for lists. Per batch: old buckets via a
-    * dbk-pruned side-table read, affected = old ∪ new, stale rows
-    * anti-join away inside only those buckets, staged overwrite then
-    * delete-vacated, side table last. Cost ∝ batch spread. */
+  /** Fold a (re-)crawled batch in: [[BucketedIndex.upsert]] with sign-bit
+    * buckets as the main partitions. Cost ∝ batch spread. */
   def upsertLshIndex(newVecs: DataFrame, embCol: String, idCol: String,
       planes: Array[Array[Double]], path: String,
-      nDocBuckets: Int = 16, keepCols: Seq[String] = Nil): Unit = {
-    val spark = newVecs.sparkSession
-    val fs = fsOf(spark, path)
-    if (!PartitionedIndexOps.hasPartitions(fs, path, "bucket")) {
-      writeLshIndex(newVecs, embCol, idCol, planes, path, nDocBuckets,
-        keepCols)
-      return
-    }
-    val stored = PartitionedIndexOps.readConfigPin(fs, pinPath(path))
-    require(stored.isDefined,
-      s"LSH index at $path has data but no config pin (crashed build?) " +
-        "— rebuild it with writeLshIndex before upserting")
-    // pins written before keepCols existed lack the key; absent ≡ empty
-    // (those indexes were all built with no payload columns), so an old
-    // index upserts fine with keepCols=Nil instead of failing a map-
-    // equality check with a message blaming hyperplane geometry
-    val storedCfg = stored.get +
-      ("keepCols" -> stored.get.getOrElse("keepCols", ""))
-    require(storedCfg == config(planes, nDocBuckets, keepCols),
-      s"LSH index at $path was built under different hyperplanes, " +
-        "doc-bucket geometry, or payload columns — an upsert would route " +
-        "the wrong buckets or write a ragged schema")
-    PartitionedIndexOps.requireUniqueIds(newVecs, idCol)
-    val claimed = PartitionedIndexOps.claimVersion(fs, versionPath(path))
-    val assigned = assign(newVecs, embCol, idCol, planes, nDocBuckets,
-      keepCols).cache()
-    var prunedDocs: Option[DataFrame] = None
-    try {
-      // ≤ nDocBuckets values by construction
-      val dbkHit = assigned.select(col("dbk")).distinct()
-        .collect().map(_.getLong(0)).toSeq
-      val batchIds = assigned.select(col(idCol)).distinct()
-      val pruned = spark.read.parquet(path + "_docs")
-        .filter(col("dbk").isInCollection(dbkHit)).cache()
-      prunedDocs = Some(pruned)
-      val oldBuckets = pruned.join(batchIds, Seq(idCol), "left_semi")
-        .select(col("bucket"))
-      // ≤ 2^numPlanes values by construction
-      val affected = assigned.select(col("bucket")).union(oldBuckets)
-        .distinct().collect().map(_.get(0): Any).toSet
-      val merged = spark.read.parquet(path)
-        .filter(col("bucket").isInCollection(affected))
-        .join(batchIds, Seq(idCol), "left_anti") // drop re-crawled docs
-        .unionByName(assigned.select(
-          (Seq(idCol, embCol) ++ keepCols).map(col) :+ col("bucket"): _*))
-      PartitionedIndexOps.overwriteAffected(merged, path, "bucket",
-        affected, fs)
-      // side table second (retry-healable); doc buckets never vacate
-      val docsMerged = pruned.join(batchIds, Seq(idCol), "left_anti")
-        .unionByName(assigned.select(col(idCol), col("bucket"), col("dbk")))
-      PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-        s"LSH index upsert at $path")
-      PartitionedIndexOps.pinWrite(docsMerged, path + "_docs", "dbk")
-    } finally {
-      prunedDocs.foreach(_.unpersist())
-      assigned.unpersist()
-    }
+      nDocBuckets: Int = 16, keepCols: Seq[String] = Nil): Unit =
+    index(path).upsert(lshWrite(newVecs, embCol, idCol, planes, nDocBuckets,
+      keepCols))
+
+  // pins written before keepCols existed lack the key; absent ≡ empty
+  // (those indexes were all built with no payload columns), so an old
+  // index still upserts with keepCols=Nil
+  private def index(path: String) = BucketedIndex("LSH", path, path,
+    Seq("bucket"), path + "_docs", "dbk", path + "_meta", "config",
+    "writeLshIndex", "hyperplanes, doc-bucket geometry, or payload columns",
+    pinDefaults = Map("keepCols" -> ""))
+
+  private def lshWrite(vecs: DataFrame, embCol: String, idCol: String,
+      planes: Array[Array[Double]], nDocBuckets: Int,
+      keepCols: Seq[String]): BucketedIndex.Write = {
+    val assigned = vecs.select((Seq(idCol, embCol) ++ keepCols).map(col) ++
+      Seq(Similarity.bucketExpr(col(embCol), planes).as("bucket"),
+        pmod(col(idCol), lit(nDocBuckets.toLong)).as("dbk")): _*).cache()
+    BucketedIndex.Write(config(planes, nDocBuckets, keepCols), idCol,
+      Some(assigned), col("dbk"),
+      main = assigned.drop("dbk"),
+      side = assigned.select(col(idCol), col("bucket"), col("dbk")),
+      oldKeys = _.select(col("bucket")), owned = Seq(assigned))
   }
 
   /** Probe: exact cosine within the query's bucket and its
@@ -130,15 +69,7 @@ object LshIndex {
   def probeLshIndex(spark: SparkSession, path: String, embCol: String,
       idCol: String, query: Array[Float], k: Int,
       planes: Array[Array[Double]], radius: Int = 1): DataFrame = {
-    val fs = fsOf(spark, path)
-    val stored = PartitionedIndexOps.readConfigPin(fs, pinPath(path))
-    require(stored.isDefined,
-      s"LSH index at $path has no config pin (never built, or a crashed " +
-        "build) — build it with writeLshIndex before probing")
-    require(stored.get.get("planes")
-        .contains(PartitionedIndexOps.matrixFingerprint(planes)),
-      s"LSH index at $path was built under different hyperplanes — " +
-        "probe buckets would not line up")
+    requirePlanes(spark, path, planes)
     val nb = planes.length
     // the probe-set enumeration is 2^numPlanes driver-side — cap it (an
     // LSH index with more planes than this has ~1-row buckets anyway)
@@ -186,15 +117,7 @@ object LshIndex {
   def batchProbeManaged(spark: SparkSession, path: String,
       anchors: DataFrame, anchorEmbCol: String,
       planes: Array[Array[Double]], radius: Int = 1): ProbeHandle = {
-    val fs = fsOf(spark, path)
-    val stored = PartitionedIndexOps.readConfigPin(fs, pinPath(path))
-    require(stored.isDefined,
-      s"LSH index at $path has no config pin (never built, or a crashed " +
-        "build) — build it with writeLshIndex before probing")
-    require(stored.get.get("planes")
-        .contains(PartitionedIndexOps.matrixFingerprint(planes)),
-      s"LSH index at $path was built under different hyperplanes — " +
-        "probe buckets would not line up")
+    requirePlanes(spark, path, planes)
     val nb = planes.length
     require(nb <= 20, s"numPlanes=$nb too large to enumerate probe sets")
     // ONE relation serves both the collision check (schema) and the probe
@@ -269,112 +192,45 @@ object LshIndex {
       planeSets: Seq[Array[Array[Double]]], path: String,
       nDocBuckets: Int = 16, keepCols: Seq[String] = Nil): Unit = {
     require(planeSets.nonEmpty, "need at least one plane set")
-    val fs = fsOf(vecs.sparkSession, path)
-    PartitionedIndexOps.requireUniqueIds(vecs, idCol)
-    val claimed = PartitionedIndexOps.claimVersion(fs, versionPath(path))
-    fs.delete(pinPath(path), false)
-    val assigned = assignMulti(vecs, embCol, idCol, planeSets,
-      nDocBuckets, keepCols).cache()
-    try {
-      assigned.select((Seq(idCol, embCol) ++ keepCols).map(col) ++
-          Seq(col("tbl"), col("bucket")): _*)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("tbl", "bucket").parquet(path)
-      // id→(tbl,bucket) side table, dbk-bucketed: a re-crawled vector's
-      // OLD buckets per table are not recomputable from its new
-      // embedding — same Chroma delete-then-add shape as the siblings
-      assigned.select(col(idCol), col("tbl"), col("bucket"), col("dbk"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("dbk").parquet(path + "_docs")
-    } finally assigned.unpersist()
-    PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-      s"multi-table LSH index bulk build at $path")
-    PartitionedIndexOps.writeConfigPin(fs, pinPath(path),
-      multiConfig(planeSets, nDocBuckets, keepCols))
+    multiIndex(path).build(multiWrite(vecs, embCol, idCol, planeSets,
+      nDocBuckets, keepCols))
   }
 
   /** Fold a (re-)crawled batch into a multi-table index — the
-    * [[upsertLshIndex]] merge with (tbl, bucket) partition pairs: old
-    * pairs via the dbk-pruned side table, affected = old ∪ new (≤
-    * 2·batch·L pairs, driver-bounded), stale rows anti-join away inside
-    * only those partitions, staged overwrite then delete-vacated, side
-    * table last. Per-batch cost ∝ batch spread × L. */
+    * [[upsertLshIndex]] merge with (tbl, bucket) partition pairs (≤
+    * 2·batch·L affected pairs, driver-bounded). Per-batch cost ∝ batch
+    * spread × L. */
   def upsertMultiLshIndex(newVecs: DataFrame, embCol: String, idCol: String,
       planeSets: Seq[Array[Array[Double]]], path: String,
-      nDocBuckets: Int = 16, keepCols: Seq[String] = Nil): Unit = {
-    val spark = newVecs.sparkSession
-    val fs = fsOf(spark, path)
-    if (!PartitionedIndexOps.hasPartitions(fs, path, "tbl")) {
-      writeMultiLshIndex(newVecs, embCol, idCol, planeSets, path,
-        nDocBuckets, keepCols)
-      return
-    }
-    val stored = PartitionedIndexOps.readConfigPin(fs, pinPath(path))
-    require(stored.isDefined,
-      s"multi-table LSH index at $path has data but no config pin " +
-        "(crashed build?) — rebuild with writeMultiLshIndex before upserting")
-    require(stored.get == multiConfig(planeSets, nDocBuckets, keepCols),
-      s"multi-table LSH index at $path was built under different plane " +
-        "sets, doc-bucket geometry, or payload columns — an upsert would " +
-        "route the wrong partitions or write a ragged schema")
-    PartitionedIndexOps.requireUniqueIds(newVecs, idCol)
-    val claimed = PartitionedIndexOps.claimVersion(fs, versionPath(path))
-    val assigned = assignMulti(newVecs, embCol, idCol, planeSets,
-      nDocBuckets, keepCols).cache()
-    var prunedDocs: Option[DataFrame] = None
-    try {
-      // ≤ nDocBuckets values by construction
-      val dbkHit = assigned.select(col("dbk")).distinct()
-        .collect().map(_.getLong(0)).toSeq
-      val batchIds = assigned.select(col(idCol)).distinct()
-      val pruned = spark.read.parquet(path + "_docs")
-        .filter(col("dbk").isInCollection(dbkHit)).cache()
-      prunedDocs = Some(pruned)
-      val oldPairs = pruned.join(batchIds, Seq(idCol), "left_semi")
-        .select(col("tbl").cast("long"), col("bucket").cast("long"))
-      // ≤ 2·batch·L pairs by construction
-      val affected = assigned
-        .select(col("tbl").cast("long"), col("bucket").cast("long"))
-        .union(oldPairs).distinct()
-        .collect().map(r => Seq(r.get(0), r.get(1): Any)).toSet
-      // empty batch (idle foreachBatch tick): no partitions to touch —
-      // the OR-of-per-table predicate below has no terms to reduce
-      if (affected.isEmpty) return
-      val pred = affected.groupBy(_.head).map { case (t, vs) =>
-        col("tbl") === lit(t) &&
-          col("bucket").isInCollection(vs.map(_(1)).toSeq)
-      }.reduce(_ || _)
-      val merged = spark.read.parquet(path).filter(pred)
-        .join(batchIds, Seq(idCol), "left_anti") // drop re-crawled docs
-        .unionByName(assigned.select(
-          (Seq(idCol, embCol) ++ keepCols).map(col) ++
-            Seq(col("tbl"), col("bucket")): _*))
-      PartitionedIndexOps.overwriteAffectedMulti(merged, path,
-        Seq("tbl", "bucket"), affected, fs)
-      // side table second (retry-healable); doc buckets never vacate
-      val docsMerged = pruned.join(batchIds, Seq(idCol), "left_anti")
-        .unionByName(assigned.select(col(idCol), col("tbl"), col("bucket"),
-          col("dbk")))
-      PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-        s"multi-table LSH index upsert at $path")
-      PartitionedIndexOps.pinWrite(docsMerged, path + "_docs", "dbk")
-    } finally {
-      prunedDocs.foreach(_.unpersist())
-      assigned.unpersist()
-    }
-  }
+      nDocBuckets: Int = 16, keepCols: Seq[String] = Nil): Unit =
+    multiIndex(path).upsert(multiWrite(newVecs, embCol, idCol, planeSets,
+      nDocBuckets, keepCols))
 
-  private def assignMulti(vecs: DataFrame, embCol: String, idCol: String,
+  private def multiIndex(path: String) = BucketedIndex("multi-table LSH",
+    path, path, Seq("tbl", "bucket"), path + "_docs", "dbk", path + "_meta",
+    "config", "writeMultiLshIndex",
+    "plane sets, doc-bucket geometry, or payload columns")
+
+  /** The side table keeps id→(tbl, bucket): a re-crawled vector's OLD
+    * bucket per table is not recomputable from its new embedding. */
+  private def multiWrite(vecs: DataFrame, embCol: String, idCol: String,
       planeSets: Seq[Array[Array[Double]]], nDocBuckets: Int,
-      keepCols: Seq[String]): DataFrame = {
+      keepCols: Seq[String]): BucketedIndex.Write = {
     // native literal-table expression, NOT array(bucketExpr…): the
     // composed form is L×planes×dim Catalyst nodes and overflows the
     // 64 KB codegen limit at realistic table counts (interpreted
     // fallback) — see [[graft.functions.LshBuckets]]
     val buckets = graft.functions.LshBuckets(col(embCol), planeSets)
-    vecs.select((Seq(idCol, embCol) ++ keepCols).map(col) ++ Seq(
-      pmod(col(idCol), lit(nDocBuckets.toLong)).as("dbk"),
-      posexplode(buckets).as(Seq("tbl", "bucket"))): _*)
+    val assigned = vecs.select((Seq(idCol, embCol) ++ keepCols).map(col) ++
+      Seq(pmod(col(idCol), lit(nDocBuckets.toLong)).as("dbk"),
+        posexplode(buckets).as(Seq("tbl", "bucket"))): _*).cache()
+    // ids validate on the input: `assigned` holds L rows per id
+    BucketedIndex.Write(multiConfig(planeSets, nDocBuckets, keepCols), idCol,
+      Some(vecs), pmod(col(idCol), lit(nDocBuckets.toLong)),
+      main = assigned.drop("dbk"),
+      side = assigned.select(col(idCol), col("tbl"), col("bucket"),
+        col("dbk")),
+      oldKeys = _.select(col("tbl"), col("bucket")), owned = Seq(assigned))
   }
 
   /** Single-query probe of a multi-table index: the L per-table buckets
@@ -498,17 +354,19 @@ object LshIndex {
       .join(broadcast(probes), Seq("tbl", "bucket"))
   }
 
+  private def requirePlanes(spark: SparkSession, path: String,
+      planes: Array[Array[Double]]): Unit =
+    require(index(path).requireBuilt(spark).get("planes")
+        .contains(PartitionedIndexOps.matrixFingerprint(planes)),
+      s"LSH index at $path was built under different hyperplanes — " +
+        "probe buckets would not line up")
+
   private def requireMultiPin(spark: SparkSession, path: String,
-      planeSets: Seq[Array[Array[Double]]]): Unit = {
-    val fs = fsOf(spark, path)
-    val stored = PartitionedIndexOps.readConfigPin(fs, pinPath(path))
-    require(stored.isDefined,
-      s"multi-table LSH index at $path has no config pin (never built, " +
-        "or a crashed build) — build it with writeMultiLshIndex first")
-    require(stored.get.get("planes").contains(planesFingerprint(planeSets)),
+      planeSets: Seq[Array[Array[Double]]]): Unit =
+    require(multiIndex(path).requireBuilt(spark).get("planes")
+        .contains(planesFingerprint(planeSets)),
       s"multi-table LSH index at $path was built under different plane " +
         "sets (count, order, or geometry) — probe buckets would not line up")
-  }
 
   private def planesFingerprint(
       planeSets: Seq[Array[Array[Double]]]): String =
@@ -528,28 +386,9 @@ object LshIndex {
       if (dot >= 0) 1L << i else 0L
     }.reduce(_ | _)
 
-  private def assign(vecs: DataFrame, embCol: String, idCol: String,
-      planes: Array[Array[Double]], nDocBuckets: Int,
-      keepCols: Seq[String] = Nil): DataFrame =
-    vecs.select((Seq(idCol, embCol) ++ keepCols).map(col) ++ Seq(
-      Similarity.bucketExpr(col(embCol), planes).as("bucket"),
-      pmod(col(idCol), lit(nDocBuckets.toLong)).as("dbk")): _*)
-
   private def config(planes: Array[Array[Double]],
       nDocBuckets: Int, keepCols: Seq[String] = Nil): Map[String, String] =
     Map("nDocBuckets" -> nDocBuckets.toString,
       "planes" -> PartitionedIndexOps.matrixFingerprint(planes),
       "keepCols" -> keepCols.mkString(","))
-
-  private def pinPath(path: String) =
-    new org.apache.hadoop.fs.Path(path + "_meta/config")
-
-  // writer-version pin (concurrent-writer guard) — sibling _meta dir, so
-  // it survives the bulk build's full-overwrite of the data dir
-  private def versionPath(path: String) =
-    new org.apache.hadoop.fs.Path(path + "_meta/version")
-
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 }

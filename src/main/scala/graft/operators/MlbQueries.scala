@@ -15,17 +15,21 @@ import org.apache.spark.sql.functions._
   * hash-compared end to end, not just spec-tested.
   *
   * Determinism: wins/losses/runs/attendance are integer sums (exact);
-  * win_pct = wins/162-ish rounds at 4 decimals and avg home attendance at
-  * 1 decimal — neither lands on a .5 rounding boundary in the 2024 data
-  * (verified), and the rank orders by the ROUNDED win_pct with the team
-  * abbr as unique tiebreak on both sides.
+  * win_pct rounds at 4 decimals and avg home attendance at 1 decimal —
+  * neither may land on a .5 rounding boundary (Spark and DuckDB round
+  * those differently). The in-repo fixtures' generator asserts it; the
+  * reference's 2024 data was verified by hand. The rank orders by the
+  * ROUNDED win_pct with the team abbr as unique tiebreak on both sides.
   */
 object MlbQueries {
 
-  /** Fixture locations — env-overridable so the marts can point at any
-    * season's drop of the same layout. */
+  /** Fixture locations: the seeded synthetic season committed under
+    * `fixtures/mlb` (resolved against the working directory, the
+    * repository root), or any season's drop of the same layout via
+    * `GRAFT_MLB_FIXTURES`. */
   def fixtureDir: String =
-    sys.env.getOrElse("GRAFT_MLB_FIXTURES", "/root/reference/hw5")
+    sys.env.getOrElse("GRAFT_MLB_FIXTURES",
+      new java.io.File("fixtures/mlb").getAbsolutePath)
 
   private def gamelogs(s: SparkSession) =
     Readers.retrosheet(s, s"$fixtureDir/gl2024.csv")
@@ -64,7 +68,7 @@ object MlbQueries {
   }
 
   /** q87: the Game Statistics mart, exact columns only (the avg columns sit
-    * on .xx5 rounding boundaries in this data — see
+    * on .xx5 rounding boundaries in the reference data — see
     * [[MlbAnalytics.gameStatistics]]). */
   private def q87(s: SparkSession, d: String): DataFrame =
     MlbAnalytics.gameStatistics(gamelogs(s))

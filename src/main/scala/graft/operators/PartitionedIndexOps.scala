@@ -2,16 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** The delicate partition-replacement machinery shared by the persisted
-  * indexes ([[Fts]] postings, [[DedupIndex]] signatures): staged dynamic
-  * overwrite FIRST, then an explicit delete of buckets the batch vacated.
-  * Dynamic partition overwrite stages and commits the partitions present
-  * in the output, so co-bucketed rows of untouched docs are never exposed
-  * to a crash window; it never rewrites a partition with zero rows, so
-  * vacated buckets need the explicit delete afterwards. A crash before
-  * the delete leaves stale vacated rows, which a retry of the SAME batch
-  * removes (its affected set re-covers them). One copy of this ordering —
-  * a fix here applies to every index.
+/** The primitives under every persisted index's commit: typed config
+  * pins, the writer-version guard, unique-id validation, staged partition
+  * replacement, and compaction. [[BucketedIndex]] owns the order they run
+  * in (the one write protocol, with its crash and retry contract); only it
+  * and the `compact*` passes here call the write-side primitives.
   */
 object PartitionedIndexOps {
 
@@ -178,11 +173,6 @@ object PartitionedIndexOps {
     * being overwritten) and dynamic-overwrite its partitions into `path`.
     * Returns the pinned frame for post-write inspection. The shared core
     * for every self-referential partition rewrite. */
-  def pinWrite(df: DataFrame, path: String, partCol: String): DataFrame =
-    pinWrite(df, path, Seq(partCol))
-
-  /** Multi-level variant (e.g. the multi-table LSH index's `tbl=/bucket=`
-    * layout) — same pin + dynamic-overwrite contract. */
   def pinWrite(df: DataFrame, path: String,
       partCols: Seq[String]): DataFrame = {
     val pinned = df.localCheckpoint(true)
@@ -273,7 +263,7 @@ object PartitionedIndexOps {
       .toSeq
     if (over.isEmpty) return Seq.empty
     pinWrite(compactionSlice(spark, path, partCol, over)
-      .repartition(col(partCol)), path, partCol)
+      .repartition(col(partCol)), path, Seq(partCol))
     over
   }
 
@@ -334,19 +324,14 @@ object PartitionedIndexOps {
   }
 
   /** Replace the `affected` partitions of `path` with `merged`'s rows:
-    * [[pinWrite]], then delete the affected buckets absent from the output
-    * (vacated by a re-crawl). The `present` collect is bounded by the
-    * caller's bucket count. */
-  def overwriteAffected(merged: DataFrame, path: String, partCol: String,
-      affected: Set[Any],
-      fs: org.apache.hadoop.fs.FileSystem): Unit =
-    overwriteAffectedMulti(merged, path, Seq(partCol),
-      affected.map(Seq(_)), fs)
-
-  /** Multi-level variant: `affected` holds one value sequence per
-    * partition (e.g. Seq(tbl, bucket)); vacated directories delete as
-    * `tbl=t/bucket=b` nested paths. Same staged-overwrite-then-delete
-    * crash ordering as the single-level form.
+    * [[pinWrite]] FIRST — dynamic overwrite stages and commits only the
+    * partitions present in the output, so co-bucketed rows of untouched
+    * ids are never exposed to a crash window — then delete the affected
+    * partitions absent from the output (vacated by a re-crawl; dynamic
+    * overwrite never rewrites a partition with zero rows). `affected`
+    * holds one value sequence per partition (e.g. Seq(tbl, bucket));
+    * vacated directories delete as `tbl=t/bucket=b` nested paths. The
+    * `present` collect is bounded by the caller's bucket count.
     *
     * Present-vs-affected comparison is on the STRING rendering of each
     * value — the directory-name space both sides ultimately live in. Raw
@@ -354,7 +339,7 @@ object PartitionedIndexOps {
     * typically Long while a read-back partition column infers Int, and a
     * typed mismatch would classify every present partition as vacated
     * and DELETE LIVE DATA. */
-  def overwriteAffectedMulti(merged: DataFrame, path: String,
+  def overwriteAffected(merged: DataFrame, path: String,
       partCols: Seq[String], affected: Set[Seq[Any]],
       fs: org.apache.hadoop.fs.FileSystem): Unit = {
     val pinned = pinWrite(merged, path, partCols)

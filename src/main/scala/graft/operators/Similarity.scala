@@ -169,136 +169,44 @@ object Similarity {
     * side table (`<path>_docs`: id → assigned list, partitioned by
     * dbk = id mod nDocBuckets) is what lets [[upsertIvfIndex]] find a
     * re-crawled doc's OLD list without scanning the index — a changed
-    * embedding's previous list is not recomputable from the new vector
-    * (the [[Fts]] `_docs` pattern; reference analogue: Chroma's upsert is
-    * delete-then-add by id, scripts/scrape_store_embed.py:79-86). At
-    * 100 TB this is the difference between scanning nProbe/nLists of the
-    * corpus and scanning all of it.
-    *
-    * Crash ordering: stale pin DELETED first (a rebuild with retrained
-    * centroids that crashes mid-write must NOT leave the old pin beside
-    * half-new data — a later upsert would validate against it and append
-    * mis-assigned vectors), then data, then the side table, pin LAST. A
-    * crash anywhere in between leaves data-without-pin, which the next
-    * upsert refuses fast (rebuild required) — an upsert can't heal a
-    * partial build the way the merge-branch indexes (Fts/DedupIndex) can,
-    * because the bulk write is not keyed by batch. */
+    * embedding's previous list is not recomputable from the new vector.
+    * At 100 TB this is the difference between scanning nProbe/nLists of
+    * the corpus and scanning all of it. The pin covers the exact centroid
+    * bits and the doc-bucket modulus; a rebuild with retrained centroids
+    * deletes the old pin first ([[BucketedIndex]]'s pin-last order). */
   def writeIvfIndex(index: DataFrame, embCol: String, idCol: String,
       cents: Array[Array[Double]], path: String,
-      nDocBuckets: Int = 16): Unit = {
-    val fs = fsOf(index.sparkSession, path)
-    PartitionedIndexOps.requireUniqueIds(index, idCol)
-    val claimed = PartitionedIndexOps.claimVersion(fs, versionPath(path))
-    fs.delete(pinPath(path), false)
-    val assigned = ivfAssign(index, embCol, cents).cache()
-    try {
-      assigned.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("list_id").parquet(path)
-      assigned
-        .select(col(idCol), col("list_id"),
-          pmod(col(idCol), lit(nDocBuckets.toLong)).as("dbk"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("dbk").parquet(path + "_docs")
-    } finally assigned.unpersist()
-    // the pin is the build's commit: a losing concurrent builder aborts
-    // here, leaving data-without-pin (the next caller refuses fast)
-    PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-      s"IVF index bulk build at $path")
-    PartitionedIndexOps.writeConfigPin(fs, pinPath(path),
-      ivfConfig(cents, nDocBuckets))
-  }
+      nDocBuckets: Int = 16): Unit =
+    ivfIndex(path).build(ivfWrite(index, embCol, idCol, cents, nDocBuckets))
 
   /** Incremental maintenance — fold a (re-)crawled batch into the index
-    * ([[DedupIndex.upsertSignatureIndex]]'s merge applied to vectors). A
-    * re-crawled doc whose text (hence embedding) changed may have moved
-    * lists, and its stale vector must LEAVE the old list — append-only
-    * would return it as a phantom neighbor forever. Per batch: old lists
-    * come from a doc-bucket-pruned side-table read, affected = old ∪ new
-    * list ids, stale rows anti-join away inside only those lists, and
-    * both tables rewrite only touched partitions (staged dynamic
-    * overwrite FIRST, then delete of lists the batch vacated —
-    * [[PartitionedIndexOps]]'s ordering; the side table writes last, so a
-    * crash between the two writes is healed by the foreachBatch retry of
-    * the same batch: the stale side rows still name the true old lists).
-    * Per-batch cost scales with the batch's list/doc spread, never the
-    * index size. An empty index routes to the bulk build; data without a
-    * pin is a crashed build and fails fast. */
+    * ([[BucketedIndex.upsert]] with lists as the main partitions). A
+    * re-crawled doc whose embedding changed may have moved lists, and its
+    * stale vector must LEAVE the old list — append-only would return it
+    * as a phantom neighbor forever. Per-batch cost scales with the
+    * batch's list/doc spread, never the index size. */
   def upsertIvfIndex(newVecs: DataFrame, embCol: String, idCol: String,
       cents: Array[Array[Double]], path: String,
-      nDocBuckets: Int = 16): Unit = {
-    val spark = newVecs.sparkSession
-    val fs = fsOf(spark, path)
-    if (!PartitionedIndexOps.hasPartitions(fs, path, "list_id")) {
-      writeIvfIndex(newVecs, embCol, idCol, cents, path, nDocBuckets)
-      return
-    }
-    val stored = PartitionedIndexOps.readConfigPin(fs, pinPath(path))
-    require(stored.isDefined,
-      s"IVF index at $path has data but no centroid pin (crashed build?) " +
-        "— rebuild it with writeIvfIndex before upserting")
-    require(stored.get == ivfConfig(cents, nDocBuckets),
-      s"IVF index at $path was built with different centroids or doc-bucket " +
-        "geometry — an upsert under retrained centroids would mis-assign " +
-        "lists, and a different nDocBuckets would prune the wrong side buckets")
-    PartitionedIndexOps.requireUniqueIds(newVecs, idCol)
-    val claimed = PartitionedIndexOps.claimVersion(fs, versionPath(path))
-    val docsPath = path + "_docs"
-    val assigned = ivfAssign(newVecs, embCol, cents)
+      nDocBuckets: Int = 16): Unit =
+    ivfIndex(path).upsert(ivfWrite(newVecs, embCol, idCol, cents,
+      nDocBuckets))
+
+  private def ivfIndex(path: String) = BucketedIndex("IVF", path, path,
+    Seq("list_id"), path + "_docs", "dbk", path + "_meta", "centroids",
+    "writeIvfIndex", "centroids or doc-bucket geometry")
+
+  private def ivfWrite(vecs: DataFrame, embCol: String, idCol: String,
+      cents: Array[Array[Double]], nDocBuckets: Int): BucketedIndex.Write = {
+    val assigned = ivfAssign(vecs, embCol, cents)
       .withColumn("dbk", pmod(col(idCol), lit(nDocBuckets.toLong))).cache()
-    var prunedDocs: Option[DataFrame] = None
-    try {
-      // ≤ nDocBuckets values by construction
-      val dbkHit = assigned.select(col("dbk")).distinct()
-        .collect().map(_.getLong(0)).toSeq
-      val batchIds = assigned.select(col(idCol)).distinct()
-      val pruned = spark.read.parquet(docsPath)
-        .filter(col("dbk").isInCollection(dbkHit)).cache()
-      prunedDocs = Some(pruned)
-      val oldLists = pruned.join(batchIds, Seq(idCol), "left_semi")
-        .select(col("list_id"))
-      // ≤ nLists values by construction (cents.length, capped at 65536)
-      val affected = assigned.select(col("list_id")).union(oldLists)
-        .distinct().collect().map(_.get(0): Any).toSet
-      val merged = spark.read.parquet(path)
-        .filter(col("list_id").isInCollection(affected))
-        .join(batchIds, Seq(idCol), "left_anti") // drop re-crawled docs
-        .unionByName(assigned.drop("dbk"))
-      PartitionedIndexOps.overwriteAffected(merged, path, "list_id",
-        affected, fs)
-      // side table second (retry-healable, see scaladoc); doc buckets never
-      // empty (every removed id is re-inserted), so no delete pass
-      val docsMerged = pruned.join(batchIds, Seq(idCol), "left_anti")
-        .unionByName(assigned.select(col(idCol), col("list_id"), col("dbk")))
-      PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-        s"IVF index upsert at $path")
-      PartitionedIndexOps.pinWrite(docsMerged, docsPath, "dbk")
-    } finally {
-      prunedDocs.foreach(_.unpersist())
-      assigned.unpersist()
-    }
+    BucketedIndex.Write(
+      Map("nDocBuckets" -> nDocBuckets.toString,
+        "centroids" -> PartitionedIndexOps.matrixFingerprint(cents)),
+      idCol, Some(assigned), col("dbk"),
+      main = assigned.drop("dbk"),
+      side = assigned.select(col(idCol), col("list_id"), col("dbk")),
+      oldKeys = _.select(col("list_id")), owned = Seq(assigned))
   }
-
-  private def fsOf(spark: org.apache.spark.sql.SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def centroidsFingerprint(cents: Array[Array[Double]]): String =
-    PartitionedIndexOps.matrixFingerprint(cents)
-
-  /** Everything that changes list assignment or side-bucket routing is
-    * pinned: the exact centroid bits plus the doc-bucket modulus (the
-    * shared typed-pin format, [[PartitionedIndexOps.writeConfigPin]]). */
-  private def ivfConfig(cents: Array[Array[Double]],
-      nDocBuckets: Int): Map[String, String] =
-    Map("nDocBuckets" -> nDocBuckets.toString,
-      "centroids" -> centroidsFingerprint(cents))
-
-  private def pinPath(path: String) =
-    new org.apache.hadoop.fs.Path(path + "_meta/centroids")
-
-  // writer-version pin (concurrent-writer guard) — sibling _meta dir
-  private def versionPath(path: String) =
-    new org.apache.hadoop.fs.Path(path + "_meta/version")
 
   /** Probe a persisted IVF index: the list_id filter prunes partitions at
     * the file index, before any data is read. */

@@ -124,7 +124,7 @@ case class BandedIntervalJoinRule() extends Rule[LogicalPlan] {
     * width (the pre-round-9 behavior) made a 30-minute interval probe
     * DAY-wide bands, testing every same-day pair: 10.7 s vs 2.4 s at the
     * ×10 yardstick, and quadratic in corpus density at scale. A/B at ×10
-    * (graft.BandTune): span/1 2.40 s, /2 2.37 s, /4 2.45 s, /8 2.83 s —
+    * (PERF.md, band-width A/B): span/1 2.40 s, /2 2.37 s, /4 2.45 s, /8 2.83 s —
     * flat around span, so the ≤2-replication choice wins. */
   private def inferSpan(ivSide: LogicalPlan, lo: AttributeReference,
       hi: AttributeReference): Option[Long] =

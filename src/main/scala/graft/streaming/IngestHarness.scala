@@ -10,8 +10,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
   * then drain a `maxFilesPerTrigger=1` file stream through
   * `foreachBatch(fold)` against a checkpoint. `fold` is the per-family
   * upsert (`DedupIndex.ingestBatch` / `IvfPq.upsertIvfPqIndex` /
-  * `Fts.upsertPostingsIndex`) — each of those owns its bulk-vs-append
-  * routing and crash ordering, so a NEW index family gets streaming
+  * `Fts.upsertPostingsIndex`) — each writes through
+  * [[graft.operators.BucketedIndex]], which owns bulk-vs-merge routing
+  * and crash ordering, so a NEW index family gets streaming
   * maintenance by supplying only its fold, and the
   * retry-of-the-same-batch healing contract is exercised through the
   * same checkpointed machinery for all of them.

@@ -7,11 +7,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ONE parameterized lifecycle matrix over every persisted index family
-  * ({dedup signatures, LSH, multi-table LSH, IVF-PQ, FTS postings}),
+  * ({dedup signatures, LSH, multi-table LSH, IVF, IVF-PQ, FTS postings}),
   * replacing the per-family copies of the shared invariants: a new
   * invariant added to [[IndexLifecycleSpec.families]]'s loop lands in all
-  * five families at once (the round-8 verdict's ask — the writer-token
-  * guard had to be hand-propagated five times).
+  * six families at once.
   *
   * Matrix invariants (× every family):
   *   1. writer guard + heal + re-crawl: a completed op advances the
@@ -24,10 +23,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *   2. compaction: compacting fragmented partitions (maxFiles=1) rewrites
   *      at least one partition of the main table, never increases the
   *      file count, and leaves every table's CONTENT byte-identical.
+  *   3. validate before claiming: a duplicate-id batch sent to the bulk
+  *      build and to an upsert throws "duplicate" and leaves the version
+  *      pin and every table's content unchanged.
   *
   * Family-SPECIFIC semantics (pruned-scan shapes, payload pins, vacated
   * buckets, recall) stay in the per-family specs; this matrix owns only
-  * the invariants all five share. */
+  * the invariants all six share. */
 class IndexLifecycleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -71,7 +73,8 @@ class IndexLifecycleSpec extends AnyFunSuite {
 
   /** Everything the matrix needs to drive one family through the shared
     * lifecycle. `tables` lists (path-suffix, partCols) of every persisted
-    * table; content equality reads them all. */
+    * table; content equality reads them all. `checkedBuild` is the bulk
+    * build that owns the duplicate-id check, when `build` does not. */
   private final case class Family(
       name: String,
       build: (DataFrame, String) => Unit,
@@ -80,7 +83,8 @@ class IndexLifecycleSpec extends AnyFunSuite {
       batchB: () => DataFrame,
       corpusFinal: () => DataFrame,
       tables: Seq[(String, Seq[String])],
-      versionPath: String => org.apache.hadoop.fs.Path)
+      versionPath: String => org.apache.hadoop.fs.Path,
+      checkedBuild: Option[(DataFrame, String) => Unit] = None)
 
   /** Canonical content of every table of the index at `path`: row strings
     * tagged by table, column order normalized — layout-independent, so it
@@ -143,6 +147,15 @@ class IndexLifecycleSpec extends AnyFunSuite {
       corpusFinal = () => vecsFinal,
       tables = Seq("" -> Seq("tbl", "bucket"), "_docs" -> Seq("dbk")),
       versionPath = p => new org.apache.hadoop.fs.Path(p + "_meta/version")),
+    Family("ivf",
+      build = (c, p) =>
+        Similarity.writeIvfIndex(c, "embedding", "vec_id", cents, p),
+      upsert = (b, p) =>
+        Similarity.upsertIvfIndex(b, "embedding", "vec_id", cents, p),
+      corpusA = () => vecsA, batchB = () => vecsB,
+      corpusFinal = () => vecsFinal,
+      tables = Seq("" -> Seq("list_id"), "_docs" -> Seq("dbk")),
+      versionPath = p => new org.apache.hadoop.fs.Path(p + "_meta/version")),
     Family("ivf-pq",
       build = (c, p) =>
         IvfPq.writeIvfPqIndex(c, "embedding", "vec_id", cents, books, p),
@@ -161,7 +174,11 @@ class IndexLifecycleSpec extends AnyFunSuite {
       corpusA = () => docsA, batchB = () => docsB,
       corpusFinal = () => docsFinal,
       tables = Seq("" -> Seq("wb"), "_docs" -> Seq("db")),
-      versionPath = p => new org.apache.hadoop.fs.Path(p + "_meta/version")))
+      versionPath = p => new org.apache.hadoop.fs.Path(p + "_meta/version"),
+      // writePostingsIndex takes postings, not docs: the facade's build
+      // is the one keyed by doc id
+      checkedBuild = Some((c, p) =>
+        graft.api.Graft.index.buildFts(c, "doc_id", "text", p))))
 
   // ---- invariant 1: writer guard + heal + re-crawl == scratch ----
   for (f <- families)
@@ -218,5 +235,29 @@ class IndexLifecycleSpec extends AnyFunSuite {
       // content, so re-compacting is a no-op (idempotence)
       assert(compactAll(f, dir).isEmpty,
         s"${f.name}: re-compacting a just-compacted index must be a no-op")
+    }
+
+  // ---- invariant 3: validate before claiming ----
+  for (f <- families)
+    test(s"${f.name}: a duplicate-id batch is rejected before any claim " +
+      "or write, in the bulk build and the upsert") {
+      val dir = tmp(f.name.replace('-', '_') + "_dup")
+      f.build(f.corpusA(), dir)
+      val vp = f.versionPath(dir)
+      val pin = PartitionedIndexOps.readPin(fs, vp)
+      val before = content(f, dir)
+      val b = f.batchB()
+      val dup = b.unionByName(b.limit(1))
+      for ((what, write) <- Seq(
+          "bulk build" -> f.checkedBuild.getOrElse(f.build),
+          "upsert" -> f.upsert)) {
+        val ex = intercept[IllegalArgumentException](write(dup, dir))
+        assert(ex.getMessage.contains("duplicate"),
+          s"${f.name} $what: ${ex.getMessage}")
+        assert(PartitionedIndexOps.readPin(fs, vp) == pin,
+          s"${f.name} $what: a rejected batch moved the version pin")
+        assert(content(f, dir) == before,
+          s"${f.name} $what: a rejected batch changed index content")
+      }
     }
 }

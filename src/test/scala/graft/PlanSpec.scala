@@ -200,25 +200,25 @@ class PlanSpec extends AnyFunSuite {
     // and are not in scope.)
     val bounded: Map[String, (Int, String)] = Map(
       "operators/Similarity.scala" ->
-        (4, "IVF trainer: nLists-capped centroid init + one mean-vector row per list; upsert: doc-bucket + affected-list id sets, <= nDocBuckets / <= nLists"),
+        (2, "IVF trainer: nLists-capped centroid init + one mean-vector row per list"),
       "operators/BpeTrainer.scala" ->
         (1, "BPE argmax merge rule: limit(1), one row per round"),
       "operators/Lakehouse.scala" ->
         (1, "CDC bucket merge: <= nBuckets affected-bucket ids"),
-      "operators/Fts.scala" ->
-        (1, "postings upsert: affected-term-bucket id set, <= nBuckets (the doc-bucket set rides the fused requireUniqueIdsCollectingBuckets agg)"),
       "operators/DedupIndex.scala" ->
-        (5, "probe: hit band-bucket set (<= nBuckets, fused-stats fallback) + candidate shingle-bucket set, uncapped and capped variants (<= nDocBuckets, + 1 margin row on the capped path); ingestBatch: fused batch-stats rows (2: validation counts + <= nBuckets/nDocBuckets bucket sets); upsert: affected-band-bucket id set (<= nBuckets)"),
+        (4, "probe: hit band-bucket set (<= nBuckets, fused-stats fallback) + candidate shingle-bucket set, uncapped and capped variants (<= nDocBuckets, + 1 margin row on the capped path); ingestBatch: fused batch-stats rows (2: validation counts + <= nBuckets/nDocBuckets bucket sets)"),
+      "operators/BucketedIndex.scala" ->
+        (1, "every family's upsert: affected main-partition key set, bounded by the family's bucket geometry (<= nBuckets / <= nLists / <= 2^numPlanes / <= 2·batch·L pairs; the side-bucket set rides the fused requireUniqueIdsCollectingBuckets agg)"),
       "operators/PartitionedIndexOps.scala" ->
         (1, "overwriteAffected: present-partition id set, <= the caller's bucket count"),
       "operators/Pq.scala" ->
         (2, "PQ trainer: k-row codebook init (k <= 256) + one mean row per occupied code per subspace"),
       "operators/IvfPq.scala" ->
-        (2, "probe: rerank-capped candidate-id point-lookup keys (<= 1024); upsert: affected-list id set, <= nLists (doc-bucket set rides the fused validation agg)"),
+        (1, "probe: rerank-capped candidate-id point-lookup keys (<= 1024)"),
       "operators/SimilarityQueries.scala" ->
         (4, "q158/q172/q173/q176 evals: nQ=10 query-vector rows each (literal bound)"),
       "operators/LshIndex.scala" ->
-        (6, "upserts (single + multi): doc-bucket + affected-partition sets (<= nDocBuckets / <= 2^numPlanes / <= 2·batch·L pairs); batchProbe/batchProbeMulti: probe-partition unions (<= 2^numPlanes / <= anchors×L)"),
+        (2, "batchProbe/batchProbeMulti: probe-partition unions (<= 2^numPlanes / <= anchors×L)"),
       "operators/CurationQueries.scala" ->
         (1, "q109 CMS: one serialized sketch per language"),
       "operators/Curation.scala" ->
@@ -229,8 +229,6 @@ class PlanSpec extends AnyFunSuite {
         (2, "dev-only rehearsal main: two top-10 probe results, materialized for the timing harness"),
       "ProbeScale.scala" ->
         (2, "dev-only serving-scale main: phrase-hit rows (posting-intersection-sized, the served result) + top-10 ADC probe rows, materialized for the timing harness"),
-      "Q04Variants.scala" ->
-        (3, "dev-only variant-study main: q04 equality check collects the 5-row grouped-by-priority output twice; q10 comparison collects one count+bit_xor checksum row per variant"),
       "llm/RagPipeline.scala" ->
         (1, "RAG context assembly: top-k rows, k<=3 by construction"))
     val root = java.nio.file.Paths.get("src/main/scala/graft")

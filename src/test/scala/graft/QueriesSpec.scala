@@ -46,10 +46,15 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("every declared query executes at sf0.001") {
-    SparkEntry.defs.foreach { q =>
-      val n = q.run(spark, TestSpark.sf0001).count()
-      assert(n >= 0, s"${q.name} failed")
+    // run them ALL, then report every failure: one broken query must not
+    // hide the ones declared after it
+    val failed = SparkEntry.defs.flatMap { q =>
+      scala.util.Try(q.run(spark, TestSpark.sf0001).count()).failed.toOption
+        .map(e => s"${q.name}: ${e.getClass.getSimpleName}: " +
+          String.valueOf(e.getMessage).linesIterator.take(3).mkString(" "))
     }
+    assert(failed.isEmpty,
+      s"${failed.size} queries failed:\n${failed.mkString("\n")}")
   }
 
   test("minhash-LSH dup pairs equal brute-force jaccard pairs (sf0.01)") {
