@@ -11,13 +11,12 @@ import org.apache.spark.sql.SparkSession
   * 2-3× on scheduling noise, which is indistinguishable from a real
   * regression (the r1→r2 +29% drift problem).
   *
-  * Besides wall-clock, each query's SHUFFLE VOLUME (records + bytes written
-  * across all its stages) is captured once via a SparkListener — records are
-  * deterministic for a given plan and data, so cross-round comparisons read
-  * regressions off volume instead of this box's ±25-50% wall-clock noise
-  * (PERF.md's five-run study). Attribution is exact: the metrics pass tags
-  * its jobs with a per-query job group, the listener maps the group's
-  * stages to the query, and task metrics sum per stage.
+  * Every timed execution runs as an [[obs.Profile]] unit. The first round's
+  * record per query goes to the file payload: its SHUFFLE VOLUME (records +
+  * bytes written across all its stages) — records are deterministic for a
+  * given plan and data, so cross-round comparisons read regressions off
+  * volume instead of this box's ±25-50% wall-clock noise (PERF.md's
+  * five-run study) — and its planning-vs-execution split.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -56,57 +55,34 @@ object Bench {
       require(names.nonEmpty, "SPARK_GRAFT_BENCH_ONLY is set but empty")
     }
     val qs = baseSet.filter(q => only.forall(_.contains(q.name)))
-    // shuffle-volume capture: job group → stages → summed task write metrics
-    val stageToQuery = scala.collection.concurrent.TrieMap.empty[Int, String]
-    val shuffleAgg =
-      scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val g = Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          g.filter(_.startsWith("bench:")).foreach { grp =>
-            js.stageIds.foreach(sid => stageToQuery(sid) = grp.drop(6))
-          }
-        }
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          stageToQuery.get(te.stageId).foreach { qn =>
-            val m = te.taskMetrics
-            if (m != null) {
-              val w = m.shuffleWriteMetrics
-              val (r0, b0) = shuffleAgg.getOrElse(qn, (0L, 0L))
-              shuffleAgg(qn) = (r0 + w.recordsWritten, b0 + w.bytesWritten)
-            }
-          }
-      })
+    val prof = new obs.Profile(spark)
+    // first-round records, plans dropped so no executed plan (and its
+    // broadcast relations) outlives its query
+    val firstRound = scala.collection.mutable.Map.empty[String, obs.Record]
     // warm-up: JIT + codegen cache + file listing (failures surface in the
     // timed pass — don't double-report)
     qs.foreach(q => try exec(q) catch { case _: Throwable => () })
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def timeOnce(q: QueryDef, metricsPass: Boolean): Double = {
-      if (metricsPass)
-        spark.sparkContext.setJobGroup(s"bench:${q.name}",
-          s"bench metrics pass: ${q.name}")
-      val t0 = System.nanoTime()
-      try { exec(q); (System.nanoTime() - t0) / 1e9 } catch {
+    def timeOnce(q: QueryDef): Double =
+      try {
+        val r = prof(q.name)(exec(q))._2
+        firstRound.getOrElseUpdate(q.name, r.copy(plans = Nil))
+        r.wallMs / 1e3
+      } catch {
         case t: Throwable =>
           System.err.println(s"BENCH FAILURE ${q.name}: ${t.getClass.getName}: ${t.getMessage}")
           errors(q.name) = Option(t.getMessage).getOrElse(t.getClass.getName).take(200)
           -1.0
-      } finally if (metricsPass) spark.sparkContext.clearJobGroup()
-    }
+      }
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
     }
     // interleaved rounds (q1..qn, q1..qn, ...) rather than q1×3, q2×3 — so a
     // transient contention spike hits one ROUND, not all samples of one query;
-    // shuffle volume is recorded on round 1 only (records are plan-
+    // shuffle volume is reported from round 1 only (records are plan-
     // deterministic; one execution's volume IS the number)
-    val samples = (1 to runs).map(r =>
-      qs.map(q => q.name -> timeOnce(q, metricsPass = r == 1)))
+    val samples = (1 to runs).map(_ => qs.map(q => q.name -> timeOnce(q)))
     val results = qs.map { q =>
       val vals = samples.map(_.find(_._1 == q.name).get._2)
       q.name -> (if (vals.exists(_ < 0)) -1.0 else median(vals))
@@ -119,25 +95,15 @@ object Bench {
       else errors.map { case (k, v) =>
         "\"" + k + "\":\"" + v.replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\""
       }.mkString(",\"errors\":{", ",", "}")
-    // drain the async listener bus before reading the shuffle aggregates
-    // (task-end events may still be queued right after the last job). A
-    // fixed sleep undercounts on a loaded box — poll until two consecutive
-    // snapshots agree (bounded at 15 s so a wedged bus can't hang bench)
-    def snapshot(): Map[String, (Long, Long)] = shuffleAgg.toMap
-    var prev = snapshot()
-    var stable = false
-    val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-    while (!stable && System.nanoTime() < deadline) {
-      Thread.sleep(250)
-      val cur = snapshot()
-      stable = cur == prev
-      prev = cur
-    }
     val shJson = qs.map { q =>
-      val (r, b) = shuffleAgg.getOrElse(q.name, (0L, 0L))
+      val (r, b) = firstRound.get(q.name)
+        .fold((0L, 0L))(p => (p.shuffleRecords, p.shuffleBytes))
       "\"" + q.name + s"""":{"records":$r,"bytes":$b}"""
     }.mkString(",\"shuffle\":{", ",", "}")
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":$runs,"queries":$qJson$shJson$errJson,"sf":"$sfDir"}"""
+    val profJson = qs.flatMap(q => firstRound.get(q.name))
+      .map(p => "\"" + p.name + "\":" + p.json)
+      .mkString(",\"profile\":{", ",", "}")
+    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":$runs,"queries":$qJson$shJson$profJson$errJson,"sf":"$sfDir"}"""
     // stdout gets the COMPACT line (no per-query shuffle map): the driver
     // captures a bounded TAIL of stdout, and the full line outgrew that
     // window once shuffle metrics landed (BENCH_r06 and BENCH_r10 both

@@ -1,0 +1,136 @@
+package graft.obs
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{GraftShims, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+
+/** One shuffle exchange of an executed plan: what it wrote and its input. */
+final case class Exchange(records: Long, bytes: Long, child: String, node: String)
+
+/** What one named unit of work cost. `planningMs` sums Catalyst's phase
+  * times over its SQL executions; `jobBusyMs` is the time any of its jobs
+  * ran, `driverGapMs` the rest of the wall; `plans` hold AQE's final plans. */
+final case class Record(name: String, wallMs: Double, planningMs: Long,
+    sqlExecutions: Long, jobs: Long, jobBusyMs: Long, driverGapMs: Long,
+    shuffleRecords: Long, shuffleBytes: Long, plans: Seq[QueryExecution]) {
+
+  def exchanges: Seq[Exchange] = plans.flatMap(qe => Profile.nodes(qe.executedPlan))
+    .collect { case s: ShuffleExchangeLike =>
+      def metric(k: String) = s.metrics.get(k).map(_.value).getOrElse(-1L)
+      Exchange(metric("shuffleRecordsWritten"), metric("shuffleBytesWritten"),
+        s.children.headOption.map(_.nodeName).getOrElse("?"), s.nodeName)
+    }
+
+  def json: String =
+    f"""{"name":${Profile.str(name)},"wall_ms":$wallMs%.1f,""" +
+      f""""planning_ms":$planningMs,"execution_ms":${wallMs - planningMs}%.1f,""" +
+      s""""sql_executions":$sqlExecutions,"jobs":$jobs,""" +
+      s""""job_busy_ms":$jobBusyMs,"driver_gap_ms":$driverGapMs,""" +
+      s""""shuffle_records":$shuffleRecords,"shuffle_bytes":$shuffleBytes}"""
+}
+
+/** The engine's one metrics collector; constructing it attaches it to the
+  * session's context, so only mains that profile pay for it.
+  * `profile(name) { body }` runs `body` as a unit of work and returns its
+  * [[Record]], built after a listener-bus drain. Work is attributed by job
+  * tag, not job group: threads the unit starts inherit its tag, and a
+  * streaming query's thread keeps the tags when it replaces the job group
+  * with its run id. An outer unit also counts its inner units' work. */
+final class Profile(spark: SparkSession) extends SparkListener {
+  private val sc = spark.sparkContext
+  private val ids = new AtomicInteger(0)
+
+  private final class Acc {
+    var planningMs, execs, jobs, shRecords, shBytes = 0L
+    val jobTimes = mutable.ArrayBuffer.empty[(Long, Long)]
+    val plans = mutable.ArrayBuffer.empty[QueryExecution]
+  }
+  // open units by tag, and the units each running stage/job/execution feeds
+  private val open = mutable.Map.empty[String, Acc]
+  private val stageAccs = mutable.Map.empty[Int, Seq[Acc]]
+  private val jobAccs = mutable.Map.empty[Int, (Seq[Acc], Long)]
+  private val execAccs = mutable.Map.empty[Long, Seq[Acc]]
+  sc.addSparkListener(this)
+
+  def apply[T](name: String)(body: => T): (T, Record) = {
+    val tag = s"graft-profile-${ids.incrementAndGet()}"
+    val a = new Acc
+    synchronized(open(tag) = a)
+    try {
+      sc.addJobTag(tag)
+      val t0 = System.nanoTime()
+      val out = try body finally sc.removeJobTag(tag)
+      val wallMs = (System.nanoTime() - t0) / 1e6
+      GraftShims.drainListenerBus(sc)
+      (out, synchronized(record(name, wallMs, a)))
+    } finally synchronized {
+      open.remove(tag)
+      stageAccs.filterInPlace((_, as) => !as.contains(a))
+    }
+  }
+
+  private def record(name: String, wallMs: Double, a: Acc): Record = {
+    val busy = a.jobTimes.sortBy(_._1).foldLeft((0L, 0L)) { case ((sum, end), (s, e)) =>
+      (sum + math.max(0L, e - math.max(s, end)), math.max(end, e))
+    }._1
+    Record(name, wallMs, a.planningMs, a.execs, a.jobs, busy,
+      math.max(0L, math.round(wallMs) - busy), a.shRecords, a.shBytes, a.plans.toSeq)
+  }
+
+  /** Stops collecting; units still open record nothing more. */
+  def close(): Unit = sc.removeSparkListener(this)
+
+  override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
+    val as = Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+      .toSeq.flatMap(_.split(",")).flatMap(open.get)
+    if (as.nonEmpty) {
+      js.stageIds.foreach(stageAccs(_) = as)
+      jobAccs(js.jobId) = (as, js.time)
+      as.foreach(_.jobs += 1)
+    }
+  }
+
+  override def onJobEnd(je: SparkListenerJobEnd): Unit = synchronized {
+    for ((as, t0) <- jobAccs.remove(je.jobId); a <- as) a.jobTimes += ((t0, je.time))
+  }
+
+  override def onTaskEnd(te: SparkListenerTaskEnd): Unit = synchronized {
+    for (as <- stageAccs.get(te.stageId); m <- Option(te.taskMetrics); a <- as) {
+      a.shRecords += m.shuffleWriteMetrics.recordsWritten
+      a.shBytes += m.shuffleWriteMetrics.bytesWritten
+    }
+  }
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = synchronized(e match {
+    case s: SparkListenerSQLExecutionStart =>
+      val as = s.jobTags.toSeq.flatMap(open.get)
+      if (as.nonEmpty) execAccs(s.executionId) = as
+      as.foreach(_.execs += 1)
+    case end: SparkListenerSQLExecutionEnd =>
+      for (as <- execAccs.remove(end.executionId);
+           qe <- Option(GraftShims.queryExecution(end)); a <- as) {
+        a.planningMs += qe.tracker.phases.values.map(_.durationMs).sum
+        a.plans += qe
+      }
+    case _ =>
+  })
+}
+
+object Profile {
+  /** Every node of an executed plan, AQE stages and their plans included. */
+  def nodes(p: SparkPlan): Seq[SparkPlan] = (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case _ => p.children.flatMap(nodes)
+  }) :+ p
+
+  def str(s: String): String =
+    "\"" + s.replaceAll("[\\\\\"]", " ").replaceAll("[\\x00-\\x1f]", " ") + "\""
+}

@@ -1,11 +1,14 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
 /** Minimal package-placed shim: Spark 4 made Column↔Expression conversion
   * private[sql] (classic.ExpressionUtils), and third-party expression
   * libraries conventionally bridge it from inside the package. Only these
-  * three bridges are exposed; nothing else reaches into internals.
+  * bridges are exposed; nothing else reaches into internals.
   */
 object GraftShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -20,4 +23,14 @@ object GraftShims {
   def inSession(spark: SparkSession, df: Dataset[Row]): Dataset[Row] =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       df.queryExecution.analyzed)
+
+  /** Blocks until every listener has seen every event posted so far, so a
+    * profiler reads its counters only after the work they describe; throws
+    * on timeout rather than return an undercount. */
+  def drainListenerBus(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
+
+  /** The QueryExecution Spark attaches to an execution's end event (null
+    * when the event was not posted by SQLExecution). */
+  def queryExecution(e: SparkListenerSQLExecutionEnd): QueryExecution = e.qe
 }

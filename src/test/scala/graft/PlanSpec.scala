@@ -225,10 +225,8 @@ class PlanSpec extends AnyFunSuite {
         (3, "balancedShards rank offsets: one count row per range partition (<= rangeParts); transitionScores literal path: model rows, guarded <= modelLiteralMax (2^18); contaminationCounts literal path: eval hash set, guarded <= evalLiteralMax via limit(max+1)"),
       "llm/WeightsFileLlm.scala" ->
         (2, "LM trainer: vocab rows (<= maxVocab <= 4096) + transition rows (<= maxVocab^2, post-aggregation)"),
-      "Rehearsal.scala" ->
-        (2, "dev-only rehearsal main: two top-10 probe results, materialized for the timing harness"),
-      "ProbeScale.scala" ->
-        (2, "dev-only serving-scale main: phrase-hit rows (posting-intersection-sized, the served result) + top-10 ADC probe rows, materialized for the timing harness"),
+      "Profile.scala" ->
+        (4, "dev-only profiler main, probes mode: top-10 LSH, ADC and brute-scan probe rows + phrase-hit rows (posting-intersection-sized, the served result), materialized for the timing harness"),
       "llm/RagPipeline.scala" ->
         (1, "RAG context assembly: top-k rows, k<=3 by construction"))
     val root = java.nio.file.Paths.get("src/main/scala/graft")
@@ -249,6 +247,23 @@ class PlanSpec extends AnyFunSuite {
       s"collect() call sites not in the bounded whitelist (add only with a documented bound): $unexpected")
     val stale = bounded.keys.filterNot(found.contains)
     assert(stale.isEmpty, s"whitelist entries with no collect anymore: $stale")
+  }
+
+  test("one metrics collector: only obs/Profile registers or defines listeners") {
+    // a second hand-rolled listener is how the mains ended up counting
+    // different things with different drain bugs; every counter goes
+    // through graft.obs.Profile instead
+    val listenerRe = ("addSparkListener|listenerManager\\.register|" +
+      "(extends|with|new)\\s+([\\w.]+\\.)?(SparkListener|QueryExecutionListener)\\b").r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
+    java.nio.file.Files.walk(root).forEach { p =>
+      val rel = root.relativize(p).toString
+      if (rel.endsWith(".scala") && !rel.matches("graft/obs/Profile[^/]*\\.scala") &&
+          listenerRe.findFirstIn(java.nio.file.Files.readString(p)).nonEmpty)
+        offenders += rel
+    }
+    assert(offenders.isEmpty, s"listeners outside graft/obs/Profile: $offenders")
   }
 
   test("contamination eval shingles broadcast at plan time, not via AQE") {

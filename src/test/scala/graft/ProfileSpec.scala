@@ -1,0 +1,74 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The one metrics collector: what a unit counts, what it must not count,
+  * and that its counters are final when the unit returns (no sleeps here —
+  * a collector that needed one would fail the repeat test). */
+class ProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
+  private lazy val spark = TestSpark.spark
+  private lazy val prof = new obs.Profile(spark)
+
+  override def afterAll(): Unit = prof.close()
+
+  // a global count over 4 fixed partitions: one partial row per partition
+  // crosses the single exchange
+  private def globalCount: DataFrame = spark.range(0, 1000, 1, 4).groupBy().count()
+
+  test("a unit counts its SQL executions and its plan's shuffle records") {
+    val (rows, r) = prof("count")(globalCount.collect())
+    assert(rows.head.getLong(0) == 1000L)
+    assert(r.sqlExecutions == 1, r.json)
+    assert(r.jobs >= 1, r.json)
+    assert(r.shuffleRecords == 4, r.json)
+    assert(r.exchanges.map(_.records).sum == r.shuffleRecords, r.exchanges)
+    assert(r.shuffleBytes > 0 && r.exchanges.map(_.bytes).sum == r.shuffleBytes)
+  }
+
+  test("work outside the unit or in another unit is not counted") {
+    val started = new java.util.concurrent.CountDownLatch(1)
+    // started before the unit opens, so it never carries the unit's tag
+    val outside = new Thread(() => {
+      started.await()
+      (1 to 3).foreach(_ => globalCount.collect())
+    })
+    outside.start()
+    val (_, a) = prof("a") {
+      started.countDown()
+      globalCount.collect()
+      outside.join()
+    }
+    globalCount.collect()
+    val (_, b) = prof("b") { globalCount.collect(); globalCount.collect() }
+    assert((a.sqlExecutions, a.shuffleRecords) == ((1L, 4L)), a.json)
+    assert((b.sqlExecutions, b.shuffleRecords) == ((2L, 8L)), b.json)
+  }
+
+  test("planning time is positive and within the wall") {
+    val (_, r) = prof("plan") {
+      globalCount.join(spark.range(10).toDF("count"), "count").collect()
+    }
+    assert(r.planningMs > 0 && r.planningMs <= r.wallMs, r.json)
+  }
+
+  test("counters read right after the unit are final: five runs agree") {
+    val counts = (1 to 5).map { i =>
+      val (_, r) = prof(s"repeat$i")(globalCount.collect())
+      (r.sqlExecutions, r.jobs, r.shuffleRecords, r.shuffleBytes)
+    }
+    assert(counts.distinct.size == 1, counts)
+  }
+
+  test("the q160 FTS drain's SQL executions include its stream thread's") {
+    // 24 = StreamDrainBench's count for this drain at sf0.001 before the
+    // collector replaced it; the micro-batches run on the stream's own
+    // thread, under the stream's job group
+    val (_, r) = prof("q160") {
+      SparkEntry.queries("q160_stream_fts_ingest")(spark, TestSpark.sf0001)
+        .count()
+    }
+    assert(r.sqlExecutions == 24, r.json)
+  }
+}

@@ -11,9 +11,9 @@ Copies whichever of these exist, skipping absentees with a note:
   target/yardstick_x10.json  (per-query Spark-vs-DuckDB verdicts)
   target/yardstick_x100.json (weak-mark slope evidence at x100)
   target/diag_shuffle.json   (per-exchange attribution, heavy cohort --
-                              runMain graft.DiagShuffle <x10dir>
-                              q90...,q105...,q117...,q134...,q153...,q162...
-                              with SPARK_GRAFT_DIAG_OUT=target/diag_shuffle.json)
+                              sbt -batch "runMain graft.Profile plan <x10dir>
+                              q90...,q105...,q117...,q134...,q153...,q162..."
+                              | grep '^{' > target/diag_shuffle.json)
   CORRECTNESS_x10.json       (full-surface x10 oracle gate)
 
 Usage: python3 tools/collect_round.py <round>   e.g. 8

@@ -1,9 +1,10 @@
 #!/usr/bin/env python3
-"""DuckDB twins of graft.DecomposeCF's cumulative stage sub-plans — the
-other half of the r12 verdict's item 7 (per-stage Spark-vs-DuckDB growth
-at x100->x1000 for the four engine-constant-factor members
-q03/q05/q78/q119). Stage names line up 1:1 with DecomposeCF so the
-adjudication artifact can join the two sides on name.
+"""DuckDB twins of the cumulative stage sub-plans that
+`runMain graft.Profile stages <dir> [prefix]` times — the other half of
+the r12 verdict's item 7 (per-stage Spark-vs-DuckDB growth at
+x100->x1000 for the four engine-constant-factor members q03/q05/q78/q119).
+Stage names line up 1:1 with the Spark side so the adjudication artifact
+can join the two sides on name.
 
 Each stage is the same cumulative prefix of the declared query, collapsed
 by the same global aggregate (count + the query's own sum expression), so
@@ -65,7 +66,7 @@ STAGES = [
      "JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey "
      "WHERE r_name = 'ASIA' GROUP BY n_name"),
     # ---- q78 ----
-    # keys pmod'd before the sum — matches DecomposeCF (a raw x1000 key
+    # keys pmod'd before the sum — matches the Spark side (a raw x1000 key
     # sum overflows Long on the Spark side under ANSI mode)
     ("q78_a_scan_li",
      "SELECT count(*), sum(l_partkey % 1000000), sum(l_suppkey % 1000000) "

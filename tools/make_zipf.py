@@ -2,7 +2,7 @@
 """Zipfian-vocabulary document corpus for FTS serving-scale evidence.
 
 The driver's synthetic documents use a 31-word vocabulary, so EVERY
-term's posting list is ~the whole corpus -- the r11 ProbeScale evidence
+term's posting list is ~the whole corpus -- the r11 probe-scale evidence
 (probe cost proportional to posting lists) therefore rests on the worst
 case. This tool generates a corpus whose word frequencies follow a Zipf
 law over a large vocabulary (the empirical shape of natural text), so
@@ -22,7 +22,7 @@ Usage:
     [replicate_from] existing zipf dir to replicate instead of generating
     [copies]         replication factor (with replicate_from)
     [emb_src]        dir whose embeddings.parquet to copy in (optional;
-                     ProbeScale also needs the vector table)
+                     `graft.Profile probes` also needs the vector table)
 
 Examples (the r12 evidence set):
   python3 tools/make_zipf.py /tmp/graft_zipf10 50000 - - /tmp/graft_sf1
