@@ -1,11 +1,11 @@
 package graft.obs
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.collection.mutable
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{GraftShims, SparkSession}
+import org.apache.spark.sql.{GraftShims, Row, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -16,10 +16,16 @@ final case class Exchange(records: Long, bytes: Long, child: String, node: Strin
 
 /** What one named unit of work cost. `planningMs` sums Catalyst's phase
   * times over its SQL executions; `jobBusyMs` is the time any of its jobs
-  * ran, `driverGapMs` the rest of the wall; `plans` hold AQE's final plans. */
+  * ran, `driverGapMs` the rest of the wall; `plans` hold AQE's final plans.
+  * `observed` holds the `Dataset.observe` results of those executions,
+  * grouped by name prefix (the part before `#`): one entry per
+  * observation, in execution order (by name within one execution); an
+  * observation two executions share (e.g. through a cached plan) is
+  * reported once. */
 final case class Record(name: String, wallMs: Double, planningMs: Long,
     sqlExecutions: Long, jobs: Long, jobBusyMs: Long, driverGapMs: Long,
-    shuffleRecords: Long, shuffleBytes: Long, plans: Seq[QueryExecution]) {
+    shuffleRecords: Long, shuffleBytes: Long, plans: Seq[QueryExecution],
+    observed: Seq[(String, Seq[Row])]) {
 
   def exchanges: Seq[Exchange] = plans.flatMap(qe => Profile.nodes(qe.executedPlan))
     .collect { case s: ShuffleExchangeLike =>
@@ -33,7 +39,9 @@ final case class Record(name: String, wallMs: Double, planningMs: Long,
       f""""planning_ms":$planningMs,"execution_ms":${wallMs - planningMs}%.1f,""" +
       s""""sql_executions":$sqlExecutions,"jobs":$jobs,""" +
       s""""job_busy_ms":$jobBusyMs,"driver_gap_ms":$driverGapMs,""" +
-      s""""shuffle_records":$shuffleRecords,"shuffle_bytes":$shuffleBytes}"""
+      s""""shuffle_records":$shuffleRecords,"shuffle_bytes":$shuffleBytes,""" +
+      observed.map { case (p, rs) => Profile.str(p) + rs.map(_.json).mkString(":[", ",", "]") }
+        .mkString(""""observed":{""", ",", "}}")
 }
 
 /** The engine's one metrics collector; constructing it attaches it to the
@@ -80,8 +88,11 @@ final class Profile(spark: SparkSession) extends SparkListener {
     val busy = a.jobTimes.sortBy(_._1).foldLeft((0L, 0L)) { case ((sum, end), (s, e)) =>
       (sum + math.max(0L, e - math.max(s, end)), math.max(end, e))
     }._1
+    val seen = a.plans.toSeq.flatMap(_.observedMetrics.toSeq.sortBy(_._1))
+      .distinctBy(_._1).map { case (n, r) => (n.takeWhile(_ != '#'), r) }
     Record(name, wallMs, a.planningMs, a.execs, a.jobs, busy,
-      math.max(0L, math.round(wallMs) - busy), a.shRecords, a.shBytes, a.plans.toSeq)
+      math.max(0L, math.round(wallMs) - busy), a.shRecords, a.shBytes, a.plans.toSeq,
+      seen.map(_._1).distinct.map(p => p -> seen.collect { case (`p`, r) => r }))
   }
 
   /** Stops collecting; units still open record nothing more. */
@@ -124,6 +135,14 @@ final class Profile(spark: SparkSession) extends SparkListener {
 }
 
 object Profile {
+  private val observations = new AtomicLong
+
+  /** A name for one `Dataset.observe` call, `prefix#<n>`: unique in the
+    * JVM, because Spark rejects two different observations of one name in
+    * one query; [[Record.observed]] groups by the prefix. */
+  def observationName(prefix: String): String =
+    s"$prefix#${observations.incrementAndGet()}"
+
   /** Every node of an executed plan, AQE stages and their plans included. */
   def nodes(p: SparkPlan): Seq[SparkPlan] = (p match {
     case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)

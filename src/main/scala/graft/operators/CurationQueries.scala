@@ -1369,7 +1369,8 @@ object CurationQueries {
     * (the q95/q143 equivalence contract: banding at 16×2 misses j≥0.5
     * pairs with probability ≈(1−j²)^16) plus q164's gate/decontaminate/
     * pack replay — so a batch doc wrongly kept, dropped, or packed
-    * elsewhere flips a digest. */
+    * elsewhere flips a digest. The probe's pair count and min jr are
+    * observed as `q167` ([[graft.obs.Record.observed]]). */
   private def q167(s: SparkSession, d: String): DataFrame = {
     val all = docs(s, d)
     val eval = all.filter(col("doc_id") % 10 === 0)
@@ -1381,18 +1382,20 @@ object CurationQueries {
     val gated = Curation.funnelFlags(batch, minToks = 20, maxToks = 80,
         maxRepetition = 0.05)
       .filter(col("p_len") && col("p_rep") && col("p_dedup"))
-    // pinned once (localCheckpoint) so the margin diagnostic below and the
-    // anti-join read the same materialization
-    val pairs = DedupIndex.probeIndex(s, path, gated).localCheckpoint(true)
-    // margin on stderr: the engine-leg == brute-oracle equality is the
-    // q95/q143 banding contract and DATA-DEPENDENT — a j≥0.5 pair misses
-    // all 16 bands with probability (1−j²)^16 (≈1% at j=0.5), so if a
-    // future test-data refresh flips this gate, the run log shows whether
-    // pairs sat in the near-threshold miss regime (recall), not a bug
-    val st = pairs.agg(count(lit(1)).as("n"), min(col("jr")).as("mj")).head
-    val minJ = if (st.getLong(0) == 0) 1.0 else st.getDouble(1)
-    System.err.println(f"[q167] nearDupPairs=${st.getLong(0)} " +
-      f"minJ=$minJ%.4f bandMissProb=${math.pow(1 - minJ * minJ, 16)}%.2e")
+    // pair stats observed on the probe output: the engine-leg ==
+    // brute-oracle equality is the q95/q143 banding contract and
+    // DATA-DEPENDENT — a j≥0.5 pair misses all 16 bands with probability
+    // (1−j²)^16 (≈1% at j=0.5), so if a future test-data refresh flips
+    // this gate, the record shows whether pairs sat in the near-threshold
+    // miss regime (recall), not a bug. Pinned once (localCheckpoint): the
+    // probe planned on its own writes fewer shuffle records than inlined
+    // under the anti-join (q167 + count() at sf0.001: 3,728 vs 3,812), and
+    // the observation sits at its job's root, where AQE cannot prune it
+    // with an empty anti-join side
+    val pairs = DedupIndex.probeIndex(s, path, gated)
+      .observe(graft.obs.Profile.observationName("q167"),
+        count(lit(1)).as("nearDupPairs"), min(col("jr")).as("minJ"))
+      .localCheckpoint(true)
     val nearDup = pairs.select(col("db").as("doc_id")).distinct()
     val deduped = gated.join(nearDup, Seq("doc_id"), "left_anti")
     val contaminated = Curation.contaminationCounts(deduped, eval, n = 5)

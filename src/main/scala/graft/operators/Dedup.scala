@@ -121,110 +121,148 @@ object Dedup {
     *      pairs, linear, and exact: identical sets verify at j = 1);
     *   2. all-pairs joins the representatives — capped at the `maxBucket`
     *      smallest if genuinely diverse near-identical text survives the
-    *      collapse, with the dropped-rep count printed to stderr as
-    *      `[tag]` (the q167-style recall margin); every DROPPED rep is
-    *      still star-linked to the bucket's min rep, so no member is
-    *      orphaned — in a boilerplate near-clique that link verifies and
-    *      the component survives intact. What IS forgone in this bucket:
-    *      pair enumeration among dropped reps AND between a dropped rep
-    *      and the kept reps other than the bucket min — a dropped rep
-    *      that is a true near-dup of kept rep #3 but NOT of the min rep
-    *      keeps only its (unverifiable) min-rep star link here, so that
-    *      edge survives only if one of the doc pair's 15 other bands
-    *      resurfaces it in a small-enough bucket (probabilistic, not
-    *      guaranteed — this is the cap's recall trade, and `droppedReps`
-    *      on stderr is its exposure gauge; droppedReps=0 means NOTHING
-    *      was forgone, the ×100/×1000 boilerplate rehearsal shape).
-    *
-    * CONSTRUCTION IS EAGER: the margin aggregate executes the band
-    * pipeline (a corpus-scale job) before this returns — unlike the lazy
-    * uncapped twin, calling this just to inspect the plan pays the scan.
+    *      collapse ([[HotCap]]'s observed `droppedReps` is the recall
+    *      margin); every DROPPED rep is still star-linked to the bucket's
+    *      min rep, so no member is orphaned — in a boilerplate near-clique
+    *      that link verifies and the component survives intact. What IS
+    *      forgone in this bucket: pair enumeration among dropped reps AND
+    *      between a dropped rep and the kept reps other than the bucket
+    *      min — a dropped rep that is a true near-dup of kept rep #3 but
+    *      NOT of the min rep keeps only its (unverifiable) min-rep star
+    *      link here, so that edge survives only if one of the doc pair's
+    *      15 other bands resurfaces it in a small-enough bucket
+    *      (probabilistic, not guaranteed — this is the cap's recall trade;
+    *      droppedReps=0 means NOTHING was forgone, the ×100/×1000
+    *      boilerplate rehearsal shape).
     *
     * Per-bucket emission is thus ≤ m + maxBucket²/2 instead of m²/2, and
     * connectivity for downstream [[dupComponents]] survives: every member
-    * reaches its rep, and every rep reaches the bucket min. */
+    * reaches its rep, and every rep reaches the bucket min. Lazy like
+    * [[lshCandidates]]: the margin is observed by whichever action runs
+    * the result. */
   def lshCandidatesCapped(sig: DataFrame, numHashes: Int, rowsPerBand: Int,
-      maxBucket: Int = 64, tag: String = "lsh-cap"): DataFrame =
-    lshCandidatesCappedCore(sig, numHashes, rowsPerBand, maxBucket, tag)._1
+      maxBucket: Int = 64): DataFrame = {
+    val (cands, cap) = lshCandidatesCappedCore(sig, numHashes, rowsPerBand,
+      maxBucket)
+    cap.observedOn(cands)
+  }
 
-  /** [[lshCandidatesCapped]] plus the windowed band frame it pins, so
-    * managed callers can release it ([[minhashDupPairsCappedManaged]]). */
+  /** [[lshCandidatesCapped]] before its margin branch, plus the [[HotCap]]
+    * whose counted band frame managed callers release
+    * ([[minhashDupPairsCappedManaged]]). */
   private def lshCandidatesCappedCore(sig: DataFrame, numHashes: Int,
-      rowsPerBand: Int, maxBucket: Int,
-      tag: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val bands = signatureBandsWithFp(sig, numHashes, rowsPerBand)
-    // bucket population as a WINDOW count over the (band, bh) partitioning,
-    // not an aggregate joined back (q174 ×10 A/B: join-back 9.5 s / 11.9 M
-    // shuffle records → window 6.4 s / 9.9 M), and the windowed frame
-    // CACHED: without the cache each of the branches below re-executes the
-    // band exchange — per-branch column pruning pushes different projects
-    // under it, so ReuseExchange never matches them (PlanSpec pins the
-    // cached shape: exactly one band-table-sized exchange). The cache is
-    // in line with this path's existing corpus-sized sg/sig caches (the
-    // scaladoc's 100 TB note applies: at that scale the signatures live in
-    // the persisted DedupIndex and the probe paths cache only the
-    // batch-hit slice).
-    val bs = bands.withColumn("m",
-      count(lit(1)).over(Window.partitionBy(col("band"), col("bh"))))
-      .cache()
-    val small = bs.filter(col("m") <= maxBucket)
-    val smallPairs = small.select(col("doc_id").as("da"), col("band"), col("bh"))
-      .join(small.select(col("doc_id").as("db"), col("band"), col("bh")),
-        Seq("band", "bh"))
+      rowsPerBand: Int, maxBucket: Int): (DataFrame, HotCap) = {
+    val cap = new HotCap(signatureBandsWithFp(sig, numHashes, rowsPerBand),
+      maxBucket, "lsh-cap")
+    def pairsWithin(f: DataFrame) = f.toDF("da", "band", "bh")
+      .join(f.toDF("db", "band", "bh"), Seq("band", "bh"))
       .filter(col("da") < col("db"))
       .select(col("da"), col("db"))
-    val hot = bs.filter(col("m") > maxBucket)
-    // gm = collapsed group size, carried so the margin can report how much
-    // work the fingerprint collapse absorbed (not just what the cap dropped)
-    val reps = hot.groupBy(col("band"), col("bh"), col("fp"))
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("gm"))
     // rep = min(doc_id) of the group, so star pairs are already da < db
-    val star = hot.join(reps, Seq("band", "bh", "fp"))
+    val star = cap.hot.join(cap.reps, Seq("band", "bh", "fp"))
       .filter(col("doc_id") =!= col("rep"))
       .select(col("rep").as("da"), col("doc_id").as("db"))
-    val rk = reps.withColumn("rk", row_number().over(
-      Window.partitionBy(col("band"), col("bh")).orderBy(col("rep"))))
-    val kept = rk.filter(col("rk") <= maxBucket)
-    val repPairs = kept.select(col("rep").as("da"), col("band"), col("bh"))
-      .join(kept.select(col("rep").as("db"), col("band"), col("bh")),
-        Seq("band", "bh"))
-      .filter(col("da") < col("db"))
-      .select(col("da"), col("db"))
     // dropped reps star-link to the bucket's min rep (rank 1 under the
     // rep ordering): linear, deterministic, and no member ends up orphaned
-    val dropped = rk.filter(col("rk") > maxBucket)
-    val repStar = dropped.join(
-        rk.filter(col("rk") === 1)
+    val repStar = cap.ranked.filter(col("rk") > maxBucket).join(
+        cap.ranked.filter(col("rk") === 1)
           .select(col("band"), col("bh"), col("rep").as("da")),
         Seq("band", "bh"))
       .select(col("da"), col("rep").as("db"))
-    // recall margin, q167-style, one bounded agg: hotBuckets/hotMembers
-    // show what the fingerprint collapse absorbed (a 100-copy boilerplate
-    // cluster can bound 469 M pairs to 84 M with ZERO dropped reps — the
-    // ×100 rehearsal's shape); droppedReps/cappedBuckets show what the rep
-    // cap actually forwent. All zero on a corpus with no hot bucket.
-    val m = rk.agg(
-      countDistinct(col("band"), col("bh")).as("hotBuckets"),
-      coalesce(sum(col("gm")), lit(0L)).as("hotMembers"),
-      count(when(col("rk") > maxBucket, 1)).as("droppedReps"),
-      countDistinct(when(col("rk") > maxBucket,
-        struct(col("band"), col("bh")))).as("cappedBuckets")).head
-    System.err.println(
-      s"[$tag] hotBuckets=${m.getLong(0)} hotMembers=${m.getLong(1)} " +
-        s"cappedBuckets=${m.getLong(3)} droppedReps=${m.getLong(2)}")
-    (smallPairs.union(star).union(repPairs).union(repStar).distinct(), bs)
+    (pairsWithin(cap.small).union(star).union(pairsWithin(cap.kept))
+      .union(repStar).distinct(), cap)
+  }
+
+  /** The hot-bucket cap the three capped paths share
+    * ([[lshCandidatesCapped]], [[incrementalDupPairsCapped]],
+    * [[DedupIndex.probeIndexCapped]]), over fingerprinted band rows
+    * `members` (doc_id, fp, band, bh).
+    *
+    * Bucket population is a WINDOW count over the (band, bh) partitioning,
+    * not an aggregate joined back (q174 ×10 A/B: join-back 9.5 s / 11.9 M
+    * shuffle records → window 6.4 s / 9.9 M), and the counted frame is
+    * CACHED: without the cache each branch re-executes the band exchange —
+    * per-branch column pruning pushes different projects under it, so
+    * ReuseExchange never matches them (PlanSpec pins the cached shape:
+    * exactly one band-table-sized exchange). It is corpus-sized on the
+    * self-join path, in line with that path's shingle cache, and only the
+    * batch-hit slice on the corpus-vs-batch paths. The owner releases
+    * `counted`; the signatures under it are read once, by its build, so
+    * no caller caches them (a second, nested cache built inside the
+    * consuming job raised the x10 curation run's peak RSS from ~1.4 to
+    * ~1.58 GB on 4 cores).
+    *
+    * Hot buckets collapse same-fingerprint members to min-id reps (`gm` =
+    * group size) ranked by id; the first `maxBucket` reps are `kept`.
+    *
+    * The recall margin is one `Dataset.observe` per call, named by
+    * [[graft.obs.Profile.observationName]] after `prefix`:
+    * hotBuckets/hotMembers show what the fingerprint collapse absorbed (a
+    * 100-copy boilerplate cluster can bound 469 M pairs to 84 M with ZERO
+    * dropped reps — the ×100 rehearsal's shape); cappedBuckets/droppedReps
+    * show what the rep cap forwent. All zero on a corpus with no hot
+    * bucket. [[graft.obs.Record]] reports it. */
+  private[operators] final class HotCap(members: DataFrame, maxBucket: Int,
+      prefix: String) {
+    import org.apache.spark.sql.expressions.Window
+    private val bucket = Window.partitionBy(col("band"), col("bh"))
+    val counted: DataFrame =
+      members.withColumn("m", count(lit(1)).over(bucket)).cache()
+    /** Members of buckets within the cap: (doc_id, band, bh). */
+    val small: DataFrame = counted.filter(col("m") <= maxBucket)
+      .select(col("doc_id"), col("band"), col("bh"))
+    val hot: DataFrame = counted.filter(col("m") > maxBucket)
+    val reps: DataFrame = hot.groupBy(col("band"), col("bh"), col("fp"))
+      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("gm"))
+    val ranked: DataFrame = reps.withColumn("rk",
+      row_number().over(bucket.orderBy(col("rep"))))
+    /** Reps within the cap: (doc_id, band, bh). */
+    val kept: DataFrame = ranked.filter(col("rk") <= maxBucket)
+      .select(col("rep").as("doc_id"), col("band"), col("bh"))
+
+    /** `out` plus a zero-row branch that carries the margin observation.
+      * It belongs at the ROOT of the query that runs: AQE prunes a join or
+      * aggregate over an empty stage, and an observation inside that stage
+      * goes with it; a root Union keeps the branch even when `out` is
+      * empty. */
+    def observedOn(out: DataFrame): DataFrame = out.union(ranked
+      .observe(graft.obs.Profile.observationName(prefix),
+        count(when(col("rk") === 1, 1)).as("hotBuckets"),
+        coalesce(sum(col("gm")), lit(0L)).as("hotMembers"),
+        count(when(col("rk") === maxBucket + 1, 1)).as("cappedBuckets"),
+        count(when(col("rk") > maxBucket, 1)).as("droppedReps"))
+      .filter(col("rk") < 0)
+      .select(out.schema.map(f => lit(0).cast(f.dataType).as(f.name)): _*))
+  }
+
+  /** Capped corpus-vs-batch candidates (da = corpus doc, db = batch doc),
+    * shared by [[incrementalDupPairsCappedManaged]] and the capped
+    * [[DedupIndex]] probe. `corpus` is (doc_id, fp, band, bh), `bb` the
+    * batch bands (db, band, bh). The corpus side is restricted to buckets
+    * the BATCH hits before any counting (broadcast semi on the batch's tiny
+    * (band, bh) key set): counts stay exact — every member of a hit bucket
+    * survives the semi — and the window never pays for buckets that could
+    * not produce a candidate (the ×100 rehearsal: 7.2 M hot members, capped
+    * probe 5.8 s vs uncapped 1.8 s before the semi). */
+  private[operators] def cappedBatchCandidates(corpus: DataFrame,
+      bb: DataFrame, maxBucket: Int, prefix: String): (DataFrame, HotCap) = {
+    val cap = new HotCap(corpus.join(
+      broadcast(bb.select(col("band"), col("bh")).distinct()),
+      Seq("band", "bh"), "left_semi"), maxBucket, prefix)
+    (cap.small.union(cap.kept).toDF("da", "band", "bh")
+      .join(bb, Seq("band", "bh"))
+      .select(col("da"), col("db")).distinct(), cap)
   }
 
   /** Exact-Jaccard verification of candidate (da, db) pairs against the
-    * cached shingle frame — the tail every near-dup pipeline shares.
-    * Output (jr, da, db). */
-  private def verifyCandidates(cands: DataFrame, sg: DataFrame,
-      threshold: Double): DataFrame = {
+    * cached shingle frames of the da side and the db side — the tail every
+    * near-dup pipeline shares. Output (jr, da, db). */
+  private def verifyCandidates(cands: DataFrame, sga: DataFrame,
+      sgb: DataFrame, threshold: Double): DataFrame = {
     val j = TextFunctions.jaccard(col("sga"), col("sgb"))
     cands
-      .join(sg.select(col("doc_id").as("da"), col("sg").as("sga")), "da")
-      .join(sg.select(col("doc_id").as("db"), col("sg").as("sgb")), "db")
+      .join(sga.select(col("doc_id").as("da"), col("sg").as("sga")), "da")
+      .join(sgb.select(col("doc_id").as("db"), col("sg").as("sgb")), "db")
       .filter(j >= threshold)
       .select(round(j, 4).as("jr"), col("da"), col("db"))
   }
@@ -239,37 +277,35 @@ object Dedup {
     // cache once instead of recomputing the scan+shingle pass three times
     val sg = shingleSets(docs, n).cache()
     val cands = lshCandidates(minhashSignatures(sg, numHashes), numHashes, rowsPerBand)
-    verifyCandidates(cands, sg, threshold)
+    verifyCandidates(cands, sg, sg, threshold)
   }
 
   /** [[minhashDupPairs]] through the hot-bucket-capped candidate path —
     * output equals the uncapped pipeline whenever no band bucket exceeds
     * `maxBucket` members (the oracle gate), and stays bounded (star +
     * capped rep pairs per bucket) when boilerplate clusters would blow the
-    * uncapped join up quadratically. The signature frame is cached: the
-    * capped path reads it for band stats, star/rep routing, AND the margin
-    * action (at 100 TB the signatures live in the persisted
-    * [[DedupIndex]] instead). */
+    * uncapped join up quadratically (at 100 TB the signatures live in the
+    * persisted [[DedupIndex]] instead). */
   def minhashDupPairsCapped(docs: DataFrame, n: Int = 3, numHashes: Int = 32,
       rowsPerBand: Int = 2, threshold: Double = 0.5,
       maxBucket: Int = 64): DataFrame =
     minhashDupPairsCappedManaged(docs, n, numHashes, rowsPerBand,
       threshold, maxBucket).result
 
-  /** [[minhashDupPairsCapped]] with cache ownership: this path pins THREE
-    * corpus-sized frames (shingles, signatures, and the windowed band
-    * frame) that the bare variant leaves pinned for the life of the
-    * session — fine for a one-shot job, a leak for a long-lived session
-    * calling it per batch (the [[ProbeHandle]] rationale). Materialize
-    * `result`, then `close()`. */
+  /** [[minhashDupPairsCapped]] with cache ownership: this path pins TWO
+    * corpus-sized frames (shingles and the windowed band frame) that the
+    * bare variant leaves pinned for the life of the session — fine for a
+    * one-shot job, a leak for a long-lived session calling it per batch
+    * (the [[ProbeHandle]] rationale). Materialize `result`, then
+    * `close()`. */
   def minhashDupPairsCappedManaged(docs: DataFrame, n: Int = 3,
       numHashes: Int = 32, rowsPerBand: Int = 2, threshold: Double = 0.5,
       maxBucket: Int = 64): ProbeHandle = {
     val sg = shingleSets(docs, n).cache()
-    val sig = minhashSignatures(sg, numHashes).cache()
-    val (cands, bs) =
-      lshCandidatesCappedCore(sig, numHashes, rowsPerBand, maxBucket, "lsh-cap")
-    new ProbeHandle(verifyCandidates(cands, sg, threshold), Seq(sg, sig, bs))
+    val (cands, cap) = lshCandidatesCappedCore(
+      minhashSignatures(sg, numHashes), numHashes, rowsPerBand, maxBucket)
+    new ProbeHandle(cap.observedOn(verifyCandidates(cands, sg, sg, threshold)),
+      Seq(sg, cap.counted))
   }
 
   /** Incremental near-dup detection: a fresh BATCH of documents checked
@@ -296,12 +332,7 @@ object Dedup {
     val cand = cb.join(bb, Seq("band", "bh"))
       .select(col("da"), col("db"))
       .distinct()
-    val j = TextFunctions.jaccard(col("sga"), col("sgb"))
-    cand
-      .join(csg.select(col("doc_id").as("da"), col("sg").as("sga")), "da")
-      .join(bsg.select(col("doc_id").as("db"), col("sg").as("sgb")), "db")
-      .filter(j >= threshold)
-      .select(round(j, 4).as("jr"), col("da"), col("db"))
+    verifyCandidates(cand, csg, bsg, threshold)
   }
 
   /** [[incrementalDupPairs]] with the hot-bucket cap applied to the CORPUS
@@ -312,78 +343,34 @@ object Dedup {
     * (output IDENTICAL when nothing is hot — the oracle gate); a hot
     * bucket pre-collapses same-fingerprint corpus members to their
     * min-doc_id representative and keeps at most `maxBucket` reps
-    * (dropped-rep margin on stderr). A batch doc that would have matched a
-    * collapsed member still matches the member's representative (identical
-    * shingle sets verify identically), so the dup VERDICT per batch doc
-    * survives; only the redundant partner enumeration is bounded.
-    * CONSTRUCTION IS EAGER (the margin aggregate runs the batch-hit band
-    * job before returning — see [[lshCandidatesCapped]]). */
+    * (observed `lsh-cap-inc` margin, see [[HotCap]]). A batch doc that
+    * would have matched a collapsed member still matches the member's
+    * representative (identical shingle sets verify identically), so the
+    * dup VERDICT per batch doc survives; only the redundant partner
+    * enumeration is bounded. */
   def incrementalDupPairsCapped(corpus: DataFrame, batch: DataFrame,
       n: Int = 3, numHashes: Int = 32, rowsPerBand: Int = 2,
-      threshold: Double = 0.5, maxBucket: Int = 64,
-      tag: String = "lsh-cap-inc"): DataFrame =
+      threshold: Double = 0.5, maxBucket: Int = 64): DataFrame =
     incrementalDupPairsCappedManaged(corpus, batch, n, numHashes,
-      rowsPerBand, threshold, maxBucket, tag).result
+      rowsPerBand, threshold, maxBucket).result
 
-  /** [[incrementalDupPairsCapped]] with cache ownership over the FOUR
-    * frames it pins (corpus+batch shingles, corpus signatures, batch-hit
-    * window) — the per-ingest call pattern is exactly the long-lived
-    * session the [[ProbeHandle]] contract exists for. Materialize
-    * `result`, then `close()`. */
+  /** [[incrementalDupPairsCapped]] with cache ownership over the THREE
+    * frames it pins (corpus+batch shingles, batch-hit window) — the
+    * per-ingest call pattern is exactly the long-lived session the
+    * [[ProbeHandle]] contract exists for. Materialize `result`, then
+    * `close()`. */
   def incrementalDupPairsCappedManaged(corpus: DataFrame, batch: DataFrame,
       n: Int = 3, numHashes: Int = 32, rowsPerBand: Int = 2,
-      threshold: Double = 0.5, maxBucket: Int = 64,
-      tag: String = "lsh-cap-inc"): ProbeHandle = {
-    import org.apache.spark.sql.expressions.Window
+      threshold: Double = 0.5, maxBucket: Int = 64): ProbeHandle = {
     val csg = shingleSets(corpus, n).cache()
     val bsg = shingleSets(batch, n).cache()
-    val csig = minhashSignatures(csg, numHashes).cache()
-    val cb = signatureBandsWithFp(csig, numHashes, rowsPerBand)
     val bb = signatureBands(minhashSignatures(bsg, numHashes),
       numHashes, rowsPerBand).toDF("db", "band", "bh")
-    // restrict the corpus side to buckets the BATCH hits before counting
-    // (broadcast semi on the batch's tiny (band, bh) key set): counts stay
-    // exact — every member of a hit bucket survives the semi — and the
-    // window below never pays for buckets that could not produce a
-    // candidate (the ×100 index-probe A/B measured 3× on this)
-    val cbHit = cb.join(
-      broadcast(bb.select(col("band"), col("bh")).distinct()),
-      Seq("band", "bh"), "left_semi")
-    // windowed bucket counts over the batch-hit slice, cached so the
-    // small/hot branches and the margin action share one computation
-    // (see lshCandidatesCapped — without the cache each branch re-runs
-    // the exchange); small by construction: only buckets the batch hits
-    val cs = cbHit.withColumn("m",
-      count(lit(1)).over(Window.partitionBy(col("band"), col("bh"))))
-      .cache()
-    val small = cs.filter(col("m") <= maxBucket)
-      .select(col("doc_id").as("da"), col("band"), col("bh"))
-    val hot = cs.filter(col("m") > maxBucket)
-    val rk = hot.groupBy(col("band"), col("bh"), col("fp"))
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("gm"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("band"), col("bh")).orderBy(col("rep"))))
-    val kept = rk.filter(col("rk") <= maxBucket)
-      .select(col("rep").as("da"), col("band"), col("bh"))
-    // margin: collapse absorption + cap action (see lshCandidatesCapped)
-    val m = rk.agg(
-      countDistinct(col("band"), col("bh")).as("hotBuckets"),
-      coalesce(sum(col("gm")), lit(0L)).as("hotMembers"),
-      count(when(col("rk") > maxBucket, 1)).as("droppedReps"),
-      countDistinct(when(col("rk") > maxBucket,
-        struct(col("band"), col("bh")))).as("cappedBuckets")).head
-    System.err.println(
-      s"[$tag] hotBuckets=${m.getLong(0)} hotMembers=${m.getLong(1)} " +
-        s"cappedBuckets=${m.getLong(3)} droppedReps=${m.getLong(2)}")
-    val cand = small.union(kept).join(bb, Seq("band", "bh"))
-      .select(col("da"), col("db")).distinct()
-    val j = TextFunctions.jaccard(col("sga"), col("sgb"))
-    val out = cand
-      .join(csg.select(col("doc_id").as("da"), col("sg").as("sga")), "da")
-      .join(bsg.select(col("doc_id").as("db"), col("sg").as("sgb")), "db")
-      .filter(j >= threshold)
-      .select(round(j, 4).as("jr"), col("da"), col("db"))
-    new ProbeHandle(out, Seq(csg, bsg, csig, cs))
+    val (cand, cap) = cappedBatchCandidates(
+      signatureBandsWithFp(minhashSignatures(csg, numHashes), numHashes,
+        rowsPerBand), bb, maxBucket, "lsh-cap-inc")
+    new ProbeHandle(cap.observedOn(verifyCandidates(cand, csg, bsg, threshold)),
+      Seq(csg, bsg, cap.counted))
   }
 
   /** Cross-engine-reproducible word hash: a 31-bit polynomial fold over the

@@ -155,7 +155,9 @@ object DedupIndex {
     * [[probeIndex]] whenever no hit bucket exceeds `maxBucket` members
     * (the q177 oracle gate); on a hot bucket the batch doc's dup VERDICT
     * survives via the fingerprint representatives, only the redundant
-    * partner enumeration is bounded (dropped-rep margin on stderr). */
+    * partner enumeration is bounded. The candidate job (the doc-bucket
+    * collect at construction) carries the `lsh-cap-idx` margin
+    * observation ([[Dedup.HotCap]]). */
   def probeIndexCapped(spark: SparkSession, path: String, batch: DataFrame,
       n: Int = 3, numHashes: Int = 32, rowsPerBand: Int = 2,
       threshold: Double = 0.5, nBuckets: Int = 16,
@@ -218,101 +220,30 @@ object DedupIndex {
     // the FULL bucket membership
     val cbAll = spark.read.parquet(path + "/bands")
       .filter(col("wb").isin(hit: _*))
-    // capped branch's semi-filtered+counted frame, cached so the margin
-    // action and the candidate materialization share ONE pruned read;
-    // released below once cand is pinned
-    var capCs: Option[DataFrame] = None
-    // the capped branch's deferred margin aggregate (see below) — fused
-    // into the candidate-bucket collect instead of a job of its own
-    var capMargin: Option[DataFrame] = None
-    val cb = maxBucket match {
-      case None =>
-        cbAll.select(col("doc_id").as("da"), col("band"), col("bh"))
-      case Some(cap) =>
-        // [[Dedup.incrementalDupPairsCapped]]'s corpus-side cap served
-        // from the index: a batch doc landing in a boilerplate bucket is
-        // bounded to the bucket's fingerprint representatives instead of
-        // fanning out to every stored copy. Small buckets join exactly as
-        // the uncapped path (output IDENTICAL when nothing is hot — the
-        // q177 oracle gate); hot buckets collapse same-fp members to
-        // their min-doc_id rep (identical shingle sets whp — a batch doc
-        // matching a collapsed member matches its rep identically) and
-        // keep the `cap` smallest reps, dropped-rep margin on stderr.
-        import org.apache.spark.sql.expressions.Window
-        // restrict to buckets the BATCH actually hits before any counting:
-        // wb-pruning alone still reads every bucket sharing the hit wb
-        // values (≈ the whole corpus for a spread batch), and the ×100
-        // rehearsal measured the window count paying for all of it (7.2 M
-        // hot members, capped probe 5.8 s vs uncapped 1.8 s). The batch's
-        // (band, bh) key set is tiny (|batch| × bands rows), so a
-        // broadcast semi-join drops non-hit buckets for free; counts stay
-        // exact because every member of a hit bucket survives the semi,
-        // and non-hit buckets could never produce candidates anyway.
-        val hitKeys = broadcast(
-          bb.select(col("band"), col("bh")).distinct())
-        val base = cbAll.select(col("doc_id").as("da"), col("fp"),
-          col("band"), col("bh"))
-          .join(hitKeys, Seq("band", "bh"), "left_semi")
-        // single-exchange bucket counts (see Dedup.lshCandidatesCapped):
-        // the window partitioning also serves the fp collapse + rep rank
-        val cs = base.withColumn("m",
-          count(lit(1)).over(Window.partitionBy(col("band"), col("bh"))))
-          .cache()
-        capCs = Some(cs)
-        val small = cs.filter(col("m") <= cap)
-          .select(col("da"), col("band"), col("bh"))
-        val rk = cs.filter(col("m") > cap)
-          .groupBy(col("band"), col("bh"), col("fp"))
-          .agg(min(col("da")).as("da"), count(lit(1)).as("gm"))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("band"), col("bh")).orderBy(col("da"))))
-        // margin: collapse absorption + cap action (Dedup.lshCandidatesCapped).
-        // Deferred (r13, guide §1.2/§2.6): the aggregate rides the
-        // candidate-bucket collect below as a second union branch over the
-        // same cached cs — one driver action instead of two per probe. It
-        // still executes (and prints) before probeCore returns, so the
-        // capped construction stays as eager as Dedup.lshCandidatesCapped.
-        capMargin = Some(rk.agg(
-          countDistinct(col("band"), col("bh")).as("hotBuckets"),
-          coalesce(sum(col("gm")), lit(0L)).as("hotMembers"),
-          count(when(col("rk") > cap, 1)).as("droppedReps"),
-          countDistinct(when(col("rk") > cap,
-            struct(col("band"), col("bh")))).as("cappedBuckets")))
-        small.union(
-          rk.filter(col("rk") <= cap).select(col("da"), col("band"), col("bh")))
-    }
-    val cand = cb.join(bb.select(col("db"), col("band"), col("bh")),
-        Seq("band", "bh"))
-      .select(col("da"), col("db")).distinct().cache()
-    // ≤ nDocBuckets values by construction (plus the one margin row on the
-    // capped path, split back out by its null dbk marker)
-    val nullLong = lit(null).cast("long")
+    // capped: [[Dedup.incrementalDupPairsCapped]]'s corpus-side cap served
+    // from the index — a batch doc landing in a boilerplate bucket is
+    // bounded to the bucket's fingerprint representatives instead of
+    // fanning out to every stored copy (output IDENTICAL when nothing is
+    // hot — the q177 oracle gate)
+    val capped = maxBucket.map(Dedup.cappedBatchCandidates(
+      cbAll.select(col("doc_id"), col("fp"), col("band"), col("bh")), bb, _,
+      "lsh-cap-idx"))
+    val cand = capped.map(_._1).getOrElse(
+      cbAll.select(col("doc_id").as("da"), col("band"), col("bh"))
+        .join(bb, Seq("band", "bh"))
+        .select(col("da"), col("db")).distinct()).cache()
+    // ≤ nDocBuckets values by construction; on the capped path this
+    // candidate job also carries the margin observation
     val dbkRows = cand.select(bucketOf(col("da"), nDocBuckets).as("dbk"))
       .distinct()
-    val dHit = capMargin match {
-      case None => dbkRows.collect().map(_.getLong(0))
-      case Some(mf) =>
-        val rows = dbkRows
-          .select(col("dbk"), nullLong.as("hotBuckets"),
-            nullLong.as("hotMembers"), nullLong.as("droppedReps"),
-            nullLong.as("cappedBuckets"))
-          .unionByName(mf.select(nullLong.as("dbk"), col("hotBuckets"),
-            col("hotMembers"), col("droppedReps"), col("cappedBuckets")))
-          .collect()
-        val (marginRows, hitRows) = rows.partition(_.isNullAt(0))
-        val m = marginRows.head
-        System.err.println(
-          s"[lsh-cap-idx] hotBuckets=${m.getLong(1)} " +
-            s"hotMembers=${m.getLong(2)} cappedBuckets=${m.getLong(4)} " +
-            s"droppedReps=${m.getLong(3)}")
-        hitRows.map(_.getLong(0))
-    }
+    val dHit = capped.map(_._2.observedOn(dbkRows)).getOrElse(dbkRows)
+      .collect().map(_.getLong(0))
     // cand is fully materialized by the collect above; bb and the capped
-    // branch's cs are dead now — release them so per-batch probes don't
-    // accumulate pinned caches (a shared precomputed band frame belongs
-    // to the caller, who releases it after its upsert reuse)
+    // branch's counted frame are dead now — release them so per-batch
+    // probes don't accumulate pinned caches (a shared precomputed band
+    // frame belongs to the caller, who releases it after its upsert reuse)
     if (ownsBb) bb.unpersist()
-    capCs.foreach(_.unpersist())
+    capped.foreach(_._2.counted.unpersist())
     val csg = spark.read.parquet(path + "/shingles")
       .filter(col("dbk").isin(dHit: _*))
       .select(col("doc_id").as("da"), col("sg").as("sga"))

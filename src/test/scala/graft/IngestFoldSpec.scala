@@ -57,11 +57,9 @@ class IngestFoldSpec extends AnyFunSuite {
     assert(bands() == before, "duplicate batch mutated the index")
   }
 
-  test("capped probe margin still prints eagerly, fused into the bucket collect") {
-    // r13: the [lsh-cap-idx] margin aggregate no longer runs as a job of
-    // its own — it rides the candidate-bucket collect — but it must still
-    // execute (and print) during probe CONSTRUCTION, before any caller
-    // action, mirroring Dedup.lshCandidatesCapped's eager contract
+  test("capped probe margin is observed by its candidate job at construction") {
+    // the lsh-cap-idx margin rides the candidate-bucket collect the probe
+    // runs while it is built, so it is observed before any caller action
     val prefix = (1 to 14).map(i => s"w$i").mkString(" ")
     val corpus = (0 until 30).map(i => (i.toLong, s"$prefix tail$i"))
       .toDF("doc_id", "text")
@@ -70,17 +68,13 @@ class IngestFoldSpec extends AnyFunSuite {
     DedupIndex.writeSignatureIndex(corpus, idx)
     val batch = (100 until 105).map(i => (i.toLong, s"$prefix tail$i"))
       .toDF("doc_id", "text")
-    val baos = new java.io.ByteArrayOutputStream
-    val oldErr = System.err
-    System.setErr(new java.io.PrintStream(baos, true))
-    val h = try DedupIndex.probeIndexCappedManaged(
-        spark, idx, batch, maxBucket = 4)
-      finally System.setErr(oldErr)
+    val prof = new obs.Profile(spark)
+    val (h, r) = try prof("probe")(DedupIndex.probeIndexCappedManaged(
+        spark, idx, batch, maxBucket = 4))
+      finally prof.close()
     try {
-      val dropped = "droppedReps=(\\d+)".r
-        .findFirstMatchIn(baos.toString).map(_.group(1).toLong)
-      assert(dropped.exists(_ > 0),
-        s"margin did not print at construction: ${baos.toString}")
+      assert(TestSpark.margins(r, "lsh-cap-idx") ==
+        Seq(TestSpark.hotFixtureMargin), r.json)
     } finally h.close()
   }
 

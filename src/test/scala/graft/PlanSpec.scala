@@ -206,7 +206,7 @@ class PlanSpec extends AnyFunSuite {
       "operators/Lakehouse.scala" ->
         (1, "CDC bucket merge: <= nBuckets affected-bucket ids"),
       "operators/DedupIndex.scala" ->
-        (4, "probe: hit band-bucket set (<= nBuckets, fused-stats fallback) + candidate shingle-bucket set, uncapped and capped variants (<= nDocBuckets, + 1 margin row on the capped path); ingestBatch: fused batch-stats rows (2: validation counts + <= nBuckets/nDocBuckets bucket sets)"),
+        (3, "probe: hit band-bucket set (<= nBuckets, fused-stats fallback) + candidate shingle-bucket set (<= nDocBuckets); ingestBatch: fused batch-stats rows (2: validation counts + <= nBuckets/nDocBuckets bucket sets)"),
       "operators/BucketedIndex.scala" ->
         (1, "every family's upsert: affected main-partition key set, bounded by the family's bucket geometry (<= nBuckets / <= nLists / <= 2^numPlanes / <= 2·batch·L pairs; the side-bucket set rides the fused requireUniqueIdsCollectingBuckets agg)"),
       "operators/PartitionedIndexOps.scala" ->

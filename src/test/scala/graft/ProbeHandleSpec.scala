@@ -39,15 +39,15 @@ class ProbeHandleSpec extends AnyFunSuite {
   test("capped pair builders: managed variants release every pinned cache; bare output identical") {
     import graft.operators.Dedup
     val before = pinnedCount
-    // self-join family: three pinned frames (shingles, signatures, band
-    // window) — the facade default for nearPairs
+    // self-join family: two pinned frames (shingles, band window) — the
+    // facade default for nearPairs
     val h = Dedup.minhashDupPairsCappedManaged(docs)
     val pairs = h.result.collect().map(_.toSeq).toSet
     assert(pinnedCount > before, "capped builder caches never materialized")
     h.close()
     assert(pinnedCount == before,
       "capped self-join caches still pinned after close()")
-    // incremental family: four pinned frames
+    // incremental family: three pinned frames
     val h2 = Dedup.incrementalDupPairsCappedManaged(
       docs.filter(col("doc_id") % 2 === 0),
       docs.filter(col("doc_id") % 2 === 1))

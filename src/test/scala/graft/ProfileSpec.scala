@@ -71,4 +71,47 @@ class ProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(r.sqlExecutions == 24, r.json)
   }
+
+  test("a unit reports each observation once, grouped by name prefix") {
+    import org.apache.spark.sql.functions.{count, lit}
+    def observed(n: Long) = spark.range(n)
+      .observe(obs.Profile.observationName("rows"), count(lit(1)).as("n"))
+    val (a, b) = (observed(3), observed(5))
+    // two observations in one query, then one of them again
+    val (_, r) = prof("observe") { a.union(b).collect(); a.collect() }
+    assert(r.sqlExecutions == 2, r.json)
+    assert(r.observed.map { case (p, rs) => p -> rs.map(_.getLong(0)).sorted } ==
+      Seq("rows" -> Seq(3L, 5L)), r.json)
+    // the record keeps them when its plans are dropped (Bench's payload)
+    assert(r.copy(plans = Nil).json == r.json)
+  }
+
+  test("capped dedup paths: margin observed on the work, four zeros when nothing is hot") {
+    // one unit = construction + count(): the margin rides the work's own
+    // jobs, so it adds no SQL execution, and it is present (four zeros)
+    // when no gate-corpus bucket is hot
+    val zero = Seq(0L, 0L, 0L, 0L)
+    for ((name, prefix, execs, batches) <- Seq(
+        ("q174_capped_minhash", "lsh-cap", 1, 1),
+        ("q175_capped_incremental", "lsh-cap-inc", 1, 1),
+        ("q177_capped_index_probe", "lsh-cap-idx", 6, 1),
+        // the first of q145's three micro-batches bulk-builds the index
+        ("q145_stream_ingest_dedup", "lsh-cap-idx", 31, 2))) {
+      val (_, r) = prof(name) {
+        SparkEntry.queries(name)(spark, TestSpark.sf0001).count()
+      }
+      assert(r.sqlExecutions == execs, r.json)
+      assert(TestSpark.margins(r, prefix) == Seq.fill(batches)(zero), r.json)
+    }
+  }
+
+  test("q167's pair stats are an observation on its probe, not an extra action") {
+    val (_, r) = prof("q167") {
+      SparkEntry.queries("q167_incremental_curation")(spark, TestSpark.sf0001)
+        .count()
+    }
+    assert(r.sqlExecutions == 8, r.json)
+    assert(r.json.endsWith(
+      ""","observed":{"q167":[{"nearDupPairs":2,"minJ":0.9808}]}}"""), r.json)
+  }
 }

@@ -212,19 +212,21 @@ class PropertySpec extends AnyFunSuite {
     val prefix = (1 to 14).map(i => s"w$i").mkString(" ")
     val df = (0 until 30).map(i => (i.toLong, s"$prefix tail$i"))
       .toDF("doc_id", "text")
+    val batch = (100 until 105).map(i => (i.toLong, s"$prefix tail$i"))
+      .toDF("doc_id", "text")
     val sg = graft.operators.Dedup.shingleSets(df, 3)
     val sig = graft.operators.Dedup.minhashSignatures(sg, 32).cache()
+    val prof = new graft.obs.Profile(spark)
     try {
-      val baos = new java.io.ByteArrayOutputStream
-      val oldErr = System.err
-      System.setErr(new java.io.PrintStream(baos, true))
-      val capped =
-        try graft.operators.Dedup.lshCandidatesCapped(sig, 32, 2, maxBucket = 4)
-        finally System.setErr(oldErr)
-      val dropped = "droppedReps=(\\d+)".r
-        .findFirstMatchIn(baos.toString).map(_.group(1).toLong)
-      assert(dropped.exists(_ > 0), s"cap never dropped a rep: ${baos.toString}")
-      val cappedN = capped.count()
+      // the self-join and the incremental path observe the same margin on
+      // this fixture (IngestFoldSpec pins the index probe's)
+      val capped = graft.operators.Dedup.lshCandidatesCapped(sig, 32, 2, maxBucket = 4)
+      val (cappedN, r) = prof("self-join")(capped.count())
+      assert(TestSpark.margins(r, "lsh-cap") == Seq(TestSpark.hotFixtureMargin), r.json)
+      val (_, ri) = prof("incremental")(graft.operators.Dedup
+        .incrementalDupPairsCapped(df, batch, maxBucket = 4).count())
+      assert(TestSpark.margins(ri, "lsh-cap-inc") ==
+        Seq(TestSpark.hotFixtureMargin), ri.json)
       val uncappedN = graft.operators.Dedup.lshCandidates(sig, 32, 2).count()
       assert(cappedN < uncappedN)
       // every doc is a true near-dup of every other (j ≈ 0.86 ≥ 0.5): the
@@ -235,7 +237,7 @@ class PropertySpec extends AnyFunSuite {
       val cc = comps(graft.operators.Dedup.minhashDupPairsCapped(df, maxBucket = 4))
       assert(cc.size == 30 && cc.map(_._2) == Set(0L),
         s"capped pairs fractured the cluster: $cc")
-    } finally sig.unpersist()
+    } finally { prof.close(); sig.unpersist() }
   }
 
   test("capped candidates preserve dup COMPONENTS under planted boilerplate") {
@@ -354,6 +356,42 @@ class PropertySpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     assert(u.nonEmpty)
     assert(c == u)
+  }
+
+  test("capped results compose: two in one query equal their separate union") {
+    import spark.implicits._
+    // two hot clusters over disjoint doc sets (the diverse-hot-bucket
+    // shape): each capped call observes its own margin, so one query may
+    // hold both — one shared observation name fails analysis with
+    // DUPLICATED_METRICS_NAME
+    def cluster(tag: String, ids: Range) = ids.map(i =>
+      (i.toLong, (1 to 14).map(w => s"$tag$w").mkString(" ") + s" tail$i"))
+      .toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val (a, b) = (cluster("a", 0 until 30), cluster("b", 100 until 130))
+    val pa = graft.operators.Dedup.minhashDupPairsCapped(a, maxBucket = 4)
+    val pb = graft.operators.Dedup.minhashDupPairsCapped(b, maxBucket = 4)
+    val prof = new graft.obs.Profile(spark)
+    try {
+      def margins(r: graft.obs.Record) =
+        TestSpark.margins(r, "lsh-cap").sortBy(_.mkString(","))
+      val (rowsA, ra) = prof("a")(rows(pa))
+      val (rowsB, rb) = prof("b")(rows(pb))
+      val (both, r) = prof("union")(rows(pa.union(pb)))
+      assert(both.nonEmpty && both == rowsA ++ rowsB)
+      assert(margins(ra).size == 1 && margins(ra).head(3) > 0, ra.json)
+      assert(margins(r) == (margins(ra) ++ margins(rb)).sortBy(_.mkString(",")),
+        r.json)
+    } finally prof.close()
+    val idx = java.nio.file.Files.createTempDirectory("cap_idx_union")
+      .resolve("idx").toString
+    graft.operators.DedupIndex.writeSignatureIndex(a.unionByName(b), idx)
+    val qa = graft.operators.DedupIndex.probeIndexCapped(spark, idx,
+      cluster("a", 200 until 205), maxBucket = 4)
+    val qb = graft.operators.DedupIndex.probeIndexCapped(spark, idx,
+      cluster("b", 300 until 305), maxBucket = 4)
+    val both = rows(qa.union(qb))
+    assert(both.nonEmpty && both == rows(qa) ++ rows(qb))
   }
 
   test("chunking reassembles the original token stream for random docs") {
