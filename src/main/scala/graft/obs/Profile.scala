@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{GraftShims, Row, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -21,11 +22,12 @@ final case class Exchange(records: Long, bytes: Long, child: String, node: Strin
   * grouped by name prefix (the part before `#`): one entry per
   * observation, in execution order (by name within one execution); an
   * observation two executions share (e.g. through a cached plan) is
-  * reported once. */
+  * reported once. `codegen` is what Spark's code generator compiled during
+  * the unit ([[Codegen]]). */
 final case class Record(name: String, wallMs: Double, planningMs: Long,
     sqlExecutions: Long, jobs: Long, jobBusyMs: Long, driverGapMs: Long,
-    shuffleRecords: Long, shuffleBytes: Long, plans: Seq[QueryExecution],
-    observed: Seq[(String, Seq[Row])]) {
+    shuffleRecords: Long, shuffleBytes: Long, codegen: Codegen,
+    plans: Seq[QueryExecution], observed: Seq[(String, Seq[Row])]) {
 
   def exchanges: Seq[Exchange] = plans.flatMap(qe => Profile.nodes(qe.executedPlan))
     .collect { case s: ShuffleExchangeLike =>
@@ -40,8 +42,31 @@ final case class Record(name: String, wallMs: Double, planningMs: Long,
       s""""sql_executions":$sqlExecutions,"jobs":$jobs,""" +
       s""""job_busy_ms":$jobBusyMs,"driver_gap_ms":$driverGapMs,""" +
       s""""shuffle_records":$shuffleRecords,"shuffle_bytes":$shuffleBytes,""" +
+      s""""codegen_classes":${codegen.classes},"codegen_source_bytes":""" +
+      s"""${codegen.sourceBytes},"codegen_compile_ms":${codegen.compileMs},""" +
       observed.map { case (p, rs) => Profile.str(p) + rs.map(_.json).mkString(":[", ",", "]") }
         .mkString(""""observed":{""", ",", "}}")
+}
+
+/** Classes Spark's code generator compiled, their generated source bytes and
+  * their compile ms, as deltas of its `CodegenMetrics` counters. These are
+  * JVM-wide: they cover the driver JVM only — which under `local[N]` also
+  * runs the executors, so there they count every compile — and they include
+  * any concurrent work outside the unit. `classes` is exact; bytes and ms
+  * sum the histograms' retained samples and read -1 once the JVM has
+  * compiled more classes than a histogram retains (1,028), because the sum
+  * is then a sample (and stays one). */
+final case class Codegen(classes: Long, sourceBytes: Long, compileMs: Long) {
+  def -(o: Codegen): Codegen = Codegen(classes - o.classes,
+    if (sourceBytes < 0) -1L else sourceBytes - o.sourceBytes,
+    if (compileMs < 0) -1L else compileMs - o.compileMs)
+}
+
+object Codegen {
+  private def sum(h: com.codahale.metrics.Histogram) =
+    Some(h.getSnapshot).filter(_.size == h.getCount).map(_.getValues.sum).getOrElse(-1L)
+  def now(): Codegen = Codegen(CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    sum(CodegenMetrics.METRIC_SOURCE_CODE_SIZE), sum(CodegenMetrics.METRIC_COMPILATION_TIME))
 }
 
 /** The engine's one metrics collector; constructing it attaches it to the
@@ -73,25 +98,27 @@ final class Profile(spark: SparkSession) extends SparkListener {
     synchronized(open(tag) = a)
     try {
       sc.addJobTag(tag)
-      val t0 = System.nanoTime()
+      val (t0, c0) = (System.nanoTime(), Codegen.now())
       val out = try body finally sc.removeJobTag(tag)
-      val wallMs = (System.nanoTime() - t0) / 1e6
+      val (wallMs, codegen) = ((System.nanoTime() - t0) / 1e6, Codegen.now() - c0)
       GraftShims.drainListenerBus(sc)
-      (out, synchronized(record(name, wallMs, a)))
+      (out, synchronized(record(name, wallMs, codegen, a)))
     } finally synchronized {
       open.remove(tag)
       stageAccs.filterInPlace((_, as) => !as.contains(a))
     }
   }
 
-  private def record(name: String, wallMs: Double, a: Acc): Record = {
+  private def record(name: String, wallMs: Double, codegen: Codegen,
+      a: Acc): Record = {
     val busy = a.jobTimes.sortBy(_._1).foldLeft((0L, 0L)) { case ((sum, end), (s, e)) =>
       (sum + math.max(0L, e - math.max(s, end)), math.max(end, e))
     }._1
     val seen = a.plans.toSeq.flatMap(_.observedMetrics.toSeq.sortBy(_._1))
       .distinctBy(_._1).map { case (n, r) => (n.takeWhile(_ != '#'), r) }
     Record(name, wallMs, a.planningMs, a.execs, a.jobs, busy,
-      math.max(0L, math.round(wallMs) - busy), a.shRecords, a.shBytes, a.plans.toSeq,
+      math.max(0L, math.round(wallMs) - busy), a.shRecords, a.shBytes, codegen,
+      a.plans.toSeq,
       seen.map(_._1).distinct.map(p => p -> seen.collect { case (`p`, r) => r }))
   }
 

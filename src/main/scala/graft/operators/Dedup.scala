@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for the training-data pipeline north star:
@@ -108,151 +108,140 @@ object Dedup {
   /** Hot-bucket-capped LSH candidate pairs — [[lshCandidates]] with a
     * per-bucket population bound, the 100 TB guard against boilerplate
     * clusters: an m-member (band, bh) bucket emits m(m−1)/2 pairs inside
-    * ONE task, so a 10 k-copy boilerplate cluster turns a band bucket into
-    * a 50 M-pair quadratic blowup no partitioning can split (the ×100
-    * rehearsal measured exactly this shape: q35 emitted 470 M genuine pair
-    * records). Buckets with ≤ `maxBucket` members are joined exactly as
+    * ONE task (the ×100 rehearsal: q35 emitted 470 M genuine pair
+    * records). Buckets with ≤ `maxBucket` members pair exactly as
     * [[lshCandidates]] — on a corpus with no hot bucket the output is
     * IDENTICAL, which is what the oracle gate pins. A hot bucket instead:
     *
     *   1. pre-collapses same-[[signatureFingerprint]] members (identical
     *      shingle sets whp — the 100-copy case) to their min-doc_id
-    *      representative, each member STAR-linked to its rep (m − groups
-    *      pairs, linear, and exact: identical sets verify at j = 1);
-    *   2. all-pairs joins the representatives — capped at the `maxBucket`
-    *      smallest if genuinely diverse near-identical text survives the
-    *      collapse ([[HotCap]]'s observed `droppedReps` is the recall
-    *      margin); every DROPPED rep is still star-linked to the bucket's
-    *      min rep, so no member is orphaned — in a boilerplate near-clique
-    *      that link verifies and the component survives intact. What IS
-    *      forgone in this bucket: pair enumeration among dropped reps AND
-    *      between a dropped rep and the kept reps other than the bucket
-    *      min — a dropped rep that is a true near-dup of kept rep #3 but
-    *      NOT of the min rep keeps only its (unverifiable) min-rep star
-    *      link here, so that edge survives only if one of the doc pair's
-    *      15 other bands resurfaces it in a small-enough bucket
-    *      (probabilistic, not guaranteed — this is the cap's recall trade;
-    *      droppedReps=0 means NOTHING was forgone, the ×100/×1000
-    *      boilerplate rehearsal shape).
+    *      representative, each member STAR-linked to its rep (linear, and
+    *      exact: identical sets verify at j = 1);
+    *   2. pairs the `maxBucket` smallest reps, and star-links every
+    *      DROPPED rep to the bucket's min rep, so no member is orphaned.
+    *      Forgone: pairs among dropped reps and between a dropped rep and
+    *      kept reps other than the min — such an edge survives only if
+    *      another of the pair's bands resurfaces it in a small bucket (the
+    *      cap's recall trade; droppedReps = 0 means nothing was forgone).
     *
     * Per-bucket emission is thus ≤ m + maxBucket²/2 instead of m²/2, and
-    * connectivity for downstream [[dupComponents]] survives: every member
-    * reaches its rep, and every rep reaches the bucket min. Lazy like
-    * [[lshCandidates]]: the margin is observed by whichever action runs
-    * the result. */
+    * every member reaches its rep and every rep the bucket min, so
+    * [[dupComponents]] connectivity survives. Lazy like [[lshCandidates]]:
+    * the margin is observed by whichever action runs the result. */
   def lshCandidatesCapped(sig: DataFrame, numHashes: Int, rowsPerBand: Int,
-      maxBucket: Int = 64): DataFrame = {
-    val (cands, cap) = lshCandidatesCappedCore(sig, numHashes, rowsPerBand,
-      maxBucket)
-    cap.observedOn(cands)
-  }
+      maxBucket: Int = 64): DataFrame =
+    capBuckets(signatureBandsWithFp(sig, numHashes, rowsPerBand), maxBucket,
+      admit = false, "lsh-cap").distinct()
 
-  /** [[lshCandidatesCapped]] before its margin branch, plus the [[HotCap]]
-    * whose counted band frame managed callers release
-    * ([[minhashDupPairsCappedManaged]]). */
-  private def lshCandidatesCappedCore(sig: DataFrame, numHashes: Int,
-      rowsPerBand: Int, maxBucket: Int): (DataFrame, HotCap) = {
-    val cap = new HotCap(signatureBandsWithFp(sig, numHashes, rowsPerBand),
-      maxBucket, "lsh-cap")
-    def pairsWithin(f: DataFrame) = f.toDF("da", "band", "bh")
-      .join(f.toDF("db", "band", "bh"), Seq("band", "bh"))
-      .filter(col("da") < col("db"))
-      .select(col("da"), col("db"))
-    // rep = min(doc_id) of the group, so star pairs are already da < db
-    val star = cap.hot.join(cap.reps, Seq("band", "bh", "fp"))
-      .filter(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("da"), col("doc_id").as("db"))
-    // dropped reps star-link to the bucket's min rep (rank 1 under the
-    // rep ordering): linear, deterministic, and no member ends up orphaned
-    val repStar = cap.ranked.filter(col("rk") > maxBucket).join(
-        cap.ranked.filter(col("rk") === 1)
-          .select(col("band"), col("bh"), col("rep").as("da")),
-        Seq("band", "bh"))
-      .select(col("da"), col("rep").as("db"))
-    (pairsWithin(cap.small).union(star).union(pairsWithin(cap.kept))
-      .union(repStar).distinct(), cap)
-  }
+  /** A [[capKernel]] row: a pair (da < db), an admitted member da of
+    * (band, bh), or — when `hot` > 0 — one hot bucket's margin. */
+  private[operators] final case class CapRow(da: Long, db: Long, band: Int,
+      bh: Long, hot: Long, dropped: Long)
 
-  /** The hot-bucket cap the three capped paths share
-    * ([[lshCandidatesCapped]], [[incrementalDupPairsCapped]],
-    * [[DedupIndex.probeIndexCapped]]), over fingerprinted band rows
-    * `members` (doc_id, fp, band, bh).
+  /** The hot-bucket cap of the three capped paths ([[lshCandidatesCapped]],
+    * [[incrementalDupPairsCapped]], [[DedupIndex.probeIndexCapped]]) over
+    * fingerprinted band rows (doc_id, fp, band, bh): ONE exchange on
+    * (band, bh), a sort within partitions by (band, bh, fp, doc_id), then
+    * the per-bucket [[capKernel]]. Returns (da, db) pairs, or with `admit`
+    * the admitted corpus members (da, band, bh) for the caller's batch
+    * join.
     *
-    * Bucket population is a WINDOW count over the (band, bh) partitioning,
-    * not an aggregate joined back (q174 ×10 A/B: join-back 9.5 s / 11.9 M
-    * shuffle records → window 6.4 s / 9.9 M), and the counted frame is
-    * CACHED: without the cache each branch re-executes the band exchange —
-    * per-branch column pruning pushes different projects under it, so
-    * ReuseExchange never matches them (PlanSpec pins the cached shape:
-    * exactly one band-table-sized exchange). It is corpus-sized on the
-    * self-join path, in line with that path's shingle cache, and only the
-    * batch-hit slice on the corpus-vs-batch paths. The owner releases
-    * `counted`; the signatures under it are read once, by its build, so
-    * no caller caches them (a second, nested cache built inside the
-    * consuming job raised the x10 curation run's peak RSS from ~1.4 to
-    * ~1.58 GB on 4 cores).
-    *
-    * Hot buckets collapse same-fingerprint members to min-id reps (`gm` =
-    * group size) ranked by id; the first `maxBucket` reps are `kept`.
-    *
-    * The recall margin is one `Dataset.observe` per call, named by
-    * [[graft.obs.Profile.observationName]] after `prefix`:
+    * The recall margin is one `Dataset.observe` on the kernel's output,
+    * named by [[graft.obs.Profile.observationName]] after `prefix`:
     * hotBuckets/hotMembers show what the fingerprint collapse absorbed (a
     * 100-copy boilerplate cluster can bound 469 M pairs to 84 M with ZERO
-    * dropped reps — the ×100 rehearsal's shape); cappedBuckets/droppedReps
-    * show what the rep cap forwent. All zero on a corpus with no hot
-    * bucket. [[graft.obs.Record]] reports it. */
-  private[operators] final class HotCap(members: DataFrame, maxBucket: Int,
-      prefix: String) {
-    import org.apache.spark.sql.expressions.Window
-    private val bucket = Window.partitionBy(col("band"), col("bh"))
-    val counted: DataFrame =
-      members.withColumn("m", count(lit(1)).over(bucket)).cache()
-    /** Members of buckets within the cap: (doc_id, band, bh). */
-    val small: DataFrame = counted.filter(col("m") <= maxBucket)
-      .select(col("doc_id"), col("band"), col("bh"))
-    val hot: DataFrame = counted.filter(col("m") > maxBucket)
-    val reps: DataFrame = hot.groupBy(col("band"), col("bh"), col("fp"))
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("gm"))
-    val ranked: DataFrame = reps.withColumn("rk",
-      row_number().over(bucket.orderBy(col("rep"))))
-    /** Reps within the cap: (doc_id, band, bh). */
-    val kept: DataFrame = ranked.filter(col("rk") <= maxBucket)
-      .select(col("rep").as("doc_id"), col("band"), col("bh"))
-
-    /** `out` plus a zero-row branch that carries the margin observation.
-      * It belongs at the ROOT of the query that runs: AQE prunes a join or
-      * aggregate over an empty stage, and an observation inside that stage
-      * goes with it; a root Union keeps the branch even when `out` is
-      * empty. */
-    def observedOn(out: DataFrame): DataFrame = out.union(ranked
+    * dropped reps); cappedBuckets/droppedReps what the rep cap forwent.
+    * [[graft.obs.Record]] reports it. It rides the kernel's stage, not a
+    * root-union branch: a second read of the kernel re-reads its cached
+    * input, which Spark re-instances with new attribute ids and cannot
+    * match for exchange reuse (a second band exchange and signature pass).
+    * The stage stays in the final plan whenever the kernel emits a
+    * candidate, as every hot bucket does; AQE drops a stage that wrote no
+    * rows, so an input with no candidate at all records no margin. */
+  private[operators] def capBuckets(members: DataFrame, maxBucket: Int,
+      admit: Boolean, prefix: String): DataFrame = {
+    val id = members.schema("doc_id").dataType
+    members.select(col("doc_id").cast("long").as("doc_id"), col("fp"),
+        col("band"), col("bh"))
+      .repartition(col("band"), col("bh"))
+      .sortWithinPartitions(col("band"), col("bh"), col("fp"), col("doc_id"))
+      .mapPartitions(capKernel(maxBucket, admit))(
+        org.apache.spark.sql.Encoders.product[CapRow]).toDF()
       .observe(graft.obs.Profile.observationName(prefix),
-        count(when(col("rk") === 1, 1)).as("hotBuckets"),
-        coalesce(sum(col("gm")), lit(0L)).as("hotMembers"),
-        count(when(col("rk") === maxBucket + 1, 1)).as("cappedBuckets"),
-        count(when(col("rk") > maxBucket, 1)).as("droppedReps"))
-      .filter(col("rk") < 0)
-      .select(out.schema.map(f => lit(0).cast(f.dataType).as(f.name)): _*))
+        count(when(col("hot") > 0, 1)).as("hotBuckets"),
+        coalesce(sum(col("hot")), lit(0L)).as("hotMembers"),
+        count(when(col("dropped") > 0, 1)).as("cappedBuckets"),
+        coalesce(sum(col("dropped")), lit(0L)).as("droppedReps"))
+      .filter(col("hot") === 0).select(col("da").cast(id).as("da") +:
+        (if (admit) Seq(col("band"), col("bh"))
+          else Seq(col("db").cast(id).as("db"))): _*)
+  }
+
+  /** [[capBuckets]]' per-bucket iterator over rows (doc_id, fp, band, bh)
+    * sorted by (band, bh, fp, doc_id). It buffers at most `maxBucket` + 1
+    * rows to tell a small bucket (all pairs among its members) from a hot
+    * one. In a hot bucket each fingerprint's first row is its rep (min
+    * id), and every other member star-links to it as it streams by; at the
+    * bucket's end the reps are ranked by id, the first `maxBucket` kept
+    * with pairs among them, each dropped rep linked to rank 1, and one
+    * margin row follows. A hot bucket holds 8 B per rep, never its
+    * members. With `admit` a bucket yields its admitted members instead:
+    * all of a small one, the kept reps of a hot one. */
+  private def capKernel(maxBucket: Int, admit: Boolean)(
+      rows: Iterator[Row]): Iterator[CapRow] = {
+    val in = rows.buffered
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val (band, bh) = (in.head.getInt(2), in.head.getLong(3))
+      def inBucket = in.hasNext && in.head.getInt(2) == band &&
+        in.head.getLong(3) == bh
+      def pair(a: Long, b: Long) =
+        CapRow(math.min(a, b), math.max(a, b), band, bh, 0L, 0L)
+      def emit(ids: collection.IndexedSeq[Long]): Iterator[CapRow] =
+        if (admit) ids.iterator.map(CapRow(_, 0L, band, bh, 0L, 0L))
+        else for (i <- ids.indices.iterator; j <- (i + 1 until ids.size).iterator
+          if ids(i) != ids(j)) yield pair(ids(i), ids(j))
+      val head = collection.mutable.ArrayBuffer.empty[Row]
+      while (head.size <= maxBucket && inBucket) head += in.next()
+      if (head.size <= maxBucket) emit(head.map(_.getLong(0)))
+      else {
+        val reps = collection.mutable.ArrayBuilder.make[Long]
+        var (m, fp, rep) = (0L, 0L, 0L)
+        val stars = (head.iterator ++
+            Iterator.continually(in).takeWhile(_ => inBucket).map(_.next()))
+          .flatMap { r =>
+            val (id, f) = (r.getLong(0), r.getLong(1))
+            m += 1
+            if (m == 1 || f != fp) { fp = f; rep = id; reps += id; None }
+            else if (admit || id == rep) None
+            else Some(pair(rep, id))
+          }
+        stars ++ {
+          val rs = reps.result().sorted
+          val dropped = rs.drop(maxBucket)
+          emit(rs.take(maxBucket)) ++
+            (if (admit) Iterator.empty
+              else dropped.iterator.filter(_ != rs(0)).map(pair(rs(0), _))) ++
+            Iterator.single(CapRow(0L, 0L, band, bh, m, dropped.length.toLong))
+        }
+      }
+    }
   }
 
   /** Capped corpus-vs-batch candidates (da = corpus doc, db = batch doc),
     * shared by [[incrementalDupPairsCappedManaged]] and the capped
     * [[DedupIndex]] probe. `corpus` is (doc_id, fp, band, bh), `bb` the
-    * batch bands (db, band, bh). The corpus side is restricted to buckets
-    * the BATCH hits before any counting (broadcast semi on the batch's tiny
-    * (band, bh) key set): counts stay exact — every member of a hit bucket
-    * survives the semi — and the window never pays for buckets that could
-    * not produce a candidate (the ×100 rehearsal: 7.2 M hot members, capped
-    * probe 5.8 s vs uncapped 1.8 s before the semi). */
+    * batch bands (db, band, bh). A broadcast semi on the batch's (band, bh)
+    * keys restricts the corpus to buckets the batch hits before the
+    * kernel: populations stay exact, and the exchange never carries a
+    * bucket that could not produce a candidate (the ×100 rehearsal: 7.2 M
+    * hot members, capped probe 5.8 s vs uncapped 1.8 s before the semi). */
   private[operators] def cappedBatchCandidates(corpus: DataFrame,
-      bb: DataFrame, maxBucket: Int, prefix: String): (DataFrame, HotCap) = {
-    val cap = new HotCap(corpus.join(
-      broadcast(bb.select(col("band"), col("bh")).distinct()),
-      Seq("band", "bh"), "left_semi"), maxBucket, prefix)
-    (cap.small.union(cap.kept).toDF("da", "band", "bh")
+      bb: DataFrame, maxBucket: Int, prefix: String): DataFrame =
+    capBuckets(corpus.join(
+        broadcast(bb.select(col("band"), col("bh")).distinct()),
+        Seq("band", "bh"), "left_semi"), maxBucket, admit = true, prefix)
       .join(bb, Seq("band", "bh"))
-      .select(col("da"), col("db")).distinct(), cap)
-  }
+      .select(col("da"), col("db")).distinct()
 
   /** Exact-Jaccard verification of candidate (da, db) pairs against the
     * cached shingle frames of the da side and the db side — the tail every
@@ -280,32 +269,27 @@ object Dedup {
     verifyCandidates(cands, sg, sg, threshold)
   }
 
-  /** [[minhashDupPairs]] through the hot-bucket-capped candidate path —
-    * output equals the uncapped pipeline whenever no band bucket exceeds
-    * `maxBucket` members (the oracle gate), and stays bounded (star +
-    * capped rep pairs per bucket) when boilerplate clusters would blow the
-    * uncapped join up quadratically (at 100 TB the signatures live in the
-    * persisted [[DedupIndex]] instead). */
+  /** [[minhashDupPairs]] through [[lshCandidatesCapped]] — equal to the
+    * uncapped pipeline whenever no band bucket exceeds `maxBucket` members
+    * (the oracle gate), bounded when boilerplate clusters would blow the
+    * uncapped join up quadratically. */
   def minhashDupPairsCapped(docs: DataFrame, n: Int = 3, numHashes: Int = 32,
       rowsPerBand: Int = 2, threshold: Double = 0.5,
       maxBucket: Int = 64): DataFrame =
     minhashDupPairsCappedManaged(docs, n, numHashes, rowsPerBand,
       threshold, maxBucket).result
 
-  /** [[minhashDupPairsCapped]] with cache ownership: this path pins TWO
-    * corpus-sized frames (shingles and the windowed band frame) that the
-    * bare variant leaves pinned for the life of the session — fine for a
-    * one-shot job, a leak for a long-lived session calling it per batch
-    * (the [[ProbeHandle]] rationale). Materialize `result`, then
-    * `close()`. */
+  /** [[minhashDupPairsCapped]] with cache ownership of the one frame it
+    * pins (the shingles), which the bare variant leaves pinned for the
+    * session — a leak for a long-lived session calling it per batch (the
+    * [[ProbeHandle]] rationale). Materialize `result`, then `close()`. */
   def minhashDupPairsCappedManaged(docs: DataFrame, n: Int = 3,
       numHashes: Int = 32, rowsPerBand: Int = 2, threshold: Double = 0.5,
       maxBucket: Int = 64): ProbeHandle = {
     val sg = shingleSets(docs, n).cache()
-    val (cands, cap) = lshCandidatesCappedCore(
-      minhashSignatures(sg, numHashes), numHashes, rowsPerBand, maxBucket)
-    new ProbeHandle(cap.observedOn(verifyCandidates(cands, sg, sg, threshold)),
-      Seq(sg, cap.counted))
+    val cands = lshCandidatesCapped(minhashSignatures(sg, numHashes),
+      numHashes, rowsPerBand, maxBucket)
+    new ProbeHandle(verifyCandidates(cands, sg, sg, threshold), Seq(sg))
   }
 
   /** Incremental near-dup detection: a fresh BATCH of documents checked
@@ -335,30 +319,24 @@ object Dedup {
     verifyCandidates(cand, csg, bsg, threshold)
   }
 
-  /** [[incrementalDupPairs]] with the hot-bucket cap applied to the CORPUS
-    * side of the band join — the ingest-time twin of
-    * [[lshCandidatesCapped]]: a batch doc landing in a boilerplate bucket
-    * must not fan out to every one of its 10 k corpus copies. Corpus
-    * buckets with ≤ `maxBucket` members join exactly as the uncapped path
-    * (output IDENTICAL when nothing is hot — the oracle gate); a hot
-    * bucket pre-collapses same-fingerprint corpus members to their
-    * min-doc_id representative and keeps at most `maxBucket` reps
-    * (observed `lsh-cap-inc` margin, see [[HotCap]]). A batch doc that
-    * would have matched a collapsed member still matches the member's
-    * representative (identical shingle sets verify identically), so the
-    * dup VERDICT per batch doc survives; only the redundant partner
-    * enumeration is bounded. */
+  /** [[incrementalDupPairs]] with the hot-bucket cap on the CORPUS side of
+    * the band join — the ingest-time twin of [[lshCandidatesCapped]]: a
+    * batch doc landing in a boilerplate bucket must not fan out to all its
+    * 10 k corpus copies. Output is IDENTICAL when nothing is hot (the
+    * oracle gate); a hot corpus bucket admits only its `maxBucket` smallest
+    * fingerprint reps ([[capBuckets]], margin `lsh-cap-inc`). A batch doc
+    * matching a collapsed member still matches its rep (identical shingle
+    * sets verify identically), so each batch doc's dup VERDICT survives. */
   def incrementalDupPairsCapped(corpus: DataFrame, batch: DataFrame,
       n: Int = 3, numHashes: Int = 32, rowsPerBand: Int = 2,
       threshold: Double = 0.5, maxBucket: Int = 64): DataFrame =
     incrementalDupPairsCappedManaged(corpus, batch, n, numHashes,
       rowsPerBand, threshold, maxBucket).result
 
-  /** [[incrementalDupPairsCapped]] with cache ownership over the THREE
-    * frames it pins (corpus+batch shingles, batch-hit window) — the
-    * per-ingest call pattern is exactly the long-lived session the
-    * [[ProbeHandle]] contract exists for. Materialize `result`, then
-    * `close()`. */
+  /** [[incrementalDupPairsCapped]] with cache ownership over the TWO
+    * frames it pins (corpus and batch shingles) — the per-ingest call
+    * pattern is exactly the long-lived session the [[ProbeHandle]]
+    * contract exists for. Materialize `result`, then `close()`. */
   def incrementalDupPairsCappedManaged(corpus: DataFrame, batch: DataFrame,
       n: Int = 3, numHashes: Int = 32, rowsPerBand: Int = 2,
       threshold: Double = 0.5, maxBucket: Int = 64): ProbeHandle = {
@@ -366,11 +344,10 @@ object Dedup {
     val bsg = shingleSets(batch, n).cache()
     val bb = signatureBands(minhashSignatures(bsg, numHashes),
       numHashes, rowsPerBand).toDF("db", "band", "bh")
-    val (cand, cap) = cappedBatchCandidates(
+    val cand = cappedBatchCandidates(
       signatureBandsWithFp(minhashSignatures(csg, numHashes), numHashes,
         rowsPerBand), bb, maxBucket, "lsh-cap-inc")
-    new ProbeHandle(cap.observedOn(verifyCandidates(cand, csg, bsg, threshold)),
-      Seq(csg, bsg, cap.counted))
+    new ProbeHandle(verifyCandidates(cand, csg, bsg, threshold), Seq(csg, bsg))
   }
 
   /** Cross-engine-reproducible word hash: a 31-bit polynomial fold over the
@@ -445,34 +422,44 @@ object Dedup {
     * near-dup PAIRS (q34/q35/q84) into a dedup DECISION: every document in
     * a component keeps exactly one survivor (the min doc_id). Iterative
     * min-label propagation: each round joins labels across the symmetrized
-    * edge list and takes the per-vertex minimum — one hash join plus one
-    * map-side-combinable agg per round, both keyed on doc id. Rounds needed
-    * = graph diameter; near-dup components are near-cliques (every similar
-    * pair is its own edge), so 2-3 rounds converge — maxIters bounds
-    * pathological chains. Each round materializes (cache + count) both to
-    * detect convergence and to truncate lineage; at 100 TB you would
-    * checkpoint every few rounds instead. Returns (v, comp). */
+    * edge list and takes the per-vertex minimum, keyed on doc id. A graph
+    * of diameter d needs d + 1 rounds (the last confirms no change);
+    * near-dup components are near-cliques, so 2-3 rounds converge, and a
+    * graph that has not converged within `maxIters` fails loudly instead
+    * of returning partial labels. Each round's labels become a leaf over
+    * its executed, persisted rows
+    * ([[org.apache.spark.sql.GraftShims.persistedLeaf]]), so the plan stays
+    * the same size every round (a `cache()` keeps the analyzed plan, which
+    * embeds the previous labels twice and doubles per round); the round's
+    * convergence check is its one action, and unlike `localCheckpoint` a
+    * lost block recomputes. Every cache is released before returning.
+    * Returns (v, comp). */
   def dupComponents(pairs: DataFrame, maxIters: Int = 10): DataFrame = {
     val edges = pairs.select(col("da").as("src"), col("db").as("dst"))
       .union(pairs.select(col("db").as("src"), col("da").as("dst")))
       .distinct().cache()
     var labels = edges.select(col("src").as("v")).distinct()
-      .withColumn("comp", col("v")).cache()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val viaEdges = edges.join(labels, edges("src") === labels("v"))
-        .select(col("dst").as("v"), col("comp"))
-      val updated = labels.select(col("v"), col("comp")).union(viaEdges)
-        .groupBy(col("v")).agg(min(col("comp")).as("comp"))
-        .cache()
-      converged = updated.join(labels.withColumnRenamed("comp", "prev"), "v")
-        .filter(col("comp") =!= col("prev")).isEmpty
-      labels.unpersist()
-      labels = updated
-      iter += 1
-    }
-    labels
+      .withColumn("comp", col("v"))
+    var rows: Option[org.apache.spark.rdd.RDD[_]] = None
+    try {
+      var (iter, changed) = (0, true)
+      while (changed && iter < maxIters) {
+        val viaEdges = edges.join(labels, edges("src") === labels("v"))
+          .select(col("dst").as("v"), col("comp"))
+        val (next, nextRows) = org.apache.spark.sql.GraftShims.persistedLeaf(
+          labels.select(col("v"), col("comp")).union(viaEdges)
+            .groupBy(col("v")).agg(min(col("comp")).as("comp")))
+        changed = !next.join(labels.withColumnRenamed("comp", "prev"), "v")
+          .filter(col("comp") =!= col("prev")).isEmpty
+        rows.foreach(_.unpersist())
+        rows = Some(nextRows)
+        labels = next; iter += 1
+      }
+      require(!changed, s"dupComponents did not converge within maxIters = " +
+        s"$maxIters rounds: the pair graph's diameter is at least $maxIters " +
+        "(a diameter-d graph needs d + 1 rounds); raise maxIters")
+      labels
+    } finally { rows.foreach(_.unpersist()); edges.unpersist() }
   }
 
   /** Dup groups: component id (= surviving doc), member count, sorted

@@ -15,9 +15,11 @@ import org.apache.spark.sql.functions._
   *   path/shingles  (doc_id, sg)            partitioned by dbk = doc_id mod nDocBuckets
   *
   * `fp` is the doc's full-signature fingerprint
-  * ([[Dedup.signatureFingerprint]], 8 B/row): it lets the capped probe
-  * pre-collapse boilerplate clusters ([[probeIndexCapped]]) without
-  * re-reading signatures; the uncapped probe column-prunes it away.
+  * ([[Dedup.signatureFingerprint]], 8 B/row): the capped probe
+  * ([[probeIndexCapped]]) feeds the hit band rows, fp included, straight to
+  * the per-bucket cap kernel ([[Dedup.capBuckets]]), which collapses
+  * boilerplate clusters without re-reading signatures; the uncapped probe
+  * column-prunes it away.
   *
   * A probe computes the batch's bands, reads ONLY the band buckets those hit
   * (partition pruning on wb, spec-asserted like the Fts/IVF indexes),
@@ -118,13 +120,10 @@ object DedupIndex {
       n: Int = 3, numHashes: Int = 32, rowsPerBand: Int = 2,
       threshold: Double = 0.5, nBuckets: Int = 16,
       nDocBuckets: Int = 16): DataFrame = {
-    // DELIBERATE: the returned plan lazily reads the two probe-scoped
-    // caches (bsg, cand), so a bare probe leaves them pinned — the lazy
-    // plan is what lets callers inspect/compose the pruned-scan probe
-    // (QueriesSpec asserts its PartitionFilters). A long-running ingest
-    // LOOP must use ingestBatch, which owns both caches and releases them
-    // after checkpointing; a long-lived SERVING session should use
-    // probeIndexManaged, whose ProbeHandle releases them on close().
+    // DELIBERATE: the lazy plan reads the two probe-scoped caches (bsg,
+    // cand), so a bare probe leaves them pinned and the pruned-scan probe
+    // stays inspectable (QueriesSpec asserts its PartitionFilters); an
+    // ingest loop uses ingestBatch, a serving session probeIndexManaged.
     probeIndexManaged(spark, path, batch, n, numHashes, rowsPerBand,
       threshold, nBuckets, nDocBuckets).result
   }
@@ -137,27 +136,18 @@ object DedupIndex {
   def probeIndexManaged(spark: SparkSession, path: String, batch: DataFrame,
       n: Int = 3, numHashes: Int = 32, rowsPerBand: Int = 2,
       threshold: Double = 0.5, nBuckets: Int = 16,
-      nDocBuckets: Int = 16): ProbeHandle = {
-    requireConfig(spark, path, n, numHashes, rowsPerBand, nBuckets,
-      nDocBuckets)
-    val bsg = Dedup.shingleSets(batch, n).cache()
-    val (plan, cand) = probeCore(spark, path, bsg,
-      numHashes, rowsPerBand, threshold, nBuckets, nDocBuckets)
-    new ProbeHandle(plan, Seq(bsg, cand))
-  }
+      nDocBuckets: Int = 16): ProbeHandle =
+    managedProbe(spark, path, batch, n, numHashes, rowsPerBand, threshold,
+      nBuckets, nDocBuckets, None)
 
-  /** [[probeIndex]] with the hot-bucket population cap on the CORPUS side
-    * of the band join — the persisted-index twin of
-    * [[Dedup.incrementalDupPairsCapped]], and the probe shape a 100 TB
-    * ingest pipeline should default to: without it, one boilerplate
-    * bucket with 10 k stored copies fans every matching batch doc out to
-    * all of them inside a single task. Output is identical to
-    * [[probeIndex]] whenever no hit bucket exceeds `maxBucket` members
-    * (the q177 oracle gate); on a hot bucket the batch doc's dup VERDICT
-    * survives via the fingerprint representatives, only the redundant
-    * partner enumeration is bounded. The candidate job (the doc-bucket
-    * collect at construction) carries the `lsh-cap-idx` margin
-    * observation ([[Dedup.HotCap]]). */
+  /** [[probeIndex]] with the hot-bucket cap on the CORPUS side of the band
+    * join — the persisted-index twin of [[Dedup.incrementalDupPairsCapped]]
+    * and the probe shape a 100 TB ingest should default to. Output is
+    * identical to [[probeIndex]] whenever no hit bucket exceeds `maxBucket`
+    * members (the q177 oracle gate); on a hot bucket the batch doc's dup
+    * VERDICT survives via the fingerprint reps. The candidate job (the
+    * doc-bucket collect at construction) observes the `lsh-cap-idx` margin
+    * ([[Dedup.capBuckets]]). */
   def probeIndexCapped(spark: SparkSession, path: String, batch: DataFrame,
       n: Int = 3, numHashes: Int = 32, rowsPerBand: Int = 2,
       threshold: Double = 0.5, nBuckets: Int = 16,
@@ -170,35 +160,35 @@ object DedupIndex {
   def probeIndexCappedManaged(spark: SparkSession, path: String,
       batch: DataFrame, n: Int = 3, numHashes: Int = 32,
       rowsPerBand: Int = 2, threshold: Double = 0.5, nBuckets: Int = 16,
-      nDocBuckets: Int = 16, maxBucket: Int = 64): ProbeHandle = {
+      nDocBuckets: Int = 16, maxBucket: Int = 64): ProbeHandle =
+    managedProbe(spark, path, batch, n, numHashes, rowsPerBand, threshold,
+      nBuckets, nDocBuckets, Some(maxBucket))
+
+  private def managedProbe(spark: SparkSession, path: String,
+      batch: DataFrame, n: Int, numHashes: Int, rowsPerBand: Int,
+      threshold: Double, nBuckets: Int, nDocBuckets: Int,
+      maxBucket: Option[Int]): ProbeHandle = {
     requireConfig(spark, path, n, numHashes, rowsPerBand, nBuckets,
       nDocBuckets)
     val bsg = Dedup.shingleSets(batch, n).cache()
-    val (plan, cand) = probeCore(spark, path, bsg,
-      numHashes, rowsPerBand, threshold, nBuckets, nDocBuckets,
-      Some(maxBucket))
+    val (plan, cand) = probeCore(spark, path, bsg, numHashes, rowsPerBand,
+      threshold, nBuckets, nDocBuckets, maxBucket)
     new ProbeHandle(plan, Seq(bsg, cand))
   }
 
-  /** The probe over a precomputed (cached) shingle frame — shared by
-    * [[probeIndex]] and [[ingestBatch]] so the ingest loop pays the
-    * shingle/signature pass once. Returns (pairs plan, pinned candidate
-    * cache): the plan reads bsg and cand lazily, so the CALLER decides
-    * when cand can be released — ingestBatch unpersists it right after
-    * checkpointing the pairs; a bare probeIndex deliberately leaves it
-    * pinned so the pruned-scan plan stays inspectable/composable. */
+  /** The probe over a cached shingle frame, shared by the probes and
+    * [[ingestBatch]]. Returns (pairs plan, pinned candidate cache): the
+    * plan reads bsg and cand lazily, so the CALLER releases cand —
+    * ingestBatch right after checkpointing the pairs. */
   private def probeCore(spark: SparkSession, path: String, bsg: DataFrame,
       numHashes: Int, rowsPerBand: Int, threshold: Double,
       nBuckets: Int, nDocBuckets: Int,
       maxBucket: Option[Int] = None,
       precomputedBands: Option[DataFrame] = None,
       precomputedHit: Option[Array[Long]] = None): (DataFrame, DataFrame) = {
-    // precomputedBands (r13): ingestBatch shares ONE cached fingerprinted
-    // band frame between this probe and its upsert — the probe's view is
-    // a projection of it (identical (doc_id, band, bh) rows; fp pruned),
-    // so the batch pays the minhash/banding pass once per micro-batch.
-    // The OWNER caches and releases it; the self-built fallback below is
-    // probe-scoped and released here as before.
+    // precomputedBands: ingestBatch's cached fingerprinted band frame,
+    // shared with its upsert and released by it; the self-built fallback
+    // below is probe-scoped and released here
     val ownsBb = precomputedBands.isEmpty
     val bb = precomputedBands match {
       case Some(pre) =>
@@ -210,8 +200,7 @@ object DedupIndex {
           .cache()
     }
     // ≤ nBuckets values by construction; ingestBatch precomputes this set
-    // inside its fused batch-stats job (one driver action per micro-batch
-    // instead of three — r13, guide §1.2/§2.6)
+    // in its one batch-stats job
     val hit = precomputedHit.getOrElse(
       bb.select(bucketOf(col("bh"), nBuckets).as("wb")).distinct()
         .collect().map(_.getLong(0)))
@@ -221,29 +210,20 @@ object DedupIndex {
     val cbAll = spark.read.parquet(path + "/bands")
       .filter(col("wb").isin(hit: _*))
     // capped: [[Dedup.incrementalDupPairsCapped]]'s corpus-side cap served
-    // from the index — a batch doc landing in a boilerplate bucket is
-    // bounded to the bucket's fingerprint representatives instead of
-    // fanning out to every stored copy (output IDENTICAL when nothing is
-    // hot — the q177 oracle gate)
-    val capped = maxBucket.map(Dedup.cappedBatchCandidates(
+    // from the index (IDENTICAL output when nothing is hot — the q177
+    // oracle gate); the collect below that materializes cand observes it
+    val cand = maxBucket.map(Dedup.cappedBatchCandidates(
       cbAll.select(col("doc_id"), col("fp"), col("band"), col("bh")), bb, _,
-      "lsh-cap-idx"))
-    val cand = capped.map(_._1).getOrElse(
+      "lsh-cap-idx")).getOrElse(
       cbAll.select(col("doc_id").as("da"), col("band"), col("bh"))
         .join(bb, Seq("band", "bh"))
         .select(col("da"), col("db")).distinct()).cache()
-    // ≤ nDocBuckets values by construction; on the capped path this
-    // candidate job also carries the margin observation
-    val dbkRows = cand.select(bucketOf(col("da"), nDocBuckets).as("dbk"))
-      .distinct()
-    val dHit = capped.map(_._2.observedOn(dbkRows)).getOrElse(dbkRows)
-      .collect().map(_.getLong(0))
-    // cand is fully materialized by the collect above; bb and the capped
-    // branch's counted frame are dead now — release them so per-batch
-    // probes don't accumulate pinned caches (a shared precomputed band
-    // frame belongs to the caller, who releases it after its upsert reuse)
+    // ≤ nDocBuckets values by construction
+    val dHit = cand.select(bucketOf(col("da"), nDocBuckets).as("dbk"))
+      .distinct().collect().map(_.getLong(0))
+    // cand is materialized by the collect above, so bb is dead: release it
+    // unless the caller owns it (per-batch probes must not accumulate caches)
     if (ownsBb) bb.unpersist()
-    capped.foreach(_._2.counted.unpersist())
     val csg = spark.read.parquet(path + "/shingles")
       .filter(col("dbk").isin(dHit: _*))
       .select(col("doc_id").as("da"), col("sg").as("sga"))
@@ -258,16 +238,14 @@ object DedupIndex {
   }
 
   /** The full ingest step a streaming crawl loop runs per batch: PROBE the
-    * arriving docs against the index, then FOLD them in — one
-    * shingle/signature pass serves both halves (probeIndex followed by
-    * upsertSignatureIndex would pay it twice). Returns the verified pairs
-    * against the PRE-upsert index, checkpointed before the upsert mutates
-    * the partitions the probe plan reads. First batch on an empty index
+    * arriving docs against the index, then FOLD them in, with one
+    * shingle/signature pass for both. Returns the verified pairs against
+    * the PRE-upsert index, checkpointed before the upsert mutates the
+    * partitions the probe reads; the first batch on an empty index
     * bulk-builds and returns no pairs. The probe runs hot-bucket-CAPPED
-    * (`maxBucket`, default 64): a long-running ingest is exactly where a
-    * boilerplate cluster accumulates, and the capped probe bounds the
-    * per-batch fan-out while preserving each batch doc's dup verdict
-    * (identical output while no bucket is hot — the q145 oracle). */
+    * (`maxBucket`): a long-running ingest is where boilerplate clusters
+    * accumulate (identical output while no bucket is hot — the q145
+    * oracle). */
   def ingestBatch(spark: SparkSession, path: String, batch: DataFrame,
       n: Int = 3, numHashes: Int = 32, rowsPerBand: Int = 2,
       threshold: Double = 0.5, nBuckets: Int = 16,
@@ -279,28 +257,17 @@ object DedupIndex {
         nBuckets, nDocBuckets)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("jr",
-            org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.StructField("da",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("db",
-            org.apache.spark.sql.types.LongType))))
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "jr double, da bigint, db bigint"))
     }
     val bsg = Dedup.shingleSets(batch, n).cache()
-    // ONE minhash/banding pass per micro-batch (r13): the fingerprinted
-    // band rows serve both the probe (projected to (db, band, bh)) and
-    // the upsert's newBands — the r12 shape recomputed the signatures for
-    // the upsert after the probe had already banded the same batch
+    // ONE minhash/banding pass per micro-batch: the fingerprinted band
+    // rows serve both the probe and the upsert
     val bandsFp = bands(bsg, numHashes, rowsPerBand).cache()
     try {
-      // ONE batch-stats job per micro-batch (r13, guide §1.2/§2.6): the
-      // duplicate-id validation + doc-bucket collect the upsert paid and
-      // the band-bucket collect the probe paid were three separate driver
-      // actions over the same two cached batch frames — folded into a
-      // single union action that materializes both caches. Validation now
-      // rejects a duplicate batch BEFORE any probe work or index read
-      // (strictly earlier than the r12 shape, same exception contract).
+      // ONE batch-stats job per micro-batch materializes both caches:
+      // duplicate-id validation (before any probe work or index read), the
+      // upsert's doc buckets and the probe's band buckets
       val stats = bsg.agg(lit(0).as("tag"), count(lit(1)).as("n"),
           countDistinct(col("doc_id")).as("nd"),
           collect_set(bucketOf(col("doc_id"), nDocBuckets)).as("bks"))

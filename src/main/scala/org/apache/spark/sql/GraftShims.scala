@@ -1,9 +1,12 @@
 package org.apache.spark.sql
 
 import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+import org.apache.spark.storage.StorageLevel
 
 /** Minimal package-placed shim: Spark 4 made Column↔Expression conversion
   * private[sql] (classic.ExpressionUtils), and third-party expression
@@ -33,4 +36,18 @@ object GraftShims {
   /** The QueryExecution Spark attaches to an execution's end event (null
     * when the event was not posted by SQLExecution). */
   def queryExecution(e: SparkListenerSQLExecutionEnd): QueryExecution = e.qe
+
+  /** `df`'s rows as a leaf plan over its executed RDD, persisted on first
+    * use: plans built on the result do not embed `df`'s plan (the cut
+    * `Dataset.checkpoint` makes, without its SQL execution), and a lost
+    * block recomputes from the RDD lineage. `df`'s shuffle stages run here,
+    * as AQE plans its final stage after them. The caller unpersists the
+    * returned RDD. */
+  def persistedLeaf(df: Dataset[Row]): (Dataset[Row], RDD[InternalRow]) = {
+    val d = df.asInstanceOf[classic.Dataset[Row]]
+    val rdd = d.queryExecution.toRdd.map(_.copy())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    (classic.Dataset.ofRows(d.sparkSession,
+      LogicalRDD.fromDataset(rdd, d, d.isStreaming)), rdd)
+  }
 }

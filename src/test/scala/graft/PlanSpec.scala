@@ -339,13 +339,15 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("capped LSH candidate gen pays the band-table exchange ONCE") {
-    // the single-exchange claim behind the q174 ×10 win (join-back 9.5 s →
-    // window 6.4 s): bucket populations come from a window over the
-    // (band, bh) partitioning, and every downstream branch reuses that one
-    // exchange. Pin it by metric: exactly ONE shuffle carries the full
-    // band-table volume (nDocs × 16 bands); the join-back shape carried it
-    // twice. A plan regression (lost reuse, reintroduced join-back) shows
-    // up as a second band-sized exchange and fails here.
+    // the cap is one per-bucket kernel over ONE (band, bh) exchange. Pin it
+    // by metric: exactly ONE shuffle reads band rows, and it carries the
+    // band table (nDocs × 16 bands) once; a join-back population count
+    // carried it twice. A plan regression (a second kernel pass, a
+    // reintroduced join-back) shows up as a second band exchange and fails
+    // here. The candidate exchange is not one: on this near-clique corpus
+    // it legitimately carries more pairs than there are band rows. And the
+    // cap caches nothing: its plan over uncached signatures holds no
+    // in-memory relation, so no exchange hides inside a cached frame.
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -360,21 +362,28 @@ class PlanSpec extends AnyFunSuite {
     val docs = (0 until nDocs).map(i =>
       (i.toLong, s"alpha bravo charlie delta echo foxtrot golf hotel india d$i"))
       .toDF("doc_id", "text")
-    val sig = graft.operators.Dedup.minhashSignatures(
-      graft.operators.Dedup.shingleSets(docs, 3), 32).cache()
+    val uncached = graft.operators.Dedup.minhashSignatures(
+      graft.operators.Dedup.shingleSets(docs, 3), 32)
+    val capPlan = graft.operators.Dedup.lshCandidatesCapped(uncached, 32, 2)
+      .queryExecution.withCachedData
+    assert(capPlan.collect { case m: org.apache.spark.sql.execution.columnar
+      .InMemoryRelation => m }.isEmpty, capPlan.treeString)
+    val sig = uncached.cache()
     try {
       val cands = graft.operators.Dedup.lshCandidatesCapped(sig, 32, 2)
       cands.collect()
       val bandRows = nDocs.toLong * 16
       val written = nodes(cands.queryExecution.executedPlan).collect {
         case s: ShuffleExchangeLike =>
-          s.metrics.get("shuffleRecordsWritten").map(_.value)
-            .getOrElse(fail(s"shuffleRecordsWritten metric missing on $s"))
+          val in = s.child.output.map(_.name).toSet
+          (in("band") && in("bh"), s.metrics.get("shuffleRecordsWritten")
+            .map(_.value)
+            .getOrElse(fail(s"shuffleRecordsWritten metric missing on $s")))
       }
-      val bandSized = written.count(_ >= bandRows)
-      assert(bandSized == 1,
-        s"expected exactly one band-table-sized exchange (>= $bandRows " +
-          s"records), got $bandSized of $written")
+      val bandSized = written.collect { case (true, n) => n }
+      assert(bandSized == Seq(bandRows),
+        s"expected exactly one band-table exchange of $bandRows records, " +
+          s"got $bandSized of $written")
     } finally sig.unpersist()
     // and with a planted hot cluster (100 copies, cap 8): NO exchange may
     // carry the quadratic pair volume the cap exists to prevent — the

@@ -39,20 +39,21 @@ class ProbeHandleSpec extends AnyFunSuite {
   test("capped pair builders: managed variants release every pinned cache; bare output identical") {
     import graft.operators.Dedup
     val before = pinnedCount
-    // self-join family: two pinned frames (shingles, band window) — the
-    // facade default for nearPairs
+    // self-join family: one pinned frame (the shingles) — the facade
+    // default for nearPairs
     val h = Dedup.minhashDupPairsCappedManaged(docs)
     val pairs = h.result.collect().map(_.toSeq).toSet
-    assert(pinnedCount > before, "capped builder caches never materialized")
+    assert(pinnedCount - before == 1, "self-join path pins exactly the shingles")
     h.close()
     assert(pinnedCount == before,
       "capped self-join caches still pinned after close()")
-    // incremental family: three pinned frames
+    // incremental family: two pinned frames (corpus and batch shingles)
     val h2 = Dedup.incrementalDupPairsCappedManaged(
       docs.filter(col("doc_id") % 2 === 0),
       docs.filter(col("doc_id") % 2 === 1))
     h2.result.count()
-    assert(pinnedCount > before)
+    assert(pinnedCount - before == 2,
+      "incremental path pins exactly the two shingle frames")
     h2.close()
     assert(pinnedCount == before,
       "capped incremental caches still pinned after close()")
@@ -75,5 +76,17 @@ class ProbeHandleSpec extends AnyFunSuite {
     handle.close()
     assert(pinnedCount == before,
       "probe caches still pinned after close()")
+  }
+
+  test("dupComponents releases its edge cache and every round's labels") {
+    import spark.implicits._
+    val before = pinnedCount
+    // a 3-clique: one component, survivor 1
+    val comps = graft.operators.Dedup.dupComponents(
+      Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("da", "db"))
+    assert(pinnedCount == before, "dupComponents left caches pinned")
+    assert(comps.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((1L, 1L), (2L, 1L), (3L, 1L)))
+    assert(pinnedCount == before, "reading the components pinned a cache")
   }
 }

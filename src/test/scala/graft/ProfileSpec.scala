@@ -61,6 +61,21 @@ class ProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(counts.distinct.size == 1, counts)
   }
 
+  test("codegen counters: a new plan shape compiles, its immediate re-run compiles nothing") {
+    import org.apache.spark.sql.functions.{col, lit}
+    // a 37-term projection no other test builds, so its first run compiles
+    def unit() = spark.range(0, 100, 1, 2)
+      .select((1 to 37).foldLeft(col("id"))((c, i) => (c + lit(i)) % lit(97)).as("x"))
+      .collect()
+    val (_, cold) = prof("cold")(unit())
+    val (_, warm) = prof("warm")(unit())
+    assert(cold.codegen.classes > 0 && cold.codegen.sourceBytes != 0, cold.json)
+    assert(warm.codegen.classes == 0, warm.json)
+    assert(Set(0L, -1L)(warm.codegen.sourceBytes) &&
+      Set(0L, -1L)(warm.codegen.compileMs), warm.json)
+    assert(warm.json.contains(""""codegen_classes":0,"""), warm.json)
+  }
+
   test("the q160 FTS drain's SQL executions include its stream thread's") {
     // 24 = StreamDrainBench's count for this drain at sf0.001 before the
     // collector replaced it; the micro-batches run on the stream's own

@@ -131,6 +131,30 @@ class QueriesSpec extends AnyFunSuite {
     assert(groups == Set((1L, 4L, "1,2,3,4"), (10L, 2L, "10,11")))
   }
 
+  test("dup components: a 9-vertex path converges at the default maxIters with a constant-size plan") {
+    import spark.implicits._
+    // diameter 8 needs 9 rounds; a plan that embedded every earlier round
+    // would double per round (3,059 logical nodes by round 7)
+    val pairs = (0L until 8L).map(i => (i, i + 1)).toDF("da", "db")
+    val t0 = System.nanoTime()
+    val comp = graft.operators.Dedup.dupComponents(pairs)
+    val rows = comp.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(rows == (0L to 8L).map(_ -> 0L).toMap)
+    assert(comp.queryExecution.analyzed.collect { case p => p }.size <= 2,
+      comp.queryExecution.analyzed.treeString)
+    assert((System.nanoTime() - t0) / 1e9 < 120)
+  }
+
+  test("dup components fail loudly when maxIters is below the path's needs") {
+    import spark.implicits._
+    // 0-1-2-3 has diameter 3: two rounds leave vertex 3 labeled 1
+    val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("da", "db")
+    val e = intercept[IllegalArgumentException](
+      graft.operators.Dedup.dupComponents(pairs, maxIters = 2))
+    assert(e.getMessage.contains("maxIters = 2") &&
+      e.getMessage.contains("diameter"), e.getMessage)
+  }
+
   test("persisted dedup index: pruned probe equals the inline incremental check") {
     import org.apache.spark.sql.functions.col
     val all = Tables.documents(spark, TestSpark.sf0001)
