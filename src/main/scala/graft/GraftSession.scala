@@ -31,4 +31,14 @@ object GraftSession {
       // the big exchange (plans.DimsFirstJoinReorder); false disables
       .config("spark.graft.joinReorder.dimsFirst", "true")
       .config("spark.ui.enabled", "false")
+      // static: the generated-class cache. One dedup ingestBatch compiles
+      // about 77 classes, so the default 100 entries evicted a streaming
+      // drain's classes between micro-batches and each batch recompiled
+      // them
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // above the largest bucket geometry the indexes write (64 term
+      // buckets, IVF lists or LSH sign buckets by default): a table with
+      // more partition directories than this is listed by a Spark job of
+      // one task per directory, which cost 0.3 s per index read
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
 }

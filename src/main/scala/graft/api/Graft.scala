@@ -91,8 +91,8 @@ object Graft {
 
   /** Persisted index builders/maintainers (K5, X-families): every family
     * is bucketed-partition parquet written through one protocol
-    * ([[BucketedIndex]]: config pins, staged-overwrite crash ordering, a
-    * concurrent-writer version guard). */
+    * ([[BucketedIndex]]: config pins, merge-on-read upserts published by
+    * a commit marker, exclusive version claims). */
   object index {
     /** Sign-bit LSH vector index — [[LshIndex.writeLshIndex]] /
       * [[LshIndex.upsertLshIndex]]. */

@@ -1,192 +1,207 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The write protocol of every persisted index family (LSH, multi-table
-  * LSH, IVF, IVF-PQ, FTS postings, MinHash signatures) — Chroma's
-  * delete-then-add upsert (reference: scripts/scrape_store_embed.py:79-86)
-  * over two partitioned parquet tables:
+/** The write protocol and the one reader of every persisted index family
+  * (LSH, multi-table LSH, IVF, IVF-PQ, FTS postings, MinHash signatures) —
+  * Chroma's delete-then-add upsert (reference:
+  * scripts/scrape_store_embed.py:79-86) as merge-on-read over partitioned
+  * parquet, the transaction-log idea of Delta Lake (Armbrust et al.,
+  * VLDB 2020) with no library:
   *
   *   - the MAIN table, partitioned by routing buckets (`mainParts`: LSH
   *     sign bits, IVF lists, term buckets, band buckets), which probes read
-  *     with partition pruning;
-  *   - the SIDE table, partitioned by an id bucket (`sideBucket`), which
-  *     answers "which main partitions does this id occupy now?" — a
-  *     re-crawled row's OLD buckets are not recomputable from its new
-  *     content, so an upsert finds them here with a pruned point read.
+  *     with partition pruning. Every row carries the version `_v` of the
+  *     write that added it;
+  *   - the TOMBSTONES (`<meta>/tombstones`): (id, `_v`) for every id an
+  *     upsert wrote, so the id's older rows — wherever they are routed —
+  *     stop being served;
+  *   - the commit log (`<meta>/claims/<v>`, `<meta>/commits/<v>`, see
+  *     [[PartitionedIndexOps.claimVersion]]);
+  *   - optionally an id-keyed DATA table (`data`: IVF-PQ's refine vectors,
+  *     dedup's shingles), partitioned by an id bucket and kept at one row
+  *     per id by copy-on-write: its readers point-look-up by id and read
+  *     it raw.
   *
   * A family supplies only data: its table paths and partition columns
-  * (this class), and per call a [[BucketedIndex.Write]] — the config map,
-  * the batch's main/side rows, the batch's id-bucket expression, and how
-  * old main partition keys come from side rows.
+  * (this class), and per call a [[BucketedIndex.Write]].
+  *
+  * ==Visibility ([[read]])==
+  * A reader resolves the committed versions once, then lists the table:
+  * it serves the rows of committed versions whose id has no newer
+  * committed tombstone (a broadcast anti-join; the tombstones are one row
+  * per upserted id). Rows of versions committed after that resolution are
+  * invisible to it, so a probe that overlaps an upsert sees exactly the
+  * pre-batch or the post-batch index. Appends never delete a file, so a
+  * running probe never loses one.
   *
   * ==Bulk build ([[build]])==
-  * validate unique ids → claim the writer version → the family's write
-  * order, with [[PartitionedIndexOps.requireVersion]] right before the
-  * LAST write, which is the build's commit:
-  *   - pin-last families (the vector indexes): delete the stale config
-  *     pin, main, side, pin. A rebuild under retrained centroids or
-  *     planes that crashes mid-write must not leave the old pin beside
-  *     half-new data; it leaves data without a pin, which upserts refuse
-  *     fast (rebuild required) — a bulk write is not keyed by batch, so
-  *     it cannot heal the way the merge can.
-  *   - `configFirst` families (FTS, dedup): pin first, so every retry or
-  *     later caller validates against the true geometry; then main, side
-  *     (FTS — a crash between them leaves a main table without its side
-  *     table, which the next upsert rebuilds via `sideFromMain`), or side,
-  *     main (dedup, `sideFirst` — the empty-index check keys on the main
-  *     table, so a crash mid-build routes the retry to a clean rebuild).
+  * validate unique ids → claim version v → the pin (first for
+  * `configFirst` families, FTS and dedup; deleted here and written after
+  * the data for the vector indexes, so a rebuild under retrained
+  * centroids or planes that crashes mid-write leaves data without a pin,
+  * which probes and upserts refuse) → overwrite the data table and the
+  * main table (rows tagged v) → drop the tombstones → commit v.
   *
   * ==Upsert ([[upsert]])==
   *   1. an index without main partitions routes to the bulk build;
-  *   2. the config pin must exist and match;
-  *   3. ONE job validates unique batch ids and collects the side buckets
-  *      the batch hits (skipped when the caller already did both);
-  *   4. claim the writer version — after validation, so a rejected batch
-  *      leaves the version pin and every table untouched;
-  *   5. read the side table pruned to the hit buckets (cached);
-  *   6. collect the affected main partitions: the batch's ∪ the old ones
-  *      its ids occupy (bounded by the bucket geometry);
-  *   7. anti-join the batch ids out of those partitions, union in the
-  *      batch's rows;
-  *   8. [[PartitionedIndexOps.overwriteAffected]]: staged dynamic
-  *      overwrite, then delete the partitions the batch vacated;
-  *   9. [[PartitionedIndexOps.requireVersion]];
-  *  10. rewrite the side table's hit buckets (they never vacate: every
-  *      removed id is re-inserted);
-  *  11. release the caches.
+  *   2. the config pin must exist and match (layout key included);
+  *   3. ONE job validates unique batch ids (and collects the data-table
+  *      buckets the batch hits, unless the caller did); an empty batch
+  *      stops here;
+  *   4. claim version v;
+  *   5. append the batch's main rows, tagged v, to their partitions;
+  *   6. append the batch's ids as tombstones tagged v;
+  *   7. rewrite the data table's hit buckets: old rows minus the batch's
+  *      ids, plus the batch's rows (a dynamic overwrite — re-crawled ids
+  *      keep their bucket, so a hit bucket never vacates);
+  *   8. commit v ([[PartitionedIndexOps.commitVersion]]).
+  * No step reads the main table, and no step rewrites a main partition.
   *
-  * Crash and retry contract: a crash anywhere in 8–10 leaves the side
-  * table at its pre-batch state, still naming each re-crawled id's true
-  * old partitions, so re-running the SAME batch (foreachBatch retry
-  * semantics) re-covers old ∪ new partitions and converges; the anti-join
-  * + union is idempotent. The crash point `<name>.upsert.between-writes`
-  * (after 8) lets a process-level test kill a real driver there. A writer
-  * overtaken by a concurrent claim aborts at 9 before its side-table
-  * commit; its retry after the winner completes converges the same way.
+  * Crash and retry contract: a rejected batch fails at 3, before any
+  * write. An attempt that dies anywhere before 8 leaves only files of an
+  * uncommitted version, which no reader serves (the data table excepted:
+  * from 7 on it holds the batch's rows); re-running the SAME batch
+  * (foreachBatch retry semantics) claims a new version, rewrites the same
+  * data buckets to the same content, and converges. An attempt overtaken
+  * by a newer commit aborts at 8 (or before 7) and converges the same way.
+  * Crash points `<name>.upsert.{claimed, between-writes, tombstoned,
+  * staged}` follow steps 4, 5, 6 and 7, so tests can kill a real driver
+  * at each.
+  *
+  * ==Compaction==
+  * [[PartitionedIndexOps.compact]] / `compactMulti` fold a main table's
+  * fragmented partitions to one file each, keeping exactly the rows this
+  * reader serves, and drop the tombstones once every partition is folded.
   */
-private[operators] final case class BucketedIndex(
+private[graft] final case class BucketedIndex(
     name: String,
     path: String,
     main: String,
     mainParts: Seq[String],
-    side: String,
-    sideBucket: String,
     meta: String,
     pinFile: String,
     builder: String,
     pinned: String,
+    data: Option[(String, String)] = None,
     configFirst: Boolean = false,
-    sideFirst: Boolean = false,
     pinDefaults: Map[String, String] = Map.empty) {
-  import BucketedIndex.Write
+  import BucketedIndex._
 
   private def pinPath = new Path(s"$meta/$pinFile")
-  private def versionPath = new Path(s"$meta/version")
+  private def metaPath = new Path(meta)
 
   private def fs(spark: SparkSession): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def hasData(spark: SparkSession): Boolean =
-    PartitionedIndexOps.hasPartitions(fs(spark), main, mainParts.head)
+  /** Does the main table hold at least one partition? A bare pre-created
+    * (or fully emptied) directory routes callers to the bulk build. */
+  def hasData(spark: SparkSession): Boolean = {
+    val fs = this.fs(spark)
+    val p = new Path(main)
+    fs.exists(p) && fs.listStatus(p)
+      .exists(_.getPath.getName.startsWith(mainParts.head + "="))
+  }
 
   private def storedConfig(spark: SparkSession): Option[Map[String, String]] =
     PartitionedIndexOps.readConfigPin(fs(spark), pinPath)
 
   /** The stored pin of an index a probe is about to read: absent means
-    * never built or a crashed build. */
+    * never built or a crashed build; a pin without this layout's key was
+    * written by the copy-on-write protocol and must be rebuilt. */
   def requireBuilt(spark: SparkSession): Map[String, String] = {
     val stored = storedConfig(spark)
     require(stored.isDefined,
       s"$name index at $path has no config pin (never built, or a crashed " +
         s"build) — build it with $builder before probing")
+    requireConfig(spark, Map.empty)
     stored.get
   }
 
-  /** Tolerant per-key check for probes: every expected key must match a
-    * present pin ([[PartitionedIndexOps.requireConfigPin]]). */
+  /** Tolerant per-key check for probes: every expected key, and the
+    * layout key, must match a present pin
+    * ([[PartitionedIndexOps.requireConfigPin]]). */
   def requireConfig(spark: SparkSession, expected: Map[String, String]): Unit =
-    PartitionedIndexOps.requireConfigPin(fs(spark), pinPath, expected,
+    PartitionedIndexOps.requireConfigPin(fs(spark), pinPath, expected ++ Layout,
       s"$name index at $path")
+
+  /** The main table's served rows (the class doc's visibility rule). */
+  def read(spark: SparkSession): DataFrame = committed(spark, main, meta)
+
+  /** The id-keyed data table, one row per id. */
+  def readData(spark: SparkSession): DataFrame =
+    committed(spark, data.get._1, meta)
 
   def build(w: Write): Unit = {
     val spark = w.main.sparkSession
     val fs = this.fs(spark)
     try {
       w.keyed.foreach(PartitionedIndexOps.requireUniqueIds(_, w.idCol))
-      val claimed = PartitionedIndexOps.claimVersion(fs, versionPath)
-      val pin = () => PartitionedIndexOps.writeConfigPin(fs, pinPath, w.config)
-      val tables = Seq(() => overwrite(w.main, main, mainParts),
-        () => overwrite(w.side, side, Seq(sideBucket)))
-      if (!configFirst) fs.delete(pinPath, false)
-      val writes =
-        if (configFirst) pin +: (if (sideFirst) tables.reverse else tables)
-        else tables :+ pin
-      writes.init.foreach(_())
-      PartitionedIndexOps.requireVersion(fs, versionPath, claimed,
+      val v = PartitionedIndexOps.claimVersion(fs, metaPath)
+      val pin = () =>
+        PartitionedIndexOps.writeConfigPin(fs, pinPath, w.config ++ Layout)
+      if (configFirst) pin() else fs.delete(pinPath, false)
+      for ((dir, bucket) <- data; rows <- w.data)
+        rows.write.mode(SaveMode.Overwrite).partitionBy(bucket).parquet(dir)
+      w.main.withColumn(Version, lit(v)).write.mode(SaveMode.Overwrite)
+        .partitionBy(mainParts: _*).parquet(main)
+      // older than v, they drop no row of this build; they go only once
+      // the rows they retired are gone
+      fs.delete(tombstonePath(meta), true)
+      if (!configFirst) pin()
+      PartitionedIndexOps.commitVersion(fs, metaPath, v,
         s"$name index bulk build at $path")
-      writes.last()
     } finally w.owned.foreach(_.unpersist())
   }
 
-  /** Fold `w`'s batch in. `sideHits`: the batch's side buckets when the
-    * caller already validated its ids and collected them in a fused job of
-    * its own (dedup's ingestBatch). */
-  def upsert(w: Write, sideHits: Option[Seq[Long]] = None): Unit = {
+  /** Fold `w`'s batch in. `dataHits`: the batch's data-table buckets when
+    * the caller already validated its ids and collected them in a fused
+    * job of its own (dedup's ingestBatch). */
+  def upsert(w: Write, dataHits: Option[Seq[Long]] = None): Unit = {
     val spark = w.main.sparkSession
     val fs = this.fs(spark)
     if (!hasData(spark)) { build(w); return }
-    var pruned: Option[DataFrame] = None
     try {
       requirePin(spark, w.config)
-      val hits = sideHits.getOrElse(
+      val keyed = w.keyed.get
+      val hits = data.map { case (_, bucket) => dataHits.getOrElse(
         PartitionedIndexOps.requireUniqueIdsCollectingBuckets(
-          w.keyed.get, w.idCol, w.sideKey))
-      val claimed = PartitionedIndexOps.claimVersion(fs, versionPath)
-      val batchIds = w.side.select(col(w.idCol)).distinct()
-      // a side table lost to an interrupted bulk build (FTS) re-derives
-      // from the main table: the old rows here, all of it after the
-      // rewrite below (a fresh read — the write invalidates caches over
-      // the main table)
-      val rebuild = w.sideFromMain.filter(_ => !fs.exists(new Path(side)))
-      val old = (rebuild match {
-        case Some(derive) => derive(spark.read.parquet(main))
-        case None => spark.read.parquet(side)
-          .filter(col(sideBucket).isInCollection(hits))
-      }).cache()
-      pruned = Some(old)
-      val keys = mainParts.map(col)
-      // bounded by the family's bucket geometry
-      val affected = w.main.select(keys: _*)
-        .union(w.oldKeys(old.join(batchIds, Seq(w.idCol), "left_semi"))
-          .select(keys: _*))
-        .distinct().collect().map(_.toSeq: Seq[Any]).toSet
-      val merged = spark.read.parquet(main)
-        .filter(keyFilter(affected))
-        .join(batchIds, Seq(w.idCol), "left_anti") // drop re-crawled rows
-        .unionByName(w.main)
-      PartitionedIndexOps.overwriteAffected(merged, main, mainParts,
-        affected, fs)
-      graft.streaming.CrashPoints.reached(s"$name.upsert.between-writes")
-      val sideMerged = rebuild match {
-        case Some(derive) => derive(spark.read.parquet(main))
-        case None => old.join(batchIds, Seq(w.idCol), "left_anti")
-          .unionByName(w.side)
+          w.data.get, w.idCol, col(bucket))) }
+      val empty = hits.fold(
+        PartitionedIndexOps.requireUniqueIds(keyed, w.idCol) == 0)(_.isEmpty)
+      if (!empty) {
+        val what = s"$name index upsert at $path"
+        def step(s: String) = graft.streaming.CrashPoints
+          .reached(s"$name.upsert.$s")
+        val v = PartitionedIndexOps.claimVersion(fs, metaPath)
+        step("claimed")
+        w.main.withColumn(Version, lit(v)).write.mode(SaveMode.Append)
+          .partitionBy(mainParts: _*).parquet(main)
+        step("between-writes")
+        keyed.select(col(w.idCol), lit(v).as(Version)).coalesce(1)
+          .write.mode(SaveMode.Append).parquet(tombstonePath(meta).toString)
+        step("tombstoned")
+        for ((dir, bucket) <- data; rows <- w.data; hit <- hits) {
+          PartitionedIndexOps.requireLatest(fs, metaPath, v, what)
+          readData(spark).filter(col(bucket).isInCollection(hit))
+            .join(keyed.select(col(w.idCol)), Seq(w.idCol), "left_anti")
+            .unionByName(rows)
+            .write.mode(SaveMode.Overwrite)
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(bucket).parquet(dir)
+        }
+        step("staged")
+        PartitionedIndexOps.commitVersion(fs, metaPath, v, what)
       }
-      PartitionedIndexOps.requireVersion(fs, versionPath, claimed,
-        s"$name index upsert at $path")
-      PartitionedIndexOps.pinWrite(sideMerged, side, Seq(sideBucket))
-    } finally {
-      pruned.foreach(_.unpersist())
-      w.owned.foreach(_.unpersist())
-    }
+    } finally w.owned.foreach(_.unpersist())
   }
 
   /** Data without a pin is a crashed build; a pin that differs in any key
     * (absent keys read as `pinDefaults`) would route the wrong buckets or
-    * write a ragged schema. */
+    * write a ragged schema, and one without the layout key was written by
+    * the copy-on-write protocol, whose tables this reader cannot serve. */
   private def requirePin(spark: SparkSession,
       expected: Map[String, String]): Unit = {
     val stored = storedConfig(spark)
@@ -194,60 +209,81 @@ private[operators] final case class BucketedIndex(
       s"$name index at $path has data but no config pin (crashed build?) " +
         s"— rebuild it with $builder before upserting")
     val got = pinDefaults ++ stored.get
+    val want = expected ++ Layout
     def show(v: Option[String]) = v.fold("<absent>")(s =>
       if (s.length > 40) s"${s.take(16)}…(${s.length} chars)" else s)
-    (expected.keySet ++ got.keySet).toSeq.sorted.foreach { k =>
-      require(got.get(k) == expected.get(k),
+    (want.keySet ++ got.keySet).toSeq.sorted.foreach { k =>
+      require(got.get(k) == want.get(k),
         s"$name index at $path was built under different $pinned: " +
-          s"$k=${show(got.get(k))} on disk, $k=${show(expected.get(k))} " +
+          s"$k=${show(got.get(k))} on disk, $k=${show(want.get(k))} " +
           "requested — an upsert would route the wrong buckets or write a " +
           s"ragged schema (rebuild it with $builder)")
     }
   }
-
-  /** Partition filter over the affected key set: one IN list, or for a
-    * two-level layout an OR of per-outer-value IN lists (an empty set
-    * selects nothing). */
-  private def keyFilter(keys: Set[Seq[Any]]): Column = mainParts match {
-    case Seq(p) => col(p).isInCollection(keys.map(_.head))
-    case Seq(outer, inner) =>
-      keys.groupBy(_.head).map { case (o, ks) =>
-        col(outer) === lit(o) && col(inner).isInCollection(ks.map(_(1)))
-      }.reduceOption(_ || _).getOrElse(lit(false))
-  }
-
-  private def overwrite(df: DataFrame, dir: String,
-      parts: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(parts: _*).parquet(dir)
 }
 
-private[operators] object BucketedIndex {
+private[graft] object BucketedIndex {
+
+  /** The row-version column of every main table. */
+  val Version = "_v"
+
+  /** The pin key of the on-disk protocol. An index written before
+    * merge-on-read has none, and every pin check fails on it. */
+  val Layout: Map[String, String] = Map("layout" -> "merge-on-read-1")
+
+  def tombstonePath(meta: String): Path = new Path(meta, "tombstones")
+
+  /** THE reader of an index table; every engine read of one goes through
+    * here. On a versioned table: the rows of the versions committed under
+    * `meta` (resolved BEFORE the table is listed), minus every row whose
+    * id has a committed tombstone of a newer version; `keepVersion` keeps
+    * `_v` for compaction. A table without `_v` (an id-keyed copy-on-write
+    * table) is served as stored. */
+  def committed(spark: SparkSession, table: String, meta: String,
+      keepVersion: Boolean = false): DataFrame = {
+    val m = new Path(meta)
+    val fs = m.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val versions = PartitionedIndexOps.committedVersions(fs, m)
+    val rows = spark.read.parquet(table)
+    if (!rows.columns.contains(Version)) rows
+    else {
+      val live = rows.filter(col(Version).isInCollection(versions))
+      val tp = tombstonePath(meta)
+      val served =
+        if (!fs.exists(tp) || !fs.listStatus(tp)
+            .exists(_.getPath.getName.endsWith(".parquet"))) live
+        else {
+          val t = spark.read.parquet(tp.toString)
+          val id = t.columns.filterNot(_ == Version).head
+          val dead = t.filter(col(Version).isInCollection(versions))
+            .select(col(id).as("__tid"), col(Version).as("__tv"))
+          live.join(broadcast(dead),
+            live(id) === dead("__tid") && dead("__tv") > live(Version),
+            "left_anti")
+        }
+      if (keepVersion) served else served.drop(Version)
+    }
+  }
 
   /** One call's data.
     *
     * @param config   the pin: every parameter that changes routing or
     *                 stored bytes
-    * @param idCol    the row id column of both tables
-    * @param keyed    the batch at one row per id, validated before any
-    *                 claim (None only for a bulk build over rows that are
-    *                 not keyed by id — FTS postings — whose caller owns the
-    *                 check)
-    * @param sideKey  the side bucket of a `keyed` row
+    * @param idCol    the row id column of every table
+    * @param keyed    the batch at one row per id: validated before any
+    *                 claim, and the source of the tombstones (None only
+    *                 for a bulk build over rows that are not keyed by id —
+    *                 FTS postings — whose caller owns the check)
     * @param main     the batch's main-table rows, partition columns included
-    * @param side     the batch's side-table rows
-    * @param oldKeys  side rows → the main partition keys they occupy
-    * @param sideFromMain  rebuilds side rows from the main table when the
-    *                 side table is missing (FTS's interrupted bulk build)
+    * @param data     the batch's data-table rows (one per id, id bucket
+    *                 included): with a data table, what an upsert validates
     * @param owned    caches the call releases when it ends
     */
   final case class Write(
       config: Map[String, String],
       idCol: String,
       keyed: Option[DataFrame],
-      sideKey: Column,
       main: DataFrame,
-      side: DataFrame,
-      oldKeys: DataFrame => DataFrame,
-      sideFromMain: Option[DataFrame => DataFrame] = None,
+      data: Option[DataFrame] = None,
       owned: Seq[DataFrame] = Nil)
 }

@@ -653,7 +653,7 @@ object Curation {
     // grams sharing w1h (every w1-as-first-slot occurrence lies in
     // exactly one gram — no second corpus pass); the per-gram score is
     // precomputed on the dim; and the DIM IS MATERIALIZED
-    // (localCheckpoint, the pinWrite pattern) before scoring. The pin is
+    // (localCheckpoint) before scoring. The pin is
     // load-bearing, not a cache nicety: used inline as a broadcast side,
     // the model subtree loses exchange reuse inside the broadcast query
     // stage and re-runs its corpus pass (probe-isolated: scoring join vs

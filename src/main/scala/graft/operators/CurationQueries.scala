@@ -234,7 +234,7 @@ object CurationQueries {
 
   /** q143: PERSISTED dedup index round trip — q95's incremental check with
     * the corpus side stored ([[DedupIndex]]: band table partitioned by band
-    * bucket, shingle side table by doc bucket) and the batch answered by a
+    * bucket, shingle table by doc bucket) and the batch answered by a
     * PRUNED probe (only the hit band buckets and the candidate docs'
     * shingle buckets are read). Same oracle as q95 — the brute cross-split
     * scan — proving the index-served path loses nothing vs the inline

@@ -91,19 +91,16 @@ object Dedup {
         col("bb.band").as("band"), col("bb.bh").as("bh"))
 
   /** LSH candidate pairs: split the signature into bands of `rowsPerBand`
-    * hashes, bucket-join on (band, band-hash). */
-  def lshCandidates(sig: DataFrame, numHashes: Int, rowsPerBand: Int): DataFrame = {
-    val bands = signatureBands(sig, numHashes, rowsPerBand)
-    // using-columns self-join: joining by NAME on renamed frames guarantees
-    // both (band, bh) become hash-join equi keys — alias-qualified self-join
-    // conditions can degrade to residual filters over a band-only join
-    val x = bands.toDF("da", "band", "bh")
-    val y = bands.toDF("db", "band", "bh")
-    x.join(y, Seq("band", "bh"))
-      .filter(col("da") < col("db"))
-      .select(col("da"), col("db"))
+    * hashes and pair every two docs that share a (band, band-hash) bucket
+    * — [[capBuckets]]' kernel with no cap, over ONE (band, bh) exchange.
+    * A self-join of the band rows read the signature twice: Spark
+    * re-instances the second read of a cached input with new attribute
+    * ids, so its exchange could not be reused and the signature
+    * aggregate ran once per side. */
+  def lshCandidates(sig: DataFrame, numHashes: Int, rowsPerBand: Int): DataFrame =
+    capBuckets(signatureBands(sig, numHashes, rowsPerBand)
+        .withColumn("fp", lit(0L)), Int.MaxValue, admit = false, None)
       .distinct()
-  }
 
   /** Hot-bucket-capped LSH candidate pairs — [[lshCandidates]] with a
     * per-bucket population bound, the 100 TB guard against boilerplate
@@ -131,7 +128,7 @@ object Dedup {
   def lshCandidatesCapped(sig: DataFrame, numHashes: Int, rowsPerBand: Int,
       maxBucket: Int = 64): DataFrame =
     capBuckets(signatureBandsWithFp(sig, numHashes, rowsPerBand), maxBucket,
-      admit = false, "lsh-cap").distinct()
+      admit = false, Some("lsh-cap")).distinct()
 
   /** A [[capKernel]] row: a pair (da < db), an admitted member da of
     * (band, bh), or — when `hot` > 0 — one hot bucket's margin. */
@@ -146,8 +143,9 @@ object Dedup {
     * the admitted corpus members (da, band, bh) for the caller's batch
     * join.
     *
-    * The recall margin is one `Dataset.observe` on the kernel's output,
-    * named by [[graft.obs.Profile.observationName]] after `prefix`:
+    * The recall margin (when a `prefix` names it) is one
+    * `Dataset.observe` on the kernel's output, named by
+    * [[graft.obs.Profile.observationName]] after `prefix`:
     * hotBuckets/hotMembers show what the fingerprint collapse absorbed (a
     * 100-copy boilerplate cluster can bound 469 M pairs to 84 M with ZERO
     * dropped reps); cappedBuckets/droppedReps what the rep cap forwent.
@@ -159,19 +157,20 @@ object Dedup {
     * candidate, as every hot bucket does; AQE drops a stage that wrote no
     * rows, so an input with no candidate at all records no margin. */
   private[operators] def capBuckets(members: DataFrame, maxBucket: Int,
-      admit: Boolean, prefix: String): DataFrame = {
+      admit: Boolean, prefix: Option[String]): DataFrame = {
     val id = members.schema("doc_id").dataType
-    members.select(col("doc_id").cast("long").as("doc_id"), col("fp"),
-        col("band"), col("bh"))
+    val kernel = members.select(col("doc_id").cast("long").as("doc_id"),
+        col("fp"), col("band"), col("bh"))
       .repartition(col("band"), col("bh"))
       .sortWithinPartitions(col("band"), col("bh"), col("fp"), col("doc_id"))
       .mapPartitions(capKernel(maxBucket, admit))(
         org.apache.spark.sql.Encoders.product[CapRow]).toDF()
-      .observe(graft.obs.Profile.observationName(prefix),
+    prefix.fold(kernel)(p => kernel.observe(
+        graft.obs.Profile.observationName(p),
         count(when(col("hot") > 0, 1)).as("hotBuckets"),
         coalesce(sum(col("hot")), lit(0L)).as("hotMembers"),
         count(when(col("dropped") > 0, 1)).as("cappedBuckets"),
-        coalesce(sum(col("dropped")), lit(0L)).as("droppedReps"))
+        coalesce(sum(col("dropped")), lit(0L)).as("droppedReps")))
       .filter(col("hot") === 0).select(col("da").cast(id).as("da") +:
         (if (admit) Seq(col("band"), col("bh"))
           else Seq(col("db").cast(id).as("db"))): _*)
@@ -239,7 +238,7 @@ object Dedup {
       bb: DataFrame, maxBucket: Int, prefix: String): DataFrame =
     capBuckets(corpus.join(
         broadcast(bb.select(col("band"), col("bh")).distinct()),
-        Seq("band", "bh"), "left_semi"), maxBucket, admit = true, prefix)
+        Seq("band", "bh"), "left_semi"), maxBucket, admit = true, Some(prefix))
       .join(bb, Seq("band", "bh"))
       .select(col("da"), col("db")).distinct()
 

@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * every arriving batch probes them; nothing ever re-shingles the corpus
   * (the [[Fts]] persisted-index pattern applied to the dedup family).
   *
-  * Layout:
-  *   path/bands     (doc_id, fp, band, bh)  partitioned by wb  = bh mod nBuckets
-  *   path/shingles  (doc_id, sg)            partitioned by dbk = doc_id mod nDocBuckets
+  * Layout ([[BucketedIndex]]: bands merge-on-read, shingles copy-on-write):
+  *   path/bands     (doc_id, fp, band, bh, _v)  partitioned by wb  = bh mod nBuckets
+  *   path/shingles  (doc_id, sg)                partitioned by dbk = doc_id mod nDocBuckets
   *
   * `fp` is the doc's full-signature fingerprint
   * ([[Dedup.signatureFingerprint]], 8 B/row): the capped probe
@@ -43,14 +43,11 @@ object DedupIndex {
     * pin filename is kept from the JSON-era format: an index written by
     * older code still has ITS pin read and fails loudly on the format
     * mismatch instead of being silently treated as unpinned. Config is
-    * written FIRST and shingles before bands: the empty-index check keys
-    * on the bands table, so a crash mid-build leaves the index "empty" and
-    * the same-batch retry bulk-rebuilds cleanly — bands-first would wedge
-    * every retry on a missing shingle read. */
-  private def index(path: String) = BucketedIndex("dedup", path,
-    path + "/bands", Seq("wb"), path + "/shingles", "dbk", path + "/_meta",
-    "config.json", "writeSignatureIndex", "shingle, hash, or bucket geometry",
-    configFirst = true, sideFirst = true)
+    * written FIRST, so every retry validates against the true geometry. */
+  private[graft] def index(path: String) = BucketedIndex("dedup", path,
+    path + "/bands", Seq("wb"), path + "/_meta", "config.json",
+    "writeSignatureIndex", "shingle, hash, or bucket geometry",
+    data = Some((path + "/shingles", "dbk")), configFirst = true)
 
   // bandsFp: bands-table schema generation — 1 = rows carry the doc's
   // full-signature fingerprint (enables the hot-bucket-capped probe's
@@ -77,19 +74,17 @@ object DedupIndex {
   /** A batch's rows over its shingle sets `bsg` (one row per doc): bands
     * carrying the signature fingerprint (8 B/row, so the capped probe can
     * pre-collapse boilerplate clusters without re-reading signatures) by
-    * band bucket, shingles by doc bucket. No side table beyond the
-    * shingles is needed: a re-crawled doc's OLD bands recompute from its
-    * stored shingles. `batchBands` must be `bands(bsg, …)`. */
+    * band bucket, shingles by doc bucket. A re-crawled doc's OLD bands are
+    * retired by its doc-id tombstone. `batchBands` must be
+    * `bands(bsg, …)`. */
   private def dedupWrite(bsg: DataFrame, batchBands: DataFrame, n: Int,
       numHashes: Int, rowsPerBand: Int, nBuckets: Int, nDocBuckets: Int,
       owned: Seq[DataFrame]): BucketedIndex.Write =
     BucketedIndex.Write(
       configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets), "doc_id",
-      Some(bsg), bucketOf(col("doc_id"), nDocBuckets),
+      Some(bsg),
       main = batchBands.withColumn("wb", bucketOf(col("bh"), nBuckets)),
-      side = bsg.withColumn("dbk", bucketOf(col("doc_id"), nDocBuckets)),
-      oldKeys = old => bands(old.select(col("doc_id"), col("sg")), numHashes,
-        rowsPerBand).select(bucketOf(col("bh"), nBuckets).as("wb")),
+      data = Some(bsg.withColumn("dbk", bucketOf(col("doc_id"), nDocBuckets))),
       owned = owned)
 
   def writeSignatureIndex(docs: DataFrame, path: String, n: Int = 3,
@@ -103,9 +98,10 @@ object DedupIndex {
   /** Incremental maintenance — fold a (re-)crawled batch into the index
     * ([[BucketedIndex.upsert]] with band buckets as the main partitions;
     * drive from foreachBatch for a streaming feed). Per-batch cost scales
-    * with the batch's band/doc spread, never the index size. An unordered
-    * batch with the same doc twice has no deterministic winner and fails
-    * loudly; callers collapse re-crawls to one row per doc first. */
+    * with the batch and its shingle buckets, never the bands table. An
+    * unordered batch with the same doc twice has no deterministic winner
+    * and fails loudly; callers collapse re-crawls to one row per doc
+    * first. */
   def upsertSignatureIndex(batch: DataFrame, path: String, n: Int = 3,
       numHashes: Int = 32, rowsPerBand: Int = 2,
       nBuckets: Int = 16, nDocBuckets: Int = 16): Unit = {
@@ -207,7 +203,7 @@ object DedupIndex {
     // wb = bh mod nBuckets, so every member of a hit (band, bh) bucket is
     // inside the pruned read — the capped branch's population counts see
     // the FULL bucket membership
-    val cbAll = spark.read.parquet(path + "/bands")
+    val cbAll = index(path).read(spark)
       .filter(col("wb").isin(hit: _*))
     // capped: [[Dedup.incrementalDupPairsCapped]]'s corpus-side cap served
     // from the index (IDENTICAL output when nothing is hot — the q177
@@ -224,7 +220,7 @@ object DedupIndex {
     // cand is materialized by the collect above, so bb is dead: release it
     // unless the caller owns it (per-batch probes must not accumulate caches)
     if (ownsBb) bb.unpersist()
-    val csg = spark.read.parquet(path + "/shingles")
+    val csg = index(path).readData(spark)
       .filter(col("dbk").isin(dHit: _*))
       .select(col("doc_id").as("da"), col("sg").as("sga"))
     val j = TextFunctions.jaccard(col("sga"), col("sgb"))
@@ -288,7 +284,9 @@ object DedupIndex {
         numHashes, rowsPerBand, threshold, nBuckets, nDocBuckets,
         Some(maxBucket), Some(bandsFp), Some(wbHit))
       val pairs = plan
-        .localCheckpoint(true) // pin before the upsert rewrites the index
+        // the probe's output, pinned before the upsert rewrites the
+        // shingle buckets its plan reads
+        .localCheckpoint(true)
       // pairs is fully materialized — release the candidate cache so a
       // long-running foreachBatch ingest loop doesn't accumulate one
       // CacheManager entry per micro-batch

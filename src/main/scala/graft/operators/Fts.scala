@@ -191,46 +191,32 @@ object Fts {
 
   // the pin filename is kept from the JSON-era format; a caller passing a
   // different nBuckets than the index was BUILT with would otherwise
-  // compute wrong bucket ids and silently prune to the wrong partitions,
-  // and a different nDocBuckets mis-prunes the side-table read
-  private def index(path: String) = BucketedIndex("fts", path, path,
-    Seq("wb"), path + "_docs", "db", path + "_meta", "config.json",
-    "writePostingsIndex", "bucket geometry", configFirst = true)
+  // compute wrong bucket ids and silently prune to the wrong partitions.
+  // nDocBuckets is part of the pinned geometry; no table of this family is
+  // bucketed by it
+  private[graft] def index(path: String) = BucketedIndex("fts", path, path,
+    Seq("wb"), path + "_meta", "config.json", "writePostingsIndex",
+    "bucket geometry", configFirst = true)
 
-  /** The doc-bucketed side-table rows for a bucketed postings frame:
-    * doc_id → sorted occupied term buckets, partitioned by doc bucket. */
-  private def docMeta(bucketed: DataFrame, nDocBuckets: Int): DataFrame =
-    bucketed.groupBy(col("doc_id"))
-      .agg(sort_array(collect_set(col("wb"))).as("wbs"))
-      .withColumn("db", bucketCol(col("doc_id"), nDocBuckets))
-
-  /** A batch's rows: postings bucketed by term (main) and doc_id → the
-    * term buckets its postings occupy (side). `docs` (doc_id, text) is the
-    * id-keyed batch the write validates, None for pre-built postings. */
+  /** A batch's rows: postings bucketed by term. `docs` (doc_id, text) is
+    * the id-keyed batch the write validates and tombstones, None for
+    * pre-built postings. */
   private def ftsWrite(docs: Option[DataFrame], postings: DataFrame,
-      nBuckets: Int, nDocBuckets: Int): BucketedIndex.Write = {
-    val bucketed = postings.withColumn("wb", bucketCol(col("word"), nBuckets))
-      .persist() // written AND aggregated into the side table
+      nBuckets: Int, nDocBuckets: Int): BucketedIndex.Write =
     BucketedIndex.Write(
       Map("nBuckets" -> nBuckets.toString,
         "nDocBuckets" -> nDocBuckets.toString),
-      "doc_id", docs, bucketCol(col("doc_id"), nDocBuckets),
-      main = bucketed, side = docMeta(bucketed, nDocBuckets),
-      oldKeys = _.select(explode(col("wbs")).as("wb")),
-      sideFromMain = Some(docMeta(_, nDocBuckets)), owned = Seq(bucketed))
-  }
+      "doc_id", docs,
+      main = postings.withColumn("wb", bucketCol(col("word"), nBuckets)))
 
   /** Deployed-index form: persist the postings partitioned by a hash
     * bucket of the term, so a query's `word IN (...)` reads only its
     * terms' bucket directories — partition pruning at the file index,
     * before any data is read. With B buckets a Q-term query scans ≤ Q/B
     * of the index regardless of corpus size; bucket count trades
-    * directory fan-out against pruning ratio. The doc-bucketed side table
-    * (doc_id → occupied term buckets) is what lets an incremental upsert
-    * find a re-crawled doc's OLD buckets without scanning the index.
-    * Postings are not keyed by doc, so this build cannot reject duplicate
-    * docs — [[graft.api.Graft.index.buildFts]] builds from a doc frame and
-    * does. */
+    * directory fan-out against pruning ratio. Postings are not keyed by
+    * doc, so this build cannot reject duplicate docs —
+    * [[graft.api.Graft.index.buildFts]] builds from a doc frame and does. */
   def writePostingsIndex(postings: DataFrame, path: String,
       nBuckets: Int = 64, nDocBuckets: Int = 64): Unit =
     index(path).build(ftsWrite(None, postings, nBuckets, nDocBuckets))
@@ -254,20 +240,20 @@ object Fts {
     * into a persisted postings index ([[BucketedIndex.upsert]] with term
     * buckets as the main partitions). A re-crawled doc's OLD postings
     * live in the buckets of its OLD terms, which the new text doesn't
-    * reveal; the side table names them. Per-batch cost scales with the
-    * batch's term/doc spread, never the index size. A missing side table
-    * (a bulk build interrupted between its two writes) is rebuilt from the
-    * index itself — one full scan, only ever paid once. Drive it from
-    * `foreachBatch` for a streaming crawl feed. */
+    * reveal; the batch's doc-id tombstones retire them wherever they are.
+    * Per-batch cost is the batch's own postings, never the index size.
+    * Drive it from `foreachBatch` for a streaming crawl feed. */
   def upsertPostingsIndex(newDocs: DataFrame, path: String, docIdCol: String,
       textCol: String, nBuckets: Int = 64, nDocBuckets: Int = 64): Unit =
     index(path).upsert(docsWrite(newDocs, docIdCol, textCol, nBuckets,
       nDocBuckets))
 
-  /** Read back only the buckets the query terms hash into. The returned
-    * frame still carries every posting in those buckets; the word filter
-    * itself is pushed to the scan as a data filter on top of the partition
-    * prune, so every Fts query operator composes unchanged. */
+  /** Read back only the buckets the query terms hash into, through the
+    * index's reader ([[BucketedIndex.read]]: committed postings of live
+    * docs). The returned frame still carries every posting in those
+    * buckets; the word filter itself is pushed to the scan as a data
+    * filter on top of the partition prune, so every Fts query operator
+    * composes unchanged. */
   def loadPostings(spark: org.apache.spark.sql.SparkSession, path: String,
       terms: Seq[String], nBuckets: Int = 64): DataFrame = {
     index(path).requireConfig(spark, Map("nBuckets" -> nBuckets.toString))
@@ -282,7 +268,7 @@ object Fts {
         .eval(null).asInstanceOf[Long]
       ((h % nBuckets) + nBuckets) % nBuckets
     }.distinct
-    spark.read.parquet(path)
+    index(path).read(spark)
       .filter(col("wb").isInCollection(buckets))
       .drop("wb")
   }

@@ -11,10 +11,9 @@ import org.apache.spark.sql.functions._
   * embedding (256 B at dim=64) — so a probe's candidate-generation scan
   * reads ~32× less data than the plain IVF index for the same list
   * pruning. Exact re-rank vectors live in a separate id-bucketed refine
-  * table (`<path>_refine`, partitioned by `dbk = id mod nDocBuckets`),
-  * which doubles as the id→list side table the re-crawl upsert needs
-  * (the [[Fts]]/[[DedupIndex]] `_docs` pattern — an id's OLD list is not
-  * recomputable from its new embedding).
+  * table (`<path>_refine`, partitioned by `dbk = id mod nDocBuckets`), the
+  * index's copy-on-write data table: one row per id, read raw by
+  * point lookups.
   *
   * Probe = three bounded stages, each pruned at the file index:
   *   1. ADC candidate gen over the probed lists' code partitions
@@ -32,7 +31,8 @@ import org.apache.spark.sql.functions._
   * from (scripts/scrape_store_embed.py) keeps a compressed in-memory
   * index; IVF-PQ is that index durable and partition-pruned.
   *
-  * Writes go through [[BucketedIndex]] (pin-last). The pin covers
+  * Writes go through [[BucketedIndex]] (pin-last): codes merge-on-read,
+  * refine buckets copy-on-write. The pin covers
   * everything that changes routing or stored bytes: centroid bits,
   * codebook bits, nDocBuckets.
   */
@@ -47,19 +47,20 @@ object IvfPq {
 
   /** Fold a (re-)crawled batch in ([[BucketedIndex.upsert]] with lists as
     * the main partitions): a re-crawled doc's changed embedding may have
-    * moved lists AND always changes its stored code, so stale rows
-    * anti-join away inside only the affected lists, and the refine
+    * moved lists AND always changes its stored code, so the batch's id
+    * tombstones retire its old code wherever it is, and the refine
     * table's row is replaced in its (id-stable) bucket. Per-batch cost
-    * scales with the batch's list/bucket spread, never the index size. */
+    * scales with the batch and its refine buckets, never the codes table. */
   def upsertIvfPqIndex(newVecs: DataFrame, embCol: String, idCol: String,
       cents: Array[Array[Double]], books: Array[Array[Array[Double]]],
       path: String, nDocBuckets: Int = 16): Unit =
     index(path).upsert(pqWrite(newVecs, embCol, idCol, cents, books,
       nDocBuckets))
 
-  private def index(path: String) = BucketedIndex("IVF-PQ", path, path,
-    Seq("list_id"), path + "_refine", "dbk", path + "_meta", "config",
-    "writeIvfPqIndex", "centroids, codebooks, or doc-bucket geometry")
+  private[graft] def index(path: String) = BucketedIndex("IVF-PQ", path,
+    path, Seq("list_id"), path + "_meta", "config", "writeIvfPqIndex",
+    "centroids, codebooks, or doc-bucket geometry",
+    data = Some((path + "_refine", "dbk")))
 
   /** The batch's rows: codes by list (main), full vectors by doc bucket
     * (refine). The fused id validation runs over the cached `assigned`,
@@ -70,11 +71,11 @@ object IvfPq {
     val assigned = assign(vecs, embCol, idCol, cents, books, nDocBuckets)
       .cache()
     BucketedIndex.Write(config(cents, books, nDocBuckets), idCol,
-      Some(assigned), col("dbk"),
+      Some(assigned),
       main = assigned.select(col(idCol), col("codes"), col("list_id")),
-      side = assigned.select(col(idCol), col("list_id"), col(embCol),
-        col("dbk")),
-      oldKeys = _.select(col("list_id")), owned = Seq(assigned))
+      data = Some(assigned.select(col(idCol), col("list_id"), col(embCol),
+        col("dbk"))),
+      owned = Seq(assigned))
   }
 
   /** ADC candidate gen over the probed lists + exact re-rank via refine
@@ -102,7 +103,7 @@ object IvfPq {
     val ids = cand.map(_.get(0): Any).toSeq
     val dbks = cand.map(_.getLong(1)).distinct.toSeq
     val qv = array(query.map(lit): _*)
-    spark.read.parquet(path + "_refine")
+    index(path).readData(spark)
       .filter(col("dbk").isInCollection(dbks) &&
         col(idCol).isInCollection(ids))
       .select(col(idCol),
@@ -119,7 +120,7 @@ object IvfPq {
   private[graft] def adcCandidates(spark: SparkSession, path: String,
       idCol: String, probes: Seq[Int], lut: Array[Array[Double]],
       rerank: Int, nDocBuckets: Long): DataFrame =
-    spark.read.parquet(path)
+    index(path).read(spark)
       .filter(col("list_id").isInCollection(probes))
       .select(col(idCol), Pq.adcScoreExpr(col("codes"), lut).as("__adc"))
       .orderBy(col("__adc").desc, col(idCol)).limit(rerank)

@@ -15,15 +15,16 @@ import org.apache.spark.sql.functions._
   * [[PartitionedIndexOps]].
   *
   * Re-crawls: a changed embedding usually flips sign bits and MOVES
-  * buckets, so the stale vector must leave its old bucket — the old
-  * bucket is not recomputable from the new vector, hence the same
-  * id-bucketed `_docs` side table as the siblings (Chroma's
-  * delete-then-add upsert, scripts/scrape_store_embed.py:79-86).
+  * buckets, so the stale vector must leave its old bucket — which is not
+  * recomputable from the new vector, so the batch's id tombstones retire
+  * it wherever it is (Chroma's delete-then-add upsert,
+  * scripts/scrape_store_embed.py:79-86, as [[BucketedIndex]]'s
+  * merge-on-read).
   */
 object LshIndex {
 
-  /** Build: vectors partitioned by sign-bit bucket, id→bucket side
-    * table partitioned by dbk, hyperplanes pinned last. `keepCols`
+  /** Build: vectors partitioned by sign-bit bucket, hyperplanes pinned
+    * last. `keepCols`
     * carries payload columns beyond (id, emb) into the index rows (e.g.
     * a label for contrastive mining) — pinned, so an upsert built with
     * different payload columns fails fast instead of writing a ragged
@@ -44,24 +45,22 @@ object LshIndex {
 
   // pins written before keepCols existed lack the key; absent ≡ empty
   // (those indexes were all built with no payload columns), so an old
-  // index still upserts with keepCols=Nil
-  private def index(path: String) = BucketedIndex("LSH", path, path,
-    Seq("bucket"), path + "_docs", "dbk", path + "_meta", "config",
-    "writeLshIndex", "hyperplanes, doc-bucket geometry, or payload columns",
+  // index still upserts with keepCols=Nil. nDocBuckets is part of the
+  // pinned geometry; no table of the LSH families is bucketed by it
+  private[graft] def index(path: String) = BucketedIndex("LSH", path, path,
+    Seq("bucket"), path + "_meta", "config", "writeLshIndex",
+    "hyperplanes, doc-bucket geometry, or payload columns",
     pinDefaults = Map("keepCols" -> ""))
 
+  /** The batch's rows by sign-bit bucket; ids validate and tombstone on
+    * the input itself. */
   private def lshWrite(vecs: DataFrame, embCol: String, idCol: String,
       planes: Array[Array[Double]], nDocBuckets: Int,
-      keepCols: Seq[String]): BucketedIndex.Write = {
-    val assigned = vecs.select((Seq(idCol, embCol) ++ keepCols).map(col) ++
-      Seq(Similarity.bucketExpr(col(embCol), planes).as("bucket"),
-        pmod(col(idCol), lit(nDocBuckets.toLong)).as("dbk")): _*).cache()
+      keepCols: Seq[String]): BucketedIndex.Write =
     BucketedIndex.Write(config(planes, nDocBuckets, keepCols), idCol,
-      Some(assigned), col("dbk"),
-      main = assigned.drop("dbk"),
-      side = assigned.select(col(idCol), col("bucket"), col("dbk")),
-      oldKeys = _.select(col("bucket")), owned = Seq(assigned))
-  }
+      Some(vecs), main = vecs.select((Seq(idCol, embCol) ++ keepCols)
+        .map(col) :+ Similarity.bucketExpr(col(embCol), planes)
+        .as("bucket"): _*))
 
   /** Probe: exact cosine within the query's bucket and its
     * hamming-`radius` neighborhood — pruned at the file index. radius ≥
@@ -78,7 +77,7 @@ object LshIndex {
     val probes = (0L until (1L << nb))
       .filter(b => java.lang.Long.bitCount(b ^ qb) <= radius)
     val qv = array(query.map(lit): _*)
-    spark.read.parquet(path)
+    index(path).read(spark)
       .filter(col("bucket").isInCollection(probes))
       .select(col(idCol),
         round(graft.functions.CosineSimilarity(col(embCol), qv), 4)
@@ -121,9 +120,9 @@ object LshIndex {
     val nb = planes.length
     require(nb <= 20, s"numPlanes=$nb too large to enumerate probe sets")
     // ONE relation serves both the collision check (schema) and the probe
-    // scan — a separate spark.read for the check would double the
+    // scan — a separate read for the check would double the
     // partition-tree file listing on every serving-path call
-    val idx = spark.read.parquet(path)
+    val idx = index(path).read(spark)
     requireNoCollisions(idx, anchors, path)
     // masks stay VALUES (one exploded literal array, one XOR) — building
     // one expression child per mask would put 2^numPlanes Catalyst nodes
@@ -197,22 +196,21 @@ object LshIndex {
   }
 
   /** Fold a (re-)crawled batch into a multi-table index — the
-    * [[upsertLshIndex]] merge with (tbl, bucket) partition pairs (≤
-    * 2·batch·L affected pairs, driver-bounded). Per-batch cost ∝ batch
-    * spread × L. */
+    * [[upsertLshIndex]] merge with (tbl, bucket) partition pairs. Per-batch
+    * cost ∝ batch × L rows appended. */
   def upsertMultiLshIndex(newVecs: DataFrame, embCol: String, idCol: String,
       planeSets: Seq[Array[Array[Double]]], path: String,
       nDocBuckets: Int = 16, keepCols: Seq[String] = Nil): Unit =
     multiIndex(path).upsert(multiWrite(newVecs, embCol, idCol, planeSets,
       nDocBuckets, keepCols))
 
-  private def multiIndex(path: String) = BucketedIndex("multi-table LSH",
-    path, path, Seq("tbl", "bucket"), path + "_docs", "dbk", path + "_meta",
+  private[graft] def multiIndex(path: String) = BucketedIndex(
+    "multi-table LSH", path, path, Seq("tbl", "bucket"), path + "_meta",
     "config", "writeMultiLshIndex",
     "plane sets, doc-bucket geometry, or payload columns")
 
-  /** The side table keeps id→(tbl, bucket): a re-crawled vector's OLD
-    * bucket per table is not recomputable from its new embedding. */
+  /** L rows per vector, one per (tbl, bucket); ids validate and tombstone
+    * on the input, which holds one row per id. */
   private def multiWrite(vecs: DataFrame, embCol: String, idCol: String,
       planeSets: Seq[Array[Array[Double]]], nDocBuckets: Int,
       keepCols: Seq[String]): BucketedIndex.Write = {
@@ -221,16 +219,9 @@ object LshIndex {
     // 64 KB codegen limit at realistic table counts (interpreted
     // fallback) — see [[graft.functions.LshBuckets]]
     val buckets = graft.functions.LshBuckets(col(embCol), planeSets)
-    val assigned = vecs.select((Seq(idCol, embCol) ++ keepCols).map(col) ++
-      Seq(pmod(col(idCol), lit(nDocBuckets.toLong)).as("dbk"),
-        posexplode(buckets).as(Seq("tbl", "bucket"))): _*).cache()
-    // ids validate on the input: `assigned` holds L rows per id
     BucketedIndex.Write(multiConfig(planeSets, nDocBuckets, keepCols), idCol,
-      Some(vecs), pmod(col(idCol), lit(nDocBuckets.toLong)),
-      main = assigned.drop("dbk"),
-      side = assigned.select(col(idCol), col("tbl"), col("bucket"),
-        col("dbk")),
-      oldKeys = _.select(col("tbl"), col("bucket")), owned = Seq(assigned))
+      Some(vecs), main = vecs.select((Seq(idCol, embCol) ++ keepCols)
+        .map(col) :+ posexplode(buckets).as(Seq("tbl", "bucket")): _*))
   }
 
   /** Single-query probe of a multi-table index: the L per-table buckets
@@ -247,7 +238,7 @@ object LshIndex {
       col("tbl") === lit(t) && col("bucket") === lit(queryBucket(query, p))
     }.reduce(_ || _)
     val qv = array(query.map(lit): _*)
-    spark.read.parquet(path)
+    multiIndex(path).read(spark)
       .filter(pred)
       .dropDuplicates(Seq(idCol))
       .select(col(idCol),
@@ -273,7 +264,7 @@ object LshIndex {
     // one relation for both the collision check and the probe scan
     // (requireNoCollisions rejects anchor 'tbl'/'bucket' columns — both
     // are in the index schema)
-    val idx = spark.read.parquet(path)
+    val idx = multiIndex(path).read(spark)
     requireNoCollisions(idx, anchors, path)
     val buckets = graft.functions.LshBuckets(col(anchorEmbCol), planeSets)
     // cached for the same two-evaluations-must-agree reason as batchProbe
@@ -349,7 +340,7 @@ object LshIndex {
       col("tbl") === lit(t) &&
         col("bucket").isInCollection(ps.map(_._3).distinct)
     }.reduce(_ || _)
-    spark.read.parquet(path)
+    multiIndex(path).read(spark)
       .filter(pred)
       .join(broadcast(probes), Seq("tbl", "bucket"))
   }

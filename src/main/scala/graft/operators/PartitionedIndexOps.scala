@@ -1,27 +1,27 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** The primitives under every persisted index's commit: typed config
-  * pins, the writer-version guard, unique-id validation, staged partition
-  * replacement, and compaction. [[BucketedIndex]] owns the order they run
-  * in (the one write protocol, with its crash and retry contract); only it
-  * and the `compact*` passes here call the write-side primitives.
+  * pins, version claims and commit markers, unique-id validation, and
+  * compaction. [[BucketedIndex]] owns the order they run in (the one write
+  * protocol, with its crash and retry contract) and the one reader; only
+  * it and the `compact*` passes here call the write-side primitives.
   */
 object PartitionedIndexOps {
 
   /** Write a small metadata/pin file (config json, centroid fingerprint).
     * One copy of the create-overwrite-UTF8 idiom for every index. */
-  def writePin(fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path, content: String): Unit = {
+  def writePin(fs: FileSystem, path: Path, content: String): Unit = {
     val out = fs.create(path, true)
     try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
   /** Read a pin file back, None if absent. */
-  def readPin(fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path): Option[String] =
+  def readPin(fs: FileSystem, path: Path): Option[String] =
     if (!fs.exists(path)) None
     else {
       val in = fs.open(path)
@@ -35,13 +35,13 @@ object PartitionedIndexOps {
     * index reuses this instead of inventing a fourth format. Values are
     * strings (numeric configs render via toString); keys and values must
     * not contain '=' or newlines. */
-  def writeConfigPin(fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path, cfg: Map[String, String]): Unit =
+  def writeConfigPin(fs: FileSystem, path: Path,
+      cfg: Map[String, String]): Unit =
     writePin(fs, path, cfg.toSeq.sortBy(_._1)
       .map { case (k, v) => s"$k=$v" }.mkString("\n"))
 
-  def readConfigPin(fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path): Option[Map[String, String]] =
+  def readConfigPin(fs: FileSystem,
+      path: Path): Option[Map[String, String]] =
     readPin(fs, path).map(_.linesIterator
       .filter(_.contains("="))
       .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
@@ -55,9 +55,8 @@ object PartitionedIndexOps {
     * first) — but a pin that exists while MISSING a checked key is an
     * error, not a pass: a truncated or legacy-format pin must fail loudly
     * (rebuild) rather than validate any caller geometry. */
-  def requireConfigPin(fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path, expected: Map[String, String],
-      what: String): Unit =
+  def requireConfigPin(fs: FileSystem, path: Path,
+      expected: Map[String, String], what: String): Unit =
     readConfigPin(fs, path).foreach { stored =>
       expected.foreach { case (k, v) =>
         val got = stored.get(k)
@@ -70,116 +69,71 @@ object PartitionedIndexOps {
       }
     }
 
-  /** Optimistic single-writer guard shared by every persisted index: the
-    * multi-table upserts assume ONE writer, and two interleaved upserts
-    * could both pass the config-pin check and interleave their
-    * staged-overwrite / delete-vacated / side-table writes. The guard is
-    * a monotonic version pin next to the config pin:
-    *
-    *   - [[claimVersion]] at writer ENTRY (before any data write) reads
-    *     the current version and immediately publishes cur+1 together
-    *     with a WRITER-UNIQUE token;
-    *   - [[requireVersion]] immediately BEFORE the writer's final commit
-    *     write re-reads the pin and aborts unless BOTH the version and
-    *     the token are this writer's — if another writer claimed in
-    *     between, the loser fails fast without publishing its final
-    *     table/pin.
-    *
-    * The token is what closes the simultaneous-claim hole a bare counter
-    * leaves open: two writers that both read version v before either
-    * publishes would both claim v+1 and both pass a version-only check;
-    * with the token, the pin on disk can only hold ONE writer's token at
-    * commit time, so at most one of them validates (last claim wins, the
-    * other aborts).
-    *
-    * This DETECTS interleaving rather than preventing it (a filesystem
-    * has no compare-and-swap; at 100 TB you'd put the version in a
-    * transactional metastore — the residual window is between a writer's
-    * requireVersion read and its commit write): the loser may have staged
-    * partition overwrites before aborting, and the documented healing
-    * applies — a retry of the aborted batch AFTER the winner completes
-    * re-covers every partition it touched (the same-batch retry contract
-    * the crash windows already rely on), converging to the serial
-    * application. A crashed claimer never wedges the index: the next
-    * writer just claims the next version.
-    *
-    * MIGRATION (mixed-version writer fleets): the `version:token` pin is
-    * one-way compatible — this code reads legacy bare-counter pins, but a
-    * PRE-token binary's readVersion would `toLong` the whole "v:uuid"
-    * string and throw NumberFormatException (a crash, not a clean abort).
-    * Upgrade ALL writers before the first tokened claim is published: old
-    * readers keep working until a new writer claims, so roll the fleet
-    * first, then resume writes. (Single-writer deployments — every test
-    * and the reference's jobs — never see this.) */
-  def readVersion(fs: org.apache.hadoop.fs.FileSystem,
-      vPath: org.apache.hadoop.fs.Path): Long =
-    readPin(fs, vPath)
-      .map(_.trim.split(":", 2)(0).toLong).getOrElse(0L)
+  /** Create the empty file `p` only if it is absent: true iff this call
+    * created it. This is the compare-and-swap the version protocol rests
+    * on. HDFS's `create(overwrite = false)` is atomic at the NameNode;
+    * Hadoop's local filesystem implements it as check-then-open, so a
+    * local path goes through `Files.createFile` (O_CREAT|O_EXCL) instead. */
+  def createExclusive(fs: FileSystem, p: Path): Boolean =
+    if (fs.getScheme == "file") {
+      val f = java.nio.file.Paths.get(fs.makeQualified(p).toUri)
+      java.nio.file.Files.createDirectories(f.getParent)
+      try { java.nio.file.Files.createFile(f); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    } else
+      try { fs.create(p, false).close(); true }
+      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
 
-  /** A writer's published claim: the monotonic version plus the token
-    * that distinguishes this writer from a simultaneous claimer of the
-    * same version. */
-  final case class VersionClaim(version: Long, token: String)
+  private def versionsIn(fs: FileSystem, dir: Path): Seq[Long] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).sorted
 
-  private def readClaim(fs: org.apache.hadoop.fs.FileSystem,
-      vPath: org.apache.hadoop.fs.Path): VersionClaim =
-    readPin(fs, vPath).map { s =>
-      val parts = s.trim.split(":", 2)
-      // legacy bare-counter pins (pre-token format) carry no token; they
-      // can never match a tokened claim, which is the safe direction
-      VersionClaim(parts(0).toLong,
-        if (parts.length > 1) parts(1) else "")
-    }.getOrElse(VersionClaim(0L, ""))
+  /** The committed versions of the index whose metadata lives in `meta`
+    * (one empty marker file `commits/<v>` each), ascending. A reader
+    * resolves this set ONCE per read; rows and tombstones of any other
+    * version are invisible to it. */
+  def committedVersions(fs: FileSystem, meta: Path): Seq[Long] =
+    versionsIn(fs, new Path(meta, "commits"))
 
-  /** Publish this writer's claim (cur+1, unique token) and return it.
-    * Call before any data write. */
-  def claimVersion(fs: org.apache.hadoop.fs.FileSystem,
-      vPath: org.apache.hadoop.fs.Path): VersionClaim = {
-    val next = readVersion(fs, vPath) + 1
-    val token = java.util.UUID.randomUUID().toString
-    writePin(fs, vPath, s"$next:$token")
-    VersionClaim(next, token)
+  /** Claim a fresh writer version: `claims/<v>` is created exclusively, so
+    * no two attempts ever share a version, and a claim is never reused
+    * (a crashed or aborted attempt's version stays claimed, its files
+    * unreferenced). Call before any data write. */
+  def claimVersion(fs: FileSystem, meta: Path): Long = {
+    val claims = new Path(meta, "claims")
+    var v = (versionsIn(fs, claims) ++ committedVersions(fs, meta))
+      .foldLeft(0L)(math.max) + 1
+    while (!createExclusive(fs, new Path(claims, v.toString))) v += 1
+    v
   }
 
-  /** Abort-before-commit check: the pin on disk must still be this
-    * writer's claim — version AND token. Call immediately before the
-    * final commit write. */
-  def requireVersion(fs: org.apache.hadoop.fs.FileSystem,
-      vPath: org.apache.hadoop.fs.Path, claimed: VersionClaim,
-      what: String): Unit = {
-    val cur = readClaim(fs, vPath)
-    require(cur == claimed,
-      s"$what: concurrent writer detected — writer version ${cur.version} " +
-        s"on disk, this writer claimed ${claimed.version}" +
-        (if (cur.version == claimed.version)
-           " (same version, different writer token — simultaneous claim)"
-         else "") +
-        ". Aborting before the final commit; retry this batch after the " +
-        "other writer completes (the retry re-covers any partitions " +
-        "already staged).")
+  /** Abort unless `v` is newer than every committed version. Commits are
+    * published in version order, so an attempt overtaken by a newer
+    * commit (a concurrent writer) fails here; its retry claims a new
+    * version and converges to the serial application. This is a check,
+    * not a lock: two writers that pass it at the same instant commit in
+    * either order. Their main-table rows still resolve by version, but a
+    * copy-on-write id table keeps whichever rewrite landed last. */
+  def requireLatest(fs: FileSystem, meta: Path, v: Long, what: String): Unit = {
+    val newer = committedVersions(fs, meta).filter(_ > v)
+    require(newer.isEmpty,
+      s"$what: concurrent writer detected — version ${newer.max} was " +
+        s"committed after this writer claimed version $v. Aborting before " +
+        "the commit; retry this batch (the retry claims a new version, and " +
+        "this attempt's files stay unreferenced).")
   }
 
-  /** Does `path` hold at least one `<partCol>=` partition? A bare
-    * pre-created (or fully emptied) directory must route callers to their
-    * bulk-build branch instead of a doomed schema-less merge read. */
-  def hasPartitions(fs: org.apache.hadoop.fs.FileSystem, path: String,
-      partCol: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith(partCol + "="))
-  }
-
-  /** Pin `df` (localCheckpoint — the plan may lazily read the very path
-    * being overwritten) and dynamic-overwrite its partitions into `path`.
-    * Returns the pinned frame for post-write inspection. The shared core
-    * for every self-referential partition rewrite. */
-  def pinWrite(df: DataFrame, path: String,
-      partCols: Seq[String]): DataFrame = {
-    val pinned = df.localCheckpoint(true)
-    pinned.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCols: _*).parquet(path)
-    pinned
+  /** Publish version `v`: [[requireLatest]], then create `commits/<v>`
+    * exclusively. Its rows and tombstones become visible together, to
+    * every reader that resolves the committed set after this returns. Two
+    * writers cannot both commit one version. */
+  def commitVersion(fs: FileSystem, meta: Path, v: Long, what: String): Unit = {
+    requireLatest(fs, meta, v, what)
+    require(createExclusive(fs, new Path(new Path(meta, "commits"),
+        v.toString)),
+      s"$what: version $v is already committed — two writers cannot " +
+        "commit one version")
   }
 
   /** Exact-bits fingerprint of a model matrix (IVF centroids, PQ
@@ -194,29 +148,27 @@ object PartitionedIndexOps {
   /** Fail fast on a batch carrying the same id twice — an unordered frame
     * with two rows per doc has no deterministic winner, and a silent merge
     * corrupts the index (doubled tf, two vectors per id). One aggregation
-    * job; callers collapse re-crawls to one row per doc first. */
-  def requireUniqueIds(df: DataFrame, idCol: String): Unit = {
-    import org.apache.spark.sql.functions.{count, countDistinct, col, lit}
+    * job, returning the batch's row count; callers collapse re-crawls to
+    * one row per doc first. */
+  def requireUniqueIds(df: DataFrame, idCol: String): Long = {
     val r = df.agg(count(lit(1)).as("n"),
       countDistinct(col(idCol)).as("nd")).head
     require(r.getLong(0) == r.getLong(1),
       s"batch contains duplicate $idCol rows — collapse re-crawls to one " +
         "row per doc before indexing")
+    r.getLong(0)
   }
 
-  /** [[requireUniqueIds]] fused with the hit-bucket collect every upsert
-    * pays right after it (r13, guide §1.2/§2.6: the two back-to-back
-    * driver actions over the same batch were one aggregation each — a
-    * streaming ingest loop pays that per-job fixed cost per micro-batch,
-    * so fold them into ONE job). `bucket` must be the index's LongType
-    * bucket-id expression over `df`'s rows; the returned distinct bucket
-    * values are bounded by the index's bucket geometry by construction
-    * (≤ nBuckets values — the same bound the collects this replaces had).
-    * Rejects duplicate ids with [[requireUniqueIds]]'s contract BEFORE
-    * the caller touches the index. */
+  /** [[requireUniqueIds]] fused with the collect of the id buckets the
+    * batch hits, in ONE job — what an upsert of a copy-on-write id table
+    * needs before it rewrites those buckets. `bucket` must be the
+    * index's LongType bucket-id expression over `df`'s rows; the returned
+    * distinct values are bounded by the bucket geometry by construction
+    * (≤ nDocBuckets), and empty exactly when the batch is. Rejects
+    * duplicate ids with [[requireUniqueIds]]'s contract BEFORE the caller
+    * touches the index. */
   def requireUniqueIdsCollectingBuckets(df: DataFrame, idCol: String,
       bucket: org.apache.spark.sql.Column): Seq[Long] = {
-    import org.apache.spark.sql.functions.{col, collect_set, count, countDistinct, lit}
     val r = df.agg(count(lit(1)).as("n"), countDistinct(col(idCol)).as("nd"),
       collect_set(bucket).as("bks")).head
     require(r.getLong(0) == r.getLong(1),
@@ -225,46 +177,57 @@ object PartitionedIndexOps {
     r.getSeq[Long](2)
   }
 
-  /** Compact an index table in place: every incremental upsert appends at
-    * least one file to each partition it touches, so a long-running ingest
-    * loop (q145's shape) accretes one file per batch per hit bucket — and
-    * probe cost degrades from "read K buckets" to "open K × batches
-    * files". Compaction rewrites ONLY partitions holding more than
-    * `maxFiles` data files, one file per partition afterwards
-    * (`repartition(partCol)` routes each key to exactly one task).
-    *
-    * The enumeration is a driver-side directory listing, bounded by the
-    * index's bucket geometry (every persisted index here has a fixed
-    * partition count by construction). Content is pinned before the
-    * overwrite ([[pinWrite]]'s localCheckpoint — the plan reads the very
-    * partitions being replaced) and the rewrite is content-identical, so
-    * a crash mid-commit leaves a mix of compacted and uncompacted
-    * partitions that is still CORRECT and re-compactable — no vacated
-    * buckets, no delete pass, pins untouched. Returns the partition
+  private def dataFiles(fs: FileSystem, dir: Path): Set[String] =
+    if (!fs.exists(dir)) Set.empty
+    else fs.listStatus(dir).map(_.getPath.getName)
+      .filter(_.endsWith(".parquet")).toSet
+
+  private def subdirs(fs: FileSystem, dir: Path, partCol: String): Seq[Path] =
+    fs.listStatus(dir).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith(partCol + "="))
+
+  private def valueOf(p: Path, partCol: String): Long =
+    p.getName.drop(partCol.length + 1).toLong
+
+  /** Compact an index table in place: every upsert appends a delta file
+    * to each partition it touches, so a long-running ingest loop (q145's
+    * shape) accretes one file per batch per hit bucket — and probe cost
+    * degrades from "read K buckets" to "open K × batches files".
+    * Compaction rewrites ONLY partitions holding more than `maxFiles` data
+    * files, one file per partition afterwards (`repartition(partCol)`
+    * routes each key to exactly one task), and returns the partition
     * values it rewrote (empty = nothing exceeded the threshold).
     *
-    * Partition values must be numeric (true for every index here: term/
-    * doc buckets, IVF list ids) — the threshold filter casts through
-    * long so the read prunes to the over-threshold partitions only. */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-      partCol: String, maxFiles: Int = 4): Seq[Long] = {
-    import org.apache.spark.sql.functions.col
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(path)
+    * On a versioned table (an index's main table, whose commits and
+    * tombstones live in `meta`) a rewrite FOLDS: it keeps exactly the rows
+    * the reader serves ([[BucketedIndex.committed]] — committed versions,
+    * no tombstoned id), each with its version, and a partition whose rows
+    * are all tombstoned is deleted. When the pass folded every partition,
+    * no row is left for a tombstone to drop, and the tombstones are
+    * deleted too. An id-keyed copy-on-write table has no versions; its
+    * rewrite is content-identical. Either way a crash leaves a mix of
+    * folded and unfolded partitions that reads the same and re-compacts.
+    * Run it between writes: a fold drops rows of versions that are not
+    * committed yet.
+    *
+    * The enumeration is a driver-side directory listing, bounded by the
+    * index's bucket geometry. Partition values must be numeric (true for
+    * every index here: term/doc buckets, IVF list ids) — the threshold
+    * filter casts through long so the read prunes to the over-threshold
+    * partitions only. */
+  def compact(spark: SparkSession, path: String, partCol: String,
+      maxFiles: Int = 4, meta: Option[String] = None): Seq[Long] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Seq.empty
-    val over = fs.listStatus(root)
-      .filter(_.getPath.getName.startsWith(partCol + "="))
-      .filter { d =>
-        fs.listStatus(d.getPath)
-          .count(_.getPath.getName.endsWith(".parquet")) > maxFiles
-      }
-      .map(_.getPath.getName.drop(partCol.length + 1).toLong)
-      .toSeq
+    val all = subdirs(fs, root, partCol)
+    val over = all.filter(d => dataFiles(fs, d).size > maxFiles)
     if (over.isEmpty) return Seq.empty
-    pinWrite(compactionSlice(spark, path, partCol, over)
-      .repartition(col(partCol)), path, Seq(partCol))
-    over
+    val values = over.map(valueOf(_, partCol))
+    val m = metaOf(path, meta)
+    fold(spark, fs, path, Seq(partCol), over, over.size == all.size,
+      compactionSlice(spark, path, partCol, values, m), m)
+    values
   }
 
   /** Two-level [[compact]] for nested layouts (the multi-table LSH
@@ -273,9 +236,8 @@ object PartitionedIndexOps {
     * (`repartition(partCols)` routes each pair to one task). The
     * enumeration is a bounded nested listing (tables × buckets by
     * construction); the rewrite read prunes on both partition columns;
-    * content-identical, pins untouched, crash-re-compactable — the same
-    * contract as the single-level form. Returns the (outer, inner) value
-    * pairs it rewrote.
+    * the same fold and crash contract as the single-level form. Returns
+    * the (outer, inner) value pairs it rewrote.
     *
     * PRECONDITION: both partition columns must hold LONG-parseable
     * values (the index families here partition on `tbl`/`bucket`/`dbk`
@@ -283,76 +245,67 @@ object PartitionedIndexOps {
     * partition value or a `__HIVE_DEFAULT_PARTITION__` from a null
     * throws NumberFormatException mid-enumeration. Not a general-purpose
     * string-partition compactor. */
-  def compactMulti(spark: org.apache.spark.sql.SparkSession, path: String,
-      partCols: Seq[String], maxFiles: Int = 4): Seq[(Long, Long)] = {
-    import org.apache.spark.sql.functions.col
+  def compactMulti(spark: SparkSession, path: String, partCols: Seq[String],
+      maxFiles: Int = 4, meta: Option[String] = None): Seq[(Long, Long)] = {
     require(partCols.length == 2,
       "compactMulti handles exactly two partition levels")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Seq.empty
-    val over = for {
-      outer <- fs.listStatus(root).toSeq
-      if outer.getPath.getName.startsWith(partCols.head + "=")
-      inner <- fs.listStatus(outer.getPath).toSeq
-      if inner.getPath.getName.startsWith(partCols(1) + "=")
-      if fs.listStatus(inner.getPath)
-        .count(_.getPath.getName.endsWith(".parquet")) > maxFiles
-    } yield (outer.getPath.getName.drop(partCols.head.length + 1).toLong,
-      inner.getPath.getName.drop(partCols(1).length + 1).toLong)
+    val all = for {
+      outer <- subdirs(fs, root, partCols.head)
+      inner <- subdirs(fs, outer, partCols(1))
+    } yield inner
+    val over = all.filter(d => dataFiles(fs, d).size > maxFiles)
     if (over.isEmpty) return Seq.empty
-    val pred = over.groupBy(_._1).map { case (t, vs) =>
+    val pairs = over.map(d =>
+      (valueOf(d.getParent, partCols.head), valueOf(d, partCols(1))))
+    val pred = pairs.groupBy(_._1).map { case (t, vs) =>
       col(partCols.head).cast("long") === t &&
         col(partCols(1)).cast("long").isInCollection(vs.map(_._2))
     }.reduce(_ || _)
-    pinWrite(spark.read.parquet(path).filter(pred)
-      .repartition(partCols.map(col): _*), path, partCols)
-    over
+    val m = metaOf(path, meta)
+    fold(spark, fs, path, partCols, over, over.size == all.size,
+      BucketedIndex.committed(spark, path, m, keepVersion = true).filter(pred),
+      m)
+    pairs
+  }
+
+  /** The sibling metadata directory the five single-root families keep
+    * (`<path>_meta`); the dedup index passes its own. */
+  private def metaOf(path: String, meta: Option[String]): String =
+    meta.getOrElse(path + "_meta")
+
+  /** Rewrite `rows` (the over-threshold partitions' served rows) as one
+    * file per partition with a dynamic overwrite — it replaces only the
+    * partitions present in its output, after the job has read them — then
+    * delete each over-threshold partition the output left untouched (all
+    * of its rows were tombstoned), and the tombstones once `everything`
+    * was folded. */
+  private def fold(spark: SparkSession, fs: FileSystem, path: String,
+      partCols: Seq[String], over: Seq[Path], everything: Boolean,
+      rows: DataFrame, meta: String): Unit = {
+    val versioned = rows.columns.contains(BucketedIndex.Version)
+    require(!versioned || fs.exists(new Path(meta, "commits")),
+      s"$path carries row versions but $meta holds no commit log — pass " +
+        "the index's metadata directory, or the fold would drop every row")
+    val before = over.map(d => d -> dataFiles(fs, d)).toMap
+    rows.repartition(partCols.map(col): _*)
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCols: _*).parquet(path)
+    over.filter(d => dataFiles(fs, d) == before(d)).foreach(fs.delete(_, true))
+    if (everything && versioned)
+      fs.delete(BucketedIndex.tombstonePath(meta), true)
   }
 
   /** The pruned read compaction rewrites from — factored out so the spec
     * can assert the long-cast threshold filter lands as a PARTITION
     * filter (file-index pruning), not a data filter over the whole index:
     * at scale, compacting 3 hot buckets must not scan the other 61. */
-  private[graft] def compactionSlice(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      partCol: String, over: Seq[Long]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    spark.read.parquet(path)
+  private[graft] def compactionSlice(spark: SparkSession, path: String,
+      partCol: String, over: Seq[Long], meta: String): DataFrame =
+    BucketedIndex.committed(spark, path, meta,
+      keepVersion = true)
       .filter(col(partCol).cast("long").isInCollection(over))
-  }
-
-  /** Replace the `affected` partitions of `path` with `merged`'s rows:
-    * [[pinWrite]] FIRST — dynamic overwrite stages and commits only the
-    * partitions present in the output, so co-bucketed rows of untouched
-    * ids are never exposed to a crash window — then delete the affected
-    * partitions absent from the output (vacated by a re-crawl; dynamic
-    * overwrite never rewrites a partition with zero rows). `affected`
-    * holds one value sequence per partition (e.g. Seq(tbl, bucket));
-    * vacated directories delete as `tbl=t/bucket=b` nested paths. The
-    * `present` collect is bounded by the caller's bucket count.
-    *
-    * Present-vs-affected comparison is on the STRING rendering of each
-    * value — the directory-name space both sides ultimately live in. Raw
-    * Any equality is a trap here: the caller's affected values are
-    * typically Long while a read-back partition column infers Int, and a
-    * typed mismatch would classify every present partition as vacated
-    * and DELETE LIVE DATA. */
-  def overwriteAffected(merged: DataFrame, path: String,
-      partCols: Seq[String], affected: Set[Seq[Any]],
-      fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    val pinned = pinWrite(merged, path, partCols)
-    val present: Set[Seq[String]] =
-      pinned.select(partCols.map(pinned(_)): _*).distinct()
-        .collect()
-        .map(r => partCols.indices.map(i => String.valueOf(r.get(i))): Seq[String])
-        .toSet
-    affected.map(_.map(String.valueOf): Seq[String])
-      .filterNot(present.contains).foreach { vs =>
-      val rel = partCols.zip(vs).map { case (c, v) => s"$c=$v" }
-        .mkString("/")
-      fs.delete(new org.apache.hadoop.fs.Path(path, rel), true)
-    }
-  }
 }

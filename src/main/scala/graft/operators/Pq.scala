@@ -78,7 +78,8 @@ object Pq {
     }: _*).getField("col2")
 
   /** Per-subspace k-means codebooks, `m × k × (dim/m)`. Deterministic:
-    * init = the k lowest-id rows' subvectors, then `iters` rounds of
+    * init = the k lowest-id rows' subvectors (ONE collect of those rows,
+    * sliced per subspace on the driver), then `iters` rounds of
     * assign + Summarizer.mean (one mean row per occupied code — the
     * [[Similarity.listMeans]] shape, never k × dim scalar rows). Driver
     * holds m·k·subDim = dim·k doubles — a model constant. At 100 TB train
@@ -87,7 +88,12 @@ object Pq {
   def trainCodebooks(vecs: DataFrame, embCol: String, idCol: String,
       m: Int, k: Int, iters: Int = 2): Array[Array[Array[Double]]] = {
     require(k > 0 && k <= 256, s"k=$k out of range (codes are small ints)")
-    val dim = vecs.select(size(col(embCol))).head.getInt(0)
+    // k-row init collect (codebook seed), bounded by k <= 256
+    val seed = vecs.orderBy(col(idCol)).limit(k)
+      .select(col(embCol).cast("array<double>")).collect()
+      .map(_.getSeq[Double](0))
+    require(seed.nonEmpty, "no vectors to train codebooks on")
+    val dim = seed.head.length
     require(m > 0 && dim % m == 0, s"m=$m must divide dim=$dim")
     val subDim = dim / m
     Array.tabulate(m) { j =>
@@ -95,10 +101,8 @@ object Pq {
         array((0 until subDim).map(d =>
           element_at(col(embCol), j * subDim + d + 1).cast("double")): _*)
           .as("sv"))
-      // k-row init collect (codebook seed), bounded by k <= 256
-      var book: Array[Array[Double]] = sub.orderBy(col("id")).limit(k)
-        .select(col("sv")).collect()
-        .map(_.getSeq[Double](0).toArray)
+      var book: Array[Array[Double]] =
+        seed.map(_.slice(j * subDim, (j + 1) * subDim).toArray)
       for (_ <- 1 to iters) {
         // one mean-vector row per occupied code, <= k rows
         val means = sub

@@ -19,6 +19,7 @@ import org.apache.spark.sql.DataFrame
   * close after.
   */
 final class ProbeHandle private[operators] (
-    val result: DataFrame, pinned: Seq[DataFrame]) extends AutoCloseable {
+    val result: DataFrame, private[graft] val pinned: Seq[DataFrame])
+    extends AutoCloseable {
   override def close(): Unit = pinned.foreach(_.unpersist(true))
 }

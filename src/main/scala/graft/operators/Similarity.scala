@@ -165,15 +165,11 @@ object Similarity {
 
   /** Deployed-index form: persist the assigned table partitioned by
     * list_id, so probing reads only the probed lists' directories
-    * (PartitionFilters at the scan — verified in IvfSpec). A doc-bucketed
-    * side table (`<path>_docs`: id → assigned list, partitioned by
-    * dbk = id mod nDocBuckets) is what lets [[upsertIvfIndex]] find a
-    * re-crawled doc's OLD list without scanning the index — a changed
-    * embedding's previous list is not recomputable from the new vector.
-    * At 100 TB this is the difference between scanning nProbe/nLists of
-    * the corpus and scanning all of it. The pin covers the exact centroid
-    * bits and the doc-bucket modulus; a rebuild with retrained centroids
-    * deletes the old pin first ([[BucketedIndex]]'s pin-last order). */
+    * (PartitionFilters at the scan — verified in IvfSpec). At 100 TB this
+    * is the difference between scanning nProbe/nLists of the corpus and
+    * scanning all of it. The pin covers the exact centroid bits and the
+    * doc-bucket modulus; a rebuild with retrained centroids deletes the
+    * old pin first ([[BucketedIndex]]'s pin-last order). */
   def writeIvfIndex(index: DataFrame, embCol: String, idCol: String,
       cents: Array[Array[Double]], path: String,
       nDocBuckets: Int = 16): Unit =
@@ -183,30 +179,27 @@ object Similarity {
     * ([[BucketedIndex.upsert]] with lists as the main partitions). A
     * re-crawled doc whose embedding changed may have moved lists, and its
     * stale vector must LEAVE the old list — append-only would return it
-    * as a phantom neighbor forever. Per-batch cost scales with the
-    * batch's list/doc spread, never the index size. */
+    * as a phantom neighbor forever; the batch's id tombstones retire it
+    * from whichever list it was in. Per-batch cost is the batch's own
+    * rows, never the index size. */
   def upsertIvfIndex(newVecs: DataFrame, embCol: String, idCol: String,
       cents: Array[Array[Double]], path: String,
       nDocBuckets: Int = 16): Unit =
     ivfIndex(path).upsert(ivfWrite(newVecs, embCol, idCol, cents,
       nDocBuckets))
 
-  private def ivfIndex(path: String) = BucketedIndex("IVF", path, path,
-    Seq("list_id"), path + "_docs", "dbk", path + "_meta", "centroids",
-    "writeIvfIndex", "centroids or doc-bucket geometry")
+  // nDocBuckets is part of the pinned geometry; no table of this family
+  // is bucketed by it
+  private[graft] def ivfIndex(path: String) = BucketedIndex("IVF", path,
+    path, Seq("list_id"), path + "_meta", "centroids", "writeIvfIndex",
+    "centroids or doc-bucket geometry")
 
   private def ivfWrite(vecs: DataFrame, embCol: String, idCol: String,
-      cents: Array[Array[Double]], nDocBuckets: Int): BucketedIndex.Write = {
-    val assigned = ivfAssign(vecs, embCol, cents)
-      .withColumn("dbk", pmod(col(idCol), lit(nDocBuckets.toLong))).cache()
+      cents: Array[Array[Double]], nDocBuckets: Int): BucketedIndex.Write =
     BucketedIndex.Write(
       Map("nDocBuckets" -> nDocBuckets.toString,
         "centroids" -> PartitionedIndexOps.matrixFingerprint(cents)),
-      idCol, Some(assigned), col("dbk"),
-      main = assigned.drop("dbk"),
-      side = assigned.select(col(idCol), col("list_id"), col("dbk")),
-      oldKeys = _.select(col("list_id")), owned = Seq(assigned))
-  }
+      idCol, Some(vecs), main = ivfAssign(vecs, embCol, cents))
 
   /** Probe a persisted IVF index: the list_id filter prunes partitions at
     * the file index, before any data is read. */
@@ -214,7 +207,8 @@ object Similarity {
       embCol: String, idCol: String, query: Array[Float], k: Int,
       probes: Seq[Int]): DataFrame = {
     val qv = array(query.map(lit): _*)
-    spark.read.parquet(path)
+    ivfIndex(path).requireBuilt(spark)
+    ivfIndex(path).read(spark)
       .filter(col("list_id").isInCollection(probes))
       .select(col(idCol),
         round(graft.functions.CosineSimilarity(col(embCol), qv), 4).as("sim"))

@@ -198,7 +198,7 @@ object SimilarityQueries {
     Similarity.writeIvfIndex(crawl1, "embedding", "vec_id", cents, path)
     Similarity.upsertIvfIndex(evens, "embedding", "vec_id", cents, path)
     val qv = array(qvec.map(lit): _*)
-    s.read.parquet(path)
+    Similarity.ivfIndex(path).read(s)
       .select(col("vec_id"),
         round(graft.functions.CosineSimilarity(col("embedding"), qv), 4)
           .as("sim"))
@@ -415,7 +415,7 @@ object SimilarityQueries {
     hybridRrf(s, d, compactFirst = false)
 
   /** q149: the SAME pipeline with a [[PartitionedIndexOps.compact]] pass
-    * over both indexes (and their side tables) between build and probe —
+    * over both indexes' main tables between build and probe —
     * maxFiles=0 forces every partition through the rewrite, so the shared
     * q148 oracle hash-fails on ANY row compaction loses, duplicates, or
     * reroutes. Gates the maintenance op a long ingest loop needs (every
@@ -441,13 +441,11 @@ object SimilarityQueries {
     val ipath = base.resolve("ivf").toString
     Similarity.writeIvfIndex(e, "embedding", "vec_id", cents, ipath)
     // compaction must precede ANY index read: a DataFrame captures its
-    // file listing when read.parquet plans the scan, and compaction
+    // file listing when the reader plans the scan, and compaction
     // replaces those files (FILE_NOT_EXIST on a stale plan otherwise)
     if (compactFirst) {
       PartitionedIndexOps.compact(s, fpath, "wb", maxFiles = 0)
-      PartitionedIndexOps.compact(s, fpath + "_docs", "db", maxFiles = 0)
       PartitionedIndexOps.compact(s, ipath, "list_id", maxFiles = 0)
-      PartitionedIndexOps.compact(s, ipath + "_docs", "dbk", maxFiles = 0)
     }
     val bm = Fts.bm25Scores(
         Fts.loadPostings(s, fpath, terms, nBuckets = 16),
@@ -576,7 +574,7 @@ object SimilarityQueries {
     val pq10 = IvfPq.probeIvfPqIndex(s, path, "embedding", "vec_id",
       qvec, 10, 0 until 8, books, rerank = 64)
     val qv = array(qvec.map(lit): _*)
-    val exactAll = s.read.parquet(path + "_refine")
+    val exactAll = IvfPq.index(path).readData(s)
       .select(col("vec_id"),
         round(graft.functions.CosineSimilarity(col("embedding"), qv), 4)
           .as("sim"))
@@ -626,7 +624,7 @@ object SimilarityQueries {
       batch => IvfPq.upsertIvfPqIndex(batch, "embedding", "vec_id", cents,
         books, idx))
     val qv = array(qvec.map(lit): _*)
-    s.read.parquet(idx + "_refine")
+    IvfPq.index(idx).readData(s)
       .select(col("vec_id"),
         round(graft.functions.CosineSimilarity(col("embedding"), qv), 4)
           .as("sim"))
@@ -794,7 +792,7 @@ object SimilarityQueries {
     LshIndex.writeLshIndex(crawl1, "embedding", "vec_id", planes, path)
     LshIndex.upsertLshIndex(evens, "embedding", "vec_id", planes, path)
     val qv = array(qvec.map(lit): _*)
-    s.read.parquet(path)
+    LshIndex.index(path).read(s)
       .select(col("vec_id"),
         round(graft.functions.CosineSimilarity(col("embedding"), qv), 4)
           .as("sim"))
@@ -973,7 +971,7 @@ object SimilarityQueries {
     LshIndex.upsertMultiLshIndex(evens, "embedding", "vec_id", planeSets,
       path)
     val qv = array(qvec.map(lit): _*)
-    s.read.parquet(path)
+    LshIndex.multiIndex(path).read(s)
       .select(col("vec_id"),
         round(graft.functions.CosineSimilarity(col("embedding"), qv), 4)
           .as("sim"))
@@ -1026,7 +1024,7 @@ object SimilarityQueries {
       batch => LshIndex.upsertMultiLshIndex(batch, "embedding", "vec_id",
         planeSets, idx))
     val qv = array(qvec.map(lit): _*)
-    s.read.parquet(idx)
+    LshIndex.multiIndex(idx).read(s)
       .select(col("vec_id"),
         round(graft.functions.CosineSimilarity(col("embedding"), qv), 4)
           .as("sim"))
@@ -1081,7 +1079,7 @@ object SimilarityQueries {
           4).as("sim"))
       .cache()
     try {
-      val served = s.read.parquet(path)
+      val served = Similarity.ivfIndex(path).read(s)
         .filter(col("list_id").isInCollection(hit))
         .join(probes, Seq("list_id"))
         .select(col("qid"), col("vec_id"))
@@ -1152,7 +1150,7 @@ object SimilarityQueries {
       val qidOf = qrows.map(_._1)
       val adcArr = array(luts.map(l =>
         Pq.adcScoreExpr(col("codes"), l)): _*)
-      val cand = s.read.parquet(path)
+      val cand = IvfPq.index(path).read(s)
         .filter(col("list_id").isInCollection(hit))
         .select(col("vec_id"), col("list_id"),
           posexplode(adcArr).as(Seq("qi", "adc")))

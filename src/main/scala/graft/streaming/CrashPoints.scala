@@ -13,7 +13,10 @@ package graft.streaming
   * point, the seam writes the marker (AFTER the pre-window writes are on
   * disk) and parks the thread. The parent watches for the marker and
   * sends a real SIGKILL — the process dies mid-commit with no shutdown
-  * hooks, exactly the crash the checkpoint+heal contract must absorb. */
+  * hooks, exactly the crash the checkpoint+heal contract must absorb.
+  * An in-process test parks a writer thread the same way and interrupts
+  * it, or sets `-Dgraft.crashpoint.mode=throw` to make the point throw
+  * instead of parking (a crash that leaves exactly the writes before it). */
 object CrashPoints {
   def reached(name: String): Unit =
     if (sys.props.get("graft.crashpoint").contains(name)) {
@@ -21,6 +24,8 @@ object CrashPoints {
         java.nio.file.Files.write(java.nio.file.Paths.get(m),
           name.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
-      while (true) Thread.sleep(1000) // parked until the parent's SIGKILL
+      if (sys.props.get("graft.crashpoint.mode").contains("throw"))
+        throw new IllegalStateException(s"crash point $name")
+      while (true) Thread.sleep(1000) // parked until SIGKILL or interrupt
     }
 }

@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Index compaction: fragmented partitions (one file per writing task —
-  * the shape a many-partition bulk build or a long ingest loop leaves)
-  * rewrite to one file each, content-identical, pins untouched. */
+  * the shape a many-partition bulk build or a long ingest loop of
+  * merge-on-read deltas leaves) fold to one file each, serving identical
+  * content, pins untouched; a pass that folds every partition also folds
+  * the tombstones away. */
 class CompactionSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -38,7 +40,7 @@ class CompactionSpec extends AnyFunSuite {
     // the rewrite read must prune at the file index — compacting a few hot
     // buckets cannot scan the rest of the index at scale
     val slicePlan = PartitionedIndexOps
-      .compactionSlice(spark, dir, "wb", Seq(0L))
+      .compactionSlice(spark, dir, "wb", Seq(0L), dir + "_meta")
       .queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*wb".r.findFirstIn(slicePlan).isDefined,
       s"expected wb partition pruning in plan:\n$slicePlan")
@@ -56,7 +58,7 @@ class CompactionSpec extends AnyFunSuite {
       Seq("alpha", "beta")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(resultsAfter == resultsBefore)
 
-    // the index stays maintainable: pin intact, upsert + side table healthy
+    // the index stays maintainable: pin intact, upserts still merge
     Fts.upsertPostingsIndex(Seq((7L, "alpha epsilon")).toDF("doc_id", "text"),
       dir, "doc_id", "text", nBuckets = 2, nDocBuckets = 2)
     assert(Fts.conjunctiveQuery(
@@ -85,8 +87,6 @@ class CompactionSpec extends AnyFunSuite {
     val post = Similarity.probeIvfIndex(spark, dir, "embedding", "vec_id",
       q, 10, 0 until 4).collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(post.toSeq == pre.toSeq)
-    // side table compacts with the same call
-    PartitionedIndexOps.compact(spark, dir + "_docs", "dbk", maxFiles = 1)
     Similarity.upsertIvfIndex(
       Seq((100L, Array(1f, 2f, 3f, 4f))).toDF("vec_id", "embedding"),
       "embedding", "vec_id", cents, dir, nDocBuckets = 2)
@@ -113,16 +113,24 @@ class CompactionSpec extends AnyFunSuite {
         q, 10, 0 until 4, books, rerank = 40)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val pre = probe()
+    // the upsert left deltas beside the build's files and 10 tombstones
+    val tombs = new java.io.File(dir + "_meta/tombstones")
+    assert(tombs.exists && parquetFiles(dir).values.exists(_ > 1))
     val rc = PartitionedIndexOps.compact(spark, dir, "list_id", maxFiles = 0)
     assert(rc.nonEmpty)
     PartitionedIndexOps.compact(spark, dir + "_refine", "dbk", maxFiles = 0)
-    rc.foreach(l => assert(parquetFiles(dir)(s"list_id=$l") == 1))
+    // folded: one file per partition, every stored row served, and no
+    // tombstone left (the pass folded every partition)
+    assert(parquetFiles(dir).values.forall(_ == 1), parquetFiles(dir))
+    assert(parquetFiles(dir + "_refine").values.forall(_ == 1))
+    assert(!tombs.exists, "tombstones survived a full fold")
+    assert(spark.read.parquet(dir).count() == 40)
     assert(probe() == pre)
     // and a post-compaction upsert still merges cleanly
     IvfPq.upsertIvfPqIndex(
       Seq((100L, Array(1f, 2f, 3f, 4f))).toDF("vec_id", "embedding"),
       "embedding", "vec_id", cents, books, dir, nDocBuckets = 2)
-    assert(spark.read.parquet(dir).count() == 41)
+    assert(IvfPq.index(dir).read(spark).count() == 41)
   }
 
   test("compact on a missing or un-fragmented index is a no-op") {
@@ -155,7 +163,7 @@ class CompactionSpec extends AnyFunSuite {
     }
     val before = pairFiles()
     assert(before.values.exists(_ > 2), s"expected fragmentation: $before")
-    def content() = spark.read.parquet(dir)
+    def content() = graft.operators.LshIndex.multiIndex(dir).read(spark)
       .select(col("vec_id"), col("tbl").cast("long"),
         col("bucket").cast("long"), col("embedding").cast("string"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -175,7 +183,7 @@ class CompactionSpec extends AnyFunSuite {
     // the index stays maintainable after compaction
     graft.operators.LshIndex.upsertMultiLshIndex(
       e.filter(col("vec_id") < 5), "embedding", "vec_id", planeSets, dir)
-    assert(spark.read.parquet(dir).count() ==
+    assert(graft.operators.LshIndex.multiIndex(dir).read(spark).count() ==
       Tables.embeddings(spark, TestSpark.sf0001).count() * 2)
   }
 }

@@ -1,97 +1,129 @@
 package graft
 
 import graft.operators.{DedupIndex, LshIndex, PartitionedIndexOps, Similarity}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Concurrent-writer guard on the persisted indexes: every family's
-  * upsert assumed ONE writer — two interleaved upserts could both pass
-  * the config-pin check and interleave their staged-overwrite /
-  * delete-vacated / side-table writes silently. The guard is a monotonic
-  * writer-version pin: claim at entry (before any data write), re-check
-  * immediately before the final commit write, abort on mismatch. These
-  * specs drive the loser's exact schedule through the shared primitives
-  * (a mid-call interleave can't be injected into a single-JVM API call
-  * without production hooks) and then assert the REAL upserts integrate
-  * the guard: each completed upsert advances the version by exactly one,
-  * and a writer whose claim was overtaken fails fast with the index left
-  * equal to the serial application of the winner.
+/** Concurrent writers on the persisted indexes. Every write claims a
+  * version by creating `claims/<v>` exclusively and publishes it by
+  * creating `commits/<v>` exclusively, in version order: two attempts
+  * never share a version, two writers never commit one version, and a
+  * writer overtaken by a newer commit aborts before publishing. These
+  * specs drive the loser's schedule through the shared primitives (a
+  * mid-call interleave can't be injected into a single-JVM API call
+  * without production hooks), race real threads on the compare-and-swap,
+  * and assert the REAL upserts integrate the protocol: each completed
+  * write commits exactly one new version, and an overtaken writer's retry
+  * converges to the serial application.
   */
 class ConcurrentWriterSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private lazy val e = Tables.embeddings(spark, TestSpark.sf0001).cache()
   private lazy val planes = Similarity.hyperplanes(64, 6)
 
-  private def fs = new org.apache.hadoop.fs.Path("/tmp")
+  private def fs = new Path("/tmp")
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  private def tmpMeta(tag: String) =
+    new Path(java.nio.file.Files.createTempDirectory(tag).toString, "_meta")
+
+  private def latest(meta: Path) =
+    PartitionedIndexOps.committedVersions(fs, meta).lastOption.getOrElse(0L)
+
+  /** Runs `n` bodies on `n` threads released at the same instant. */
+  private def race[T](n: Int)(body: Int => T): Seq[scala.util.Try[T]] = {
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val out = Array.fill[scala.util.Try[T]](n)(null)
+    val threads = (0 until n).map { i =>
+      new Thread(() => { go.await(); out(i) = scala.util.Try(body(i)) })
+    }
+    threads.foreach(_.start()); go.countDown(); threads.foreach(_.join())
+    out.toSeq
+  }
+
   test("claim/require primitives: monotonic claims, stale claim fails fast") {
-    val v = new org.apache.hadoop.fs.Path(
-      java.nio.file.Files.createTempDirectory("wv").resolve("version").toString)
-    assert(PartitionedIndexOps.readVersion(fs, v) == 0L)
-    val a = PartitionedIndexOps.claimVersion(fs, v)
-    assert(a.version == 1L)
-    PartitionedIndexOps.requireVersion(fs, v, a, "writer A") // holds
-    val b = PartitionedIndexOps.claimVersion(fs, v)
-    assert(b.version == 2L)
-    // A's final check after B claimed: must abort, and the message names
-    // the conflict
+    val meta = tmpMeta("wv")
+    assert(PartitionedIndexOps.committedVersions(fs, meta).isEmpty)
+    val a = PartitionedIndexOps.claimVersion(fs, meta)
+    assert(a == 1L)
+    val b = PartitionedIndexOps.claimVersion(fs, meta)
+    assert(b == 2L)
+    PartitionedIndexOps.commitVersion(fs, meta, b, "writer B")
+    // A's commit after B published a newer version: must abort, and the
+    // message names the conflict
     val ex = intercept[IllegalArgumentException] {
-      PartitionedIndexOps.requireVersion(fs, v, a, "writer A")
+      PartitionedIndexOps.commitVersion(fs, meta, a, "writer A")
     }
     assert(ex.getMessage.contains("concurrent writer"))
-    PartitionedIndexOps.requireVersion(fs, v, b, "writer B") // winner holds
+    assert(PartitionedIndexOps.committedVersions(fs, meta) == Seq(2L))
+    // A's retry claims past every claim, committed or not
+    val retry = PartitionedIndexOps.claimVersion(fs, meta)
+    assert(retry == 3L)
+    PartitionedIndexOps.commitVersion(fs, meta, retry, "writer A retry")
+    assert(PartitionedIndexOps.committedVersions(fs, meta) == Seq(2L, 3L))
   }
 
   test("simultaneous claim of the same version: at most one writer validates") {
-    // the hole a bare counter leaves open: A and B both read version v
-    // before either publishes, both claim v+1, and a version-only check
-    // passes BOTH. With the writer token, the pin can hold only one
-    // writer's token at commit time — the overwritten claimer aborts,
-    // and the abort message names the simultaneous claim.
-    val v = new org.apache.hadoop.fs.Path(
-      java.nio.file.Files.createTempDirectory("wv2").resolve("version").toString)
-    val a = PartitionedIndexOps.claimVersion(fs, v) // A publishes 1:tokA
-    val b = PartitionedIndexOps.claimVersion(fs, v) // B overwrites: 2:tokB
-    // simulate the same-version race directly: force the pin to B's token
-    // under A's version number (as if both read 0 and both wrote 1)
-    PartitionedIndexOps.writePin(fs, v, s"${a.version}:${b.token}")
-    val ex = intercept[IllegalArgumentException] {
-      PartitionedIndexOps.requireVersion(fs, v, a, "writer A")
-    }
-    assert(ex.getMessage.contains("simultaneous claim"))
-    PartitionedIndexOps.requireVersion(fs, v,
-      PartitionedIndexOps.VersionClaim(a.version, b.token), "writer B")
+    // the hole a read-then-write counter leaves open: writers that read
+    // the same latest version would all claim the next one. Claims are
+    // exclusive creates, so eight racing claimers get eight versions…
+    val meta = tmpMeta("wv2")
+    val claims = race(8)(_ => PartitionedIndexOps.claimVersion(fs, meta))
+    assert(claims.forall(_.isSuccess), claims)
+    assert(claims.map(_.get).sorted == (1L to 8L), claims)
+    // …and eight writers racing to commit ONE version: exactly one wins,
+    // every other attempt fails naming the version
+    val commits = race(8)(i =>
+      PartitionedIndexOps.commitVersion(fs, meta, 5L, s"writer $i"))
+    assert(commits.count(_.isSuccess) == 1, commits)
+    assert(commits.filter(_.isFailure).forall(_.failed.get.getMessage
+      .contains("already committed")), commits)
+    assert(PartitionedIndexOps.committedVersions(fs, meta) == Seq(5L))
   }
 
-  test("legacy bare-counter version pins never validate a tokened claim") {
-    val v = new org.apache.hadoop.fs.Path(
-      java.nio.file.Files.createTempDirectory("wv3").resolve("version").toString)
-    PartitionedIndexOps.writePin(fs, v, "7") // pre-token format
-    assert(PartitionedIndexOps.readVersion(fs, v) == 7L)
-    val c = PartitionedIndexOps.claimVersion(fs, v)
-    assert(c.version == 8L)
-    PartitionedIndexOps.requireVersion(fs, v, c, "writer") // own claim holds
+  test("a copy-on-write index fails loudly on its missing layout key") {
+    val dir = java.nio.file.Files.createTempDirectory("lsh_legacy_layout")
+      .resolve("idx").toString
+    val evens = e.filter(col("vec_id") % 2 === 0)
+      .select(col("vec_id"), col("embedding"))
+    LshIndex.writeLshIndex(evens, "embedding", "vec_id", planes, dir)
+    // strip the layout line, as the copy-on-write protocol wrote its pins
+    val pin = new Path(dir + "_meta/config")
+    val stripped = PartitionedIndexOps.readPin(fs, pin).get.linesIterator
+      .filterNot(_.startsWith("layout=")).mkString("\n")
+    PartitionedIndexOps.writePin(fs, pin, stripped)
+    val up = intercept[IllegalArgumentException] {
+      LshIndex.upsertLshIndex(e.filter(col("vec_id") === 1L)
+        .select(col("vec_id"), col("embedding")),
+        "embedding", "vec_id", planes, dir)
+    }
+    assert(up.getMessage.contains("layout=<absent> on disk"), up.getMessage)
+    val probe = intercept[IllegalArgumentException] {
+      LshIndex.probeLshIndex(spark, dir, "embedding", "vec_id",
+        e.select(col("embedding")).head.getSeq[Float](0).toArray, 5, planes)
+    }
+    assert(probe.getMessage.contains("without the layout key"),
+      probe.getMessage)
   }
 
   test("dedup index: overtaken writer fails fast; index equals the winner's serial application") {
     val dir = java.nio.file.Files.createTempDirectory("dedup_conc")
       .resolve("idx").toString
-    val vPath = new org.apache.hadoop.fs.Path(dir + "/_meta/version")
+    val meta = new Path(dir + "/_meta")
     val docs = Tables.documents(spark, TestSpark.sf0001)
       .select(col("doc_id"), col("text"))
     DedupIndex.writeSignatureIndex(docs.filter(col("doc_id") % 5 < 3), dir)
-    val v0 = PartitionedIndexOps.readVersion(fs, vPath)
-    assert(v0 == 1L, "bulk build should have claimed version 1")
+    assert(latest(meta) == 1L, "bulk build should have committed version 1")
     // writer A enters (claims) but stalls before any write; writer B then
     // runs a complete real upsert
-    val claimedA = PartitionedIndexOps.claimVersion(fs, vPath)
+    val claimedA = PartitionedIndexOps.claimVersion(fs, meta)
     DedupIndex.upsertSignatureIndex(docs.filter(col("doc_id") % 5 === 3), dir)
-    assert(PartitionedIndexOps.readVersion(fs, vPath) == claimedA.version + 1,
-      "a completed upsert must advance the version by exactly one")
-    // A resumes at its commit point: the guard the upserts call must abort
+    assert(latest(meta) == claimedA + 1,
+      "a completed upsert must commit exactly one newer version")
+    // A resumes at its commit point: the protocol must abort it
     val ex = intercept[IllegalArgumentException] {
-      PartitionedIndexOps.requireVersion(fs, vPath, claimedA,
+      PartitionedIndexOps.commitVersion(fs, meta, claimedA,
         "dedup index upsert (writer A)")
     }
     assert(ex.getMessage.contains("concurrent writer"))
@@ -112,24 +144,24 @@ class ConcurrentWriterSpec extends AnyFunSuite {
   test("LSH index: upsert and bulk build both advance the version; stale claim aborts") {
     val dir = java.nio.file.Files.createTempDirectory("lsh_conc")
       .resolve("idx").toString
-    val vPath = new org.apache.hadoop.fs.Path(dir + "_meta/version")
+    val meta = new Path(dir + "_meta")
     val evens = e.filter(col("vec_id") % 2 === 0)
       .select(col("vec_id"), col("embedding"))
     LshIndex.writeLshIndex(evens, "embedding", "vec_id", planes, dir)
-    assert(PartitionedIndexOps.readVersion(fs, vPath) == 1L)
-    val claimedA = PartitionedIndexOps.claimVersion(fs, vPath)
+    assert(latest(meta) == 1L)
+    val claimedA = PartitionedIndexOps.claimVersion(fs, meta)
     LshIndex.upsertLshIndex(
       e.filter(col("vec_id") % 2 === 1).select(col("vec_id"), col("embedding")),
       "embedding", "vec_id", planes, dir)
-    assert(PartitionedIndexOps.readVersion(fs, vPath) == claimedA.version + 1)
+    assert(latest(meta) == claimedA + 1)
     val ex = intercept[IllegalArgumentException] {
-      PartitionedIndexOps.requireVersion(fs, vPath, claimedA,
+      PartitionedIndexOps.commitVersion(fs, meta, claimedA,
         "LSH index upsert (writer A)")
     }
     assert(ex.getMessage.contains("concurrent writer"))
-    // version survives (sibling _meta) and keeps advancing across a bulk
+    // versions survive (sibling _meta) and keep advancing across a bulk
     // REBUILD that wipes the data dir
     LshIndex.writeLshIndex(evens, "embedding", "vec_id", planes, dir)
-    assert(PartitionedIndexOps.readVersion(fs, vPath) == claimedA.version + 2)
+    assert(latest(meta) == claimedA + 2)
   }
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** An EMPTY batch upsert must leave every persisted index bit-identical —
+/** An EMPTY batch upsert must leave every persisted index bit-identical,
+  * claiming no version —
   * foreachBatch routinely delivers empty micro-batches (trigger fired, no
   * new files), and each index's documented ingest loop (q145/q154/q160)
   * would hit this on every idle tick. Also pins the empty-batch behavior
@@ -19,21 +20,25 @@ class EmptyBatchSpec extends AnyFunSuite {
   private def dir(name: String): String =
     java.nio.file.Files.createTempDirectory(name).resolve("idx").toString
 
+  /** The stored rows of `path` (no version), as an unchanged directory
+    * would hold them. */
   private def snapshot(path: String, cols: Seq[String]): Set[String] =
     spark.read.parquet(path)
       .select(cols.map(c => col(c).cast("string")): _*)
       .collect().map(_.mkString("|")).toSet
 
+  private def claims(meta: String): Int =
+    Option(new java.io.File(meta, "claims").list()).fold(0)(_.length)
+
   test("lsh index: empty upsert is a no-op") {
     val planes = Similarity.hyperplanes(64, 6)
     val idx = dir("empty_lsh")
     LshIndex.writeLshIndex(e, "embedding", "vec_id", planes, idx)
-    val before = snapshot(idx, Seq("vec_id", "bucket"))
-    val side = snapshot(idx + "_docs", Seq("vec_id", "bucket", "dbk"))
+    val before = snapshot(idx, Seq("vec_id", "bucket", "_v"))
     LshIndex.upsertLshIndex(e.filter(lit(false)), "embedding", "vec_id",
       planes, idx)
-    assert(snapshot(idx, Seq("vec_id", "bucket")) == before)
-    assert(snapshot(idx + "_docs", Seq("vec_id", "bucket", "dbk")) == side)
+    assert(snapshot(idx, Seq("vec_id", "bucket", "_v")) == before)
+    assert(claims(idx + "_meta") == 1)
   }
 
   test("multi-table lsh index: empty upsert is a no-op") {
@@ -42,14 +47,12 @@ class EmptyBatchSpec extends AnyFunSuite {
     val idx = dir("empty_mlsh")
     LshIndex.writeMultiLshIndex(e.select(col("vec_id"), col("embedding")),
       "embedding", "vec_id", planeSets, idx)
-    val before = snapshot(idx, Seq("vec_id", "tbl", "bucket"))
-    val side = snapshot(idx + "_docs", Seq("vec_id", "tbl", "bucket", "dbk"))
+    val before = snapshot(idx, Seq("vec_id", "tbl", "bucket", "_v"))
     LshIndex.upsertMultiLshIndex(
       e.filter(lit(false)).select(col("vec_id"), col("embedding")),
       "embedding", "vec_id", planeSets, idx)
-    assert(snapshot(idx, Seq("vec_id", "tbl", "bucket")) == before)
-    assert(snapshot(idx + "_docs",
-      Seq("vec_id", "tbl", "bucket", "dbk")) == side)
+    assert(snapshot(idx, Seq("vec_id", "tbl", "bucket", "_v")) == before)
+    assert(claims(idx + "_meta") == 1)
   }
 
   test("ivf index: empty upsert is a no-op") {
@@ -60,6 +63,7 @@ class EmptyBatchSpec extends AnyFunSuite {
     Similarity.upsertIvfIndex(e.filter(lit(false)), "embedding", "vec_id",
       cents, idx)
     assert(snapshot(idx, Seq("vec_id", "list_id")) == before)
+    assert(claims(idx + "_meta") == 1)
   }
 
   test("ivf-pq index: empty upsert is a no-op") {
@@ -73,6 +77,7 @@ class EmptyBatchSpec extends AnyFunSuite {
       cents, books, idx)
     assert(snapshot(idx, Seq("vec_id", "list_id")) == before)
     assert(snapshot(idx + "_refine", Seq("vec_id", "list_id", "dbk")) == ref)
+    assert(claims(idx + "_meta") == 1)
   }
 
   test("fts postings index: empty upsert is a no-op") {
@@ -84,6 +89,7 @@ class EmptyBatchSpec extends AnyFunSuite {
     Fts.upsertPostingsIndex(docs.filter(lit(false)), idx, "doc_id", "text",
       nBuckets = 16, nDocBuckets = 16)
     assert(snapshot(idx, Seq("word", "doc_id", "tf")) == before)
+    assert(claims(idx + "_meta") == 1)
   }
 
   test("dedup signature index: empty upsert is a no-op; empty probe finds nothing") {
@@ -92,6 +98,7 @@ class EmptyBatchSpec extends AnyFunSuite {
     val bands = snapshot(idx + "/bands", Seq("doc_id", "band", "bh"))
     DedupIndex.upsertSignatureIndex(docs.filter(lit(false)), idx)
     assert(snapshot(idx + "/bands", Seq("doc_id", "band", "bh")) == bands)
+    assert(claims(idx + "/_meta") == 1)
     val pairs = DedupIndex.probeIndex(spark, idx, docs.filter(lit(false)))
     assert(pairs.count() == 0)
     // the capped probe's stats/collapse branch must survive an empty

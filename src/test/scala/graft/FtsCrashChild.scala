@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 /** Driver JVM for [[FtsCrashRecoverySpec]]: runs the q160-shaped 3-slice
   * streaming FTS ingest (bulk build → append batch → re-crawl batch)
   * under `<base>/stream` with the postings index at `<base>/postings`.
-  * With `-Dgraft.crashpoint=fts.upsert.between-writes` set, the first
-  * merge-branch upsert (batch 1) parks between its two writes so the
-  * parent can SIGKILL this process; without it, the drain runs to
+  * With `-Dgraft.crashpoint=<point>` set (an `fts.upsert.*` step), the
+  * first merge-branch upsert (batch 1) parks there so the parent can
+  * SIGKILL this process; without it, the drain runs to
   * completion (resuming from the checkpoint if one exists) and writes
   * `<base>/done`. */
 object FtsCrashChild {

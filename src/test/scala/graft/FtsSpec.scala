@@ -114,7 +114,7 @@ class FtsSpec extends AnyFunSuite {
     // doc 2 re-crawled with new text; doc 3 is new
     val batch = Seq((2L, "alpha epsilon"), (3L, "zeta beta")).toDF("doc_id", "text")
     Fts.upsertPostingsIndex(batch, dir, "doc_id", "text", nBuckets = 8)
-    val got = spark.read.parquet(dir)
+    val got = Fts.index(dir).read(spark)
       .select(col("word"), col("doc_id")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     val expected = Fts.positionalPostings(
@@ -142,8 +142,8 @@ class FtsSpec extends AnyFunSuite {
 
   test("re-crawl that vacates a term bucket leaves no stale postings behind") {
     // doc 2's only word disappears on re-crawl; its old bucket ends up
-    // with ZERO rows, which dynamic partition overwrite alone would never
-    // rewrite — the explicit affected-partition delete must kill it
+    // with ZERO served rows — doc 2's tombstone must retire the posting
+    // in a bucket the batch never writes
     val dir = java.nio.file.Files.createTempDirectory("fts_vacate").toString
     val v1 = Seq((1L, "alpha"), (2L, "gamma")).toDF("doc_id", "text")
     Fts.writePostingsIndex(Fts.positionalPostings(v1, "doc_id", "text"),
@@ -153,7 +153,7 @@ class FtsSpec extends AnyFunSuite {
     assume(wbOf("gamma") != wbOf("alpha"), "need distinct buckets for this test")
     Fts.upsertPostingsIndex(Seq((2L, "alpha")).toDF("doc_id", "text"),
       dir, "doc_id", "text", nBuckets = 64)
-    val left = spark.read.parquet(dir)
+    val left = Fts.index(dir).read(spark)
       .select(col("word"), col("doc_id")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     assert(left == Set(("alpha", 1L), ("alpha", 2L)), s"stale postings: $left")
@@ -201,21 +201,24 @@ class FtsSpec extends AnyFunSuite {
       .count() == 1)
   }
 
-  test("upsert recovers when the _docs side table is missing (interrupted bulk build)") {
-    val dir = java.nio.file.Files.createTempDirectory("fts_nometa").toString
+  test("an upsert after a build interrupted before its commit serves only committed rows") {
+    val dir = java.nio.file.Files.createTempDirectory("fts_nocommit").toString
     val v1 = Seq((1L, "alpha"), (2L, "gamma")).toDF("doc_id", "text")
     Fts.writePostingsIndex(Fts.positionalPostings(v1, "doc_id", "text"),
       dir, nBuckets = 64)
-    TempDirs.rmTree(java.nio.file.Paths.get(dir + "_docs")) // simulate the crash
+    // simulate the crash: the build's rows and pin are on disk, its commit
+    // marker is not
+    assert(new java.io.File(dir + "_meta/commits/1").delete())
+    assert(Fts.loadPostings(spark, dir, Seq("alpha", "gamma"),
+      nBuckets = 64).count() == 0, "an uncommitted build is served")
     Fts.upsertPostingsIndex(Seq((2L, "alpha")).toDF("doc_id", "text"),
       dir, "doc_id", "text", nBuckets = 64)
-    val left = spark.read.parquet(dir)
+    val left = Fts.index(dir).read(spark)
       .select(col("word"), col("doc_id")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
-    // doc 2's old gamma posting still dies: meta was rebuilt from the index
-    assert(left == Set(("alpha", 1L), ("alpha", 2L)), s"stale postings: $left")
-    // and the side table is restored for the next batch
-    assert(new java.io.File(dir + "_docs").exists)
+    assert(left == Set(("alpha", 2L)), s"uncommitted rows served: $left")
+    // the uncommitted build's version is never reused
+    assert(new java.io.File(dir + "_meta/commits").list().toSeq == Seq("2"))
   }
 
   test("random overlapping upsert sequences equal a from-scratch build") {
@@ -243,7 +246,7 @@ class FtsSpec extends AnyFunSuite {
       latest.toSeq.toDF("doc_id", "text"), "doc_id", "text")
       .select(col("word"), col("doc_id"), col("tf")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val got = spark.read.parquet(dir)
+    val got = Fts.index(dir).read(spark)
       .select(col("word"), col("doc_id"), col("tf")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == expected)
@@ -285,7 +288,7 @@ class FtsSpec extends AnyFunSuite {
     val expected = Fts.positionalPostings(finalCorpus, "doc_id", "text")
       .select(col("word"), col("doc_id"), col("tf")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val got = spark.read.parquet(idx)
+    val got = Fts.index(idx).read(spark)
       .select(col("word"), col("doc_id"), col("tf")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == expected)

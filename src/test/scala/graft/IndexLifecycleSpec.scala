@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, DedupIndex, Fts, IvfPq, LshIndex,
+import graft.operators.{BucketedIndex, DedupIndex, Fts, IvfPq, LshIndex,
   PartitionedIndexOps, Pq, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,20 +12,23 @@ import org.scalatest.funsuite.AnyFunSuite
   * invariant added to [[IndexLifecycleSpec.families]]'s loop lands in all
   * six families at once.
   *
-  * Matrix invariants (× every family):
-  *   1. writer guard + heal + re-crawl: a completed op advances the
-  *      version by exactly one; an overtaken writer's stale claim aborts
-  *      naming the conflict; the overtaken writer's documented recovery
-  *      (retry the same batch) converges to the serial application — and
-  *      the converged index is CONTENT-identical to a from-scratch bulk
-  *      build over the final corpus (re-crawled rows replaced, not
-  *      duplicated).
-  *   2. compaction: compacting fragmented partitions (maxFiles=1) rewrites
-  *      at least one partition of the main table, never increases the
-  *      file count, and leaves every table's CONTENT byte-identical.
+  * Matrix invariants (× every family), content always read through the
+  * index's one reader ([[BucketedIndex.read]] / `readData`):
+  *   1. writer guard + heal + re-crawl: a completed op commits exactly
+  *      one newer version; an overtaken writer's commit aborts naming the
+  *      conflict; the overtaken writer's documented recovery (retry the
+  *      same batch) converges to the serial application — and the
+  *      converged index is CONTENT-identical to a from-scratch bulk build
+  *      over the final corpus (re-crawled rows replaced, not duplicated).
+  *   2. compaction: folding fragmented partitions (maxFiles=1) rewrites
+  *      at least one partition of the main table, shrinks the file count,
+  *      and leaves the served CONTENT byte-identical.
   *   3. validate before claiming: a duplicate-id batch sent to the bulk
-  *      build and to an upsert throws "duplicate" and leaves the version
-  *      pin and every table's content unchanged.
+  *      build and to an upsert throws "duplicate" and leaves the claims,
+  *      the commits and the served content unchanged.
+  *   4. crash at any write step: an upsert stopped at each of its crash
+  *      points in turn leaves the served content unchanged, and the
+  *      same-batch retry converges to the scratch build.
   *
   * Family-SPECIFIC semantics (pruned-scan shapes, payload pins, vacated
   * buckets, recall) stay in the per-family specs; this matrix owns only
@@ -72,9 +75,9 @@ class IndexLifecycleSpec extends AnyFunSuite {
     Pq.trainCodebooks(vecs, "embedding", "vec_id", m = 8, k = 16)
 
   /** Everything the matrix needs to drive one family through the shared
-    * lifecycle. `tables` lists (path-suffix, partCols) of every persisted
-    * table; content equality reads them all. `checkedBuild` is the bulk
-    * build that owns the duplicate-id check, when `build` does not. */
+    * lifecycle. `index` is the family's table layout; `checkedBuild` is
+    * the bulk build that owns the duplicate-id check, when `build` does
+    * not. */
   private final case class Family(
       name: String,
       build: (DataFrame, String) => Unit,
@@ -82,21 +85,40 @@ class IndexLifecycleSpec extends AnyFunSuite {
       corpusA: () => DataFrame,
       batchB: () => DataFrame,
       corpusFinal: () => DataFrame,
-      tables: Seq[(String, Seq[String])],
-      versionPath: String => org.apache.hadoop.fs.Path,
+      index: String => BucketedIndex,
       checkedBuild: Option[(DataFrame, String) => Unit] = None)
 
-  /** Canonical content of every table of the index at `path`: row strings
-    * tagged by table, column order normalized — layout-independent, so it
-    * is invariant under compaction and equal across upsert-vs-scratch
-    * builds exactly when the logical content matches. */
-  private def content(f: Family, path: String): Set[String] =
-    f.tables.flatMap { case (suffix, _) =>
-      val df = spark.read.parquet(path + suffix)
-      val cols = df.columns.sorted.toSeq
-      df.select(cols.map(col): _*).collect()
-        .map(r => suffix + "|" + r.toString)
+  private def meta(f: Family, path: String) =
+    new org.apache.hadoop.fs.Path(f.index(path).meta)
+
+  private def commits(f: Family, path: String) =
+    PartitionedIndexOps.committedVersions(fs, meta(f, path))
+
+  private def claims(f: Family, path: String): Set[String] = {
+    val d = new org.apache.hadoop.fs.Path(meta(f, path), "claims")
+    if (!fs.exists(d)) Set.empty
+    else fs.listStatus(d).map(_.getPath.getName).toSet
+  }
+
+  /** Canonical served content of the index at `path`: the reader's rows
+    * of the main and data tables, tagged by table, column order
+    * normalized — layout-independent, so it is invariant under compaction
+    * and equal across upsert-vs-scratch builds exactly when the logical
+    * content matches. */
+  private def content(f: Family, path: String): Set[String] = {
+    val idx = f.index(path)
+    (Seq("main" -> idx.read(spark)) ++
+      idx.data.map(_ => "data" -> idx.readData(spark))).flatMap {
+      case (tag, df) =>
+        val cols = df.columns.sorted.toSeq
+        df.select(cols.map(col): _*).collect().map(r => tag + "|" + r)
     }.toSet
+  }
+
+  private def tableDirs(f: Family, path: String): Seq[String] = {
+    val idx = f.index(path)
+    idx.main +: idx.data.map(_._1).toSeq
+  }
 
   private def parquetFiles(dir: String): Int = {
     def walk(d: java.io.File): Int =
@@ -108,15 +130,18 @@ class IndexLifecycleSpec extends AnyFunSuite {
     walk(new java.io.File(dir))
   }
 
-  private def compactAll(f: Family, path: String): Seq[Long] =
-    f.tables.flatMap { case (suffix, partCols) =>
-      if (partCols.length == 2)
-        PartitionedIndexOps.compactMulti(spark, path + suffix, partCols,
-          maxFiles = 1).map(_._2)
-      else
-        PartitionedIndexOps.compact(spark, path + suffix, partCols.head,
-          maxFiles = 1)
-    }
+  private def compactAll(f: Family, path: String): Seq[Long] = {
+    val idx = f.index(path)
+    (if (idx.mainParts.length == 2)
+      PartitionedIndexOps.compactMulti(spark, idx.main, idx.mainParts,
+        maxFiles = 1, meta = Some(idx.meta)).map(_._2)
+    else
+      PartitionedIndexOps.compact(spark, idx.main, idx.mainParts.head,
+        maxFiles = 1, meta = Some(idx.meta))) ++
+      idx.data.toSeq.flatMap { case (dir, bucket) =>
+        PartitionedIndexOps.compact(spark, dir, bucket, maxFiles = 1)
+      }
+  }
 
   private def tmp(tag: String): String = java.nio.file.Files
     .createTempDirectory(s"lifecycle_$tag").resolve("idx").toString
@@ -127,8 +152,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
       upsert = (b, p) => DedupIndex.upsertSignatureIndex(b, p),
       corpusA = () => docsA, batchB = () => docsB,
       corpusFinal = () => docsFinal,
-      tables = Seq("/bands" -> Seq("wb"), "/shingles" -> Seq("dbk")),
-      versionPath = p => new org.apache.hadoop.fs.Path(p + "/_meta/version")),
+      index = DedupIndex.index),
     Family("lsh",
       build = (c, p) =>
         LshIndex.writeLshIndex(c, "embedding", "vec_id", planes, p),
@@ -136,8 +160,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
         LshIndex.upsertLshIndex(b, "embedding", "vec_id", planes, p),
       corpusA = () => vecsA, batchB = () => vecsB,
       corpusFinal = () => vecsFinal,
-      tables = Seq("" -> Seq("bucket"), "_docs" -> Seq("dbk")),
-      versionPath = p => new org.apache.hadoop.fs.Path(p + "_meta/version")),
+      index = LshIndex.index),
     Family("multi-lsh",
       build = (c, p) =>
         LshIndex.writeMultiLshIndex(c, "embedding", "vec_id", planeSets, p),
@@ -145,8 +168,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
         LshIndex.upsertMultiLshIndex(b, "embedding", "vec_id", planeSets, p),
       corpusA = () => vecsA, batchB = () => vecsB,
       corpusFinal = () => vecsFinal,
-      tables = Seq("" -> Seq("tbl", "bucket"), "_docs" -> Seq("dbk")),
-      versionPath = p => new org.apache.hadoop.fs.Path(p + "_meta/version")),
+      index = LshIndex.multiIndex),
     Family("ivf",
       build = (c, p) =>
         Similarity.writeIvfIndex(c, "embedding", "vec_id", cents, p),
@@ -154,8 +176,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
         Similarity.upsertIvfIndex(b, "embedding", "vec_id", cents, p),
       corpusA = () => vecsA, batchB = () => vecsB,
       corpusFinal = () => vecsFinal,
-      tables = Seq("" -> Seq("list_id"), "_docs" -> Seq("dbk")),
-      versionPath = p => new org.apache.hadoop.fs.Path(p + "_meta/version")),
+      index = Similarity.ivfIndex),
     Family("ivf-pq",
       build = (c, p) =>
         IvfPq.writeIvfPqIndex(c, "embedding", "vec_id", cents, books, p),
@@ -163,8 +184,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
         IvfPq.upsertIvfPqIndex(b, "embedding", "vec_id", cents, books, p),
       corpusA = () => vecsA, batchB = () => vecsB,
       corpusFinal = () => vecsFinal,
-      tables = Seq("" -> Seq("list_id"), "_refine" -> Seq("dbk")),
-      versionPath = p => new org.apache.hadoop.fs.Path(p + "_meta/version")),
+      index = IvfPq.index),
     Family("fts-postings",
       build = (c, p) => Fts.writePostingsIndex(
         Fts.positionalPostings(c, "doc_id", "text"), p,
@@ -173,8 +193,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
         nBuckets = 8, nDocBuckets = 8),
       corpusA = () => docsA, batchB = () => docsB,
       corpusFinal = () => docsFinal,
-      tables = Seq("" -> Seq("wb"), "_docs" -> Seq("db")),
-      versionPath = p => new org.apache.hadoop.fs.Path(p + "_meta/version"),
+      index = Fts.index,
       // writePostingsIndex takes postings, not docs: the facade's build
       // is the one keyed by doc id
       checkedBuild = Some((c, p) =>
@@ -186,18 +205,17 @@ class IndexLifecycleSpec extends AnyFunSuite {
       "converges to the scratch build") {
       val dir = tmp(f.name.replace('-', '_'))
       f.build(f.corpusA(), dir)
-      val vp = f.versionPath(dir)
-      assert(PartitionedIndexOps.readVersion(fs, vp) == 1L,
-        s"${f.name}: bulk build must claim version 1")
+      assert(commits(f, dir) == Seq(1L),
+        s"${f.name}: bulk build must commit version 1")
       // writer A claims, then stalls; writer B completes a real upsert
-      val stale = PartitionedIndexOps.claimVersion(fs, vp)
+      val stale = PartitionedIndexOps.claimVersion(fs, meta(f, dir))
       f.upsert(f.batchB(), dir)
-      assert(PartitionedIndexOps.readVersion(fs, vp) == stale.version + 1,
-        s"${f.name}: a completed upsert must advance the version by one")
-      // A resumes at its commit point: the guard must abort, naming the
+      assert(commits(f, dir) == Seq(1L, stale + 1),
+        s"${f.name}: a completed upsert must commit exactly one version")
+      // A resumes at its commit point: the protocol must abort, naming the
       // conflict
       val ex = intercept[IllegalArgumentException] {
-        PartitionedIndexOps.requireVersion(fs, vp, stale,
+        PartitionedIndexOps.commitVersion(fs, meta(f, dir), stale,
           s"${f.name} upsert (writer A)")
       }
       assert(ex.getMessage.contains("concurrent writer"))
@@ -220,12 +238,12 @@ class IndexLifecycleSpec extends AnyFunSuite {
       f.build(f.corpusA(), dir)
       f.upsert(f.batchB(), dir)
       val before = content(f, dir)
-      val filesBefore = f.tables.map { case (s, _) => parquetFiles(dir + s) }.sum
+      val filesBefore = tableDirs(f, dir).map(parquetFiles).sum
       val rewrote = compactAll(f, dir)
       assert(rewrote.nonEmpty,
         s"${f.name}: an 8-input-partition build plus an upsert must leave " +
           "at least one partition fragmented past maxFiles=1")
-      val filesAfter = f.tables.map { case (s, _) => parquetFiles(dir + s) }.sum
+      val filesAfter = tableDirs(f, dir).map(parquetFiles).sum
       assert(filesAfter < filesBefore,
         s"${f.name}: compaction must shrink the data-file count " +
           s"($filesBefore -> $filesAfter)")
@@ -243,8 +261,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
       "or write, in the bulk build and the upsert") {
       val dir = tmp(f.name.replace('-', '_') + "_dup")
       f.build(f.corpusA(), dir)
-      val vp = f.versionPath(dir)
-      val pin = PartitionedIndexOps.readPin(fs, vp)
+      val versions = (claims(f, dir), commits(f, dir))
       val before = content(f, dir)
       val b = f.batchB()
       val dup = b.unionByName(b.limit(1))
@@ -254,10 +271,38 @@ class IndexLifecycleSpec extends AnyFunSuite {
         val ex = intercept[IllegalArgumentException](write(dup, dir))
         assert(ex.getMessage.contains("duplicate"),
           s"${f.name} $what: ${ex.getMessage}")
-        assert(PartitionedIndexOps.readPin(fs, vp) == pin,
-          s"${f.name} $what: a rejected batch moved the version pin")
+        assert((claims(f, dir), commits(f, dir)) == versions,
+          s"${f.name} $what: a rejected batch claimed or committed a version")
         assert(content(f, dir) == before,
           s"${f.name} $what: a rejected batch changed index content")
       }
+    }
+
+  // ---- invariant 4: a crash at any write step changes nothing served ----
+  for (f <- families)
+    test(s"${f.name}: an upsert stopped at each write step changes nothing " +
+      "served; the same-batch retry converges to the scratch build") {
+      val dir = tmp(f.name.replace('-', '_') + "_crash")
+      f.build(f.corpusA(), dir)
+      val before = content(f, dir)
+      val prefix = f.index(dir).name
+      val points = Seq("claimed", "between-writes", "tombstoned", "staged")
+      sys.props("graft.crashpoint.mode") = "throw"
+      try points.foreach { p =>
+        sys.props("graft.crashpoint") = s"$prefix.upsert.$p"
+        val ex = intercept[IllegalStateException](f.upsert(f.batchB(), dir))
+        assert(ex.getMessage == s"crash point $prefix.upsert.$p")
+        if (p != "staged" || f.index(dir).data.isEmpty)
+          assert(content(f, dir) == before,
+            s"${f.name}: an upsert stopped at $p changed the served content")
+      } finally {
+        sys.props -= "graft.crashpoint"; sys.props -= "graft.crashpoint.mode"
+      }
+      assert(commits(f, dir) == Seq(1L), s"${f.name}: a crash committed")
+      f.upsert(f.batchB(), dir)
+      val scratch = tmp(f.name.replace('-', '_') + "_crash_scratch")
+      f.build(f.corpusFinal(), scratch)
+      assert(content(f, dir) == content(f, scratch),
+        s"${f.name}: the retry after four crashed attempts diverges")
     }
 }

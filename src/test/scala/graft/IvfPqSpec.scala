@@ -49,7 +49,7 @@ class IvfPqSpec extends AnyFunSuite {
     assert("PartitionFilters: \\[[^\\]]*dbk".r.findFirstIn(planStr).isDefined,
       s"expected dbk partition pruning in re-rank plan:\n$planStr")
     // codes partitions store codes, not embeddings (the 32x scan cut)
-    val codesSchema = spark.read.parquet(dir).schema.fieldNames.toSet
+    val codesSchema = IvfPq.index(dir).read(spark).schema.fieldNames.toSet
     assert(codesSchema == Set("vec_id", "codes", "list_id"))
   }
 
@@ -93,7 +93,7 @@ class IvfPqSpec extends AnyFunSuite {
     val scratch = java.nio.file.Files.createTempDirectory("ivfpq_scratch")
       .resolve("idx").toString
     IvfPq.writeIvfPqIndex(e, "embedding", "vec_id", cents, books, scratch)
-    def codesOf(p: String) = spark.read.parquet(p)
+    def codesOf(p: String) = IvfPq.index(p).read(spark)
       .select(col("vec_id"), col("list_id").cast("int"),
         col("codes").cast("string"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
@@ -104,7 +104,7 @@ class IvfPqSpec extends AnyFunSuite {
       .collect().map(r =>
         (r.getLong(0), r.getInt(1), r.getLong(2), r.getString(3))).toSet
     assert(refineOf(dir) == refineOf(scratch))
-    assert(spark.read.parquet(dir).count() == e.count())
+    assert(IvfPq.index(dir).read(spark).count() == e.count())
   }
 
   test("config pins fail fast: retrained codebooks, missing pin, duplicate ids") {

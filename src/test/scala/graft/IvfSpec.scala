@@ -77,7 +77,7 @@ class IvfSpec extends AnyFunSuite {
     Similarity.upsertIvfIndex(e.filter(col("vec_id") % 2 === 1),
       "embedding", "vec_id", cents, dir)
     // merged index holds every vector exactly once, in its assigned list
-    val stored = spark.read.parquet(dir)
+    val stored = Similarity.ivfIndex(dir).read(spark)
     assert(stored.count() == e.count())
     assert(stored.select(col("vec_id")).distinct().count() == e.count())
     val expect = Similarity.ivfAssign(e, "embedding", cents)
@@ -123,7 +123,7 @@ class IvfSpec extends AnyFunSuite {
     Similarity.upsertIvfIndex(evens, "embedding", "vec_id", cents, dir)
     // final index == a scratch assignment of the true corpus: every id
     // exactly once, no stale vector in any list
-    val stored = spark.read.parquet(dir)
+    val stored = Similarity.ivfIndex(dir).read(spark)
     assert(stored.count() == e.count())
     val expect = Similarity.ivfAssign(e, "embedding", cents)
       .select(col("vec_id"), col("list_id"))
@@ -131,11 +131,6 @@ class IvfSpec extends AnyFunSuite {
     val got = stored.select(col("vec_id"), col("list_id").cast("int"))
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(got == expect)
-    // side table tracks the final assignment too
-    val side = spark.read.parquet(dir + "_docs")
-      .select(col("vec_id"), col("list_id").cast("int"))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(side == expect)
   }
 
   test("randomized upsert sequence equals a scratch build of the final corpus") {
@@ -170,11 +165,11 @@ class IvfSpec extends AnyFunSuite {
     }.reduce(_ unionByName _)
       .select(col("vec_id"), col("list_id"))
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val got = spark.read.parquet(dir)
+    val got = Similarity.ivfIndex(dir).read(spark)
       .select(col("vec_id"), col("list_id").cast("int"))
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(got == scratch)
-    assert(spark.read.parquet(dir).count() == scratch.size)
+    assert(Similarity.ivfIndex(dir).read(spark).count() == scratch.size)
     // a batch with a duplicated id must refuse
     val dup = e.filter(col("vec_id") === ids.head)
       .unionByName(e.filter(col("vec_id") === ids.head))

@@ -109,15 +109,11 @@ class LshIndexSpec extends AnyFunSuite {
     val scratchDir = java.nio.file.Files.createTempDirectory("lsh_scratch")
       .resolve("idx").toString
     LshIndex.writeLshIndex(e, "embedding", "vec_id", planes, scratchDir)
-    def content(p: String) = spark.read.parquet(p)
+    def content(p: String) = LshIndex.index(p).read(spark)
       .select(col("vec_id"), col("bucket").cast("long"),
         col("embedding").cast("string"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     assert(content(dir) == content(scratchDir))
-    def side(p: String) = spark.read.parquet(p + "_docs")
-      .select(col("vec_id"), col("bucket").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(side(dir) == side(scratchDir))
     // retrained planes refuse
     val planes2 = Similarity.hyperplanes(64, 6, seed = 7L)
     val ex = intercept[IllegalArgumentException] {
@@ -155,7 +151,7 @@ class LshIndexSpec extends AnyFunSuite {
     // absent key ≡ empty: the upsert must route, not refuse
     LshIndex.upsertLshIndex(e.filter(col("vec_id") % 2 === 1),
       "embedding", "vec_id", planes, dir)
-    assert(spark.read.parquet(dir).count() == e.count())
+    assert(LshIndex.index(dir).read(spark).count() == e.count())
     // ...but a payload-carrying upsert against it still refuses
     val ex = intercept[IllegalArgumentException] {
       LshIndex.upsertLshIndex(e.limit(1), "embedding", "vec_id", planes,
@@ -190,7 +186,7 @@ class LshIndexSpec extends AnyFunSuite {
       Similarity.hyperplanes(64, 3, seed = 100L + t))
     LshIndex.writeMultiLshIndex(e, "embedding", "vec_id", planeSets, dir)
     // stored once per table
-    assert(spark.read.parquet(dir).count() == e.count() * 5)
+    assert(LshIndex.multiIndex(dir).read(spark).count() == e.count() * 5)
     val q = queryVec(5)
     val probed = LshIndex.probeMultiLsh(spark, dir, "embedding", "vec_id",
       q, 10, planeSets)
@@ -293,17 +289,12 @@ class LshIndexSpec extends AnyFunSuite {
     LshIndex.writeMultiLshIndex(
       e.select(col("vec_id"), col("embedding")), "embedding", "vec_id",
       planeSets, scratchDir)
-    def content(p: String) = spark.read.parquet(p)
+    def content(p: String) = LshIndex.multiIndex(p).read(spark)
       .select(col("vec_id"), col("tbl").cast("long"),
         col("bucket").cast("long"), col("embedding").cast("string"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getString(3))).toSet
     assert(content(dir) == content(scratchDir))
-    def side(p: String) = spark.read.parquet(p + "_docs")
-      .select(col("vec_id"), col("tbl").cast("long"),
-        col("bucket").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(side(dir) == side(scratchDir))
     // retrained plane sets refuse the upsert
     val ex = intercept[IllegalArgumentException] {
       LshIndex.upsertMultiLshIndex(evens.limit(1), "embedding", "vec_id",
@@ -312,72 +303,79 @@ class LshIndexSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("different plane"))
   }
 
+  /** Stops an upsert at each of its write steps in turn (the
+    * in-process form of a driver death there), checking that none of the
+    * stopped attempts is served, then lets the same batch through. */
+  private def crashEveryStep(prefix: String, upsert: () => Unit,
+      served: () => Set[String]): Unit = {
+    val before = served()
+    sys.props("graft.crashpoint.mode") = "throw"
+    try Seq("claimed", "between-writes", "tombstoned", "staged").foreach { p =>
+      sys.props("graft.crashpoint") = s"$prefix.upsert.$p"
+      intercept[IllegalStateException](upsert())
+      assert(served() == before, s"an upsert stopped at $p is served")
+    } finally {
+      sys.props -= "graft.crashpoint"; sys.props -= "graft.crashpoint.mode"
+    }
+    upsert()
+  }
+
   test("upsert crash window heals under the same-batch retry") {
-    // single-table variant of the contract below: data committed, side
-    // table rolled back, retry converges
+    // single-table variant of the contract below: an attempt stopped at
+    // any write step is invisible, and the retry converges to the clean
+    // post-upsert state
     val dir = java.nio.file.Files.createTempDirectory("lsh_crash")
+      .resolve("idx").toString
+    val clean = java.nio.file.Files.createTempDirectory("lsh_clean")
       .resolve("idx").toString
     val evens = e.filter(col("vec_id") % 2 === 0)
       .select(col("vec_id"), col("embedding"))
     val crawl1 = evens.withColumn("embedding", reverse(col("embedding")))
       .unionByName(e.filter(col("vec_id") % 2 === 1)
         .select(col("vec_id"), col("embedding")))
-    LshIndex.writeLshIndex(crawl1, "embedding", "vec_id", planes, dir)
-    val sideBefore = spark.read.parquet(dir + "_docs").localCheckpoint(true)
-    LshIndex.upsertLshIndex(evens, "embedding", "vec_id", planes, dir)
-    def snap(p: String, cols: Seq[String]) = spark.read.parquet(p)
-      .select(cols.map(c => col(c).cast("string")): _*)
+    Seq(dir, clean).foreach(
+      LshIndex.writeLshIndex(crawl1, "embedding", "vec_id", planes, _))
+    LshIndex.upsertLshIndex(evens, "embedding", "vec_id", planes, clean)
+    def snap(p: String) = LshIndex.index(p).read(spark)
+      .select(Seq("vec_id", "bucket", "embedding")
+        .map(c => col(c).cast("string")): _*)
       .collect().map(_.mkString("|")).toSet
-    val cleanData = snap(dir, Seq("vec_id", "bucket", "embedding"))
-    val cleanSide = snap(dir + "_docs", Seq("vec_id", "bucket", "dbk"))
-    sideBefore.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("dbk").parquet(dir + "_docs")
-    assert(snap(dir + "_docs", Seq("vec_id", "bucket", "dbk")) != cleanSide,
-      "crash simulation vacuous — side table identical")
-    LshIndex.upsertLshIndex(evens, "embedding", "vec_id", planes, dir)
-    assert(snap(dir, Seq("vec_id", "bucket", "embedding")) == cleanData)
-    assert(snap(dir + "_docs", Seq("vec_id", "bucket", "dbk")) == cleanSide)
+    assert(snap(dir) != snap(clean), "crash simulation vacuous")
+    crashEveryStep("LSH",
+      () => LshIndex.upsertLshIndex(evens, "embedding", "vec_id", planes, dir),
+      () => snap(dir))
+    assert(snap(dir) == snap(clean))
   }
 
   test("multi-table upsert crash window heals under the same-batch retry") {
-    // the documented foreachBatch contract: a crash BETWEEN the data
-    // overwrite and the side-table write leaves stale side rows; a retry
-    // of the SAME batch must converge to the clean post-upsert state
-    // (its affected set re-covers the touched partitions)
+    // the documented foreachBatch contract: a crash anywhere before the
+    // commit leaves only unreferenced files; a retry of the SAME batch
+    // must converge to the clean post-upsert state
     val planeSets = (0 until 3).map(t =>
       Similarity.hyperplanes(64, 3, seed = 600L + t))
     val dir = java.nio.file.Files.createTempDirectory("mlsh_crash")
       .resolve("idx").toString
+    val clean = java.nio.file.Files.createTempDirectory("mlsh_clean")
+      .resolve("idx").toString
     val evens = e.filter(col("vec_id") % 2 === 0)
       .select(col("vec_id"), col("embedding"))
     val crawl1 = evens.withColumn("embedding", reverse(col("embedding")))
       .unionByName(e.filter(col("vec_id") % 2 === 1)
         .select(col("vec_id"), col("embedding")))
-    LshIndex.writeMultiLshIndex(crawl1, "embedding", "vec_id", planeSets,
-      dir)
-    // pin the pre-upsert side table so the crash can be simulated
-    val sideBefore = spark.read.parquet(dir + "_docs").localCheckpoint(true)
+    Seq(dir, clean).foreach(LshIndex.writeMultiLshIndex(crawl1, "embedding",
+      "vec_id", planeSets, _))
     LshIndex.upsertMultiLshIndex(evens, "embedding", "vec_id", planeSets,
-      dir)
-    def snap(p: String, cols: Seq[String]) = spark.read.parquet(p)
-      .select(cols.map(c => col(c).cast("string")): _*)
+      clean)
+    def snap(p: String) = LshIndex.multiIndex(p).read(spark)
+      .select(Seq("vec_id", "tbl", "bucket", "embedding")
+        .map(c => col(c).cast("string")): _*)
       .collect().map(_.mkString("|")).toSet
-    val cleanData = snap(dir, Seq("vec_id", "tbl", "bucket", "embedding"))
-    val cleanSide = snap(dir + "_docs", Seq("vec_id", "tbl", "bucket", "dbk"))
-    // simulate the crash: data committed, side table rolled back to the
-    // pre-upsert state (as if the JVM died before the side write)
-    sideBefore.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("dbk").parquet(dir + "_docs")
-    assert(snap(dir + "_docs",
-      Seq("vec_id", "tbl", "bucket", "dbk")) != cleanSide,
-      "crash simulation vacuous — side table identical")
-    // the retry of the same batch heals both tables
-    LshIndex.upsertMultiLshIndex(evens, "embedding", "vec_id", planeSets,
-      dir)
-    assert(snap(dir, Seq("vec_id", "tbl", "bucket", "embedding"))
-      == cleanData)
-    assert(snap(dir + "_docs", Seq("vec_id", "tbl", "bucket", "dbk"))
-      == cleanSide)
+    assert(snap(dir) != snap(clean), "crash simulation vacuous")
+    crashEveryStep("multi-table LSH",
+      () => LshIndex.upsertMultiLshIndex(evens, "embedding", "vec_id",
+        planeSets, dir),
+      () => snap(dir))
+    assert(snap(dir) == snap(clean))
   }
 
   test("random overlapping multi-table upsert sequences equal a from-scratch build") {
@@ -420,17 +418,11 @@ class LshIndexSpec extends AnyFunSuite {
       .createTempDirectory("mlsh_rand_scratch").resolve("idx").toString
     LshIndex.writeMultiLshIndex(finalFrame, "embedding", "vec_id",
       planeSets, scratchDir)
-    def content(p: String) = spark.read.parquet(p)
+    def content(p: String) = LshIndex.multiIndex(p).read(spark)
       .select(col("vec_id"), col("tbl").cast("long"),
         col("bucket").cast("long"), col("embedding").cast("string"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getString(3))).toSet
     assert(content(dir) == content(scratchDir))
-    def side(p: String) = spark.read.parquet(p + "_docs")
-      .select(col("vec_id"), col("tbl").cast("long"),
-        col("bucket").cast("long"), col("dbk").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).toSet
-    assert(side(dir) == side(scratchDir))
   }
 }

@@ -207,10 +207,6 @@ class PlanSpec extends AnyFunSuite {
         (1, "CDC bucket merge: <= nBuckets affected-bucket ids"),
       "operators/DedupIndex.scala" ->
         (3, "probe: hit band-bucket set (<= nBuckets, fused-stats fallback) + candidate shingle-bucket set (<= nDocBuckets); ingestBatch: fused batch-stats rows (2: validation counts + <= nBuckets/nDocBuckets bucket sets)"),
-      "operators/BucketedIndex.scala" ->
-        (1, "every family's upsert: affected main-partition key set, bounded by the family's bucket geometry (<= nBuckets / <= nLists / <= 2^numPlanes / <= 2·batch·L pairs; the side-bucket set rides the fused requireUniqueIdsCollectingBuckets agg)"),
-      "operators/PartitionedIndexOps.scala" ->
-        (1, "overwriteAffected: present-partition id set, <= the caller's bucket count"),
       "operators/Pq.scala" ->
         (2, "PQ trainer: k-row codebook init (k <= 256) + one mean row per occupied code per subspace"),
       "operators/IvfPq.scala" ->
@@ -247,6 +243,41 @@ class PlanSpec extends AnyFunSuite {
       s"collect() call sites not in the bounded whitelist (add only with a documented bound): $unexpected")
     val stale = bounded.keys.filterNot(found.contains)
     assert(stale.isEmpty, s"whitelist entries with no collect anymore: $stale")
+  }
+
+  test("index tables are read only through BucketedIndex's one reader") {
+    // a raw read of an index table serves uncommitted rows and rows whose
+    // id was tombstoned by a newer upsert; every engine read of one goes
+    // through BucketedIndex.committed. The index files and the queries
+    // over them read no parquet directly, and every other main-source
+    // read.parquet is enumerated here with what it reads.
+    val allowed: Map[String, (Int, String)] = Map(
+      "operators/BucketedIndex.scala" ->
+        (2, "THE reader: an index table and its tombstones"),
+      "Tables.scala" -> (1, "the benchmark tables"),
+      "jobs/Warehouse.scala" -> (1, "warehouse partition compaction"),
+      "jobs/PipelineJobs.scala" -> (4, "lake and RAG-index parquet of the reference pipeline jobs"),
+      "streaming/EventsStream.scala" -> (1, "the staged events schema"),
+      "operators/CurationQueries.scala" -> (1, "q145's pair sink"),
+      "operators/Lakehouse.scala" -> (1, "CDC dimension buckets"),
+      "operators/LakehouseQueries.scala" -> (1, "q111's dimension tree"),
+      "operators/AdvancedQueries.scala" -> (1, "the lake of the ingest query"))
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val found = scala.collection.mutable.Map.empty[String, Int]
+    java.nio.file.Files.walk(root).forEach { p =>
+      if (p.toString.endsWith(".scala")) {
+        val n = "read\\.parquet\\(".r
+          .findAllIn(java.nio.file.Files.readString(p)).size
+        if (n > 0) found(root.relativize(p).toString) = n
+      }
+    }
+    val unexpected = found.filterNot { case (f, n) =>
+      allowed.get(f).exists(_._1 == n)
+    }
+    assert(unexpected.isEmpty,
+      s"read.parquet call sites outside the enumerated set: $unexpected")
+    val stale = allowed.keys.filterNot(found.contains)
+    assert(stale.isEmpty, s"enumerated sites with no read anymore: $stale")
   }
 
   test("one metrics collector: only obs/Profile registers or defines listeners") {
@@ -411,6 +442,44 @@ class PlanSpec extends AnyFunSuite {
         s"an exchange carries quadratic hot-bucket volume: $writtenHot " +
           s"(band rows $hotBandRows, candidates $n)")
     } finally hotSig.unpersist()
+  }
+
+  test("uncapped minhash pairs compute the signature aggregate ONCE") {
+    // a band self-join read the signature twice, and the second read of
+    // the cached shingles is re-instanced with new attribute ids, so AQE
+    // could not reuse the first signature exchange: an 80-doc corpus ran
+    // two 80-record signature exchanges. The uncapped kernel pairs each
+    // (band, bh) bucket from ONE band exchange over ONE signature pass.
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Min, Partial}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import spark.implicits._
+    def nodes(p: SparkPlan): Seq[SparkPlan] = (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    }) :+ p
+    val nDocs = 80
+    val docs = (0 until nDocs).map(i =>
+      (i.toLong, s"alpha bravo charlie delta echo foxtrot golf hotel india d$i"))
+      .toDF("doc_id", "text")
+    val pairs = graft.operators.Dedup.minhashDupPairs(docs)
+    assert(pairs.collect().nonEmpty)
+    // the signature exchange is the one fed by the PARTIAL min aggregate
+    // (the band exchange's map side holds the final one)
+    val signature = nodes(pairs.queryExecution.executedPlan).collect {
+      case s: ShuffleExchangeLike if s.child.exists {
+          case a: BaseAggregateExec => a.aggregateExpressions.exists(e =>
+            e.mode == Partial && e.aggregateFunction.isInstanceOf[Min])
+          case _ => false
+        } =>
+        s.metrics.get("shuffleRecordsWritten").map(_.value)
+          .getOrElse(fail(s"shuffleRecordsWritten metric missing on $s"))
+    }
+    assert(signature == Seq(nDocs.toLong),
+      s"expected one $nDocs-record signature exchange, got $signature")
   }
 
   test("fact-first join chain is reordered dims-first by the engine (q182)") {

@@ -54,4 +54,26 @@ class PqSpec extends AnyFunSuite {
     assert(math.abs(m(1L).map(x => x * x).sum - 1.0) < 1e-12)
     assert(m(2L) == Seq(0.0, 0.0))
   }
+
+  test("codebook seeding: one collect of the k lowest-id rows, sliced per subspace on the driver") {
+    val e = Tables.embeddings(spark, TestSpark.sf0001)
+    val (m, k) = (8, 16)
+    val prof = new obs.Profile(spark)
+    val (books, r) = try prof("pq-seed") {
+      Pq.trainCodebooks(e, "embedding", "vec_id", m, k, iters = 0)
+    } finally prof.close()
+    assert(r.sqlExecutions <= 2, r.json)
+    // the per-subspace form it replaces: one ordered limit-k read of each
+    // subvector column, which must give the same bits
+    val subDim = 64 / m
+    val perSubspace = Array.tabulate(m) { j =>
+      e.select(col("vec_id").as("id"), array((0 until subDim).map(d =>
+          element_at(col("embedding"), j * subDim + d + 1).cast("double")): _*)
+          .as("sv"))
+        .orderBy(col("id")).limit(k).select(col("sv")).collect()
+        .map(_.getSeq[Double](0).toArray)
+    }
+    assert(books.map(_.map(_.toSeq).toSeq).toSeq ==
+      perSubspace.map(_.map(_.toSeq).toSeq).toSeq)
+  }
 }

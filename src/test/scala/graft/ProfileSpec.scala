@@ -77,14 +77,15 @@ class ProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("the q160 FTS drain's SQL executions include its stream thread's") {
-    // 24 = StreamDrainBench's count for this drain at sf0.001 before the
-    // collector replaced it; the micro-batches run on the stream's own
-    // thread, under the stream's job group
+    // the micro-batches run on the stream's own thread, under the stream's
+    // job group. 24 under the copy-on-write upsert; merge-on-read appends
+    // the batch and its tombstones instead of collecting affected buckets
+    // and rewriting them with a side table
     val (_, r) = prof("q160") {
       SparkEntry.queries("q160_stream_fts_ingest")(spark, TestSpark.sf0001)
         .count()
     }
-    assert(r.sqlExecutions == 24, r.json)
+    assert(r.sqlExecutions == 15, r.json)
   }
 
   test("a unit reports each observation once, grouped by name prefix") {
@@ -111,7 +112,8 @@ class ProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
         ("q175_capped_incremental", "lsh-cap-inc", 1, 1),
         ("q177_capped_index_probe", "lsh-cap-idx", 6, 1),
         // the first of q145's three micro-batches bulk-builds the index
-        ("q145_stream_ingest_dedup", "lsh-cap-idx", 31, 2))) {
+        // (31 executions under the copy-on-write upsert)
+        ("q145_stream_ingest_dedup", "lsh-cap-idx", 25, 2))) {
       val (_, r) = prof(name) {
         SparkEntry.queries(name)(spark, TestSpark.sf0001).count()
       }
@@ -128,5 +130,58 @@ class ProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.sqlExecutions == 8, r.json)
     assert(r.json.endsWith(
       ""","observed":{"q167":[{"nearDupPairs":2,"minJ":0.9808}]}}"""), r.json)
+  }
+
+  test("a third consecutive ingestBatch compiles no more than a handful of classes") {
+    import org.apache.spark.sql.functions.col
+    // the slices are staged as files, as a drain's micro-batches are, so
+    // consecutive batches plan the same operators over different files;
+    // with Spark's default 100-entry class cache one ingestBatch (about 77
+    // classes) evicted its own classes and every batch recompiled them
+    val base = java.nio.file.Files.createTempDirectory("ingest_codegen")
+    val idx = base.resolve("idx").toString
+    try {
+      val docs = Tables.documents(spark, TestSpark.sf0001)
+        .select(col("doc_id"), col("text"))
+      val slices = (0 until 4).map { i =>
+        val dir = base.resolve(s"slice$i").toString
+        docs.filter(col("doc_id") % 4 === i).coalesce(1).write.parquet(dir)
+        spark.read.parquet(dir)
+      }
+      val records = slices.zipWithIndex.map { case (b, i) =>
+        prof(s"ingest$i")(graft.operators.DedupIndex.ingestBatch(
+          spark, idx, b).count())._2
+      }
+      // the first upsert compiles its plan shapes (25 classes at sf0.001);
+      // the default cache recompiled 61-77 per batch
+      assert(records(3).codegen.classes <= 10, records.map(_.json))
+    } finally TempDirs.rmTree(base)
+  }
+
+  test("an index read over 64 buckets runs no partition-listing job") {
+    import org.apache.spark.sql.functions.col
+    // a table with more partition directories than
+    // parallelPartitionDiscovery.threshold is listed by a Spark job of one
+    // task per directory; the session raises it above the bucket geometry
+    val base = java.nio.file.Files.createTempDirectory("fts_listing")
+    val dir = base.resolve("idx").toString
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    try {
+      // 2,000 distinct words fill every one of the 64 term buckets
+      val docs = spark.range(2000).select(col("id").as("doc_id"),
+        org.apache.spark.sql.functions.concat(
+          org.apache.spark.sql.functions.lit("w"), col("id")).as("text"))
+      graft.operators.Fts.writePostingsIndex(
+        graft.operators.Fts.positionalPostings(docs, "doc_id", "text"), dir)
+      assert(new java.io.File(dir).list().count(_.startsWith("wb=")) == 64)
+      def load() = prof("load")(graft.operators.Fts.loadPostings(spark, dir,
+        Seq("table", "join", "scan")))._2.jobs
+      val configured = load()
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, "32")
+      val distributed = try load() finally spark.conf.set(key, prev)
+      assert(prev.toInt >= 64 && configured == distributed - 1,
+        s"jobs: $configured at threshold $prev, $distributed at 32")
+    } finally TempDirs.rmTree(base)
   }
 }

@@ -543,9 +543,9 @@ class PropertySpec extends AnyFunSuite {
     val finalDocs = (v1 ++ addsA ++ recrawlA ++ addsB ++ recrawlB)
       .groupBy(_._1).map { case (id, vs) => (id, vs.last._2) }.toSeq
     DedupIndex.writeSignatureIndex(finalDocs.toDF("doc_id", "text"), scratch)
-    def bands(p: String) = spark.read.parquet(p + "/bands")
+    def bands(p: String) = DedupIndex.index(p).read(spark)
       .collect().map(_.toSeq).toSet
-    def shingles(p: String) = spark.read.parquet(p + "/shingles")
+    def shingles(p: String) = DedupIndex.index(p).readData(spark)
       .collect().map(r => (r.getAs[Long]("doc_id"),
         r.getAs[Seq[String]]("sg").toSet)).toSet
     assert(bands(inc) == bands(scratch), "band tables diverged")

@@ -223,7 +223,7 @@ class QueriesSpec extends AnyFunSuite {
         .withColumn("text", concat(col("text"), lit(" recrawl"))))
     val scratch = base.resolve("scratch").toString
     graft.operators.DedupIndex.writeSignatureIndex(finalCorpus, scratch)
-    def bands(p: String) = spark.read.parquet(p + "/bands")
+    def bands(p: String) = graft.operators.DedupIndex.index(p).read(spark)
       .collect().map(_.toSeq).toSet
     assert(bands(idx).nonEmpty && bands(idx) == bands(scratch))
   }
