@@ -28,6 +28,15 @@ import org.apache.spark.sql.functions._
   * A family supplies only data: its table paths and partition columns
   * (this class), and per call a [[BucketedIndex.Write]].
   *
+  * ==The pin ([[requirePin]])==
+  * One file, `<meta>/config`: sorted `k=v` lines holding every parameter
+  * that changes routing or stored bytes (model fingerprints, bucket
+  * counts, payload columns) plus the protocol's [[BucketedIndex.Layout]]
+  * key. It is the index's whole identity, and [[requirePin]] is its one
+  * check: an upsert passes its full config, a probe the keys it routes
+  * by. An absent pin (never built, or a crashed build) and any differing
+  * key fail by name.
+  *
   * ==Visibility ([[read]])==
   * A reader resolves the committed versions once, then lists the table:
   * it serves the rows of committed versions whose id has no newer
@@ -38,16 +47,17 @@ import org.apache.spark.sql.functions._
   * running probe never loses one.
   *
   * ==Bulk build ([[build]])==
-  * validate unique ids → claim version v → the pin (first for
-  * `configFirst` families, FTS and dedup; deleted here and written after
-  * the data for the vector indexes, so a rebuild under retrained
-  * centroids or planes that crashes mid-write leaves data without a pin,
-  * which probes and upserts refuse) → overwrite the data table and the
-  * main table (rows tagged v) → drop the tombstones → commit v.
+  * validate the pin's keys and values and unique ids → claim version v →
+  * the pin (first for `configFirst` families, FTS and dedup; deleted here
+  * and written after the data for the vector indexes, so a rebuild under
+  * retrained centroids or planes that crashes mid-write leaves data
+  * without a pin, which probes and upserts refuse) → overwrite the data
+  * table and the main table (rows tagged v) → drop the tombstones →
+  * commit v.
   *
   * ==Upsert ([[upsert]])==
   *   1. an index without main partitions routes to the bulk build;
-  *   2. the config pin must exist and match (layout key included);
+  *   2. the pin must exist and match the full config ([[requirePin]]);
   *   3. ONE job validates unique batch ids (and collects the data-table
   *      buckets the batch hits, unless the caller did); an empty batch
   *      stops here;
@@ -75,6 +85,9 @@ import org.apache.spark.sql.functions._
   * [[PartitionedIndexOps.compact]] / `compactMulti` fold a main table's
   * fragmented partitions to one file each, keeping exactly the rows this
   * reader serves, and drop the tombstones once every partition is folded.
+  *
+  * @param builder the call that builds this index, named when it refuses
+  * @param pinned  what the pin covers, in words, for the mismatch message
   */
 private[graft] final case class BucketedIndex(
     name: String,
@@ -82,15 +95,13 @@ private[graft] final case class BucketedIndex(
     main: String,
     mainParts: Seq[String],
     meta: String,
-    pinFile: String,
     builder: String,
     pinned: String,
     data: Option[(String, String)] = None,
-    configFirst: Boolean = false,
-    pinDefaults: Map[String, String] = Map.empty) {
+    configFirst: Boolean = false) {
   import BucketedIndex._
 
-  private def pinPath = new Path(s"$meta/$pinFile")
+  private def pinPath = new Path(meta, "config")
   private def metaPath = new Path(meta)
 
   private def fs(spark: SparkSession): FileSystem =
@@ -105,27 +116,41 @@ private[graft] final case class BucketedIndex(
       .exists(_.getPath.getName.startsWith(mainParts.head + "="))
   }
 
-  private def storedConfig(spark: SparkSession): Option[Map[String, String]] =
-    PartitionedIndexOps.readConfigPin(fs(spark), pinPath)
-
-  /** The stored pin of an index a probe is about to read: absent means
-    * never built or a crashed build; a pin without this layout's key was
-    * written by the copy-on-write protocol and must be rebuilt. */
-  def requireBuilt(spark: SparkSession): Map[String, String] = {
-    val stored = storedConfig(spark)
+  /** THE pin check: the pin must exist, and `layout` and every `expected`
+    * key must equal the stored value — a differing key would route the
+    * wrong buckets, score against the wrong model or write a ragged
+    * schema. Returns the stored pin. */
+  def requirePin(spark: SparkSession,
+      expected: Map[String, String]): Map[String, String] = {
+    val stored = readConfigPin(fs(spark), pinPath)
     require(stored.isDefined,
       s"$name index at $path has no config pin (never built, or a crashed " +
-        s"build) — build it with $builder before probing")
-    requireConfig(spark, Map.empty)
-    stored.get
+        s"build) — build it with $builder")
+    val got = stored.get
+    val want = expected ++ Layout
+    def show(v: String) =
+      if (v.length > 40) s"${v.take(16)}…(${v.length} chars)" else v
+    val bad = want.keys.toSeq.sorted.filter(k => !got.get(k).contains(want(k)))
+      .map { k =>
+        s"$k=${got.get(k).fold("<absent>")(show)} on disk, " +
+          s"$k=${show(want(k))} requested" + (if (got.contains(k)) ""
+            else s" (the pin was written without the $k key)")
+      }
+    require(bad.isEmpty,
+      s"$name index at $path was built under different $pinned: " +
+        bad.mkString("; ") + s" — rebuild it with $builder")
+    got
   }
 
-  /** Tolerant per-key check for probes: every expected key, and the
-    * layout key, must match a present pin
-    * ([[PartitionedIndexOps.requireConfigPin]]). */
-  def requireConfig(spark: SparkSession, expected: Map[String, String]): Unit =
-    PartitionedIndexOps.requireConfigPin(fs(spark), pinPath, expected ++ Layout,
-      s"$name index at $path")
+  /** A pin is one `k=v` line per key: a key with '=' or a newline, or a
+    * value with a newline, would not read back as written. */
+  private def requireStorable(cfg: Map[String, String]): Unit =
+    cfg.foreach { case (k, v) =>
+      require(!k.exists("=\n".contains(_)) && !v.contains('\n'),
+        s"$name index at $path: config pin key " +
+          s"'${k.replace("\n", "\\n")}' cannot be stored — a key must not " +
+          "contain '=' or a newline, a value must not contain a newline")
+    }
 
   /** The main table's served rows (the class doc's visibility rule). */
   def read(spark: SparkSession): DataFrame = committed(spark, main, meta)
@@ -138,10 +163,10 @@ private[graft] final case class BucketedIndex(
     val spark = w.main.sparkSession
     val fs = this.fs(spark)
     try {
+      requireStorable(w.config)
       w.keyed.foreach(PartitionedIndexOps.requireUniqueIds(_, w.idCol))
       val v = PartitionedIndexOps.claimVersion(fs, metaPath)
-      val pin = () =>
-        PartitionedIndexOps.writeConfigPin(fs, pinPath, w.config ++ Layout)
+      val pin = () => writeConfigPin(fs, pinPath, w.config ++ Layout)
       if (configFirst) pin() else fs.delete(pinPath, false)
       for ((dir, bucket) <- data; rows <- w.data)
         rows.write.mode(SaveMode.Overwrite).partitionBy(bucket).parquet(dir)
@@ -197,29 +222,6 @@ private[graft] final case class BucketedIndex(
       }
     } finally w.owned.foreach(_.unpersist())
   }
-
-  /** Data without a pin is a crashed build; a pin that differs in any key
-    * (absent keys read as `pinDefaults`) would route the wrong buckets or
-    * write a ragged schema, and one without the layout key was written by
-    * the copy-on-write protocol, whose tables this reader cannot serve. */
-  private def requirePin(spark: SparkSession,
-      expected: Map[String, String]): Unit = {
-    val stored = storedConfig(spark)
-    require(stored.isDefined,
-      s"$name index at $path has data but no config pin (crashed build?) " +
-        s"— rebuild it with $builder before upserting")
-    val got = pinDefaults ++ stored.get
-    val want = expected ++ Layout
-    def show(v: Option[String]) = v.fold("<absent>")(s =>
-      if (s.length > 40) s"${s.take(16)}…(${s.length} chars)" else s)
-    (want.keySet ++ got.keySet).toSeq.sorted.foreach { k =>
-      require(got.get(k) == want.get(k),
-        s"$name index at $path was built under different $pinned: " +
-          s"$k=${show(got.get(k))} on disk, $k=${show(want.get(k))} " +
-          "requested — an upsert would route the wrong buckets or write a " +
-          s"ragged schema (rebuild it with $builder)")
-    }
-  }
 }
 
 private[graft] object BucketedIndex {
@@ -227,9 +229,31 @@ private[graft] object BucketedIndex {
   /** The row-version column of every main table. */
   val Version = "_v"
 
-  /** The pin key of the on-disk protocol. An index written before
-    * merge-on-read has none, and every pin check fails on it. */
-  val Layout: Map[String, String] = Map("layout" -> "merge-on-read-1")
+  /** The pin key of the on-disk protocol. An index written under an
+    * older protocol (no key, or `merge-on-read-1`, whose pins carried keys
+    * that routed nothing) fails every pin check on it. */
+  val Layout: Map[String, String] = Map("layout" -> "merge-on-read-2")
+
+  private[graft] def writeConfigPin(fs: FileSystem, path: Path,
+      cfg: Map[String, String]): Unit = {
+    val out = fs.create(path, true)
+    try out.write(cfg.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
+      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  /** The stored pin, None if absent. */
+  private[graft] def readConfigPin(fs: FileSystem,
+      path: Path): Option[Map[String, String]] =
+    if (!fs.exists(path)) None
+    else {
+      val in = fs.open(path)
+      val text = try new String(in.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+      Some(text.linesIterator.filter(_.contains("="))
+        .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
+        .toMap)
+    }
 
   def tombstonePath(meta: String): Path = new Path(meta, "tombstones")
 

@@ -13,6 +13,8 @@ import org.apache.spark.sql.functions._
   * Layout ([[BucketedIndex]]: bands merge-on-read, shingles copy-on-write):
   *   path/bands     (doc_id, fp, band, bh, _v)  partitioned by wb  = bh mod nBuckets
   *   path/shingles  (doc_id, sg)                partitioned by dbk = doc_id mod nDocBuckets
+  *   path/_meta     the pin (`config`: n, numHashes, rowsPerBand, nBuckets,
+  *                  nDocBuckets), commits and tombstones
   *
   * `fp` is the doc's full-signature fingerprint
   * ([[Dedup.signatureFingerprint]], 8 B/row): the capped probe
@@ -36,35 +38,21 @@ object DedupIndex {
   private def bucketOf(c: org.apache.spark.sql.Column, m: Int) =
     pmod(c, lit(m.toLong))
 
-  /** Every parameter that changes band hashes or bucket ids is pinned on
-    * disk and re-validated at probe time — a probe under a different config
-    * would SILENTLY miss duplicates (wrong buckets pruned, wrong band
-    * hashes joined), the same footgun the Fts index pins against. The
-    * pin filename is kept from the JSON-era format: an index written by
-    * older code still has ITS pin read and fails loudly on the format
-    * mismatch instead of being silently treated as unpinned. Config is
-    * written FIRST, so every retry validates against the true geometry. */
+  /** Every parameter that changes band hashes or bucket ids is pinned and
+    * re-validated by every probe and upsert — a probe under a different
+    * config would SILENTLY miss duplicates (wrong buckets pruned, wrong
+    * band hashes joined). The pin is written FIRST, so every retry
+    * validates against the true geometry. */
   private[graft] def index(path: String) = BucketedIndex("dedup", path,
-    path + "/bands", Seq("wb"), path + "/_meta", "config.json",
-    "writeSignatureIndex", "shingle, hash, or bucket geometry",
+    path + "/bands", Seq("wb"), path + "/_meta", "writeSignatureIndex",
+    "shingle, hash, or bucket geometry",
     data = Some((path + "/shingles", "dbk")), configFirst = true)
 
-  // bandsFp: bands-table schema generation — 1 = rows carry the doc's
-  // full-signature fingerprint (enables the hot-bucket-capped probe's
-  // same-fingerprint pre-collapse). Pinned so a probe never meets an
-  // index whose bands lack the column it collapses on: an index built by
-  // pre-fingerprint code fails the pin loudly and is rebuilt.
   private def configOf(n: Int, numHashes: Int, rowsPerBand: Int,
       nBuckets: Int, nDocBuckets: Int): Map[String, String] =
     Map("n" -> n, "numHashes" -> numHashes, "rowsPerBand" -> rowsPerBand,
-      "nBuckets" -> nBuckets, "nDocBuckets" -> nDocBuckets, "bandsFp" -> 1)
+      "nBuckets" -> nBuckets, "nDocBuckets" -> nDocBuckets)
       .map { case (k, v) => k -> v.toString }
-
-  private def requireConfig(spark: SparkSession, path: String, n: Int,
-      numHashes: Int, rowsPerBand: Int, nBuckets: Int,
-      nDocBuckets: Int): Unit =
-    index(path).requireConfig(spark,
-      configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets))
 
   private def bands(sg: DataFrame, numHashes: Int,
       rowsPerBand: Int): DataFrame =
@@ -164,8 +152,8 @@ object DedupIndex {
       batch: DataFrame, n: Int, numHashes: Int, rowsPerBand: Int,
       threshold: Double, nBuckets: Int, nDocBuckets: Int,
       maxBucket: Option[Int]): ProbeHandle = {
-    requireConfig(spark, path, n, numHashes, rowsPerBand, nBuckets,
-      nDocBuckets)
+    index(path).requirePin(spark,
+      configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets))
     val bsg = Dedup.shingleSets(batch, n).cache()
     val (plan, cand) = probeCore(spark, path, bsg, numHashes, rowsPerBand,
       threshold, nBuckets, nDocBuckets, maxBucket)
@@ -246,8 +234,6 @@ object DedupIndex {
       n: Int = 3, numHashes: Int = 32, rowsPerBand: Int = 2,
       threshold: Double = 0.5, nBuckets: Int = 16,
       nDocBuckets: Int = 16, maxBucket: Int = 64): DataFrame = {
-    requireConfig(spark, path, n, numHashes, rowsPerBand, nBuckets,
-      nDocBuckets)
     if (!index(path).hasData(spark)) {
       writeSignatureIndex(batch, path, n, numHashes, rowsPerBand,
         nBuckets, nDocBuckets)
@@ -256,10 +242,12 @@ object DedupIndex {
         org.apache.spark.sql.types.StructType.fromDDL(
           "jr double, da bigint, db bigint"))
     }
+    index(path).requirePin(spark,
+      configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets))
     val bsg = Dedup.shingleSets(batch, n).cache()
     // ONE minhash/banding pass per micro-batch: the fingerprinted band
     // rows serve both the probe and the upsert
-    val bandsFp = bands(bsg, numHashes, rowsPerBand).cache()
+    val fpBands = bands(bsg, numHashes, rowsPerBand).cache()
     try {
       // ONE batch-stats job per micro-batch materializes both caches:
       // duplicate-id validation (before any probe work or index read), the
@@ -267,7 +255,7 @@ object DedupIndex {
       val stats = bsg.agg(lit(0).as("tag"), count(lit(1)).as("n"),
           countDistinct(col("doc_id")).as("nd"),
           collect_set(bucketOf(col("doc_id"), nDocBuckets)).as("bks"))
-        .unionByName(bandsFp.agg(lit(1).as("tag"), lit(0L).as("n"),
+        .unionByName(fpBands.agg(lit(1).as("tag"), lit(0L).as("n"),
           lit(0L).as("nd"),
           collect_set(bucketOf(col("bh"), nBuckets)).as("bks")))
         .collect()
@@ -282,7 +270,7 @@ object DedupIndex {
       // every matching batch doc (q175's bound, served from the index)
       val (plan, cand) = probeCore(spark, path, bsg,
         numHashes, rowsPerBand, threshold, nBuckets, nDocBuckets,
-        Some(maxBucket), Some(bandsFp), Some(wbHit))
+        Some(maxBucket), Some(fpBands), Some(wbHit))
       val pairs = plan
         // the probe's output, pinned before the upsert rewrites the
         // shingle buckets its plan reads
@@ -291,9 +279,9 @@ object DedupIndex {
       // long-running foreachBatch ingest loop doesn't accumulate one
       // CacheManager entry per micro-batch
       cand.unpersist()
-      index(path).upsert(dedupWrite(bsg, bandsFp, n, numHashes, rowsPerBand,
+      index(path).upsert(dedupWrite(bsg, fpBands, n, numHashes, rowsPerBand,
         nBuckets, nDocBuckets, owned = Nil), Some(dbkHit))
       pairs
-    } finally { bandsFp.unpersist(); bsg.unpersist() }
+    } finally { fpBands.unpersist(); bsg.unpersist() }
   }
 }

@@ -189,24 +189,19 @@ object Fts {
   private def bucketCol(c: org.apache.spark.sql.Column, n: Int) =
     pmod(xxhash64(c), lit(n))
 
-  // the pin filename is kept from the JSON-era format; a caller passing a
-  // different nBuckets than the index was BUILT with would otherwise
-  // compute wrong bucket ids and silently prune to the wrong partitions.
-  // nDocBuckets is part of the pinned geometry; no table of this family is
-  // bucketed by it
+  // the pin holds nBuckets: a caller passing a different count than the
+  // index was BUILT with would compute wrong bucket ids and silently
+  // prune to the wrong partitions
   private[graft] def index(path: String) = BucketedIndex("fts", path, path,
-    Seq("wb"), path + "_meta", "config.json", "writePostingsIndex",
-    "bucket geometry", configFirst = true)
+    Seq("wb"), path + "_meta", "writePostingsIndex", "bucket geometry",
+    configFirst = true)
 
   /** A batch's rows: postings bucketed by term. `docs` (doc_id, text) is
     * the id-keyed batch the write validates and tombstones, None for
     * pre-built postings. */
   private def ftsWrite(docs: Option[DataFrame], postings: DataFrame,
-      nBuckets: Int, nDocBuckets: Int): BucketedIndex.Write =
-    BucketedIndex.Write(
-      Map("nBuckets" -> nBuckets.toString,
-        "nDocBuckets" -> nDocBuckets.toString),
-      "doc_id", docs,
+      nBuckets: Int): BucketedIndex.Write =
+    BucketedIndex.Write(Map("nBuckets" -> nBuckets.toString), "doc_id", docs,
       main = postings.withColumn("wb", bucketCol(col("word"), nBuckets)))
 
   /** Deployed-index form: persist the postings partitioned by a hash
@@ -218,22 +213,20 @@ object Fts {
     * doc, so this build cannot reject duplicate docs —
     * [[graft.api.Graft.index.buildFts]] builds from a doc frame and does. */
   def writePostingsIndex(postings: DataFrame, path: String,
-      nBuckets: Int = 64, nDocBuckets: Int = 64): Unit =
-    index(path).build(ftsWrite(None, postings, nBuckets, nDocBuckets))
+      nBuckets: Int = 64): Unit =
+    index(path).build(ftsWrite(None, postings, nBuckets))
 
   /** [[writePostingsIndex]] over `docs`' postings, rejecting a duplicate
     * doc id before any write. */
   private[graft] def writeDocsIndex(docs: DataFrame, docIdCol: String,
-      textCol: String, path: String, nBuckets: Int = 64,
-      nDocBuckets: Int = 64): Unit =
-    index(path).build(docsWrite(docs, docIdCol, textCol, nBuckets,
-      nDocBuckets))
+      textCol: String, path: String, nBuckets: Int = 64): Unit =
+    index(path).build(docsWrite(docs, docIdCol, textCol, nBuckets))
 
   private def docsWrite(docs: DataFrame, docIdCol: String, textCol: String,
-      nBuckets: Int, nDocBuckets: Int): BucketedIndex.Write = {
+      nBuckets: Int): BucketedIndex.Write = {
     val keyed = docs.select(col(docIdCol).as("doc_id"), col(textCol))
     ftsWrite(Some(keyed), positionalPostings(keyed, "doc_id", textCol),
-      nBuckets, nDocBuckets)
+      nBuckets)
   }
 
   /** Incremental index maintenance — fold a (re-)crawled document batch
@@ -244,19 +237,19 @@ object Fts {
     * Per-batch cost is the batch's own postings, never the index size.
     * Drive it from `foreachBatch` for a streaming crawl feed. */
   def upsertPostingsIndex(newDocs: DataFrame, path: String, docIdCol: String,
-      textCol: String, nBuckets: Int = 64, nDocBuckets: Int = 64): Unit =
-    index(path).upsert(docsWrite(newDocs, docIdCol, textCol, nBuckets,
-      nDocBuckets))
+      textCol: String, nBuckets: Int = 64): Unit =
+    index(path).upsert(docsWrite(newDocs, docIdCol, textCol, nBuckets))
 
   /** Read back only the buckets the query terms hash into, through the
     * index's reader ([[BucketedIndex.read]]: committed postings of live
     * docs). The returned frame still carries every posting in those
     * buckets; the word filter itself is pushed to the scan as a data
     * filter on top of the partition prune, so every Fts query operator
-    * composes unchanged. */
+    * composes unchanged. An index without a pin, or built under another
+    * `nBuckets`, is refused by name. */
   def loadPostings(spark: org.apache.spark.sql.SparkSession, path: String,
       terms: Seq[String], nBuckets: Int = 64): DataFrame = {
-    index(path).requireConfig(spark, Map("nBuckets" -> nBuckets.toString))
+    index(path).requirePin(spark, Map("nBuckets" -> nBuckets.toString))
     // bucket ids computed driver-side with the SAME hash the write used
     // (functions.xxhash64 == XxHash64 expression, seed 42) — no job, no
     // collect, just Q literal evaluations

@@ -32,9 +32,9 @@ import org.apache.spark.sql.functions._
   * index; IVF-PQ is that index durable and partition-pruned.
   *
   * Writes go through [[BucketedIndex]] (pin-last): codes merge-on-read,
-  * refine buckets copy-on-write. The pin covers
-  * everything that changes routing or stored bytes: centroid bits,
-  * codebook bits, nDocBuckets.
+  * refine buckets copy-on-write. The pin covers everything that changes
+  * routing or stored bytes: centroid bits, codebook bits, and the refine
+  * table's nDocBuckets, which a probe reads back from it.
   */
 object IvfPq {
 
@@ -58,7 +58,7 @@ object IvfPq {
       nDocBuckets))
 
   private[graft] def index(path: String) = BucketedIndex("IVF-PQ", path,
-    path, Seq("list_id"), path + "_meta", "config", "writeIvfPqIndex",
+    path, Seq("list_id"), path + "_meta", "writeIvfPqIndex",
     "centroids, codebooks, or doc-bucket geometry",
     data = Some((path + "_refine", "dbk")))
 
@@ -87,10 +87,10 @@ object IvfPq {
     // the point lookup into a data-sized collect
     require(rerank > 0 && rerank <= 1024,
       s"rerank=$rerank out of range (candidate ids are collected)")
-    val stored = index(path).requireBuilt(spark)
-    require(stored.get("codebooks").contains(booksFingerprint(books)),
-      s"IVF-PQ index at $path was built under different codebooks — ADC " +
-        "scores against these lookup tables would be meaningless")
+    // ADC scores against other lookup tables would be meaningless; the
+    // stored pin also gives the refine table's doc-bucket modulus
+    val stored = index(path).requirePin(spark,
+      Map("codebooks" -> booksFingerprint(books)))
     val qn = {
       val q = query.map(_.toDouble)
       val n = math.sqrt(q.map(x => x * x).sum)
@@ -99,7 +99,7 @@ object IvfPq {
     val lut = Pq.adcLut(qn, books)
     // ≤ rerank (id, dbk) rows — the point-lookup key set
     val cand = adcCandidates(spark, path, idCol, probes, lut, rerank,
-      storedDocBuckets(stored)).collect()
+      stored("nDocBuckets").toLong).collect()
     val ids = cand.map(_.get(0): Any).toSeq
     val dbks = cand.map(_.getLong(1)).distinct.toSeq
     val qv = array(query.map(lit): _*)
@@ -152,8 +152,4 @@ object IvfPq {
     Map("nDocBuckets" -> nDocBuckets.toString,
       "centroids" -> PartitionedIndexOps.matrixFingerprint(cents),
       "codebooks" -> booksFingerprint(books))
-
-  private def storedDocBuckets(cfg: Map[String, String]): Long =
-    cfg.getOrElse("nDocBuckets",
-      sys.error("IVF-PQ pin is missing nDocBuckets")).toLong
 }

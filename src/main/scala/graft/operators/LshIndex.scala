@@ -20,6 +20,10 @@ import org.apache.spark.sql.functions._
   * it wherever it is (Chroma's delete-then-add upsert,
   * scripts/scrape_store_embed.py:79-86, as [[BucketedIndex]]'s
   * merge-on-read).
+  *
+  * The pin holds the plane bits (every table's, in order, for the
+  * multi-table form) and the payload columns; upserts check all of it,
+  * probes the planes ([[BucketedIndex.requirePin]]).
   */
 object LshIndex {
 
@@ -31,33 +35,27 @@ object LshIndex {
     * schema. */
   def writeLshIndex(vecs: DataFrame, embCol: String, idCol: String,
       planes: Array[Array[Double]], path: String,
-      nDocBuckets: Int = 16, keepCols: Seq[String] = Nil): Unit =
-    index(path).build(lshWrite(vecs, embCol, idCol, planes, nDocBuckets,
-      keepCols))
+      keepCols: Seq[String] = Nil): Unit =
+    index(path).build(lshWrite(vecs, embCol, idCol, planes, keepCols))
 
   /** Fold a (re-)crawled batch in: [[BucketedIndex.upsert]] with sign-bit
     * buckets as the main partitions. Cost ∝ batch spread. */
   def upsertLshIndex(newVecs: DataFrame, embCol: String, idCol: String,
       planes: Array[Array[Double]], path: String,
-      nDocBuckets: Int = 16, keepCols: Seq[String] = Nil): Unit =
-    index(path).upsert(lshWrite(newVecs, embCol, idCol, planes, nDocBuckets,
-      keepCols))
+      keepCols: Seq[String] = Nil): Unit =
+    index(path).upsert(lshWrite(newVecs, embCol, idCol, planes, keepCols))
 
-  // pins written before keepCols existed lack the key; absent ≡ empty
-  // (those indexes were all built with no payload columns), so an old
-  // index still upserts with keepCols=Nil. nDocBuckets is part of the
-  // pinned geometry; no table of the LSH families is bucketed by it
   private[graft] def index(path: String) = BucketedIndex("LSH", path, path,
-    Seq("bucket"), path + "_meta", "config", "writeLshIndex",
-    "hyperplanes, doc-bucket geometry, or payload columns",
-    pinDefaults = Map("keepCols" -> ""))
+    Seq("bucket"), path + "_meta", "writeLshIndex",
+    "hyperplanes or payload columns")
 
   /** The batch's rows by sign-bit bucket; ids validate and tombstone on
     * the input itself. */
   private def lshWrite(vecs: DataFrame, embCol: String, idCol: String,
-      planes: Array[Array[Double]], nDocBuckets: Int,
+      planes: Array[Array[Double]],
       keepCols: Seq[String]): BucketedIndex.Write =
-    BucketedIndex.Write(config(planes, nDocBuckets, keepCols), idCol,
+    BucketedIndex.Write(
+      planesPin(planes) + ("keepCols" -> keepCols.mkString(",")), idCol,
       Some(vecs), main = vecs.select((Seq(idCol, embCol) ++ keepCols)
         .map(col) :+ Similarity.bucketExpr(col(embCol), planes)
         .as("bucket"): _*))
@@ -68,7 +66,7 @@ object LshIndex {
   def probeLshIndex(spark: SparkSession, path: String, embCol: String,
       idCol: String, query: Array[Float], k: Int,
       planes: Array[Array[Double]], radius: Int = 1): DataFrame = {
-    requirePlanes(spark, path, planes)
+    index(path).requirePin(spark, planesPin(planes))
     val nb = planes.length
     // the probe-set enumeration is 2^numPlanes driver-side — cap it (an
     // LSH index with more planes than this has ~1-row buckets anyway)
@@ -116,7 +114,7 @@ object LshIndex {
   def batchProbeManaged(spark: SparkSession, path: String,
       anchors: DataFrame, anchorEmbCol: String,
       planes: Array[Array[Double]], radius: Int = 1): ProbeHandle = {
-    requirePlanes(spark, path, planes)
+    index(path).requirePin(spark, planesPin(planes))
     val nb = planes.length
     require(nb <= 20, s"numPlanes=$nb too large to enumerate probe sets")
     // ONE relation serves both the collision check (schema) and the probe
@@ -189,10 +187,10 @@ object LshIndex {
     * sets fails fast. */
   def writeMultiLshIndex(vecs: DataFrame, embCol: String, idCol: String,
       planeSets: Seq[Array[Array[Double]]], path: String,
-      nDocBuckets: Int = 16, keepCols: Seq[String] = Nil): Unit = {
+      keepCols: Seq[String] = Nil): Unit = {
     require(planeSets.nonEmpty, "need at least one plane set")
     multiIndex(path).build(multiWrite(vecs, embCol, idCol, planeSets,
-      nDocBuckets, keepCols))
+      keepCols))
   }
 
   /** Fold a (re-)crawled batch into a multi-table index — the
@@ -200,26 +198,27 @@ object LshIndex {
     * cost ∝ batch × L rows appended. */
   def upsertMultiLshIndex(newVecs: DataFrame, embCol: String, idCol: String,
       planeSets: Seq[Array[Array[Double]]], path: String,
-      nDocBuckets: Int = 16, keepCols: Seq[String] = Nil): Unit =
+      keepCols: Seq[String] = Nil): Unit =
     multiIndex(path).upsert(multiWrite(newVecs, embCol, idCol, planeSets,
-      nDocBuckets, keepCols))
+      keepCols))
 
   private[graft] def multiIndex(path: String) = BucketedIndex(
     "multi-table LSH", path, path, Seq("tbl", "bucket"), path + "_meta",
-    "config", "writeMultiLshIndex",
-    "plane sets, doc-bucket geometry, or payload columns")
+    "writeMultiLshIndex", "plane sets or payload columns")
 
   /** L rows per vector, one per (tbl, bucket); ids validate and tombstone
     * on the input, which holds one row per id. */
   private def multiWrite(vecs: DataFrame, embCol: String, idCol: String,
-      planeSets: Seq[Array[Array[Double]]], nDocBuckets: Int,
+      planeSets: Seq[Array[Array[Double]]],
       keepCols: Seq[String]): BucketedIndex.Write = {
     // native literal-table expression, NOT array(bucketExpr…): the
     // composed form is L×planes×dim Catalyst nodes and overflows the
     // 64 KB codegen limit at realistic table counts (interpreted
     // fallback) — see [[graft.functions.LshBuckets]]
     val buckets = graft.functions.LshBuckets(col(embCol), planeSets)
-    BucketedIndex.Write(multiConfig(planeSets, nDocBuckets, keepCols), idCol,
+    BucketedIndex.Write(multiPin(planeSets) ++ Map(
+        "tables" -> planeSets.length.toString,
+        "keepCols" -> keepCols.mkString(",")), idCol,
       Some(vecs), main = vecs.select((Seq(idCol, embCol) ++ keepCols)
         .map(col) :+ posexplode(buckets).as(Seq("tbl", "bucket")): _*))
   }
@@ -233,7 +232,7 @@ object LshIndex {
   def probeMultiLsh(spark: SparkSession, path: String, embCol: String,
       idCol: String, query: Array[Float], k: Int,
       planeSets: Seq[Array[Array[Double]]]): DataFrame = {
-    requireMultiPin(spark, path, planeSets)
+    multiIndex(path).requirePin(spark, multiPin(planeSets))
     val pred = planeSets.zipWithIndex.map { case (p, t) =>
       col("tbl") === lit(t) && col("bucket") === lit(queryBucket(query, p))
     }.reduce(_ || _)
@@ -260,7 +259,7 @@ object LshIndex {
   def batchProbeMultiManaged(spark: SparkSession, path: String,
       anchors: DataFrame, anchorEmbCol: String,
       planeSets: Seq[Array[Array[Double]]]): ProbeHandle = {
-    requireMultiPin(spark, path, planeSets)
+    multiIndex(path).requirePin(spark, multiPin(planeSets))
     // one relation for both the collision check and the probe scan
     // (requireNoCollisions rejects anchor 'tbl'/'bucket' columns — both
     // are in the index schema)
@@ -323,7 +322,7 @@ object LshIndex {
       anchors: Seq[(Long, Array[Float])],
       planeSets: Seq[Array[Array[Double]]],
       probesPerTable: Int = 2): DataFrame = {
-    requireMultiPin(spark, path, planeSets)
+    multiIndex(path).requirePin(spark, multiPin(planeSets))
     require(anchors.nonEmpty, "need at least one anchor")
     require(anchors.size <= 4096,
       s"${anchors.size} anchors — the probe set collects driver-side; " +
@@ -345,30 +344,15 @@ object LshIndex {
       .join(broadcast(probes), Seq("tbl", "bucket"))
   }
 
-  private def requirePlanes(spark: SparkSession, path: String,
-      planes: Array[Array[Double]]): Unit =
-    require(index(path).requireBuilt(spark).get("planes")
-        .contains(PartitionedIndexOps.matrixFingerprint(planes)),
-      s"LSH index at $path was built under different hyperplanes — " +
-        "probe buckets would not line up")
+  /** The pin keys a probe routes by: the plane bits (one table). */
+  private def planesPin(planes: Array[Array[Double]]): Map[String, String] =
+    Map("planes" -> PartitionedIndexOps.matrixFingerprint(planes))
 
-  private def requireMultiPin(spark: SparkSession, path: String,
-      planeSets: Seq[Array[Array[Double]]]): Unit =
-    require(multiIndex(path).requireBuilt(spark).get("planes")
-        .contains(planesFingerprint(planeSets)),
-      s"multi-table LSH index at $path was built under different plane " +
-        "sets (count, order, or geometry) — probe buckets would not line up")
-
-  private def planesFingerprint(
-      planeSets: Seq[Array[Array[Double]]]): String =
-    planeSets.map(PartitionedIndexOps.matrixFingerprint).mkString("|")
-
-  private def multiConfig(planeSets: Seq[Array[Array[Double]]],
-      nDocBuckets: Int, keepCols: Seq[String]): Map[String, String] =
-    Map("tables" -> planeSets.length.toString,
-      "nDocBuckets" -> nDocBuckets.toString,
-      "planes" -> planesFingerprint(planeSets),
-      "keepCols" -> keepCols.mkString(","))
+  /** Every table's plane bits, in table order: count, order and geometry. */
+  private def multiPin(
+      planeSets: Seq[Array[Array[Double]]]): Map[String, String] =
+    Map("planes" ->
+      planeSets.map(PartitionedIndexOps.matrixFingerprint).mkString("|"))
 
   private def queryBucket(v: Array[Float],
       planes: Array[Array[Double]]): Long =
@@ -376,10 +360,4 @@ object LshIndex {
       val dot = v.zip(p).map { case (x, h) => x.toDouble * h }.sum
       if (dot >= 0) 1L << i else 0L
     }.reduce(_ | _)
-
-  private def config(planes: Array[Array[Double]],
-      nDocBuckets: Int, keepCols: Seq[String] = Nil): Map[String, String] =
-    Map("nDocBuckets" -> nDocBuckets.toString,
-      "planes" -> PartitionedIndexOps.matrixFingerprint(planes),
-      "keepCols" -> keepCols.mkString(","))
 }

@@ -4,70 +4,14 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The primitives under every persisted index's commit: typed config
-  * pins, version claims and commit markers, unique-id validation, and
-  * compaction. [[BucketedIndex]] owns the order they run in (the one write
-  * protocol, with its crash and retry contract) and the one reader; only
-  * it and the `compact*` passes here call the write-side primitives.
+/** The primitives under every persisted index's commit: version claims
+  * and commit markers, unique-id validation, model fingerprints for pins,
+  * and compaction. [[BucketedIndex]] owns the config pin and its one
+  * check, the order these run in (the one write protocol, with its crash
+  * and retry contract) and the one reader; only it and the `compact*`
+  * passes here call the write-side primitives.
   */
 object PartitionedIndexOps {
-
-  /** Write a small metadata/pin file (config json, centroid fingerprint).
-    * One copy of the create-overwrite-UTF8 idiom for every index. */
-  def writePin(fs: FileSystem, path: Path, content: String): Unit = {
-    val out = fs.create(path, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Read a pin file back, None if absent. */
-  def readPin(fs: FileSystem, path: Path): Option[String] =
-    if (!fs.exists(path)) None
-    else {
-      val in = fs.open(path)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally in.close()
-    }
-
-  /** THE typed config-pin format every persisted index shares: sorted
-    * `k=v` lines, one writer, one parser, one mismatch message — a new
-    * index reuses this instead of inventing a fourth format. Values are
-    * strings (numeric configs render via toString); keys and values must
-    * not contain '=' or newlines. */
-  def writeConfigPin(fs: FileSystem, path: Path,
-      cfg: Map[String, String]): Unit =
-    writePin(fs, path, cfg.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"$k=$v" }.mkString("\n"))
-
-  def readConfigPin(fs: FileSystem,
-      path: Path): Option[Map[String, String]] =
-    readPin(fs, path).map(_.linesIterator
-      .filter(_.contains("="))
-      .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
-      .toMap)
-
-  /** Validate the caller's config against the stored pin — every pinned
-    * parameter that changes hashing, bucketing, or assignment must match,
-    * or probes/upserts would SILENTLY touch the wrong buckets. An absent
-    * pin FILE is tolerated here (bare dirs route to bulk builds; an index
-    * for which absence means a crashed build checks presence itself
-    * first) — but a pin that exists while MISSING a checked key is an
-    * error, not a pass: a truncated or legacy-format pin must fail loudly
-    * (rebuild) rather than validate any caller geometry. */
-  def requireConfigPin(fs: FileSystem, path: Path,
-      expected: Map[String, String], what: String): Unit =
-    readConfigPin(fs, path).foreach { stored =>
-      expected.foreach { case (k, v) =>
-        val got = stored.get(k)
-        require(got.isDefined,
-          s"$what has a config pin without the $k key (truncated or " +
-            "legacy-format pin?) — rebuild the index rather than trusting it")
-        require(got.get == v,
-          s"$what was built with $k=${got.get}, used with $k=$v — " +
-            "bucket routing would not line up (silent wrong-bucket reads)")
-      }
-    }
 
   /** Create the empty file `p` only if it is absent: true iff this call
     * created it. This is the compare-and-swap the version protocol rests

@@ -167,13 +167,12 @@ object Similarity {
     * list_id, so probing reads only the probed lists' directories
     * (PartitionFilters at the scan — verified in IvfSpec). At 100 TB this
     * is the difference between scanning nProbe/nLists of the corpus and
-    * scanning all of it. The pin covers the exact centroid bits and the
-    * doc-bucket modulus; a rebuild with retrained centroids deletes the
-    * old pin first ([[BucketedIndex]]'s pin-last order). */
+    * scanning all of it. The pin covers the exact centroid bits; a
+    * rebuild with retrained centroids deletes the old pin first
+    * ([[BucketedIndex]]'s pin-last order). */
   def writeIvfIndex(index: DataFrame, embCol: String, idCol: String,
-      cents: Array[Array[Double]], path: String,
-      nDocBuckets: Int = 16): Unit =
-    ivfIndex(path).build(ivfWrite(index, embCol, idCol, cents, nDocBuckets))
+      cents: Array[Array[Double]], path: String): Unit =
+    ivfIndex(path).build(ivfWrite(index, embCol, idCol, cents))
 
   /** Incremental maintenance — fold a (re-)crawled batch into the index
     * ([[BucketedIndex.upsert]] with lists as the main partitions). A
@@ -183,22 +182,16 @@ object Similarity {
     * from whichever list it was in. Per-batch cost is the batch's own
     * rows, never the index size. */
   def upsertIvfIndex(newVecs: DataFrame, embCol: String, idCol: String,
-      cents: Array[Array[Double]], path: String,
-      nDocBuckets: Int = 16): Unit =
-    ivfIndex(path).upsert(ivfWrite(newVecs, embCol, idCol, cents,
-      nDocBuckets))
+      cents: Array[Array[Double]], path: String): Unit =
+    ivfIndex(path).upsert(ivfWrite(newVecs, embCol, idCol, cents))
 
-  // nDocBuckets is part of the pinned geometry; no table of this family
-  // is bucketed by it
   private[graft] def ivfIndex(path: String) = BucketedIndex("IVF", path,
-    path, Seq("list_id"), path + "_meta", "centroids", "writeIvfIndex",
-    "centroids or doc-bucket geometry")
+    path, Seq("list_id"), path + "_meta", "writeIvfIndex", "centroids")
 
   private def ivfWrite(vecs: DataFrame, embCol: String, idCol: String,
-      cents: Array[Array[Double]], nDocBuckets: Int): BucketedIndex.Write =
+      cents: Array[Array[Double]]): BucketedIndex.Write =
     BucketedIndex.Write(
-      Map("nDocBuckets" -> nDocBuckets.toString,
-        "centroids" -> PartitionedIndexOps.matrixFingerprint(cents)),
+      Map("centroids" -> PartitionedIndexOps.matrixFingerprint(cents)),
       idCol, Some(vecs), main = ivfAssign(vecs, embCol, cents))
 
   /** Probe a persisted IVF index: the list_id filter prunes partitions at
@@ -207,7 +200,7 @@ object Similarity {
       embCol: String, idCol: String, query: Array[Float], k: Int,
       probes: Seq[Int]): DataFrame = {
     val qv = array(query.map(lit): _*)
-    ivfIndex(path).requireBuilt(spark)
+    ivfIndex(path).requirePin(spark, Map.empty)
     ivfIndex(path).read(spark)
       .filter(col("list_id").isInCollection(probes))
       .select(col(idCol),

@@ -434,7 +434,7 @@ object SimilarityQueries {
     val fpath = base.resolve("fts").toString
     Fts.writePostingsIndex(
       Fts.positionalPostings(d0, "doc_id", "text"), fpath,
-      nBuckets = 16, nDocBuckets = 16)
+      nBuckets = 16)
     val qvec = e.filter(col("vec_id") === 1)
       .select(col("embedding")).head.getSeq[Float](0).toArray
     val cents = fullCents(s, d)

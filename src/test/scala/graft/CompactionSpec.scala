@@ -30,7 +30,7 @@ class CompactionSpec extends AnyFunSuite {
       .repartition(6) // one file per task per hit bucket — the fragmented shape
     Fts.writePostingsIndex(
       Fts.positionalPostings(docs, "doc_id", "text"), dir,
-      nBuckets = 2, nDocBuckets = 2)
+      nBuckets = 2)
     val before = parquetFiles(dir)
     assert(before.values.exists(_ > 2), s"expected fragmentation, got $before")
     val resultsBefore = Fts.conjunctiveQuery(
@@ -60,7 +60,7 @@ class CompactionSpec extends AnyFunSuite {
 
     // the index stays maintainable: pin intact, upserts still merge
     Fts.upsertPostingsIndex(Seq((7L, "alpha epsilon")).toDF("doc_id", "text"),
-      dir, "doc_id", "text", nBuckets = 2, nDocBuckets = 2)
+      dir, "doc_id", "text", nBuckets = 2)
     assert(Fts.conjunctiveQuery(
       Fts.loadPostings(spark, dir, Seq("epsilon"), nBuckets = 2),
       Seq("epsilon")).count() == 1)
@@ -74,8 +74,7 @@ class CompactionSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
       .repartition(8)
     val cents = Similarity.ivfCentroids(vecs, "embedding", "vec_id", 4, 2)
-    Similarity.writeIvfIndex(vecs, "embedding", "vec_id", cents, dir,
-      nDocBuckets = 2)
+    Similarity.writeIvfIndex(vecs, "embedding", "vec_id", cents, dir)
     val q = Array.tabulate(4)(_.toFloat + 1f)
     val pre = Similarity.probeIvfIndex(spark, dir, "embedding", "vec_id",
       q, 10, 0 until 4).collect().map(r => (r.getLong(0), r.getDouble(1)))
@@ -89,7 +88,7 @@ class CompactionSpec extends AnyFunSuite {
     assert(post.toSeq == pre.toSeq)
     Similarity.upsertIvfIndex(
       Seq((100L, Array(1f, 2f, 3f, 4f))).toDF("vec_id", "embedding"),
-      "embedding", "vec_id", cents, dir, nDocBuckets = 2)
+      "embedding", "vec_id", cents, dir)
   }
 
   test("ivf-pq index: compacted codes + refine tables probe identically") {

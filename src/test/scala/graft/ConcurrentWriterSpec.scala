@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{DedupIndex, LshIndex, PartitionedIndexOps, Similarity}
+import graft.operators.{BucketedIndex, DedupIndex, LshIndex,
+  PartitionedIndexOps, Similarity}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -88,23 +89,30 @@ class ConcurrentWriterSpec extends AnyFunSuite {
     val evens = e.filter(col("vec_id") % 2 === 0)
       .select(col("vec_id"), col("embedding"))
     LshIndex.writeLshIndex(evens, "embedding", "vec_id", planes, dir)
-    // strip the layout line, as the copy-on-write protocol wrote its pins
     val pin = new Path(dir + "_meta/config")
-    val stripped = PartitionedIndexOps.readPin(fs, pin).get.linesIterator
-      .filterNot(_.startsWith("layout=")).mkString("\n")
-    PartitionedIndexOps.writePin(fs, pin, stripped)
-    val up = intercept[IllegalArgumentException] {
-      LshIndex.upsertLshIndex(e.filter(col("vec_id") === 1L)
-        .select(col("vec_id"), col("embedding")),
-        "embedding", "vec_id", planes, dir)
+    val built = BucketedIndex.readConfigPin(fs, pin).get
+    val batch = e.filter(col("vec_id") === 1L)
+      .select(col("vec_id"), col("embedding"))
+    val q = e.select(col("embedding")).head.getSeq[Float](0).toArray
+    // the copy-on-write protocol wrote no layout line; the first
+    // merge-on-read protocol wrote `merge-on-read-1` beside keys that
+    // routed nothing. Both must be rebuilt, and both refusals name layout.
+    for ((stored, named) <- Seq(
+        (built - "layout") ->
+          Seq("layout=<absent> on disk", "without the layout key"),
+        (built + ("layout" -> "merge-on-read-1")) ->
+          Seq("layout=merge-on-read-1 on disk"))) {
+      BucketedIndex.writeConfigPin(fs, pin, stored)
+      val up = intercept[IllegalArgumentException] {
+        LshIndex.upsertLshIndex(batch, "embedding", "vec_id", planes, dir)
+      }
+      val probe = intercept[IllegalArgumentException] {
+        LshIndex.probeLshIndex(spark, dir, "embedding", "vec_id", q, 5,
+          planes)
+      }
+      for (ex <- Seq(up, probe); s <- named)
+        assert(ex.getMessage.contains(s), ex.getMessage)
     }
-    assert(up.getMessage.contains("layout=<absent> on disk"), up.getMessage)
-    val probe = intercept[IllegalArgumentException] {
-      LshIndex.probeLshIndex(spark, dir, "embedding", "vec_id",
-        e.select(col("embedding")).head.getSeq[Float](0).toArray, 5, planes)
-    }
-    assert(probe.getMessage.contains("without the layout key"),
-      probe.getMessage)
   }
 
   test("dedup index: overtaken writer fails fast; index equals the winner's serial application") {

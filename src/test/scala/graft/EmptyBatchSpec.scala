@@ -84,10 +84,10 @@ class EmptyBatchSpec extends AnyFunSuite {
     val idx = dir("empty_fts")
     Fts.writePostingsIndex(
       Fts.positionalPostings(docs, "doc_id", "text"), idx,
-      nBuckets = 16, nDocBuckets = 16)
+      nBuckets = 16)
     val before = snapshot(idx, Seq("word", "doc_id", "tf"))
     Fts.upsertPostingsIndex(docs.filter(lit(false)), idx, "doc_id", "text",
-      nBuckets = 16, nDocBuckets = 16)
+      nBuckets = 16)
     assert(snapshot(idx, Seq("word", "doc_id", "tf")) == before)
     assert(claims(idx + "_meta") == 1)
   }

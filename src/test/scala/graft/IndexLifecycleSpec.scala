@@ -29,6 +29,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *   4. crash at any write step: an upsert stopped at each of its crash
   *      points in turn leaves the served content unchanged, and the
   *      same-batch retry converges to the scratch build.
+  *   5. a probe of a never-built index fails by name, before any read.
   *
   * Family-SPECIFIC semantics (pruned-scan shapes, payload pins, vacated
   * buckets, recall) stay in the per-family specs; this matrix owns only
@@ -73,15 +74,17 @@ class IndexLifecycleSpec extends AnyFunSuite {
     Similarity.ivfCentroids(vecs, "embedding", "vec_id", 8, 2)
   private lazy val books =
     Pq.trainCodebooks(vecs, "embedding", "vec_id", m = 8, k = 16)
+  private val query = Array.fill(64)(1f)
 
   /** Everything the matrix needs to drive one family through the shared
-    * lifecycle. `index` is the family's table layout; `checkedBuild` is
-    * the bulk build that owns the duplicate-id check, when `build` does
-    * not. */
+    * lifecycle. `index` is the family's table layout; `probe` is one of
+    * its probes; `checkedBuild` is the bulk build that owns the
+    * duplicate-id check, when `build` does not. */
   private final case class Family(
       name: String,
       build: (DataFrame, String) => Unit,
       upsert: (DataFrame, String) => Unit,
+      probe: String => Unit,
       corpusA: () => DataFrame,
       batchB: () => DataFrame,
       corpusFinal: () => DataFrame,
@@ -150,6 +153,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
     Family("dedup-signature",
       build = (c, p) => DedupIndex.writeSignatureIndex(c, p),
       upsert = (b, p) => DedupIndex.upsertSignatureIndex(b, p),
+      probe = p => DedupIndex.probeIndex(spark, p, docsB),
       corpusA = () => docsA, batchB = () => docsB,
       corpusFinal = () => docsFinal,
       index = DedupIndex.index),
@@ -158,6 +162,8 @@ class IndexLifecycleSpec extends AnyFunSuite {
         LshIndex.writeLshIndex(c, "embedding", "vec_id", planes, p),
       upsert = (b, p) =>
         LshIndex.upsertLshIndex(b, "embedding", "vec_id", planes, p),
+      probe = p => LshIndex.probeLshIndex(spark, p, "embedding", "vec_id",
+        query, 5, planes),
       corpusA = () => vecsA, batchB = () => vecsB,
       corpusFinal = () => vecsFinal,
       index = LshIndex.index),
@@ -166,6 +172,8 @@ class IndexLifecycleSpec extends AnyFunSuite {
         LshIndex.writeMultiLshIndex(c, "embedding", "vec_id", planeSets, p),
       upsert = (b, p) =>
         LshIndex.upsertMultiLshIndex(b, "embedding", "vec_id", planeSets, p),
+      probe = p => LshIndex.probeMultiLsh(spark, p, "embedding", "vec_id",
+        query, 5, planeSets),
       corpusA = () => vecsA, batchB = () => vecsB,
       corpusFinal = () => vecsFinal,
       index = LshIndex.multiIndex),
@@ -174,6 +182,8 @@ class IndexLifecycleSpec extends AnyFunSuite {
         Similarity.writeIvfIndex(c, "embedding", "vec_id", cents, p),
       upsert = (b, p) =>
         Similarity.upsertIvfIndex(b, "embedding", "vec_id", cents, p),
+      probe = p => Similarity.probeIvfIndex(spark, p, "embedding", "vec_id",
+        query, 5, 0 until 2),
       corpusA = () => vecsA, batchB = () => vecsB,
       corpusFinal = () => vecsFinal,
       index = Similarity.ivfIndex),
@@ -182,15 +192,17 @@ class IndexLifecycleSpec extends AnyFunSuite {
         IvfPq.writeIvfPqIndex(c, "embedding", "vec_id", cents, books, p),
       upsert = (b, p) =>
         IvfPq.upsertIvfPqIndex(b, "embedding", "vec_id", cents, books, p),
+      probe = p => IvfPq.probeIvfPqIndex(spark, p, "embedding", "vec_id",
+        query, 5, 0 until 2, books, rerank = 16),
       corpusA = () => vecsA, batchB = () => vecsB,
       corpusFinal = () => vecsFinal,
       index = IvfPq.index),
     Family("fts-postings",
       build = (c, p) => Fts.writePostingsIndex(
-        Fts.positionalPostings(c, "doc_id", "text"), p,
-        nBuckets = 8, nDocBuckets = 8),
+        Fts.positionalPostings(c, "doc_id", "text"), p, nBuckets = 8),
       upsert = (b, p) => Fts.upsertPostingsIndex(b, p, "doc_id", "text",
-        nBuckets = 8, nDocBuckets = 8),
+        nBuckets = 8),
+      probe = p => Fts.loadPostings(spark, p, Seq("alpha"), nBuckets = 8),
       corpusA = () => docsA, batchB = () => docsB,
       corpusFinal = () => docsFinal,
       index = Fts.index,
@@ -304,5 +316,14 @@ class IndexLifecycleSpec extends AnyFunSuite {
       f.build(f.corpusFinal(), scratch)
       assert(content(f, dir) == content(f, scratch),
         s"${f.name}: the retry after four crashed attempts diverges")
+    }
+
+  // ---- invariant 5: a never-built index fails by name ----
+  for (f <- families)
+    test(s"${f.name}: a probe of a never-built index fails by name") {
+      val dir = tmp(f.name.replace('-', '_') + "_unbuilt")
+      val ex = intercept[IllegalArgumentException](f.probe(dir))
+      assert(ex.getMessage.contains("never built"),
+        s"${f.name}: ${ex.getMessage}")
     }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{IvfPq, Pq, Similarity}
+import graft.operators.{IvfPq, PartitionedIndexOps, Pq, Similarity}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -123,7 +123,11 @@ class IvfPqSpec extends AnyFunSuite {
       IvfPq.probeIvfPqIndex(spark, dir, "embedding", "vec_id", queryVec(1),
         10, 0 until 8, books2, rerank = 64)
     }
-    assert(ex2.getMessage.contains("different codebooks"))
+    // names the key and its on-disk value (a long fingerprint, shortened)
+    val onDisk = books.map(PartitionedIndexOps.matrixFingerprint).mkString("|")
+    assert(ex2.getMessage.contains(
+      s"codebooks=${onDisk.take(16)}…(${onDisk.length} chars) on disk"),
+      ex2.getMessage)
     // duplicate-id batch refuses
     val one = e.filter(col("vec_id") === 2)
     val ex3 = intercept[IllegalArgumentException] {

@@ -97,7 +97,7 @@ class IvfSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("different centroids"))
     // data without a pin (crashed build) must refuse an upsert
-    val pin = new java.io.File(dir + "_meta/centroids")
+    val pin = new java.io.File(dir + "_meta/config")
     assert(pin.exists()); pin.delete()
     val ex2 = intercept[IllegalArgumentException] {
       Similarity.upsertIvfIndex(e.limit(1), "embedding", "vec_id", cents, dir)
@@ -152,7 +152,7 @@ class IvfSpec extends AnyFunSuite {
     batches.foreach { case (i, pick) =>
       Similarity.upsertIvfIndex(
         perturb(e.filter(col("vec_id").isInCollection(pick)), i),
-        "embedding", "vec_id", cents, dir, nDocBuckets = 4)
+        "embedding", "vec_id", cents, dir)
     }
     // final state per id = its LAST crawl's version
     val lastCrawl = batches.flatMap { case (i, pick) => pick.map(_ -> i) }
@@ -174,8 +174,7 @@ class IvfSpec extends AnyFunSuite {
     val dup = e.filter(col("vec_id") === ids.head)
       .unionByName(e.filter(col("vec_id") === ids.head))
     val ex = intercept[IllegalArgumentException] {
-      Similarity.upsertIvfIndex(dup, "embedding", "vec_id", cents, dir,
-        nDocBuckets = 4)
+      Similarity.upsertIvfIndex(dup, "embedding", "vec_id", cents, dir)
     }
     assert(ex.getMessage.contains("duplicate"))
   }

@@ -134,30 +134,18 @@ class LshIndexSpec extends AnyFunSuite {
     assert(ex3.getMessage.contains("crashed build"))
   }
 
-  test("pre-keepCols pin (no keepCols line) still upserts with no payload columns") {
-    val dir = java.nio.file.Files.createTempDirectory("lsh_legacy")
+  test("a payload column whose name cannot be stored in the pin fails by name before any claim") {
+    val dir = java.nio.file.Files.createTempDirectory("lsh_badpin")
       .resolve("idx").toString
-    LshIndex.writeLshIndex(e.filter(col("vec_id") % 2 === 0),
-      "embedding", "vec_id", planes, dir)
-    // rewrite the pin as a pre-keepCols index would have written it
-    // (drop the stale .crc too — a raw java.nio write under Hadoop's
-    // ChecksumFileSystem otherwise fails the next read)
-    val pin = java.nio.file.Paths.get(dir + "_meta/config")
-    val stripped = new String(java.nio.file.Files.readAllBytes(pin))
-      .linesIterator.filterNot(_.startsWith("keepCols=")).mkString("\n")
-    java.nio.file.Files.write(pin, stripped.getBytes)
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(dir + "_meta/.config.crc"))
-    // absent key ≡ empty: the upsert must route, not refuse
-    LshIndex.upsertLshIndex(e.filter(col("vec_id") % 2 === 1),
-      "embedding", "vec_id", planes, dir)
-    assert(LshIndex.index(dir).read(spark).count() == e.count())
-    // ...but a payload-carrying upsert against it still refuses
+    // a pin holds one k=v line per key: this keepCols value would be
+    // stored as two lines, and the index would refuse its own pin
     val ex = intercept[IllegalArgumentException] {
-      LshIndex.upsertLshIndex(e.limit(1), "embedding", "vec_id", planes,
-        dir, keepCols = Seq("label"))
+      LshIndex.writeLshIndex(e.withColumn("a\nb", col("label")),
+        "embedding", "vec_id", planes, dir, keepCols = Seq("a\nb"))
     }
-    assert(ex.getMessage.contains("payload columns"))
+    assert(ex.getMessage.contains("'keepCols'"), ex.getMessage)
+    assert(!new java.io.File(dir + "_meta").exists(),
+      "a refused build claimed a version or wrote a pin")
   }
 
   test("batch probe refuses anchor frames whose columns collide with the probe machinery or index schema") {

@@ -297,6 +297,22 @@ class PlanSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"listeners outside graft/obs/Profile: $offenders")
   }
 
+  test("one pin check: only BucketedIndex reads, writes or names a config pin") {
+    // per-family pin checks drifted into seven checks of two strengths
+    // under three file names; every family now goes through
+    // BucketedIndex.requirePin, and a new check must not grow elsewhere
+    val pinRe = "(read|write)ConfigPin|\"config(\\.json)?\"|_meta/config".r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
+    java.nio.file.Files.walk(root).forEach { p =>
+      val rel = root.relativize(p).toString
+      if (rel.endsWith(".scala") && rel != "graft/operators/BucketedIndex.scala" &&
+          pinRe.findFirstIn(java.nio.file.Files.readString(p)).nonEmpty)
+        offenders += rel
+    }
+    assert(offenders.isEmpty, s"config pins handled outside BucketedIndex: $offenders")
+  }
+
   test("contamination eval shingles broadcast at plan time, not via AQE") {
     // the ×1000-rehearsal find: eval benchmarks are bounded by
     // construction, but the static planner estimates the join side from
